@@ -18,9 +18,13 @@ import graft.sinks.{OsmXmlWriter, OsmXml, PreparedWay}
   *   -> per-tile counts -> driver prefix-sum -> deterministic node/way ids
   *     (reference reserves ranges via shared counters, processor.py:98-140;
   *     we pin the stronger sorted-tile order, SURVEY.md §4.3)
-  *   -> per-tile OSM XML files (nodes first, ways buffered to done()).
+  *   -> per-tile OSM XML / o5m / PBF files (nodes first, ways buffered to
+  *      done()), written by the trace stage's partitions: each tile's rows
+  *      already sit in one of them, so the write adds no second exchange
   *
-  * At cluster scale: files and tiles are independent units; the only driver
+  * The only exchange moves spec rows (plus one count row per tile for the
+  * prefix sum); contour coordinates never cross the network. At cluster
+  * scale: files and tiles are independent units; the only driver
   * synchronization is the tiny per-tile count collect for the prefix sum.
   */
 object RasterPipeline {
@@ -246,7 +250,9 @@ object RasterPipeline {
   }
 
   /** Trace contours per tile; explicit range-partitioned shuffle on the
-    * tile key so each tile is processed exactly once, co-located. */
+    * tile key so each tile is processed exactly once, co-located. The
+    * writer relies on this: every row of a tile leaves in one partition,
+    * and writeOsmXml writes the tile there without another exchange. */
   def contours(tilesDs: Dataset[DemTileRow], cfg: JobConfig, partitions: Int = 0): Dataset[ContourRow] = {
     val spark = tilesDs.sparkSession
     import spark.implicits._
@@ -359,6 +365,17 @@ object RasterPipeline {
   def idOffsets(contoursDs: Dataset[ContourRow], cfg: JobConfig): Map[(String, Int), TileOffsets] =
     prefixSum(tileCounts(contoursDs), cfg)
 
+  /** The writer's input order. Single-output mode (reference
+    * processor.py:273-336): one file over the global bbox, ALL nodes
+    * before ALL ways, tiles serialized through one partition
+    * (parallelization disabled, as in the reference). The per-tile path
+    * adds no exchange: contours() range-partitions on the tile key, so
+    * each tile's rows already sit in one partition, and the writer runs on
+    * the trace stage's partitions. */
+  private[engine] def arrangeForWrite(contoursDs: Dataset[ContourRow], single: Boolean): Dataset[ContourRow] =
+    (if (single) contoursDs.coalesce(1) else contoursDs)
+      .sortWithinPartitions("key", "tileIdx", "elevation", "pathIdx")
+
   /** Write one OSM XML file per tile under outDir. Returns files written. */
   def writeOsmXml(
       contoursDs: Dataset[ContourRow],
@@ -378,17 +395,9 @@ object RasterPipeline {
     val ts = cfg.writeTimestamp
     val pfx = cfg.outputPrefix.getOrElse("")
     val single = singleFileName
-    // single-output mode (reference processor.py:273-336): one file over
-    // the global bbox, ALL nodes before ALL ways, tiles serialized through
-    // one partition (parallelization disabled, as in the reference)
-    val arranged =
-      if (single.isDefined)
-        contoursDs.coalesce(1).sortWithinPartitions("key", "tileIdx", "elevation", "pathIdx")
-      else
-        contoursDs
-          .repartition(col("key"), col("tileIdx"))
-          .sortWithinPartitions("key", "tileIdx", "elevation", "pathIdx")
-    val files = arranged
+    // the guards below fail the write, naming the tile, if the per-tile
+    // path meets a Dataset that splits a tile across partitions
+    val written = arrangeForWrite(contoursDs, single.isDefined)
       .mapPartitions { it =>
         val classifier: Long => String = e => Levels.elevClassifier(major, medium)(e.toInt)
         var curKey: (String, Int) = null
@@ -399,21 +408,26 @@ object RasterPipeline {
         var wayStart = Long.MinValue
         var fileName: String = null
         var t0 = 0L
-        val written = scala.collection.mutable.ArrayBuffer.empty[String]
+        val written = scala.collection.mutable.ArrayBuffer.empty[(String, String, Int)]
+        val closedTiles = scala.collection.mutable.HashSet.empty[(String, Int)]
         def close(): Unit = if (writer != null) {
           writer.finish(ways.toSeq, wayStart, classifier)
-          written += fileName
+          written += ((fileName, curKey._1, curKey._2))
+          closedTiles += curKey
           if (commit && single.isEmpty) Checkpoint.writeCommit(outDir, Checkpoint.Commit(
             curKey._1, curKey._2, nodeId - nodeStart, ways.size.toLong, fileName,
             (System.nanoTime() - t0) / 1000000L))
           writer = null
           ways = scala.collection.mutable.ArrayBuffer.empty[PreparedWay]
         }
-        val out = it.flatMap { row =>
+        it.foreach { row =>
           val k = (row.key, row.tileIdx)
           if (k != curKey) {
             if (single.isEmpty) {
               close()
+              if (closedTiles.contains(k)) throw new IllegalStateException(
+                s"tile $k reappears in a write partition after its file was closed; " +
+                  "its rows must arrive contiguously")
               val off = bc.value(k)
               nodeId = off.nodeStart
               nodeStart = off.nodeStart
@@ -443,15 +457,19 @@ object RasterPipeline {
           val (next, way) = writer.writePath(row.coords, nodeId, row.elevation.toLong)
           nodeId = next
           ways += way
-          Iterator.empty: Iterator[String]
         }
-        // exhaust, then close trailing writer
-        val drained = out.toArray
         close()
-        (drained ++ written).iterator
+        written.iterator
       }
       .collect()
-    files.toSeq.sorted
+    // a file reported twice was written by two partitions, each with part
+    // of a tile's rows: the later close overwrote the earlier one
+    written.groupBy(_._1).foreach { case (file, ws) =>
+      if (ws.length > 1) throw new IllegalStateException(
+        s"tile ${(ws.head._2, ws.head._3)} was written by ${ws.length} partitions to $file; " +
+          "the contours Dataset must hold each tile's rows in one partition")
+    }
+    written.map(_._1).toSeq.sorted
   }
 
   /** Convenience end-to-end run. */

@@ -73,6 +73,11 @@ final class O5mWriter(
     out.write(Varint.unsigned(payload.length.toLong))
     out.write(payload)
   }
+  private def dataset(typ: Int, payload: ByteArrayOutputStream): Unit = {
+    out.write(typ)
+    Varint.writeUnsigned(out, payload.size.toLong)
+    payload.writeTo(out)
+  }
 
   // header: reset, o5m2 marker, file timestamp, bbox
   locally {
@@ -105,23 +110,26 @@ final class O5mWriter(
     }
   }
 
-  /** Nodes: (lon1e7, lat1e7) pairs with contiguous ids from startNodeId.
-    * Resets delta state first (the reference does per 32000-node chunk). */
-  def writeNodes(nodes: Iterable[(Long, Long)], startNodeId: Long): Unit = {
-    if (nodes.isEmpty) return
+  private val node = new ByteArrayOutputStream(32)
+
+  /** Nodes: the first n (lons(i), lats(i)) in 1e-7 degrees, contiguous ids
+    * from startNodeId. Resets delta state first (the reference does per
+    * 32000-node chunk). */
+  def writeNodes(startNodeId: Long, lons: Array[Long], lats: Array[Long], n: Int): Unit = {
+    if (n == 0) return
     writeReset()
-    var first = true
     var lastLon = 0L
     var lastLat = 0L
-    nodes.foreach { case (lon, lat) =>
-      val o = new ByteArrayOutputStream(24)
-      Varint.writeSigned(o, if (first) startNodeId else 1L)
-      versionChunk(first, o)
-      Varint.writeSigned(o, lon - lastLon)
-      Varint.writeSigned(o, lat - lastLat)
-      dataset(O5m.NodeType, o.toByteArray)
-      lastLon = lon; lastLat = lat
-      first = false
+    var i = 0
+    while (i < n) {
+      node.reset()
+      Varint.writeSigned(node, if (i == 0) startNodeId else 1L)
+      versionChunk(i == 0, node)
+      Varint.writeSigned(node, lons(i) - lastLon)
+      Varint.writeSigned(node, lats(i) - lastLat)
+      dataset(O5m.NodeType, node)
+      lastLon = lons(i); lastLat = lats(i)
+      i += 1
     }
   }
 
@@ -149,7 +157,7 @@ final class O5mWriter(
       o.write(table.stringOrIndex(stringPair("ele", w.elevation.toString)))
       o.write(table.stringOrIndex(stringPair("contour", "elevation")))
       o.write(table.stringOrIndex(stringPair("contour_ext", classifier(w.elevation))))
-      dataset(O5m.WayType, o.toByteArray)
+      dataset(O5m.WayType, o)
       first = false
     }
   }

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.io.{ByteArrayOutputStream, OutputStream}
+import java.io.OutputStream
 import java.util.zip.{Deflater, Inflater}
 import graft.core.BBox
 
@@ -11,45 +11,47 @@ import graft.core.BBox
   * delta-coded refs and string-table tags). Content contract mirrors
   * /root/reference/tests/test_output.py:96-161 (decoded nodes/ways/tags,
   * header bbox, dense encoding efficiency). Granularity 100 => coordinate
-  * unit = 1e-7 degree, same quantization as the o5m sink. */
+  * unit = 1e-7 degree, same quantization as the o5m sink.
+  *
+  * Buffer reuse: the writer allocates nothing per node or way. Each
+  * message level (packed field, way, DenseNodes, PrimitiveGroup, block,
+  * string table, compressed blob) owns one growable byte buffer that is
+  * cleared and refilled for every block; a nested message is built in its
+  * own buffer and copied once behind its length prefix. One Deflater per
+  * writer is reset for each blob and ended at done(); it stays at
+  * DEFAULT_COMPRESSION, so the bytes match a fresh Deflater per blob. */
 object Pbf {
 
-  // ---- minimal protobuf writer ----
-  final class ProtoOut {
-    val out = new ByteArrayOutputStream()
-    def writeVarint(v0: Long): Unit = {
+  /** Growable protobuf output buffer, cleared and refilled per message. */
+  final class Buf(initial: Int) {
+    var bytes = new Array[Byte](initial)
+    var size = 0
+    def clear(): Unit = size = 0
+    def ensure(extra: Int): Unit =
+      if (size + extra > bytes.length)
+        bytes = java.util.Arrays.copyOf(bytes, math.max(bytes.length * 2, size + extra))
+    def varint(v0: Long): Unit = {
+      ensure(10)
       var v = v0
-      while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      out.write(v.toInt)
+      while ((v & ~0x7fL) != 0) { bytes(size) = ((v & 0x7f) | 0x80).toByte; size += 1; v >>>= 7 }
+      bytes(size) = v.toByte
+      size += 1
     }
-    def key(field: Int, wire: Int): Unit = writeVarint((field << 3 | wire).toLong)
-    def int64(field: Int, v: Long): Unit = { key(field, 0); writeVarint(v) }
-    def sint64(field: Int, v: Long): Unit = { key(field, 0); writeVarint((v << 1) ^ (v >> 63)) }
-    def bytes(field: Int, b: Array[Byte]): Unit = {
-      key(field, 2); writeVarint(b.length.toLong); out.write(b)
+    def zigzag(v: Long): Unit = varint((v << 1) ^ (v >> 63))
+    def key(field: Int, wire: Int): Unit = varint((field << 3 | wire).toLong)
+    def int64(field: Int, v: Long): Unit = { key(field, 0); varint(v) }
+    def sint64(field: Int, v: Long): Unit = { key(field, 0); zigzag(v) }
+    def bytes(field: Int, b: Array[Byte], len: Int): Unit = {
+      key(field, 2); varint(len.toLong)
+      ensure(len)
+      System.arraycopy(b, 0, bytes, size, len)
+      size += len
     }
-    def string(field: Int, s: String): Unit = bytes(field, s.getBytes("UTF-8"))
-    def packedSint64(field: Int, vs: Iterable[Long]): Unit = {
-      val p = new ProtoOut
-      vs.foreach(v => p.writeVarint((v << 1) ^ (v >> 63)))
-      bytes(field, p.toByteArray)
+    def message(field: Int, m: Buf): Unit = bytes(field, m.bytes, m.size)
+    def string(field: Int, s: String): Unit = {
+      val b = s.getBytes("UTF-8")
+      bytes(field, b, b.length)
     }
-    def packedUint32(field: Int, vs: Iterable[Int]): Unit = {
-      val p = new ProtoOut
-      vs.foreach(v => p.writeVarint(v.toLong))
-      bytes(field, p.toByteArray)
-    }
-    def toByteArray: Array[Byte] = out.toByteArray
-  }
-
-  def zlib(data: Array[Byte]): Array[Byte] = {
-    val d = new Deflater(Deflater.DEFAULT_COMPRESSION)
-    d.setInput(data); d.finish()
-    val out = new ByteArrayOutputStream(data.length / 2 + 64)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
   }
 
   def unzlib(data: Array[Byte], rawSize: Int): Array[Byte] = {
@@ -61,117 +63,166 @@ object Pbf {
     inf.end()
     out
   }
-
-  /** One framed blob: 4-byte BE BlobHeader length, BlobHeader, Blob. */
-  def writeBlob(out: OutputStream, blobType: String, payload: Array[Byte]): Unit = {
-    val blob = new ProtoOut
-    blob.int64(2, payload.length.toLong) // raw_size
-    blob.bytes(3, zlib(payload)) // zlib_data
-    val blobBytes = blob.toByteArray
-    val header = new ProtoOut
-    header.string(1, blobType)
-    header.int64(3, blobBytes.length.toLong) // datasize
-    val headerBytes = header.toByteArray
-    out.write(Array[Byte](
-      (headerBytes.length >>> 24).toByte, (headerBytes.length >>> 16).toByte,
-      (headerBytes.length >>> 8).toByte, headerBytes.length.toByte))
-    out.write(headerBytes)
-    out.write(blobBytes)
-  }
 }
 
 final class PbfWriter(out: OutputStream, bbox: BBox, generator: String = "graft 0.1.0") {
-  import Pbf._
+  import Pbf.Buf
+
+  private val deflater = new Deflater(Deflater.DEFAULT_COMPRESSION)
+  private val packed = new Buf(1 << 16) // one packed repeated field
+  private val way = new Buf(1 << 10)
+  private val msg = new Buf(1 << 17) // DenseNodes / HeaderBBox
+  private val group = new Buf(1 << 17) // PrimitiveGroup
+  private val table = new Buf(1 << 10) // StringTable
+  private val block = new Buf(1 << 17) // PrimitiveBlock / HeaderBlock
+  private val zdata = new Buf(1 << 16) // the block, compressed
+  private val header = new Buf(64) // BlobHeader
+  private val blob = new Buf(32) // Blob fields before zlib_data's bytes
 
   locally {
-    val hb = new ProtoOut
-    val bb = new ProtoOut
-    bb.sint64(1, (bbox.minLon * 1e9).toLong) // left, nanodegrees
-    bb.sint64(2, (bbox.maxLon * 1e9).toLong) // right
-    bb.sint64(3, (bbox.maxLat * 1e9).toLong) // top
-    bb.sint64(4, (bbox.minLat * 1e9).toLong) // bottom
-    hb.bytes(1, bb.toByteArray)
-    hb.string(4, "OsmSchema-V0.6")
-    hb.string(4, "DenseNodes")
-    hb.string(16, generator)
-    writeBlob(out, "OSMHeader", hb.toByteArray)
+    msg.clear()
+    msg.sint64(1, (bbox.minLon * 1e9).toLong) // left, nanodegrees
+    msg.sint64(2, (bbox.maxLon * 1e9).toLong) // right
+    msg.sint64(3, (bbox.maxLat * 1e9).toLong) // top
+    msg.sint64(4, (bbox.minLat * 1e9).toLong) // bottom
+    block.clear()
+    block.message(1, msg)
+    block.string(4, "OsmSchema-V0.6")
+    block.string(4, "DenseNodes")
+    block.string(16, generator)
+    writeBlob("OSMHeader")
   }
 
-  /** Dense nodes: ids contiguous from startId, coords in 1e-7 degrees. */
-  def writeDenseNodes(startId: Long, coords: Iterable[(Long, Long)]): Unit = {
-    if (coords.isEmpty) return
-    val dense = new ProtoOut
-    val n = coords.size
-    val ids = new Array[Long](n)
-    val lats = new Array[Long](n)
-    val lons = new Array[Long](n)
-    var lastLat = 0L
-    var lastLon = 0L
+  /** Dense nodes: ids contiguous from startId, coords in 1e-7 degrees,
+    * the first n entries of lons/lats. */
+  def writeDenseNodes(startId: Long, lons: Array[Long], lats: Array[Long], n: Int): Unit = {
+    if (n == 0) return
+    msg.clear()
+    packed.clear()
+    packed.zigzag(startId)
+    var i = 1
+    while (i < n) { packed.zigzag(1L); i += 1 }
+    msg.message(1, packed)
+    packDeltas(lats, n)
+    msg.message(8, packed)
+    packDeltas(lons, n)
+    msg.message(9, packed)
+    group.clear()
+    group.message(2, msg)
+    table.clear()
+    table.bytes(1, Array.emptyByteArray, 0)
+    writePrimitiveBlock()
+  }
+
+  private def packDeltas(vs: Array[Long], n: Int): Unit = {
+    packed.clear()
+    var last = 0L
     var i = 0
-    coords.foreach { case (lon, lat) =>
-      ids(i) = if (i == 0) startId else 1L
-      lats(i) = lat - lastLat
-      lons(i) = lon - lastLon
-      lastLat = lat; lastLon = lon
-      i += 1
-    }
-    dense.packedSint64(1, ids)
-    dense.packedSint64(8, lats)
-    dense.packedSint64(9, lons)
-    val group = new ProtoOut
-    group.bytes(2, dense.toByteArray)
-    writePrimitiveBlock(group.toByteArray, Seq(""))
+    while (i < n) { packed.zigzag(vs(i) - last); last = vs(i); i += 1 }
   }
 
   /** Ways with ele/contour tags via the block string table. */
   def writeWays(ways: Iterable[PreparedWay], startWayId: Long, classifier: Long => String): Unit = {
-    if (ways.isEmpty) return
     // chunk ways into blocks of <=8000 entities (mirroring the dense-node
     // chunking): a single merged-output run can hold millions of ways, and
     // one unchunked PrimitiveBlock would blow the PBF spec's 16/32 MiB
     // uncompressed blob limit that osmium/osmosis readers enforce. Each
     // block carries its own string table.
-    var wayId = startWayId
-    ways.grouped(8000).foreach { chunk =>
-      // string table: index 0 must be empty (dense keys_vals delimiter)
-      val strings = scala.collection.mutable.LinkedHashMap[String, Int]("" -> 0)
-      def sid(s: String): Int = strings.getOrElseUpdate(s, strings.size)
-      val group = new ProtoOut
-      chunk.foreach { w =>
-        val way = new ProtoOut
-        way.int64(1, wayId)
-        val keys = Seq(sid("ele"), sid("contour"), sid("contour_ext"))
-        val vals = Seq(sid(w.elevation.toString), sid("elevation"), sid(classifier(w.elevation)))
-        way.packedUint32(2, keys)
-        way.packedUint32(3, vals)
-        val refs = (w.firstNodeId until (w.firstNodeId + w.nbNodes)) ++
-          (if (w.closed) Seq(w.firstNodeId) else Nil)
-        var last = 0L
-        way.packedSint64(8, refs.map { r => val d = r - last; last = r; d })
-        group.bytes(3, way.toByteArray)
-        wayId += 1
+    val strings = new java.util.HashMap[String, Integer]()
+    def sid(s: String): Long = {
+      val id = strings.get(s)
+      if (id != null) id.longValue
+      else {
+        val next = strings.size
+        strings.put(s, next)
+        table.string(1, s)
+        next.toLong
       }
-      writePrimitiveBlock(group.toByteArray, strings.keys.toSeq)
+    }
+    var wayId = startWayId
+    var inBlock = 0
+    val it = ways.iterator
+    while (it.hasNext) {
+      if (inBlock == 0) {
+        // string table: index 0 must be empty (dense keys_vals delimiter)
+        strings.clear()
+        table.clear()
+        sid("")
+        group.clear()
+      }
+      val w = it.next()
+      way.clear()
+      way.int64(1, wayId)
+      packed.clear()
+      packed.varint(sid("ele")); packed.varint(sid("contour")); packed.varint(sid("contour_ext"))
+      way.message(2, packed)
+      packed.clear()
+      packed.varint(sid(w.elevation.toString)); packed.varint(sid("elevation"))
+      packed.varint(sid(classifier(w.elevation)))
+      way.message(3, packed)
+      // refs: first..first+n-1, then first again for a closed ring,
+      // delta-coded from 0 within the way
+      packed.clear()
+      var last = 0L
+      var r = w.firstNodeId
+      val end = w.firstNodeId + w.nbNodes
+      while (r < end) { packed.zigzag(r - last); last = r; r += 1 }
+      if (w.closed) packed.zigzag(w.firstNodeId - last)
+      way.message(8, packed)
+      group.message(3, way)
+      wayId += 1
+      inBlock += 1
+      if (inBlock == 8000 || !it.hasNext) {
+        writePrimitiveBlock()
+        inBlock = 0
+      }
     }
   }
 
-  private def writePrimitiveBlock(groupBytes: Array[Byte], strings: Seq[String]): Unit = {
-    val block = new ProtoOut
-    val st = new ProtoOut
-    strings.foreach(s => st.bytes(1, s.getBytes("UTF-8")))
-    block.bytes(1, st.toByteArray)
-    block.key(2, 2); block.writeVarint(groupBytes.length.toLong); block.out.write(groupBytes)
+  /** table + group -> one PrimitiveBlock blob. */
+  private def writePrimitiveBlock(): Unit = {
+    block.clear()
+    block.message(1, table)
+    block.message(2, group)
     block.int64(17, 100L) // granularity: 100 nanodeg = 1e-7 deg
-    writeBlob(out, "OSMData", block.toByteArray)
+    writeBlob("OSMData")
   }
 
-  def done(): Unit = out.close()
+  /** `block` as one framed blob: 4-byte BE BlobHeader length, BlobHeader,
+    * Blob (raw_size, zlib_data). */
+  private def writeBlob(blobType: String): Unit = {
+    deflater.reset()
+    deflater.setInput(block.bytes, 0, block.size)
+    deflater.finish()
+    zdata.clear()
+    while (!deflater.finished()) {
+      zdata.ensure(8192)
+      zdata.size += deflater.deflate(zdata.bytes, zdata.size, zdata.bytes.length - zdata.size)
+    }
+    blob.clear()
+    blob.int64(2, block.size.toLong) // raw_size
+    blob.key(3, 2); blob.varint(zdata.size.toLong) // zlib_data
+    header.clear()
+    header.string(1, blobType)
+    header.int64(3, (blob.size + zdata.size).toLong) // datasize
+    val h = header.size
+    out.write(h >>> 24); out.write(h >>> 16); out.write(h >>> 8); out.write(h)
+    out.write(header.bytes, 0, header.size)
+    out.write(blob.bytes, 0, blob.size)
+    out.write(zdata.bytes, 0, zdata.size)
+  }
+
+  def done(): Unit = {
+    deflater.end()
+    out.close()
+  }
 }
 
 /** Minimal PBF decoder for round-trip verification (plays the role of the
   * reference's osmium decode, tests/test_output.py:96-161). */
 object PbfReader {
   import Pbf._
+  import scala.collection.immutable.ArraySeq
 
   final case class Decoded(
       bboxNano: Seq[Long], // left, right, top, bottom
@@ -258,7 +309,7 @@ object PbfReader {
         decodeData(payload, nodes, ways)
       }
     }
-    Decoded(bbox, features.toSeq, nodes.toSeq, ways.toSeq)
+    Decoded(bbox, features.toSeq, nodes.toIndexedSeq, ways.toIndexedSeq)
   }
 
   private def decodeData(
@@ -288,9 +339,9 @@ object PbfReader {
         (k >> 3).toInt match {
           case 2 => // dense
             val dense = new ProtoIn(group.lenBytes())
-            var ids: Seq[Long] = Nil
-            var lats: Seq[Long] = Nil
-            var lons: Seq[Long] = Nil
+            var ids = Array.emptyLongArray
+            var lats = Array.emptyLongArray
+            var lons = Array.emptyLongArray
             while (dense.hasMore) {
               val kk = dense.varint()
               (kk >> 3).toInt match {
@@ -301,16 +352,18 @@ object PbfReader {
               }
             }
             var id = 0L; var lat = 0L; var lon = 0L
-            ids.indices.foreach { i =>
+            var i = 0
+            while (i < ids.length) {
               id += ids(i); lat += lats(i); lon += lons(i)
               nodes += ((id, lon * scale, lat * scale))
+              i += 1
             }
           case 3 => // way
             val way = new ProtoIn(group.lenBytes())
             var id = 0L
-            var keys: Seq[Long] = Nil
-            var vals: Seq[Long] = Nil
-            var refs: Seq[Long] = Nil
+            var keys = Array.emptyLongArray
+            var vals = Array.emptyLongArray
+            var refs = Array.emptyLongArray
             while (way.hasMore) {
               val kk = way.varint()
               (kk >> 3).toInt match {
@@ -318,29 +371,32 @@ object PbfReader {
                 case 2 => keys = packedU(way.lenBytes())
                 case 3 => vals = packedU(way.lenBytes())
                 case 8 =>
-                  var last = 0L
-                  refs = packed(way.lenBytes()).map { d => last += d; last }
+                  refs = packed(way.lenBytes())
+                  var i = 1
+                  while (i < refs.length) { refs(i) += refs(i - 1); i += 1 }
                 case _ => way.skip((kk & 7).toInt)
               }
             }
-            val tags = keys.zip(vals).map { case (ki, vi) => (strings(ki.toInt), strings(vi.toInt)) }
-            ways += ((id, refs, tags))
+            val tags = keys.toSeq.zip(vals).map { case (ki, vi) => (strings(ki.toInt), strings(vi.toInt)) }
+            ways += ((id, ArraySeq.unsafeWrapArray(refs), tags))
           case _ => group.skip((k & 7).toInt)
         }
       }
     }
   }
 
-  private def packed(b: Array[Byte]): Seq[Long] = {
+  // packed repeated fields as arrays: the decode loops index them, and a
+  // List here made every dense block quadratic
+  private def packed(b: Array[Byte]): Array[Long] = {
     val in = new ProtoIn(b)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val out = Array.newBuilder[Long]
     while (in.hasMore) out += in.zigzag()
-    out.toSeq
+    out.result()
   }
-  private def packedU(b: Array[Byte]): Seq[Long] = {
+  private def packedU(b: Array[Byte]): Array[Long] = {
     val in = new ProtoIn(b)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val out = Array.newBuilder[Long]
     while (in.hasMore) out += in.varint()
-    out.toSeq
+    out.result()
   }
 }

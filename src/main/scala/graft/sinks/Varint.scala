@@ -1,12 +1,12 @@
 package graft.sinks
 
-import java.io.ByteArrayOutputStream
+import java.io.{ByteArrayOutputStream, OutputStream}
 
 /** o5m varint codecs (reference semantics: pyhgtmap/varint.py:1-38 —
   * unsigned LEB128 and the zigzag signed variant). */
 object Varint {
 
-  def writeUnsigned(out: ByteArrayOutputStream, n0: Long): Unit = {
+  def writeUnsigned(out: OutputStream, n0: Long): Unit = {
     var n = n0
     var b = n & 0x7f
     n >>>= 7
@@ -18,7 +18,7 @@ object Varint {
     out.write(b.toInt)
   }
 
-  def writeSigned(out: ByteArrayOutputStream, n: Long): Unit =
+  def writeSigned(out: OutputStream, n: Long): Unit =
     if (n >= 0) writeUnsigned(out, n << 1)
     else writeUnsigned(out, ((-n - 1) << 1) | 1)
 

@@ -9,10 +9,13 @@ Usage: sweep.py [--seeds 101,202,303,404,505] [--scales 0.01]
 
 Runs serially (sbt child JVMs share target/classes — never compile while
 this runs). Each run: /tmp/graft_sweep_s{seed}_sf{sf} (data) +
-_out (Verify output). Prints a summary table; exit 1 if any gate failed.
+_out (Verify output). Prints a summary table; exit 1 if any gate failed,
+or if gatecheck printed no gate line for a seed.
+`python3 -m doctest tools/sweep.py` checks the gate classifier.
 """
 import argparse
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -25,6 +28,36 @@ REPO = os.path.dirname(HERE)
 def run(cmd, **kw):
     print(f"+ {' '.join(cmd)}", flush=True)
     return subprocess.run(cmd, **kw)
+
+
+GATE_RE = re.compile(r"^q\d+\w*:")
+
+
+def classify(stdout, returncode):
+    r"""Judge one gatecheck run -> (status, ok, gate lines, bad lines).
+
+    The driver gates on rows+schema+hash; gatecheck's extra [type-diff]
+    note (DuckDB widens int32 to int64) is informational, so a run with
+    gate lines is judged by its per-gate OK/FAIL lines, not by gatecheck's
+    strict exit code. Only recognized per-gate lines (qNN_name: ...)
+    count: headers, blank lines or free-form notes must not flip a passing
+    seed to FAIL. A run with no gate line at all (a crash, empty stdout)
+    is a FAIL whatever its exit code, never "OK (0/0 gates)".
+
+    >>> classify("q01_a: OK\nq02_b: OK\n", 1)[:2]
+    ('OK', 2)
+    >>> classify("q01_a: OK\nq02_b: FAIL rows\n", 1)[0]
+    'FAIL'
+    >>> classify("Traceback (most recent call last):\n", 1)[0]
+    'FAIL'
+    >>> classify("", 0)[0]
+    'FAIL'
+    """
+    lines = [l for l in stdout.splitlines() if GATE_RE.match(l.strip())]
+    if not lines:
+        return "FAIL", 0, lines, [f"no gate lines from gatecheck (exit {returncode})"]
+    bad = [l for l in lines if ": OK" not in l]
+    return ("FAIL" if bad else "OK"), len(lines) - len(bad), lines, bad
 
 
 def one(seed, sf, keep):
@@ -47,20 +80,12 @@ def one(seed, sf, keep):
         return tag, "VERIFY-FAIL", time.time() - t0, []
     r = run([sys.executable, f"{HERE}/gatecheck.py", data, out],
             capture_output=True, text=True)
-    # the driver gates on rows+schema+hash; gatecheck's extra [type-diff]
-    # note (DuckDB widens int32 to int64) is informational, so judge by
-    # the per-gate OK/FAIL lines, not gatecheck's strict exit code.
-    # Classify ONLY recognized per-gate lines (qNN_name: ...): headers,
-    # blank lines or free-form notes must not flip a passing seed to FAIL.
-    import re
-    gate_re = re.compile(r"^q\d+\w*:")
-    lines = [l for l in r.stdout.splitlines() if gate_re.match(l.strip())]
+    status, ok, lines, bad = classify(r.stdout, r.returncode)
     for info in (l for l in r.stdout.splitlines()
-                 if l.strip() and not gate_re.match(l.strip())):
+                 if l.strip() and not GATE_RE.match(l.strip())):
         print(f"  [gatecheck] {info}")
-    bad = [l for l in lines if ": OK" not in l]
-    ok = len(lines) - len(bad)
-    status = "OK" if not bad else "FAIL"
+    if not lines:
+        print(r.stderr[-2000:])
     if not keep and status == "OK":
         shutil.rmtree(data, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
