@@ -1,34 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query on
-  * SPARK_GRAFT_SF_DIR at local[SPARK_GRAFT_CPUS]; prints ONE JSON line. */
+  * SPARK_GRAFT_SF_DIR at local[Session.cpus()]; prints ONE JSON line. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // SPARK_GRAFT_STATESTORE=rocksdb switches the streaming gates to
-      // RocksDB + changelog checkpointing. Measured A/B at sf0.1
-      // (best-of-5 warm, 2026-08-17): rocksdb 7.21 s vs default 6.30 s
-      // over q40/q41/q42/q44/q55 — per-batch store open/commit overhead
-      // dominates the tiny gate state, so the default stays the in-heap
-      // HDFS-backed provider HERE; at deploy state sizes (100 TB-scale
-      // keyed state that cannot fit executor heap) RocksDB is the right
-      // choice and this knob is the one switch.
-      .config("spark.sql.streaming.stateStore.providerClass",
-        if (sys.env.get("SPARK_GRAFT_STATESTORE").contains("rocksdb"))
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        else "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .getOrCreate()
+    // The streaming gates run on Spark's default HDFS-backed state store:
+    // RocksDB + changelog checkpointing measured 7.21 vs 6.30 s over
+    // q40/q41/q42/q44/q55 at sf0.1 (best-of-5 warm, BENCH.md), because
+    // per-batch store open/commit overhead dominates the tiny gate state.
+    // Deploys whose keyed state exceeds executor heap pick RocksDB through
+    // Spark's own spark.sql.streaming.stateStore.* confs.
+    val spark = Session.local("graft-bench", Session.cpus())
     spark.sparkContext.setLogLevel("ERROR")
     // warm the JVM/codegen once with the cheapest query so per-query times
     // measure the plan, not first-call JIT

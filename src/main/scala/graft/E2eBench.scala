@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.core.JobConfig
 import graft.engine.RasterPipeline
 
@@ -50,17 +49,11 @@ object E2eBench {
   def main(args: Array[String]): Unit = {
     // dot-decimal everywhere: diagnostics/tables are parsed downstream
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cores = Session.cpus()
     val copies = sys.env.getOrElse("SPARK_GRAFT_E2E_COPIES", "15").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_E2E_REPS", "2").toInt
     val files = replicate("/tmp/graft_e2e_dem", copies)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-e2e-bench")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local("graft-e2e-bench", cores)
     spark.sparkContext.setLogLevel("ERROR")
     // reference PACA parameters (README:128-133)
     val cfg = JobConfig(contourStepSize = 10, rdpEpsilon = Some(0.00001))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.core.JobConfig
 import graft.engine.RasterPipeline
 
@@ -79,7 +78,7 @@ object PipelineCli {
     val args = argSeq.toArray
     val files = scala.collection.mutable.ArrayBuffer.empty[String]
     var cfg = JobConfig(rdpEpsilon = None)
-    var cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    var cores = Session.cpus().toString
     var format = graft.sinks.TileSink.OsmXmlFormat
     var sourcePrefs: Seq[String] = Nil
     var polyFile: Option[String] = None
@@ -225,13 +224,7 @@ object PipelineCli {
     val sourcePrefs = opts.sourcePrefs
     val polyFile = opts.polyFile
     val cacheRoot = opts.cacheRoot
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local("graft-pipeline", cores.toInt)
     spark.sparkContext.setLogLevel(opts.logLevel)
     // reference --rewrite-indices: rebuild the source indices and exit
     if (opts.rewriteIndices) {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.{Queries, SpatialJoin, Ann}
 
@@ -10,12 +10,9 @@ import graft.engine.{Queries, SpatialJoin, Ann}
   * after touching any of these paths. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-plan-dump")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // fixed cores, not SPARK_GRAFT_CPUS: the committed plans must not
+    // depend on the host that regenerates them
+    val spark = Session.local("graft-plan-dump", 4)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
     val sb = new StringBuilder

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.JobConfig
 import graft.engine.{RasterPipeline, SpatialJoin}
@@ -22,16 +21,10 @@ object ScalingBench {
       traceSec: Double = 0, polysSec: Double = 0, joinSec: Double = 0)
 
   def runOnce(cores: Int, nPages: Long, hgtFiles: Seq[String]): Result = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // finer scan splits: the last wave of a scan stage bounds its wall;
-      // 32 MB splits keep the tail short at high parallelism
-      .config("spark.sql.files.maxPartitionBytes", (32L << 20).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(s"graft-scaling-$cores", cores)
+    // finer scan splits: the last wave of a scan stage bounds its wall;
+    // 32 MB splits keep the tail short at high parallelism
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (32L << 20).toString)
     spark.sparkContext.setLogLevel("ERROR")
     try {
       val cfg = JobConfig(maxNodesPerTile = 100000L, maxNodesPerWay = 2000, rdpEpsilon = None)
@@ -105,12 +98,7 @@ object ScalingBench {
   /** One-time setup (not measured): materialize the pages table. */
   def ensurePagesTable(n: Long): Unit = {
     if (graft.core.Fs.exists(s"${pagesPath(n)}/_SUCCESS")) return
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-pages-setup")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local("graft-pages-setup", 32)
     try Pages.generate(spark, n).toDF()
       .write.mode("overwrite").parquet(pagesPath(n))
     finally spark.stop()

@@ -29,7 +29,7 @@ import graft.engine.SpatialJoin.Poly
   * requires every variant to return the identical row count.
   *
   * Env knobs: SPARK_GRAFT_SKEW_PAGES (default 16e6), SPARK_GRAFT_CPUS
-  * (default 16), SPARK_GRAFT_SKEW_REPS (default 2, best kept).
+  * (see Session.cpus), SPARK_GRAFT_SKEW_REPS (default 2, best kept).
   */
 object SkewBench {
 
@@ -144,17 +144,11 @@ object SkewBench {
 
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val cores = Session.cpus()
     val nPages = sys.env.getOrElse("SPARK_GRAFT_SKEW_PAGES", "16000000").toLong
     val reps = sys.env.getOrElse("SPARK_GRAFT_SKEW_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-skew-bench")
-      .config("spark.sql.shuffle.partitions", (cores * 2).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
+    val spark = Session.local("graft-skew-bench", cores)
+    spark.conf.set("spark.sql.shuffle.partitions", (cores * 2).toString)
     spark.sparkContext.setLogLevel("ERROR")
     val stats = new TaskStats
     spark.sparkContext.addSparkListener(stats)

@@ -42,14 +42,17 @@ object Ann {
   def norm(a: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     call_function("vec_norm", a)
 
-  /** Spread a SMALL scan before a compute-heavy stage (r7, guide §2.5):
-    * a tiny vector table arrives as ONE scan partition, and when the pair
-    * join broadcasts, the entire O(pairs · dim) similarity stage inherits
-    * that single partition — one core does all the flops. Scale-adaptive:
-    * identity whenever the input already carries >= defaultParallelism
-    * partitions (any real-scale table), so no shuffle is ever added at
-    * scale. */
-  private def spreadSmall(df: DataFrame): DataFrame = {
+  /** Spread a SMALL scan before a compute-heavy stage (r7, guide §2.5,
+    * input-layout skew — "repartition immediately after the read"): a tiny
+    * input (one parquet file at gate scale) arrives as ONE scan partition,
+    * and a narrow kernel over it — or, when a pair join broadcasts, the
+    * entire O(pairs · dim) similarity stage — runs on one core.
+    * SCALE-ADAPTIVE, not a local[32] tune: identity whenever the input
+    * already carries >= defaultParallelism partitions (any real-scale
+    * table), so no shuffle is ever added at scale. Measured on q36 at
+    * sf0.1 (same-JVM best-of-5, OPTIMIZATION_r07.md): 1.28 s
+    * single-partition kernel vs 0.43 s spread (r6 explode+agg: 0.84 s). */
+  private[engine] def spreadSmall(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
@@ -71,9 +74,11 @@ object Ann {
     * parallelism to the key cardinality. Strategy choice cannot change
     * results (AnnSpec pins the forced over-bound branch pair-identical). */
   private[engine] def fetchSide(df: DataFrame): DataFrame = {
-    val bound = BigInt(df.sparkSession.conf.get("spark.graft.fetchBroadcastBytes",
-      (128L << 20).toString).toLong)
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= bound) broadcast(df)
+    val key = "spark.graft.fetchBroadcastBytes"
+    val raw = df.sparkSession.conf.get(key, (128L << 20).toString)
+    val bound = raw.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"$key must be a whole number of bytes, got '$raw'"))
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(bound)) broadcast(df)
     else df.hint("shuffle_hash")
   }
 
@@ -315,9 +320,9 @@ object Ann {
     // triples the probe fan-out, so it pays only once candidate volume
     // (corpus-quadratic) dominates probe rows (corpus-linear) — measured
     // 1.45x at sf1 (7.18 -> 4.94 s full operator) and ~0.5 s SLOWER at
-    // sf0.1 (BenchExtra q57full). Callers at corpus scale pass
-    // numPivots = 4; callers
-    // who narrow the bands implicitly trade pivots for band resolution.
+    // sf0.1 (same-JVM A/B, OPTIMIZATION_r07.md). Callers at corpus scale
+    // pass numPivots = 4; callers who narrow the bands implicitly trade
+    // pivots for band resolution.
     val maxCombos = 81
     val perPivot = 2 * m + 1
     val pBudget = math.max(1, (math.log(maxCombos) / math.log(perPivot.toDouble)).toInt)

@@ -414,22 +414,8 @@ object Queries {
   private def shingleArr(s: SparkSession, dir: String, n: Int): DataFrame = {
     val fn = s"shingle_hashes_$n"
     graft.functions.ShingleHashes.register(s, fn, n)
-    spreadSmall(t(s, dir, "documents").filter(length(col("text")) >= n))
+    Ann.spreadSmall(t(s, dir, "documents").filter(length(col("text")) >= n))
       .select(col("doc_id"), call_function(fn, col("text")).as("hs"))
-  }
-
-  /** Spread a SMALL scan across the cluster before a compute-heavy narrow
-    * kernel: a tiny input (one parquet file at gate scale) arrives as a
-    * single scan partition, which would serialize the whole kernel on one
-    * core (guide §2.5, input-layout skew — "repartition immediately after
-    * the read"). SCALE-ADAPTIVE, not a local[32] tune: when the scan
-    * already carries >= defaultParallelism partitions (any real-scale
-    * table), this is the identity and no shuffle is ever added. Measured
-    * on q36 at sf0.1 (BenchExtra, same JVM, best-of-5): 1.28 s
-    * single-partition kernel vs 0.43 s spread (r6 explode+agg: 0.84 s). */
-  private def spreadSmall(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
   /** MinHash signature columns (doc_id, mh0..mh3) from n-char shingles via
@@ -834,9 +820,9 @@ object Queries {
       // has none.
       // r7: spreadSmall — the explode + partial agg run inside the SCAN
       // stage, which is one partition for the gate's single small file;
-      // measured 1.53 -> 0.62 s best-of-5 (BenchExtra q25). Identity at
-      // real scale (see spreadSmall).
-      val docs = spreadSmall(t(s, dir, "documents").filter(length(col("text")) >= 3))
+      // measured 1.53 -> 0.62 s best-of-5 (same-JVM A/B, OPTIMIZATION_r07.md).
+      // Identity at real scale (see Ann.spreadSmall).
+      val docs = Ann.spreadSmall(t(s, dir, "documents").filter(length(col("text")) >= 3))
       val grams = docs
         .select(col("lang"), explode(sequence(lit(1), length(col("text")) - 2)).as("i"), col("text"))
         .select(col("lang"), expr("substring(text, i, 3)").as("gram"))
@@ -874,9 +860,9 @@ object Queries {
     (s, dir) => {
       // r7: spreadSmall — BOTH branches' gram explodes + partial aggs run
       // inside the scan stage (one partition at gate scale); measured
-      // 3.55 -> 2.03 s best-of-5 (BenchExtra q39 old-distinct-spread).
-      // Identity at real scale (see spreadSmall).
-      val docs = spreadSmall(t(s, dir, "documents").filter(length(col("text")) >= 3))
+      // 3.55 -> 2.03 s best-of-5 (same-JVM A/B, OPTIMIZATION_r07.md).
+      // Identity at real scale (see Ann.spreadSmall).
+      val docs = Ann.spreadSmall(t(s, dir, "documents").filter(length(col("text")) >= 3))
       val grams = docs
         .select(col("doc_id"), col("lang"),
           explode(sequence(lit(1), length(col("text")) - 2)).as("i"), col("text"))
@@ -893,9 +879,9 @@ object Queries {
       // measured faster than every "cheaper" form that serializes them:
       // collecting the profile first, semi-filtering the stream on profile
       // grams, (r3, re-measured: 4.2 vs 5.7 s warm at sf0.1)
-      // countDistinct after a broadcast profile join — and (r7, BenchExtra
-      // same-JVM A/B: 2.92 vs 4.17 s best-of-5) replacing the distinct
-      // with the one-pass DistinctGramHashes kernel: the kernel removes
+      // countDistinct after a broadcast profile join — and (r7, same-JVM
+      // A/B in OPTIMIZATION_r07.md: 2.92 vs 4.17 s best-of-5) replacing the
+      // distinct with a one-pass distinct-gram-hash kernel: the kernel removes
       // the corpus-wide distinct exchange, but its shuffle-free classify
       // side cannot START until the broadcast (the whole train branch)
       // finishes, and the lost overlap outweighs the exchange at every
@@ -1019,7 +1005,7 @@ object Queries {
           element_at(col("words"), i + 1), element_at(col("words"), i + 2))))
       // r7: spreadSmall — the bigram explode + partial agg run inside the
       // single-partition gate scan otherwise (see q25; identity at scale)
-      val counts = spreadSmall(t(s, dir, "documents"))
+      val counts = Ann.spreadSmall(t(s, dir, "documents"))
         .select(col("doc_id"), split(col("text"), " ").as("words"))
         .filter(size(col("words")) >= 2)
         .select(col("doc_id"), explode(grams).as("g"))

@@ -1,0 +1,61 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.SparkSession
+
+/** Every main builds its session through `Session`, so its confs and the
+  * `SPARK_GRAFT_CPUS` parse are the whole of the session contract. */
+class SessionSpec extends AnyFunSuite {
+
+  test("the builder sets local[cores], cores shuffle partitions, AQE, UTC and no UI") {
+    assert(Session.confs("app", 3) == Map(
+      "spark.master" -> "local[3]",
+      "spark.app.name" -> "app",
+      "spark.sql.shuffle.partitions" -> "3",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false"))
+    // other suites may have built a session already: start a fresh one over
+    // the shared context, and leave none behind for the suites after this
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val spark = Session.local("session-spec", 3)
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "3")
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+      assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    } finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+    }
+    intercept[IllegalArgumentException](Session.local("session-spec", 0))
+  }
+
+  test("SPARK_GRAFT_CPUS: unset means every available processor") {
+    assert(Session.cpus(Map.empty) == Runtime.getRuntime.availableProcessors)
+    assert(Session.cpus(Map("SPARK_GRAFT_CPUS" -> "3")) == 3)
+  }
+
+  test("SPARK_GRAFT_CPUS: zero, negative and non-numeric values are refused by name") {
+    for (bad <- Seq("0", "-2", "abc", "")) {
+      val e = intercept[IllegalArgumentException](Session.cpus(Map("SPARK_GRAFT_CPUS" -> bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
+    }
+  }
+
+  test("src/main builds a SparkSession in exactly one place") {
+    val root = new java.io.File("src/main/scala")
+    require(root.isDirectory, s"run from the repository root: no ${root.getAbsolutePath}")
+    def sources(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
+      else if (f.getName.endsWith(".scala")) Seq(f)
+      else Nil
+    val sites = for {
+      f <- sources(root)
+      (line, i) <- java.nio.file.Files.readString(f.toPath).linesIterator.toSeq.zipWithIndex
+      if line.contains("SparkSession.builder")
+    } yield s"${f.getPath}:${i + 1}"
+    assert(sites.size == 1 && sites.head.contains("graft/Session.scala"), sites.mkString("\n"))
+  }
+}

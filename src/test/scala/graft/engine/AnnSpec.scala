@@ -175,6 +175,15 @@ class AnnSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.fetchBroadcastBytes")
   }
 
+  test("a malformed fetchBroadcastBytes fails naming the key and the value") {
+    spark.conf.set("spark.graft.fetchBroadcastBytes", "128MB")
+    try {
+      val e = intercept[IllegalArgumentException](Ann.fetchSide(spark.range(3).toDF()))
+      assert(e.getMessage.contains("spark.graft.fetchBroadcastBytes") &&
+        e.getMessage.contains("'128MB'"), e.getMessage)
+    } finally spark.conf.unset("spark.graft.fetchBroadcastBytes")
+  }
+
   test("precomputed pivots reproduce the per-call pivot selection exactly") {
     import spark.implicits._
     Ann.register(spark)

@@ -250,9 +250,9 @@ class StreamingSinkSpec extends AnyFunSuite {
 
   test("RocksDB state store: session sink parity incl. checkpointed restart") {
     import spark.implicits._
-    // The deploy switch (SPARK_GRAFT_STATESTORE=rocksdb in Bench) was
-    // measured as a null result at gate scale (BENCH.md); this asserts
-    // the knob is CORRECT, not just measured: the same session-sink
+    // The deploy switch (Spark's spark.sql.streaming.stateStore.providerClass
+    // conf) was measured as a null result at gate scale (BENCH.md); this
+    // asserts the knob is CORRECT, not just measured: the same session-sink
     // topology under RocksDBStateStoreProvider + changelog checkpointing
     // produces identical finalized sessions, including across a restart
     // (state reload from the RocksDB changelog, not the HDFS snapshot).

@@ -132,19 +132,6 @@ class TextSketchSpec extends AnyFunSuite {
     }
   }
 
-  test("DistinctGramHashes == distinct xxhash64(substring(text, i, n)) explode") {
-    graft.functions.TextSketch.registerDistinctGrams(spark, "dg_test", 3)
-    val old = docs.filter(length(col("text")) >= 3)
-      .select(col("doc_id"),
-        explode(sequence(lit(1), length(col("text")) - 2)).as("i"), col("text"))
-      .select(col("doc_id"), xxhash64(expr("substring(text, i, 3)")).as("ghash"))
-      .distinct()
-    val neu = docs.filter(length(col("text")) >= 3)
-      .select(col("doc_id"), explode(call_function("dg_test", col("text"))).as("ghash"))
-    assert(neu.orderBy("doc_id", "ghash").collect().toSeq ==
-      old.orderBy("doc_id", "ghash").collect().toSeq)
-  }
-
   test("array_distinct set intersection == (doc,h)-distinct intersection join") {
     // the q27/q37 verify rewrite: |array_intersect(distinct sets)| must be
     // the old distinct-rows intersection count, incl. duplicate shingles

@@ -72,9 +72,9 @@ def one(seed, sf, keep):
     if r.returncode != 0:
         print(r.stdout, r.stderr)
         return tag, "GEN-FAIL", time.time() - t0, []
-    env = dict(os.environ, SPARK_GRAFT_CPUS="16")
+    # cores: SPARK_GRAFT_CPUS if set, else every available processor
     r = run(["sbt", "-batch", f"runMain graft.Verify {data} {out}"],
-            cwd=REPO, env=env, capture_output=True, text=True)
+            cwd=REPO, capture_output=True, text=True)
     if r.returncode != 0:
         print(r.stdout[-4000:], r.stderr[-2000:])
         return tag, "VERIFY-FAIL", time.time() - t0, []
