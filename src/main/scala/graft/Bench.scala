@@ -25,19 +25,34 @@ object Bench {
     // BENCH.md noise protocol for local iteration); driver default is 1
     val repeat = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "1").toInt.max(1)
     val results = selected.map { case (name, fn) =>
-      val times = (1 to repeat).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
-      name -> times.min
+      name -> timed(name, repeat)(fn(spark, sfDir).count())
     }
-    // Locale.ROOT via Fmt: this line is parsed as JSON by the driver — a
-    // comma-decimal default locale would corrupt it
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + graft.core.Fmt("%.3f", v) }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    println(s"""{"metric":"total","value":${graft.core.Fmt("%.3f", total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
+    println(summaryLine(results, sfDir))
     spark.stop()
+  }
+
+  /** Best-of-`repeat` seconds of `run`, or None when any repeat throws: a
+    * failed query must not read as a fast one. The failure is named on
+    * stderr. */
+  def timed(name: String, repeat: Int)(run: => Long): Option[Double] =
+    try Some((1 to repeat).map { _ =>
+      val t0 = System.nanoTime()
+      run
+      (System.nanoTime() - t0) / 1e9
+    }.min)
+    catch {
+      case e: Throwable =>
+        Console.err.println(s"graft.Bench: $name failed: $e")
+        None
+    }
+
+  /** The one JSON line: a failed query reads -1 and is left out of total.
+    * Locale.ROOT via Fmt: the driver parses this line as JSON, and a
+    * comma-decimal default locale would corrupt it. */
+  def summaryLine(results: Seq[(String, Option[Double])], sfDir: String): String = {
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + v.fold("-1")(graft.core.Fmt("%.3f", _)) }
+      .mkString("{", ",", "}")
+    val total = results.flatMap(_._2).sum
+    s"""{"metric":"total","value":${graft.core.Fmt("%.3f", total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
   }
 }

@@ -2,8 +2,8 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{BBox, Cells}
-import graft.functions.PipContainsCol
+import scala.collection.immutable.LongMap
+import graft.core.{BBox, Cells, PreparedPolygon}
 
 /** Pages x polygons spatial join and kNN, built the way they must run at
   * 10^12-row scale (SURVEY.md §2.3 J3/J5, north rule):
@@ -12,6 +12,9 @@ import graft.functions.PipContainsCol
   *    cell-cover equi-join prunes the candidate set BEFORE the exact
   *    point-in-polygon residual (the reference's clip-before-PIP pattern,
   *    /root/reference/pyhgtmap/hgt/file.py:329-331, as a join plan);
+  *  - the residual probes a PreparedPolygon, which ray-casts over one
+  *    y-band's edges instead of the whole ring and gives exactly
+  *    Geometry.contains' answer; all three join variants share it;
   *  - the cover side is broadcast when small, else salted: pages get a
   *    deterministic hash(url)-based salt, the cover side is replicated
   *    per salt — dense cells (urban clusters) spread over `salt` reducers;
@@ -37,8 +40,8 @@ object SpatialJoin {
   }
 
   /** Cell cover of each polygon's bbox at `res` (coarse prefilter; exact
-    * residual is the PIP predicate). Carries only ids — polygon vertices
-    * travel once via a torrent broadcast (see PipLookup). */
+    * residual is the PIP predicate). Carries only ids — the prepared
+    * polygons travel once via a torrent broadcast (see PipLookup). */
   def coverDf(spark: SparkSession, polys: Seq[Poly], res: Int): DataFrame = {
     import spark.implicits._
     polys.flatMap { p =>
@@ -46,9 +49,15 @@ object SpatialJoin {
     }.toDF("cell", "poly_id")
   }
 
+  /** Registers the PIP residual every join variant filters on: each
+    * polygon is prepared once here on the driver (PreparedPolygon, whose
+    * band-indexed ray cast equals Geometry.contains bit for bit) and the
+    * poly_id -> prepared polygon dictionary travels in one torrent
+    * broadcast. */
   private def registerPipLookup(pages: DataFrame, polys: Seq[Poly]): String = {
     val spark = pages.sparkSession
-    val bc = spark.sparkContext.broadcast(polys.map(p => p.polyId -> p.coords).toMap)
+    val bc = spark.sparkContext.broadcast(
+      LongMap(polys.map(p => p.polyId -> PreparedPolygon(p.coords)): _*))
     val name = s"pip_lookup_${java.util.UUID.randomUUID().toString.take(8)}"
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, exprs => graft.functions.PipLookup(exprs(0), exprs(1), exprs(2), bc), "built-in")

@@ -3,28 +3,30 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BooleanType, DataType}
-import graft.core.Geometry
+import graft.core.PreparedPolygon
 
 /** Point-in-polygon predicate as a native Catalyst expression over a
   * polygon baked in at plan time (polygons are small broadcast-like values,
   * mirroring the reference's per-tile polygon masks,
   * /root/reference/pyhgtmap/hgt/file.py:310-365).
   *
-  * Even-odd ray cast (see graft.core.Geometry.contains). Registered as a
-  * temp function so `call_function` can build the Column on Spark 4 (the
+  * Even-odd ray cast through a PreparedPolygon (band-indexed edges, same
+  * answer as graft.core.Geometry.contains), prepared once when the
+  * function is registered. Registered as a temp function so
+  * `call_function` can build the Column on Spark 4 (the
   * Column-from-Expression constructor is no longer public).
   */
-case class PipContains(left: Expression, right: Expression, poly: Array[Double])
+case class PipContains(left: Expression, right: Expression, poly: PreparedPolygon)
     extends BinaryExpression {
   override def dataType: DataType = BooleanType
   override def nullSafeEval(lon: Any, lat: Any): Any =
-    Geometry.contains(poly, lon.asInstanceOf[Double], lat.asInstanceOf[Double])
-  // stays inside whole-stage codegen: the polygon is a plan-time reference
-  // object and the ray cast is a static call (Geometry's static forwarder)
+    poly.contains(lon.asInstanceOf[Double], lat.asInstanceOf[Double])
+  // stays inside whole-stage codegen: the prepared polygon is a plan-time
+  // reference object and the ray cast a final-class call
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val polyRef = ctx.addReferenceObj("pipPoly", poly, "double[]")
+    val polyRef = ctx.addReferenceObj("pipPoly", poly, classOf[PreparedPolygon].getName)
     nullSafeCodeGen(ctx, ev, (lon, lat) =>
-      s"${ev.value} = graft.core.Geometry.contains($polyRef, $lon, $lat);")
+      s"${ev.value} = $polyRef.contains($lon, $lat);")
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): PipContains =
     copy(left = l, right = r)
@@ -33,9 +35,11 @@ case class PipContains(left: Expression, right: Expression, poly: Array[Double])
 
 object PipContains {
   /** Register a polygon-specific pip function under `name` in this session. */
-  def register(spark: org.apache.spark.sql.SparkSession, name: String, poly: Array[Double]): Unit =
+  def register(spark: org.apache.spark.sql.SparkSession, name: String, poly: Array[Double]): Unit = {
+    val prepared = PreparedPolygon(poly)
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name,
-      exprs => PipContains(exprs(0), exprs(1), poly),
+      exprs => PipContains(exprs(0), exprs(1), prepared),
       "built-in")
+  }
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{BooleanType, DataType}
-import graft.core.Geometry
+import scala.collection.immutable.LongMap
+import graft.core.{Geometry, PreparedPolygon}
 
 /** Point-in-polygon where the polygon comes from a column
   * (array<double>, interleaved lon,lat) — the exact-residual predicate of
@@ -32,21 +33,28 @@ object PipContainsCol {
 }
 
 /** PIP against a broadcast polygon dictionary: the candidate rows carry
-  * only (lon, lat, poly_id); polygon vertices live once per executor in
-  * the torrent broadcast instead of being replicated into every cover-cell
-  * row (which would make the cover broadcast O(cells x vertices)). */
+  * only (lon, lat, poly_id); each polygon lives once per executor in the
+  * torrent broadcast, prepared (PreparedPolygon: the ring's edges indexed
+  * by y-band, built once on the driver) instead of being replicated into
+  * every cover-cell row (which would make the cover broadcast
+  * O(cells x vertices)). The prepared ray cast visits only the edges of
+  * the probe's band and returns exactly Geometry.contains' answer (the
+  * argument is on PreparedPolygon), so the join's rows do not depend on
+  * the index. */
 case class PipLookup(
     first: Expression, second: Expression, third: Expression,
-    polys: org.apache.spark.broadcast.Broadcast[Map[Long, Array[Double]]])
+    polys: org.apache.spark.broadcast.Broadcast[LongMap[PreparedPolygon]])
     extends TernaryExpression {
   override def dataType: DataType = BooleanType
 
+  // Broadcast.value takes a lock on every call; read it once per task
+  @transient private lazy val table = polys.value
+
   /** Codegen + interpreted entry point (public so generated Java can call it). */
-  def test(lon: Double, lat: Double, polyId: Long): Boolean =
-    polys.value.get(polyId) match {
-      case Some(arr) => Geometry.contains(arr, lon, lat)
-      case None => false
-    }
+  def test(lon: Double, lat: Double, polyId: Long): Boolean = {
+    val p = table.getOrElse(polyId, null)
+    p != null && p.contains(lon, lat)
+  }
 
   override def nullSafeEval(lon: Any, lat: Any, polyId: Any): Any =
     test(lon.asInstanceOf[Number].doubleValue(), lat.asInstanceOf[Number].doubleValue(),

@@ -85,6 +85,31 @@ class SpatialJoinSpec extends AnyFunSuite {
     }
   }
 
+  test("every join variant equals the naive oracle on 1,000+ vertex contour rings") {
+    // the 3-4 vertex polygons above get one PIP band each; these rings get
+    // hundreds, so the prepared polygons' band index decides the rows
+    val rings = graft.core.SynthRings.rings.take(6).zipWithIndex.map { case (c, i) => Poly(10L + i, c) }
+    assert(rings.size == 6 && rings.forall(_.coords.length >= 2000))
+    val all = pages.select("page_id", "lon", "lat").collect()
+    val expected = (for {
+      r <- all
+      p <- rings
+      if graft.core.Geometry.contains(p.coords, r.getDouble(1), r.getDouble(2))
+    } yield (r.getLong(0), p.polyId)).toSet
+    // pages inside a ring's bbox but outside the ring: the residual matters
+    val inBbox = all.count(r => rings.exists { p =>
+      val b = p.bbox
+      r.getDouble(1) >= b.minLon && r.getDouble(1) <= b.maxLon && r.getDouble(2) >= b.minLat && r.getDouble(2) <= b.maxLat
+    })
+    assert(expected.nonEmpty && inBbox > expected.map(_._1).size)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("page_id", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(rows(SpatialJoin.pipJoin(pages, rings, Res)) == expected, "pipJoin")
+    assert(rows(SpatialJoin.pipJoinSalted(pages, rings, Res, salts = 8)) == expected, "pipJoinSalted")
+    for (hint <- Seq("shuffle_hash", "merge"))
+      assert(rows(SpatialJoin.pipJoinShuffled(pages, rings, Res, joinHint = hint)) == expected, s"pipJoinShuffled $hint")
+  }
+
   test("ring-expansion kNN equals brute force") {
     val queries = Seq(
       (0L, 6.1, 43.2), (1L, 6.5, 43.5), (2L, 6.9, 43.8), (3L, 6.253, 43.253),
