@@ -9,7 +9,8 @@ import graft.functions.{ShingleHashes, SplitMix64, PipContainsCol, WrapExtract, 
 /** Session extension registering the engine's Catalyst expressions, so any
   * session (including spark-submit with
   * `--conf spark.sql.extensions=graft.GraftExtensions`) gets the SQL
-  * surface: splitmix64, shingle_hashes_4/8, pip_contains_col, wrap_extract.
+  * surface: splitmix64, shingle_hashes_4/8, pip_contains_col, wrap_extract,
+  * cosine_sim, sq_dist_vec and s2_cell.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -38,13 +39,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(
       (FunctionIdentifier("sq_dist_vec"), info("sq_dist_vec"),
         (exprs: Seq[Expression]) => SqDistVec(exprs(0), exprs(1))))
-    Seq(8, 12, 16).foreach { level =>
-      ext.injectFunction(
-        (FunctionIdentifier(s"hilbert_cell_$level"), info(s"hilbert_cell_$level"),
-          (exprs: Seq[Expression]) => graft.functions.HilbertCell(exprs(0), exprs(1), level)))
-    }
     // s2_cell(lon, lat, level): level must fold to a constant at plan time
-    // (it parameterizes the generated kernel, like the hilbert variants)
+    // (it parameterizes the generated kernel)
     ext.injectFunction(
       (FunctionIdentifier("s2_cell"), info("s2_cell"),
         (exprs: Seq[Expression]) => {

@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import scala.collection.immutable.LongMap
 import graft.core.{BBox, Cells, PreparedPolygon}
@@ -18,9 +19,9 @@ import graft.core.{BBox, Cells, PreparedPolygon}
   *  - the cover side is broadcast when small, else salted: pages get a
   *    deterministic hash(url)-based salt, the cover side is replicated
   *    per salt — dense cells (urban clusters) spread over `salt` reducers;
-  *  - kNN expands k-rings around each query cell and takes a windowed
-  *    top-k; the ring radius doubles until the k-th neighbour is provably
-  *    inside the ring (distance bound), so results equal brute force.
+  *  - kNN joins each query's cell neighbourhood on `cell`: per-cell
+  *    counts fix a ring radius that provably holds the k nearest pages,
+  *    and a windowed top-k over that ring equals brute force.
   */
 object SpatialJoin {
 
@@ -49,30 +50,31 @@ object SpatialJoin {
     }.toDF("cell", "poly_id")
   }
 
-  /** Registers the PIP residual every join variant filters on: each
-    * polygon is prepared once here on the driver (PreparedPolygon, whose
-    * band-indexed ray cast equals Geometry.contains bit for bit) and the
-    * poly_id -> prepared polygon dictionary travels in one torrent
-    * broadcast. */
-  private def registerPipLookup(pages: DataFrame, polys: Seq[Poly]): String = {
-    val spark = pages.sparkSession
+  /** The PIP residual every join variant ends with: each polygon is
+    * prepared once here on the driver (PreparedPolygon, whose band-indexed
+    * ray cast equals Geometry.contains bit for bit) and the poly_id ->
+    * prepared polygon dictionary travels in one torrent broadcast. The
+    * lookup is a temp function only while `candidates` is filtered: a
+    * classic Dataset is analyzed eagerly, so the returned plan keeps the
+    * resolved PipLookup, and the broadcast lives as long as that plan
+    * rather than as long as the session. */
+  private def pipResidual(candidates: DataFrame, polys: Seq[Poly]): DataFrame = {
+    val spark = candidates.sparkSession
     val bc = spark.sparkContext.broadcast(
       LongMap(polys.map(p => p.polyId -> PreparedPolygon(p.coords)): _*))
     val name = s"pip_lookup_${java.util.UUID.randomUUID().toString.take(8)}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    val registry = spark.sessionState.functionRegistry
+    registry.createOrReplaceTempFunction(
       name, exprs => graft.functions.PipLookup(exprs(0), exprs(1), exprs(2), bc), "built-in")
-    name
+    try candidates.filter(call_function(name, col("lon"), col("lat"), col("poly_id")))
+    finally registry.dropFunction(FunctionIdentifier(name))
   }
 
   /** pages(cell, lon, lat, ...) x polygons -> rows inside each polygon.
     * Broadcast cover variant (cover side small). */
   def pipJoin(pages: DataFrame, polys: Seq[Poly], res: Int): DataFrame = {
-    val spark = pages.sparkSession
-    val fn = registerPipLookup(pages, polys)
-    val cover = coverDf(spark, polys, res)
-    pages
-      .join(broadcast(cover), Seq("cell"))
-      .filter(call_function(fn, col("lon"), col("lat"), col("poly_id")))
+    val cover = coverDf(pages.sparkSession, polys, res)
+    pipResidual(pages.join(broadcast(cover), Seq("cell")), polys)
   }
 
   /** Unsalted shuffle variant — what a cover too large to broadcast forces
@@ -85,13 +87,10 @@ object SpatialJoin {
     * the salted variant so the two differ ONLY in skew handling. */
   def pipJoinShuffled(
       pages: DataFrame, polys: Seq[Poly], res: Int, joinHint: String = "shuffle_hash"): DataFrame = {
-    val spark = pages.sparkSession
-    val fn = registerPipLookup(pages, polys)
-    val cover = coverDf(spark, polys, res)
-    pages
+    val cover = coverDf(pages.sparkSession, polys, res)
+    pipResidual(pages
       .join(broadcast(cover.select("cell").distinct()), Seq("cell"), "leftsemi")
-      .join(cover.hint(joinHint), Seq("cell"))
-      .filter(call_function(fn, col("lon"), col("lat"), col("poly_id")))
+      .join(cover.hint(joinHint), Seq("cell")), polys)
   }
 
   /** Salted shuffle variant for covers too large to broadcast / dense
@@ -105,66 +104,24 @@ object SpatialJoin {
   def pipJoinSalted(pages: DataFrame, polys: Seq[Poly], res: Int, salts: Int): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val fn = registerPipLookup(pages, polys)
     val cover0 = coverDf(spark, polys, res)
     val saltsDf = spark.range(0, salts).toDF("salt")
     val cover = cover0.crossJoin(saltsDf)
-    pages
+    pipResidual(pages
       .join(broadcast(cover0.select("cell").distinct()), Seq("cell"), "leftsemi")
       .withColumn("salt", pmod(xxhash64(col("url")), lit(salts.toLong)))
-      .join(cover.hint("shuffle_hash"), Seq("cell", "salt"))
-      .filter(call_function(fn, col("lon"), col("lat"), col("poly_id")))
+      .join(cover.hint("shuffle_hash"), Seq("cell", "salt")), polys)
       .drop("salt")
   }
 
-  /** Locality-preserving repartition: range-partition on the Hilbert-curve
-    * cell id (S2-style space-filling index, core/Hilbert.scala) so each
-    * partition covers a spatially COMPACT area. Hash partitioning scatters
-    * neighbours across every partition; Hilbert ranges keep them together,
-    * which is what makes partition-pruned spatial reads and neighbour-local
-    * shuffles work at 10^12 rows (write clustering + join locality). */
-  def clusterSpatially(
-      df: DataFrame,
-      lonCol: String,
-      latCol: String,
-      level: Int,
-      partitions: Int): DataFrame = {
-    val fn = s"hilbert_cell_$level"
-    graft.functions.HilbertCell.register(df.sparkSession, fn, level)
-    df.repartitionByRange(partitions, call_function(fn, col(lonCol), col(latCol)))
-  }
-
-  /** Hilbert-clustered parquet write — the write-side payoff of
-    * clusterSpatially: rows land range-partitioned AND sorted by their
-    * Hilbert cell, so every output file (and every parquet row group
-    * inside it) covers a spatially COMPACT lon/lat box. A bbox scan then
-    * prunes most files from their min/max column stats, where a hash
-    * layout forces it to touch every file. This is how a 10^12-row pages
-    * table should be laid down once so every later spatial read is
-    * sub-linear. */
-  def writeClustered(
-      df: DataFrame,
-      path: String,
-      lonCol: String,
-      latCol: String,
-      level: Int,
-      partitions: Int): Unit = {
-    val fn = s"hilbert_cell_$level"
-    graft.functions.HilbertCell.register(df.sparkSession, fn, level)
-    df.withColumn("__hkey", call_function(fn, col(lonCol), col(latCol)))
-      .repartitionByRange(partitions, col("__hkey"))
-      .sortWithinPartitions("__hkey")
-      .drop("__hkey")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** S2-clustered parquet write: like writeClustered but keyed by the S2
-    * leaf cell id, which is KEPT as a column (`s2`) — unlike the Hilbert
-    * variant, a lat/lon rectangle maps to a handful of CONTIGUOUS id
-    * ranges (one per cover cell, S2.coverRect), so a bbox scan becomes a
-    * pushed-down `s2 BETWEEN lo AND hi OR ...` predicate that parquet
-    * row-group stats answer without decoding — file pruning AND row-group
-    * pruning from the same sorted long column. */
+  /** Spatially clustered parquet write: rows are range-partitioned and
+    * sorted by their S2 leaf cell id, which is kept as a column (`s2`), so
+    * every file and row group covers a compact patch of the sphere. A
+    * lat/lon rectangle maps to a handful of CONTIGUOUS id ranges (one per
+    * cover cell, S2.coverRect), so a bbox scan becomes a pushed-down
+    * `s2 BETWEEN lo AND hi OR ...` predicate (s2RangePredicate) that
+    * parquet row-group stats answer without decoding — file pruning AND
+    * row-group pruning from the same sorted long column. */
   def writeClusteredS2(
       df: DataFrame,
       path: String,
@@ -190,69 +147,10 @@ object SpatialJoin {
       graft.core.S2.rangeMin(c), graft.core.S2.rangeMax(c))).reduce(_ || _)
   }
 
-  /** Exact kNN via k-ring candidate join with provable termination:
-    * a result set for query q is final when it holds >= k candidates whose
-    * k-th distance <= ring guarantee (ring * cellSize in degrees). Rings
-    * double until every query is final (or the ring spans the data bbox).
-    * Returns (q_id, rank, page_id, dist).
-    *
-    * Driver-side state is bounded by k x |queries| result rows plus the
-    * ring cell lists — NOT by |pages|; the per-ring `.collect()` pulls at
-    * most k rows per outstanding query. Queries are a broadcast-sized set
-    * by construction (interactive lookups); for a large query TABLE use
-    * `knnBatch` below (fully columnar, no driver loop, gate q14). */
-  def knn(
-      pages: DataFrame, // needs page_id, lon, lat, cell
-      queries: Seq[(Long, Double, Double)],
-      k: Int,
-      res: Int,
-      maxRing: Int = 1 << 12): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val cellSize = 1.0 / (1L << res).toDouble
-    var ring = 1
-    var remaining = queries
-    val accRows = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long, Double)]
-    while (remaining.nonEmpty && ring <= maxRing) {
-      val cand = remaining.flatMap { case (qid, qLon, qLat) =>
-        Cells.kRing(Cells.cellId(qLon, qLat, res), res, ring)
-          .map(c => (qid, qLon, qLat, c))
-      }
-      val candDf = cand.toDF("q_id", "q_lon", "q_lat", "cell")
-      val joined = pages.join(broadcast(candDf), Seq("cell"))
-        .withColumn(
-          "dist",
-          sqrt((col("lon") - col("q_lon")) * (col("lon") - col("q_lon")) +
-            (col("lat") - col("q_lat")) * (col("lat") - col("q_lat"))))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("q_id").orderBy(col("dist").asc, col("page_id").asc)
-      val topk = joined
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("q_id", "rank", "page_id", "dist")
-        .collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-      // a point at euclid distance d is at most floor(d/cellSize)+1 cells
-      // away (Chebyshev), so a ring of radius `ring` provably covers all
-      // points within (ring-1)*cellSize of the query.
-      val guarantee = (ring - 1) * cellSize
-      val byQ = topk.groupBy(_._1)
-      val done = remaining.filter { case (qid, _, _) =>
-        byQ.get(qid).exists(rows => rows.length >= k && rows.map(_._4).max <= guarantee)
-      }
-      val doneIds = done.map(_._1).toSet
-      accRows ++= topk.filter(r => doneIds.contains(r._1))
-      remaining = remaining.filterNot(q => doneIds.contains(q._1))
-      ring *= 2
-    }
-    require(remaining.isEmpty, s"knn did not converge for queries: ${remaining.map(_._1)}")
-    accRows.toSeq.toDF("q_id", "rank", "page_id", "dist").orderBy("q_id", "rank")
-  }
-
   /** Exact batch-table kNN — both sides cell-indexed, candidates from a
     * per-query k-ring EQUI-JOIN on cell, top-k by window; no driver loop,
     * no per-query driver state, so the query side can be a 10^9-row table
-    * (the operator `knn` above documents as its own gap).
+    * (gates q12 and q14).
     *
     * Two fully-columnar passes make it exact, not approximate:
     *  1. radius discovery — queries explode to their (2·maxR+1)^2 cell

@@ -66,8 +66,6 @@ class PlanSpec extends AnyFunSuite {
     assert(spark.sql("SELECT wrap_extract('a<b&c', 'u')").collect()(0).getString(0) == "a<b&c")
     assert(spark.sql("SELECT s2_cell(6.5D, 43.5D, 11)").collect()(0).getLong(0) ==
       graft.core.S2.cellId(6.5, 43.5, 11))
-    assert(spark.sql("SELECT hilbert_cell_12(6.5D, 43.5D)").collect()(0).getLong(0) ==
-      graft.core.Hilbert.cellId(6.5, 43.5, 12))
     // non-literal level is rejected at plan time, not silently mis-planned
     assertThrows[Exception](spark.sql("SELECT s2_cell(6.5D, 43.5D, CAST(rand()*10 AS INT))").collect())
   }

@@ -30,6 +30,17 @@ class SpatialJoinSpec extends AnyFunSuite {
     Poly(2L, poly((6.5, 43.5), (6.9, 43.6), (6.7, 43.9))), // triangle
     Poly(3L, poly((6.05, 43.8), (6.15, 43.8), (6.15, 43.9), (6.05, 43.9))))
 
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.select("page_id", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** Naive oracle: Geometry.contains on every page x polygon. */
+  private def naive(ps: Seq[Poly]): Set[(Long, Long)] =
+    (for {
+      r <- pages.select("page_id", "lon", "lat").collect()
+      p <- ps
+      if graft.core.Geometry.contains(p.coords, r.getDouble(1), r.getDouble(2))
+    } yield (r.getLong(0), p.polyId)).toSet
+
   test("synthetic pages are deterministic and text roundtrips byte-identically") {
     val a = Pages.pageOf(1234L)
     val b = Pages.pageOf(1234L)
@@ -54,35 +65,20 @@ class SpatialJoinSpec extends AnyFunSuite {
   }
 
   test("cell-prejoin PIP join equals naive full scan") {
-    val got = SpatialJoin.pipJoin(pages, polys, Res)
-      .select("page_id", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // naive oracle: evaluate PIP on every page x polygon
-    val all = pages.select("page_id", "lon", "lat").collect()
-    val expected = (for {
-      r <- all
-      p <- polys
-      if graft.core.Geometry.contains(p.coords, r.getDouble(1), r.getDouble(2))
-    } yield (r.getLong(0), p.polyId)).toSet
-    assert(got == expected)
+    val got = rows(SpatialJoin.pipJoin(pages, polys, Res))
+    assert(got == naive(polys))
     assert(got.nonEmpty)
   }
 
   test("salted shuffle PIP join equals broadcast variant") {
-    val a = SpatialJoin.pipJoin(pages, polys, Res)
-      .select("page_id", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = SpatialJoin.pipJoinSalted(pages, polys, Res, salts = 8)
-      .select("page_id", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a == b)
+    assert(rows(SpatialJoin.pipJoin(pages, polys, Res)) ==
+      rows(SpatialJoin.pipJoinSalted(pages, polys, Res, salts = 8)))
   }
 
   test("unsalted shuffled PIP join equals broadcast variant (both hints)") {
-    val a = SpatialJoin.pipJoin(pages, polys, Res)
-      .select("page_id", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    for (hint <- Seq("shuffle_hash", "merge")) {
-      val b = SpatialJoin.pipJoinShuffled(pages, polys, Res, joinHint = hint)
-        .select("page_id", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(a == b, s"hint=$hint")
-    }
+    val a = rows(SpatialJoin.pipJoin(pages, polys, Res))
+    for (hint <- Seq("shuffle_hash", "merge"))
+      assert(a == rows(SpatialJoin.pipJoinShuffled(pages, polys, Res, joinHint = hint)), s"hint=$hint")
   }
 
   test("every join variant equals the naive oracle on 1,000+ vertex contour rings") {
@@ -90,62 +86,57 @@ class SpatialJoinSpec extends AnyFunSuite {
     // hundreds, so the prepared polygons' band index decides the rows
     val rings = graft.core.SynthRings.rings.take(6).zipWithIndex.map { case (c, i) => Poly(10L + i, c) }
     assert(rings.size == 6 && rings.forall(_.coords.length >= 2000))
-    val all = pages.select("page_id", "lon", "lat").collect()
-    val expected = (for {
-      r <- all
-      p <- rings
-      if graft.core.Geometry.contains(p.coords, r.getDouble(1), r.getDouble(2))
-    } yield (r.getLong(0), p.polyId)).toSet
+    val expected = naive(rings)
     // pages inside a ring's bbox but outside the ring: the residual matters
-    val inBbox = all.count(r => rings.exists { p =>
+    val inBbox = pages.select("lon", "lat").collect().count(r => rings.exists { p =>
       val b = p.bbox
-      r.getDouble(1) >= b.minLon && r.getDouble(1) <= b.maxLon && r.getDouble(2) >= b.minLat && r.getDouble(2) <= b.maxLat
+      r.getDouble(0) >= b.minLon && r.getDouble(0) <= b.maxLon && r.getDouble(1) >= b.minLat && r.getDouble(1) <= b.maxLat
     })
     assert(expected.nonEmpty && inBbox > expected.map(_._1).size)
-    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      df.select("page_id", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(rows(SpatialJoin.pipJoin(pages, rings, Res)) == expected, "pipJoin")
     assert(rows(SpatialJoin.pipJoinSalted(pages, rings, Res, salts = 8)) == expected, "pipJoinSalted")
     for (hint <- Seq("shuffle_hash", "merge"))
       assert(rows(SpatialJoin.pipJoinShuffled(pages, rings, Res, joinHint = hint)) == expected, s"pipJoinShuffled $hint")
   }
 
-  test("ring-expansion kNN equals brute force") {
-    val queries = Seq(
-      (0L, 6.1, 43.2), (1L, 6.5, 43.5), (2L, 6.9, 43.8), (3L, 6.253, 43.253),
-      (4L, 6.7, 43.1), (5L, 6.0001, 43.9999), (6L, 6.42, 43.66), (7L, 6.99, 43.01))
-    val fast = SpatialJoin.knn(pages, queries, k = 5, res = Res)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    val brute = SpatialJoin.knnBrute(pages, queries, k = 5)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    assert(fast.toSeq == brute.toSeq)
+  test("join variants leave no pip_lookup function registered and still equal the oracle") {
+    // each call's lookup closes over a broadcast of every prepared polygon;
+    // a registry entry left behind would pin that broadcast for the life of
+    // the session, so the variants drop it once their plan is analyzed
+    val frames = Seq(
+      "pipJoin" -> SpatialJoin.pipJoin(pages, polys, Res),
+      "pipJoinShuffled" -> SpatialJoin.pipJoinShuffled(pages, polys, Res),
+      "pipJoinSalted" -> SpatialJoin.pipJoinSalted(pages, polys, Res, salts = 8))
+    val left = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("pip_lookup_"))
+    assert(left.isEmpty, s"registered lookups left behind: $left")
+    val expected = naive(polys)
+    for ((name, df) <- frames) {
+      assert(df.count() == expected.size, name)
+      assert(rows(df) == expected, name)
+    }
   }
 
   test("ring-expansion kNN terminates and stays exact with all mass in one far cell") {
     import spark.implicits._
-    // worst case for the doubling loop: the query's own neighbourhood is
-    // empty for ~115 rings — every page sits in a single cell at the
-    // opposite corner of the tile, so only the ring that first spans the
-    // full diagonal can finalize. The finalize rule needs the k-th
-    // DISTANCE under the (ring-1)*cellSize guarantee, not mere k
-    // candidates — with euclid diag ~1.27 deg and 1/128-deg cells the
-    // loop must run past ring 164 to 256 and still return the exact set.
+    // the query's own neighbourhood is empty for 115 rings: every page sits
+    // in a single cell at the opposite corner of the tile (1/128-deg
+    // cells), so radius discovery must walk out to ring 115 and the
+    // candidate ring must still hold the exact top-k
     val far = (0 until 20).map { i =>
       val lon = 6.9 + (i % 5) * 1e-4; val lat = 43.9 + (i / 5) * 1e-4
       (100L + i, lon, lat, graft.core.Cells.cellId(lon, lat, Res))
     }.toDF("page_id", "lon", "lat", "cell")
-    val queries = Seq((0L, 6.0, 43.0))
-    val fast = SpatialJoin.knn(far, queries, k = 5, res = Res)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    val brute = SpatialJoin.knnBrute(far, queries, k = 5)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    assert(fast.toSeq == brute.toSeq && fast.length == 5)
-    // at the maxRing bound the operator refuses loudly (names the query)
-    // instead of returning a silently short / unproven result set
-    val ex = intercept[IllegalArgumentException] {
-      SpatialJoin.knn(far, queries, k = 5, res = Res, maxRing = 4)
-    }
-    assert(ex.getMessage.contains("did not converge") && ex.getMessage.contains("0"))
+    val qSeq = Seq((0L, 6.0, 43.0))
+    val queries = qSeq.toDF("q_id", "q_lon", "q_lat")
+    val got = SpatialJoin.knnBatch(far, queries, k = 5, res = Res, maxR = 128)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
+    val brute = SpatialJoin.knnBrute(far, qSeq, k = 5)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
+    assert(got == brute && got.length == 5, s"got $got vs brute $brute")
+    // a maxR neighbourhood holding < k pages leaves the query out of the
+    // output rather than returning an unproven short result
+    assert(SpatialJoin.knnBatch(far, queries, k = 5, res = Res, maxR = 4).count() == 0)
   }
 
   test("batch kNN near the antimeridian matches brute force (no lon wrap)") {
@@ -194,38 +185,6 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(got == brute, s"got $got vs brute $brute")
   }
 
-  test("hilbert-clustered write prunes a bbox scan >= 2x vs hash layout") {
-    val tmp = java.nio.file.Files.createTempDirectory("layout").toString
-    val cols = pages.select("page_id", "lon", "lat")
-    val hashPath = s"$tmp/hash"
-    val hilPath = s"$tmp/hilbert"
-    cols.repartition(16, col("page_id")).write.mode("overwrite").parquet(hashPath)
-    SpatialJoin.writeClustered(cols, hilPath, "lon", "lat", level = 8, partitions = 16)
-    // candidate files for a bbox scan = files whose lon/lat min/max stats
-    // (what parquet footers carry) intersect the query box
-    def candidates(dir: String, lo0: Double, la0: Double, lo1: Double, la1: Double): Int =
-      new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).count { f =>
-        val st = spark.read.parquet(f.toString)
-          .agg(min("lon"), max("lon"), min("lat"), max("lat")).collect()(0)
-        !st.isNullAt(0) &&
-          !(st.getDouble(1) < lo0 || st.getDouble(0) > lo1 ||
-            st.getDouble(3) < la0 || st.getDouble(2) > la1)
-      }
-    val (lo0, la0, lo1, la1) = (6.40, 43.40, 6.60, 43.60)
-    val nHash = candidates(hashPath, lo0, la0, lo1, la1)
-    val nHil = candidates(hilPath, lo0, la0, lo1, la1)
-    assert(nHil >= 1)
-    assert(nHash >= 2 * nHil, s"hash=$nHash hilbert=$nHil")
-    // identical content under both layouts
-    val a = spark.read.parquet(hashPath)
-      .filter(col("lon").between(lo0, lo1) && col("lat").between(la0, la1))
-      .select("page_id").collect().map(_.getLong(0)).sorted.toSeq
-    val b = spark.read.parquet(hilPath)
-      .filter(col("lon").between(lo0, lo1) && col("lat").between(la0, la1))
-      .select("page_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(a == b && a.nonEmpty)
-  }
-
   test("s2-clustered write serves a bbox from contiguous id ranges with file pruning") {
     val tmp = java.nio.file.Files.createTempDirectory("s2layout").toString
     val cols = pages.select("page_id", "lon", "lat")
@@ -248,6 +207,15 @@ class SpatialJoinSpec extends AnyFunSuite {
     val nTouched = s2Candidates(s2Path)
     val nTotal = new java.io.File(s2Path).listFiles().count(_.getName.endsWith(".parquet"))
     assert(nTouched >= 1 && nTotal >= 2 * nTouched, s"touched=$nTouched of $nTotal")
+    // the hash layout can prune only on lon/lat min/max stats (what parquet
+    // footers carry), and a bbox scan still touches >= 2x as many files
+    val nHash = new java.io.File(hashPath).listFiles().filter(_.getName.endsWith(".parquet")).count { f =>
+      val st = spark.read.parquet(f.toString)
+        .agg(min("lon"), max("lon"), min("lat"), max("lat")).collect()(0)
+      !st.isNullAt(0) &&
+        !(st.getDouble(1) < lo0 || st.getDouble(0) > lo1 || st.getDouble(3) < la0 || st.getDouble(2) > la1)
+    }
+    assert(nHash >= 2 * nTouched, s"hash=$nHash s2=$nTouched")
     // range predicate + exact refilter == plain bbox scan of the hash layout
     val viaS2 = spark.read.parquet(s2Path)
       .filter(pred) // the pushed-down pruning disjunction
@@ -272,7 +240,8 @@ class SpatialJoinSpec extends AnyFunSuite {
       .filter(col("q_id") < 50)
     val extra = Seq(
       (1000L, 6.0001, 43.9999), (1001L, 6.99, 43.01), (1002L, 6.253, 43.253),
-      (1003L, 6.42, 43.66)).toDF("q_id", "q_lon", "q_lat")
+      (1003L, 6.42, 43.66), (1004L, 6.1, 43.2), (1005L, 6.5, 43.5),
+      (1006L, 6.9, 43.8), (1007L, 6.7, 43.1)).toDF("q_id", "q_lon", "q_lat")
     val queries = fromPages.unionAll(extra)
     val got = SpatialJoin.knnBatch(pages, queries, k = 5, res = Res)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
