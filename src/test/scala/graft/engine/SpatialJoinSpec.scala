@@ -117,6 +117,18 @@ class SpatialJoinSpec extends AnyFunSuite {
     }
   }
 
+  test("ring-expansion kNN equals brute force") {
+    import spark.implicits._
+    val qSeq = Seq(
+      (0L, 6.1, 43.2), (1L, 6.5, 43.5), (2L, 6.9, 43.8), (3L, 6.253, 43.253),
+      (4L, 6.7, 43.1), (5L, 6.0001, 43.9999), (6L, 6.42, 43.66), (7L, 6.99, 43.01))
+    val got = SpatialJoin.knnBatch(pages, qSeq.toDF("q_id", "q_lon", "q_lat"), k = 5, res = Res)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
+    val brute = SpatialJoin.knnBrute(pages, qSeq, k = 5)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
+    assert(got == brute && got.length == 5 * qSeq.length, s"got $got vs brute $brute")
+  }
+
   test("ring-expansion kNN terminates and stays exact with all mass in one far cell") {
     import spark.implicits._
     // the query's own neighbourhood is empty for 115 rings: every page sits
