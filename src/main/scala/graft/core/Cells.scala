@@ -43,30 +43,6 @@ object Cells {
     BBox(lo, la, lo + inv, la + inv)
   }
 
-  /** All cells within Chebyshev distance k (the (2k+1)^2 "k-ring"),
-    * clamped at the lat poles, wrapped in lon. */
-  def kRing(cell: Long, res: Int, k: Int): Array[Long] = {
-    val w = lonWidth(res)
-    val maxLat = 180L << res
-    val li = lonIdx(cell, res)
-    val la = latIdx(cell, res)
-    val out = new scala.collection.mutable.ArrayBuffer[Long]((2 * k + 1) * (2 * k + 1))
-    var dy = -k
-    while (dy <= k) {
-      val y = la + dy
-      if (y >= 0 && y < maxLat) {
-        var dx = -k
-        while (dx <= k) {
-          val x = java.lang.Math.floorMod(li + dx, w)
-          out += y * w + x
-          dx += 1
-        }
-      }
-      dy += 1
-    }
-    out.toArray
-  }
-
   /** Cells covering a bbox at a resolution (for polygon covers). Edges on
     * the domain boundary clamp like cellId, so a bbox touching lat 90 /
     * lon 180 covers exactly the cells boundary points clamp into. */

@@ -3,9 +3,9 @@ package graft.core
 import scala.collection.mutable.ArrayBuffer
 import MarchingSquares.{GridView, Scratch}
 
-/** Per-tile contour generation: levels -> trace -> (optional RDP) -> way
-  * split, with the node/way accounting of the reference's
-  * HgtTile._get_contours + ContoursGenerator.trace
+/** Per-tile contour generation: levels -> one multi-level trace ->
+  * (optional RDP) -> way split, with the node/way accounting of the
+  * reference's HgtTile._get_contours + ContoursGenerator.trace
   * (/root/reference/pyhgtmap/hgt/tile.py:186-225, hgt/contour.py:119-140).
   */
 object ContourGen {
@@ -35,12 +35,13 @@ object ContourGen {
       Levels.levels(minEle, maxEle, cfg.contourStepSize, cfg.noZero, cfg.minCont, cfg.maxCont)
     val xs = Hgt.xData(bbox.minLon, lonInc, gv.cols)
     val ys = Hgt.yData(bbox.maxLat, latInc, gv.rows)
-    val stats = MarchingSquares.rowStats(gv) // once per tile, shared by all levels
+    val elevations = levels.toArray
     var totalNodes = 0L
     var totalWays = 0L
-    val perLevel = new ArrayBuffer[LevelContours](levels.size)
-    levels.foreach { level =>
-      val raw = MarchingSquares.trace(gv, xs, ys, level.toDouble, cornerMask = true, scratch, stats)
+    val perLevel = new ArrayBuffer[LevelContours](elevations.length)
+    // one sweep of the grid seeds every level; each level's raw paths are
+    // simplified and split before the next level is walked
+    MarchingSquares.traceLevels(gv, xs, ys, elevations.map(_.toDouble), cornerMask = true, scratch) { (i, raw) =>
       val outPaths = new ArrayBuffer[Array[Double]]()
       raw.foreach { path00 =>
         val path0 = transform match {
@@ -56,7 +57,7 @@ object ContourGen {
         totalNodes += s.nbNodes
         totalWays += s.nbPaths
       }
-      perLevel += LevelContours(level, outPaths.toSeq)
+      perLevel += LevelContours(elevations(i), outPaths.toSeq)
     }
     TileContours(totalNodes, totalWays, levels, perLevel.toSeq)
   }

@@ -13,6 +13,32 @@ import scala.collection.mutable.ArrayBuffer
   *   - a grid point is "above" iff z > level (strict);
   *   - saddle quads disambiguated by zmid = mean of the 4 corners vs level;
   *   - closed paths repeat their first point as last.
+  *
+  * Two entry points share one quad walk (`Walker`):
+  *   - `traceLevels` traces every level of a grid from one sweep. Each point
+  *     gets k = the number of levels it is above (the walk's own `z > level`
+  *     test, so NaN is above none and a value exactly on a level is not
+  *     above it). An edge then crosses exactly the levels
+  *     [min(k0, k1), max(k0, k1)), a contiguous run; this holds for a
+  *     masked quad's diagonal too. One counting sort places every start
+  *     edge into per-level seed lists, and each level walks its own list.
+  *     This is the span-space idea of Livnat, Shen and Johnson (IEEE TVCG
+  *     1996): the cost is O(points + crossings), not O(levels x rows x cols).
+  *   - `trace` traces one level by scanning the rows whose elevation range
+  *     spans it. It stays as the reference the sweep is tested against, and
+  *     as the per-level kernel timer of the benchmark harness.
+  *
+  * Seed-order contract: for every level, `traceLevels` tries start edges in
+  * exactly the order `trace` does, enters the same quad from each, and skips
+  * a seed in a quad row that `trace`'s row skipping would pass over (that
+  * matters only for unmasked NaN points, which row statistics ignore), so
+  * both emit the same paths, in the same order, from the same start points.
+  *   - No mask: top row N edges, bottom row S edges, then row by row the W
+  *     edge of column 0 and the E edge of the last column, then the interior
+  *     row-major with each quad's N edge before its W edge.
+  *   - Masked: per valid quad row-major, its boundary edges in N, W, S, E, D
+  *     order (S and E enter the quad they bound, above or left of the edge),
+  *     then per valid quad its interior N and W edges.
   */
 object MarchingSquares {
 
@@ -35,17 +61,33 @@ object MarchingSquares {
       new GridView(g.values, g.mask, rowOff * g.cols, g.cols, rows, g.cols)
   }
 
-  /** Reusable per-thread buffers (visited stamps survive across levels
-    * without clearing). */
+  /** Reusable per-thread buffers, grown on demand and kept across the
+    * grids a thread traces (visited stamps survive across levels without
+    * clearing). */
   final class Scratch {
     var visited: Array[Int] = new Array[Int](0)
     var stamp: Int = 0
     var aboveA: Array[Boolean] = new Array[Boolean](0)
     var aboveB: Array[Boolean] = new Array[Boolean](0)
+    // traceLevels: levels each point is above, per-point-row range of those
+    // counts, per-level seed offsets and fill cursors, the seeds themselves
+    var kAbove: Array[Int] = new Array[Int](0)
+    var rowKMin: Array[Int] = new Array[Int](0)
+    var rowKMax: Array[Int] = new Array[Int](0)
+    var levelOff: Array[Int] = new Array[Int](0)
+    var levelPos: Array[Int] = new Array[Int](0)
+    var seeds: Array[Int] = new Array[Int](0)
     def ensure(n: Int): Unit =
       if (visited.length < n) { visited = new Array[Int](n); stamp = 0 }
     def ensureRows(cols: Int): Unit =
       if (aboveA.length < cols) { aboveA = new Array[Boolean](cols); aboveB = new Array[Boolean](cols) }
+    def ensureSweep(points: Int, rows: Int, levels: Int): Unit = {
+      if (kAbove.length < points) kAbove = new Array[Int](points)
+      if (rowKMin.length < rows) { rowKMin = new Array[Int](rows); rowKMax = new Array[Int](rows) }
+      if (levelPos.length < levels) { levelPos = new Array[Int](levels); levelOff = new Array[Int](levels + 1) }
+    }
+    def ensureSeeds(n: Int): Unit =
+      if (seeds.length < n) seeds = new Array[Int](n)
   }
 
   /** Per-point-row min/max over valid points — computed once per tile and
@@ -86,31 +128,44 @@ object MarchingSquares {
     def toArray: Array[Double] = java.util.Arrays.copyOf(arr, len)
   }
 
-  // Edge kind bases are computed per grid inside trace().
+  /** Growable primitive int buffer: one level's seeds in `trace`. */
+  private final class IntBuf(initial: Int) {
+    var arr = new Array[Int](initial)
+    var len = 0
+    @inline def +=(v: Int): Unit = {
+      if (len == arr.length) arr = java.util.Arrays.copyOf(arr, arr.length * 2)
+      arr(len) = v
+      len += 1
+    }
+  }
 
-  /** Trace all iso-lines of `level`. Returns interleaved-coordinate paths;
-    * closed paths have first point repeated as last (exact copy). */
-  def trace(
+  /** The quad walk over one grid (rows, cols >= 2), one level at a time.
+    * Edge ids: H edges [0, HB), V edges [HB, HB+VB), then one diagonal per
+    * quad (used only by single-masked-corner quads). `begin` starts a
+    * level with a fresh visited stamp and output buffer. */
+  private final class Walker(
       gv: GridView,
       xData: Array[Double],
       yData: Array[Double],
-      level: Double,
       cornerMask: Boolean,
-      scratch: Scratch,
-      stats: (Array[Double], Array[Double]) = null): ArrayBuffer[Array[Double]] = {
-    val rows = gv.rows
-    val cols = gv.cols
-    val out = new ArrayBuffer[Array[Double]]()
-    if (rows < 2 || cols < 2) return out
+      scratch: Scratch) {
+    private val rows = gv.rows
+    private val cols = gv.cols
+    private val HB = rows * (cols - 1) // H edge ids [0, HB)
+    private val VB = (rows - 1) * cols // V edge ids [HB, HB+VB)
+    scratch.ensure(HB + VB + (rows - 1) * (cols - 1))
+    private val visited = scratch.visited
+    private var stamp = 0
+    private var level = 0.0
+    private var out: ArrayBuffer[Array[Double]] = null
 
-    val HB = rows * (cols - 1) // H edge ids [0, HB)
-    val VB = (rows - 1) * cols // V edge ids [HB, HB+VB)
-    val DB = (rows - 1) * (cols - 1)
-    val nEdges = HB + VB + DB
-    scratch.ensure(nEdges)
-    scratch.stamp += 1
-    val visited = scratch.visited
-    val stamp = scratch.stamp
+    def begin(lv: Double): ArrayBuffer[Array[Double]] = {
+      level = lv
+      scratch.stamp += 1
+      stamp = scratch.stamp
+      out = new ArrayBuffer[Array[Double]]()
+      out
+    }
 
     @inline def hId(r: Int, c: Int): Int = r * (cols - 1) + c
     @inline def vId(r: Int, c: Int): Int = HB + r * cols + c
@@ -119,7 +174,7 @@ object MarchingSquares {
     @inline def above(r: Int, c: Int): Boolean = !gv.masked(r, c) && gv.z(r, c) > level
 
     // number of masked corners of quad (r, c); 0 <= r < rows-1, 0 <= c < cols-1
-    @inline def maskCount(r: Int, c: Int): Int = {
+    @inline private def maskCount(r: Int, c: Int): Int = {
       var n = 0
       if (gv.masked(r, c)) n += 1
       if (gv.masked(r, c + 1)) n += 1
@@ -145,7 +200,7 @@ object MarchingSquares {
       else -1
 
     /** Exit edge when entering quad (r,c) through edge `enter`. */
-    def exitEdge(r: Int, c: Int, enter: Int): Int = {
+    private def exitEdge(r: Int, c: Int, enter: Int): Int = {
       val mc = if (gv.mask == null) -1 else maskedCorner(r, c)
       val aTL = above(r, c); val aTR = above(r, c + 1)
       val aBL = above(r + 1, c); val aBR = above(r + 1, c + 1)
@@ -199,7 +254,7 @@ object MarchingSquares {
     }
 
     /** Append the interpolated crossing point of `edge` to buf. */
-    def appendPoint(edge: Int, buf: DoubleBuf): Unit = {
+    private def appendPoint(edge: Int, buf: DoubleBuf): Unit = {
       if (edge < HB) {
         val r = edge / (cols - 1); val c = edge % (cols - 1)
         val z0 = gv.z(r, c); val z1 = gv.z(r, c + 1)
@@ -234,19 +289,19 @@ object MarchingSquares {
     }
 
     /** Quad on the other side of `edge` from quad (r,c); (-1,-1) if none. */
-    @inline def otherQuadR(edge: Int, r: Int): Int = {
+    @inline private def otherQuadR(edge: Int, r: Int): Int = {
       if (edge < HB) { val er = edge / (cols - 1); if (er == r) er - 1 else er }
       else if (edge < HB + VB) r
       else -2 // diagonal: no neighbor
     }
-    @inline def otherQuadC(edge: Int, c: Int): Int = {
+    @inline private def otherQuadC(edge: Int, c: Int): Int = {
       if (edge < HB) c
       else if (edge < HB + VB) { val ec = (edge - HB) % cols; if (ec == c) ec - 1 else ec }
       else -2
     }
 
     /** Walk from `start` entering quad (qr,qc); emit path into out. */
-    def walk(start: Int, qr0: Int, qc0: Int): Unit = {
+    private def walk(start: Int, qr0: Int, qc0: Int): Unit = {
       val buf = new DoubleBuf(32)
       appendPoint(start, buf)
       visited(start) = stamp
@@ -273,6 +328,266 @@ object MarchingSquares {
       out += buf.toArray
     }
 
+    /** Walk from an encoded seed unless this level already passed through
+      * its edge. Seed `e` enters the quad whose N, W or diagonal edge `e`
+      * is; `~e` enters the quad above an H edge or left of a V edge. */
+    def startSeed(s: Int): Unit = {
+      val e = if (s >= 0) s else ~s
+      if (visited(e) != stamp) {
+        if (e < HB) {
+          val r = e / (cols - 1)
+          walk(e, if (s >= 0) r else r - 1, e % (cols - 1))
+        } else if (e < HB + VB) {
+          val c = (e - HB) % cols
+          walk(e, (e - HB) / cols, if (s >= 0) c else c - 1)
+        } else {
+          val d = e - HB - VB
+          walk(e, d / (cols - 1), d % (cols - 1))
+        }
+      }
+    }
+  }
+
+  /** One sweep of a grid that buckets the start edges of every level, in
+    * the seed order the module scaladoc states. `bucket` classifies the
+    * points, counts each level's seeds, then places them; afterwards level
+    * i's seeds are `scratch.seeds(off(i) until off(i + 1))`. */
+  private final class SeedSweep(w: Walker, gv: GridView, levels: Array[Double], scratch: Scratch) {
+    private val rows = gv.rows
+    private val cols = gv.cols
+    private val n = levels.length
+    scratch.ensureSweep(rows * cols, rows, n)
+    private val k = scratch.kAbove
+    private val rowKMin = scratch.rowKMin
+    private val rowKMax = scratch.rowKMax
+    private val off = scratch.levelOff
+    private val pos = scratch.levelPos
+    private var seeds: Array[Int] = null
+    private var placing = false
+    // the levels quad row r is not skipped at: [rlo, rhi)
+    private var rlo = 0
+    private var rhi = 0
+
+    def bucket(): Array[Int] = {
+      classify()
+      java.util.Arrays.fill(off, 0, n + 1, 0)
+      placing = false
+      enumerate()
+      // off holds +1/-1 range ends: running sum = seeds per level
+      var run = 0
+      var acc = 0L
+      var i = 0
+      while (i < n) {
+        run += off(i)
+        off(i) = acc.toInt
+        pos(i) = acc.toInt
+        acc += run
+        i += 1
+      }
+      require(acc <= Int.MaxValue, s"$acc contour crossings in one grid exceed the seed array")
+      off(n) = acc.toInt
+      scratch.ensureSeeds(acc.toInt)
+      seeds = scratch.seeds
+      placing = true
+      enumerate()
+      off
+    }
+
+    /** Levels strictly below z, by the walk's `z > level` test (NaN: 0). */
+    private def levelsBelow(z: Double): Int = {
+      var lo = 0
+      var hi = n
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (z > levels(mid)) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+
+    /** k per point (masked points are above nothing) and, per point row,
+      * the k range of its valid non-NaN points: the k image of `rowStats`. */
+    private def classify(): Unit = {
+      var r = 0
+      while (r < rows) {
+        var mn = n
+        var mx = 0
+        var c = 0
+        while (c < cols) {
+          val p = r * cols + c
+          if (gv.masked(r, c)) k(p) = 0
+          else {
+            val z = gv.z(r, c)
+            val kp = levelsBelow(z)
+            k(p) = kp
+            if (z == z) {
+              if (kp < mn) mn = kp
+              if (kp > mx) mx = kp
+            }
+          }
+          c += 1
+        }
+        rowKMin(r) = mn
+        rowKMax(r) = mx
+        r += 1
+      }
+    }
+
+    /** `trace` skips quad row r at level i unless rowMin <= level < rowMax
+      * over point rows r and r+1, i.e. unless rlo <= i < rhi. */
+    private def rowRange(r: Int): Unit = {
+      rlo = math.min(rowKMin(r), rowKMin(r + 1))
+      rhi = math.max(rowKMax(r), rowKMax(r + 1))
+    }
+
+    /** Seed `s` at every level its edge (endpoint counts ka, kb) crosses
+      * and the current quad row is not skipped at. */
+    @inline private def add(s: Int, ka: Int, kb: Int): Unit = {
+      val lo = math.max(math.min(ka, kb), rlo)
+      val hi = math.min(math.max(ka, kb), rhi)
+      if (lo < hi) {
+        if (placing) {
+          var i = lo
+          while (i < hi) { seeds(pos(i)) = s; pos(i) += 1; i += 1 }
+        } else {
+          off(lo) += 1
+          off(hi) -= 1
+        }
+      }
+    }
+
+    private def enumerate(): Unit = if (gv.mask == null) enumerateFast() else enumerateMasked()
+
+    private def enumerateFast(): Unit = {
+      val last = (rows - 1) * cols
+      rowRange(0)
+      var c = 0
+      while (c < cols - 1) { add(w.hId(0, c), k(c), k(c + 1)); c += 1 }
+      rowRange(rows - 2)
+      c = 0
+      while (c < cols - 1) { add(~w.hId(rows - 1, c), k(last + c), k(last + c + 1)); c += 1 }
+      var r = 0
+      while (r < rows - 1) {
+        rowRange(r)
+        val p = r * cols
+        add(w.vId(r, 0), k(p), k(p + cols))
+        add(~w.vId(r, cols - 1), k(p + cols - 1), k(p + 2 * cols - 1))
+        r += 1
+      }
+      // interior: row 0's N edges and column 0's W edges were seeded above
+      // with the same skip test, so at their levels they are already visited
+      r = 0
+      while (r < rows - 1) {
+        rowRange(r)
+        val p = r * cols
+        c = 0
+        while (c < cols - 1) {
+          val kTL = k(p + c)
+          if (r > 0) add(w.hId(r, c), kTL, k(p + c + 1))
+          if (c > 0) add(w.vId(r, c), kTL, k(p + c + cols))
+          c += 1
+        }
+        r += 1
+      }
+    }
+
+    private def enumerateMasked(): Unit = {
+      var r = 0
+      while (r < rows - 1) {
+        rowRange(r)
+        val p = r * cols
+        var c = 0
+        while (c < cols - 1) {
+          if (w.quadValid(r, c)) {
+            val mc = w.maskedCorner(r, c)
+            val kTL = k(p + c); val kTR = k(p + c + 1)
+            val kBL = k(p + cols + c); val kBR = k(p + cols + c + 1)
+            if (mc != 0 && mc != 1 && !w.quadValid(r - 1, c)) add(w.hId(r, c), kTL, kTR)
+            if (mc != 0 && mc != 2 && !w.quadValid(r, c - 1)) add(w.vId(r, c), kTL, kBL)
+            if (mc != 2 && mc != 3 && !w.quadValid(r + 1, c)) add(~w.hId(r + 1, c), kBL, kBR)
+            if (mc != 1 && mc != 3 && !w.quadValid(r, c + 1)) add(~w.vId(r, c + 1), kTR, kBR)
+            if (mc == 0 || mc == 3) add(w.dId(r, c), kTR, kBL)
+            else if (mc >= 0) add(w.dId(r, c), kTL, kBR)
+          }
+          c += 1
+        }
+        r += 1
+      }
+      // interior: an N or W edge with no valid quad beyond it was seeded
+      // above as a boundary edge, so at its levels it is already visited
+      r = 0
+      while (r < rows - 1) {
+        rowRange(r)
+        val p = r * cols
+        var c = 0
+        while (c < cols - 1) {
+          if (w.quadValid(r, c)) {
+            val mc = w.maskedCorner(r, c)
+            val kTL = k(p + c)
+            if (mc != 0 && mc != 1 && w.quadValid(r - 1, c)) add(w.hId(r, c), kTL, k(p + c + 1))
+            if (mc != 0 && mc != 2 && w.quadValid(r, c - 1)) add(w.vId(r, c), kTL, k(p + cols + c))
+          }
+          c += 1
+        }
+        r += 1
+      }
+    }
+  }
+
+  /** Trace every level of `levels` (strictly ascending) from one sweep of
+    * the grid. For each level in order, `emit(i, paths)` receives the paths
+    * of `levels(i)` before the next level is walked; the paths equal what
+    * `trace` returns for that level, in the same order. `emit` must not
+    * trace with the same `scratch`: it holds the remaining levels' seeds. */
+  def traceLevels(
+      gv: GridView,
+      xData: Array[Double],
+      yData: Array[Double],
+      levels: Array[Double],
+      cornerMask: Boolean,
+      scratch: Scratch)(emit: (Int, ArrayBuffer[Array[Double]]) => Unit): Unit = {
+    var i = 1
+    while (i < levels.length) {
+      require(levels(i - 1) < levels(i),
+        s"levels must be strictly ascending: ${levels(i - 1)} then ${levels(i)}")
+      i += 1
+    }
+    if (gv.rows < 2 || gv.cols < 2 || levels.isEmpty) {
+      levels.indices.foreach(l => emit(l, new ArrayBuffer[Array[Double]]()))
+      return
+    }
+    val w = new Walker(gv, xData, yData, cornerMask, scratch)
+    val off = new SeedSweep(w, gv, levels, scratch).bucket()
+    val seeds = scratch.seeds
+    var l = 0
+    while (l < levels.length) {
+      val out = w.begin(levels(l))
+      var j = off(l)
+      while (j < off(l + 1)) { w.startSeed(seeds(j)); j += 1 }
+      emit(l, out)
+      l += 1
+    }
+  }
+
+  /** Trace all iso-lines of `level`. Returns interleaved-coordinate paths;
+    * closed paths have first point repeated as last (exact copy). Scans
+    * the rows whose range spans `level` for start edges, then walks them
+    * in scan order (walks only mark edges visited, so deferring them past
+    * the scan changes nothing, and keeps the walk out of the scan loops). */
+  def trace(
+      gv: GridView,
+      xData: Array[Double],
+      yData: Array[Double],
+      level: Double,
+      cornerMask: Boolean,
+      scratch: Scratch,
+      stats: (Array[Double], Array[Double]) = null): ArrayBuffer[Array[Double]] = {
+    val rows = gv.rows
+    val cols = gv.cols
+    if (rows < 2 || cols < 2) return new ArrayBuffer[Array[Double]]()
+    val w = new Walker(gv, xData, yData, cornerMask, scratch)
+    val out = w.begin(level)
+    val seeds = new IntBuf(256)
+
     // per-point-row min/max over valid points, for fast row skipping
     val (rowMin, rowMax) = if (stats != null) stats else rowStats(gv)
     @inline def rowSkip(r: Int): Boolean = {
@@ -293,10 +608,7 @@ object MarchingSquares {
       if (!rowSkip(0)) {
         var c = 0
         while (c < cols - 1) {
-          if (above(0, c) != above(0, c + 1)) {
-            val e = hId(0, c)
-            if (visited(e) != stamp) walk(e, 0, c)
-          }
+          if (w.above(0, c) != w.above(0, c + 1)) seeds += w.hId(0, c)
           c += 1
         }
       }
@@ -304,24 +616,15 @@ object MarchingSquares {
       if (!rowSkip(rb)) {
         var c = 0
         while (c < cols - 1) {
-          if (above(rb + 1, c) != above(rb + 1, c + 1)) {
-            val e = hId(rb + 1, c)
-            if (visited(e) != stamp) walk(e, rb, c)
-          }
+          if (w.above(rb + 1, c) != w.above(rb + 1, c + 1)) seeds += ~w.hId(rb + 1, c)
           c += 1
         }
       }
       var r = 0
       while (r < rows - 1) {
         if (!rowSkip(r)) {
-          if (above(r, 0) != above(r + 1, 0)) {
-            val e = vId(r, 0)
-            if (visited(e) != stamp) walk(e, r, 0)
-          }
-          if (above(r, cols - 1) != above(r + 1, cols - 1)) {
-            val e = vId(r, cols - 1)
-            if (visited(e) != stamp) walk(e, r, cols - 2)
-          }
+          if (w.above(r, 0) != w.above(r + 1, 0)) seeds += w.vId(r, 0)
+          if (w.above(r, cols - 1) != w.above(r + 1, cols - 1)) seeds += ~w.vId(r, cols - 1)
         }
         r += 1
       }
@@ -346,96 +649,70 @@ object MarchingSquares {
           lastRow = r
           var c = 0
           while (c < cols - 1) {
-            val tl = aTop(c)
-            if (tl != aTop(c + 1)) {
-              val e = hId(r, c)
-              if (visited(e) != stamp) walk(e, r, c)
+            // a load-only search to the next quad with a crossing N or W
+            // edge keeps the seed stores out of the hot loop
+            while (c < cols - 1 && aTop(c) == aTop(c + 1) && aTop(c) == aBot(c)) c += 1
+            if (c < cols - 1) {
+              val tl = aTop(c)
+              if (tl != aTop(c + 1)) seeds += w.hId(r, c)
+              if (tl != aBot(c)) seeds += w.vId(r, c)
+              c += 1
             }
-            if (tl != aBot(c)) {
-              val e = vId(r, c)
-              if (visited(e) != stamp) walk(e, r, c)
+          }
+        }
+        r += 1
+      }
+    } else {
+      // General (masked) path.
+      // Pass 1: boundary starts.
+      var r = 0
+      while (r < rows - 1) {
+        if (!rowSkip(r)) {
+          var c = 0
+          while (c < cols - 1) {
+            if (w.quadValid(r, c)) {
+              val mc = w.maskedCorner(r, c)
+              val aTL = w.above(r, c); val aTR = w.above(r, c + 1)
+              val aBL = w.above(r + 1, c); val aBR = w.above(r + 1, c + 1)
+              // candidate boundary edges of this quad's geometry, scan order N,W,S,E,D
+              if (mc != 0 && mc != 1 && aTL != aTR && !w.quadValid(r - 1, c)) seeds += w.hId(r, c)
+              if (mc != 0 && mc != 2 && aTL != aBL && !w.quadValid(r, c - 1)) seeds += w.vId(r, c)
+              if (mc != 2 && mc != 3 && aBL != aBR && !w.quadValid(r + 1, c)) seeds += ~w.hId(r + 1, c)
+              if (mc != 1 && mc != 3 && aTR != aBR && !w.quadValid(r, c + 1)) seeds += ~w.vId(r, c + 1)
+              // D edge (always boundary)
+              if (mc >= 0) {
+                val cd = mc match {
+                  case 0 | 3 => aTR != aBL
+                  case _     => aTL != aBR
+                }
+                if (cd) seeds += w.dId(r, c)
+              }
             }
             c += 1
           }
         }
         r += 1
       }
-      return out
-    }
 
-    // General (masked) path.
-    // Pass 1: boundary starts.
-    var r = 0
-    while (r < rows - 1) {
-      if (!rowSkip(r)) {
-        var c = 0
-        while (c < cols - 1) {
-          if (quadValid(r, c)) {
-            val mc = if (gv.mask == null) -1 else maskedCorner(r, c)
-            val aTL = above(r, c); val aTR = above(r, c + 1)
-            val aBL = above(r + 1, c); val aBR = above(r + 1, c + 1)
-            // candidate boundary edges of this quad's geometry, scan order N,W,S,E,D
-            // N edge
-            if (mc != 0 && mc != 1 && (aTL != aTR)) {
-              val e = hId(r, c)
-              if (visited(e) != stamp && !quadValid(r - 1, c)) walk(e, r, c)
+      // Pass 2: interior closed loops (any unvisited crossing is on a loop).
+      r = 0
+      while (r < rows - 1) {
+        if (!rowSkip(r)) {
+          var c = 0
+          while (c < cols - 1) {
+            if (w.quadValid(r, c)) {
+              val mc = w.maskedCorner(r, c)
+              if (mc != 0 && mc != 1 && w.above(r, c) != w.above(r, c + 1)) seeds += w.hId(r, c)
+              if (mc != 0 && mc != 2 && w.above(r, c) != w.above(r + 1, c)) seeds += w.vId(r, c)
             }
-            // W edge
-            if (mc != 0 && mc != 2 && (aTL != aBL)) {
-              val e = vId(r, c)
-              if (visited(e) != stamp && !quadValid(r, c - 1)) walk(e, r, c)
-            }
-            // S edge
-            if (mc != 2 && mc != 3 && (aBL != aBR)) {
-              val e = hId(r + 1, c)
-              if (visited(e) != stamp && !quadValid(r + 1, c)) walk(e, r, c)
-            }
-            // E edge
-            if (mc != 1 && mc != 3 && (aTR != aBR)) {
-              val e = vId(r, c + 1)
-              if (visited(e) != stamp && !quadValid(r, c + 1)) walk(e, r, c)
-            }
-            // D edge (always boundary)
-            if (mc >= 0) {
-              val cd = mc match {
-                case 0 | 3 => aTR != aBL
-                case _     => aTL != aBR
-              }
-              if (cd) {
-                val e = dId(r, c)
-                if (visited(e) != stamp) walk(e, r, c)
-              }
-            }
+            c += 1
           }
-          c += 1
         }
+        r += 1
       }
-      r += 1
     }
-
-    // Pass 2: interior closed loops (any unvisited crossing is on a loop).
-    r = 0
-    while (r < rows - 1) {
-      if (!rowSkip(r)) {
-        var c = 0
-        while (c < cols - 1) {
-          if (quadValid(r, c)) {
-            val mc = if (gv.mask == null) -1 else maskedCorner(r, c)
-            if (mc != 0 && mc != 1 && above(r, c) != above(r, c + 1)) {
-              val e = hId(r, c)
-              if (visited(e) != stamp) walk(e, r, c)
-            }
-            if (mc != 0 && mc != 2 && above(r, c) != above(r + 1, c)) {
-              val e = vId(r, c)
-              if (visited(e) != stamp) walk(e, r, c)
-            }
-          }
-          c += 1
-        }
-      }
-      r += 1
-    }
-
+    var i = 0
+    while (i < seeds.len) { w.startSeed(seeds.arr(i)); i += 1 }
     out
   }
 }

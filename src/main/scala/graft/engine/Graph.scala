@@ -22,10 +22,17 @@ object Graph {
     * teleport, fixed `iters` power iterations. `edges` must have columns
     * (src, dst); every src's out-degree is taken from the edge table.
     * Returns (id, rank). Nodes come from `nodes` (single `id` column) so
-    * sinks with no in-edges keep their teleport share. */
+    * sinks with no in-edges keep their teleport share.
+    *
+    * Needs `spark.sql.adaptive.enabled`: the rounds' job saving below
+    * assumes AQE runs each round's shuffle stages, so with AQE off the call
+    * is refused rather than run in a shape nobody measured. */
   def pageRank(
       nodes: DataFrame, edges: DataFrame, iters: Int,
       nodeCount: Option[Long] = None): DataFrame = {
+    val aqe = "spark.sql.adaptive.enabled"
+    require(nodes.sparkSession.conf.get(aqe, "true").toBoolean,
+      s"pageRank needs $aqe=true: each round's shuffle stages must run under AQE")
     val n = nodeCount.getOrElse(nodes.count()) // pass when already known
     require(n > 0, "pageRank needs a non-empty node set")
     val base = 1000000000000L / n // initial/teleport mass per node

@@ -87,18 +87,13 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("cells: cellId consistent with cellBBox containment, kRing symmetric") {
+  test("cells: cellId consistent with cellBBox containment") {
     val res = 6
     forAll(Gen.chooseNum(-179.9, 179.9), Gen.chooseNum(-89.9, 89.9)) { (lon, lat) =>
       val c = Cells.cellId(lon, lat, res)
       val b = Cells.cellBBox(c, res)
       assert(b.minLon <= lon && lon < b.maxLon + 1e-9)
       assert(b.minLat <= lat && lat < b.maxLat + 1e-9)
-      // neighbour relation is symmetric
-      val ring = Cells.kRing(c, res, 1)
-      ring.foreach { n =>
-        assert(Cells.kRing(n, res, 1).contains(c) || math.abs(lat) > 89.0)
-      }
     }
   }
 
@@ -107,31 +102,56 @@ class PropertySpec extends AnyFunSuite {
       rows <- Gen.chooseNum(3, 12)
       cols <- Gen.chooseNum(3, 12)
       vals <- Gen.listOfN(rows * cols, Gen.chooseNum(0, 100))
-    } yield (rows, cols, vals.map(_.toFloat).toArray)
+      voids <- Gen.listOfN(rows * cols, Gen.chooseNum(0, 9))
+    } yield (rows, cols, vals.map(_.toFloat).toArray, voids.map(_ == 0).toArray)
+    // count crossings independently: edges whose endpoint classes differ,
+    // among the edges of a valid quad's geometry (no masked endpoint, a
+    // quad with at most one masked corner beside it, and the diagonal of a
+    // one-masked-corner quad that avoids its masked corner)
+    def crossings(g: Grid, level: Double): Int = {
+      def m(r: Int, c: Int) = g.mask != null && g.mask(r * g.cols + c)
+      def up(r: Int, c: Int) = g(r, c) > level
+      def maskedCorners(r: Int, c: Int) =
+        Seq((r, c), (r, c + 1), (r + 1, c), (r + 1, c + 1)).count { case (a, b) => m(a, b) }
+      def valid(r: Int, c: Int) =
+        r >= 0 && c >= 0 && r < g.rows - 1 && c < g.cols - 1 && maskedCorners(r, c) <= 1
+      var n = 0
+      for (r <- 0 until g.rows; c <- 0 until g.cols - 1)
+        if (!m(r, c) && !m(r, c + 1) && (valid(r - 1, c) || valid(r, c)) && up(r, c) != up(r, c + 1)) n += 1
+      for (r <- 0 until g.rows - 1; c <- 0 until g.cols)
+        if (!m(r, c) && !m(r + 1, c) && (valid(r, c - 1) || valid(r, c)) && up(r, c) != up(r + 1, c)) n += 1
+      for (r <- 0 until g.rows - 1; c <- 0 until g.cols - 1 if valid(r, c) && maskedCorners(r, c) == 1) {
+        val trBl = m(r, c) || m(r + 1, c + 1) // masked TL or BR: diagonal TR-BL
+        if (trBl) { if (up(r, c + 1) != up(r + 1, c)) n += 1 }
+        else if (up(r, c) != up(r + 1, c + 1)) n += 1
+      }
+      n
+    }
+    def nodes(paths: Iterable[Array[Double]]): Int = paths.map { p =>
+      val n = p.length / 2
+      val closed = n >= 2 && p(0) == p(2 * n - 2) && p(1) == p(2 * n - 1)
+      if (closed) n - 1 else n
+    }.sum
     // half-integer levels: with integer grid values no crossing sits exactly
     // on a grid point, so distinct crossings have distinct coordinates and
     // the first==last "closed" test (the reference's own convention,
     // output/__init__.py:130) cannot be confused by coincident endpoints
-    forAll(gridGen, Gen.chooseNum(1, 99)) { case ((rows, cols, vals), levelInt) =>
+    val allLevels = (0 until 100).map(_ + 0.5).toArray
+    val sweepScratch = new MarchingSquares.Scratch
+    forAll(gridGen, Gen.chooseNum(1, 99)) { case ((rows, cols, vals, voids), levelInt) =>
       val level = levelInt + 0.5
-      val g = Grid(rows, cols, vals, null)
       val xs = Array.tabulate(cols)(_.toDouble)
       val ys = Array.tabulate(rows)(_.toDouble)
-      val paths = MarchingSquares.trace(
-        MarchingSquares.GridView.full(g), xs, ys, level,
-        cornerMask = true, new MarchingSquares.Scratch)
-      // count crossings independently: edges whose endpoint classes differ
-      var crossings = 0
-      for (r <- 0 until rows; c <- 0 until cols - 1)
-        if ((g(r, c) > level) != (g(r, c + 1) > level)) crossings += 1
-      for (r <- 0 until rows - 1; c <- 0 until cols)
-        if ((g(r, c) > level) != (g(r + 1, c) > level)) crossings += 1
-      val emitted = paths.map { p =>
-        val n = p.length / 2
-        val closed = n >= 2 && p(0) == p(2 * n - 2) && p(1) == p(2 * n - 1)
-        if (closed) n - 1 else n
-      }.sum
-      assert(emitted == crossings, s"grid ${rows}x$cols level $level")
+      Seq(Grid(rows, cols, vals, null), Grid(rows, cols, vals, voids)).foreach { g =>
+        val what = s"grid ${rows}x$cols${if (g.mask == null) "" else " with voids"}"
+        val gv = MarchingSquares.GridView.full(g)
+        val paths = MarchingSquares.trace(gv, xs, ys, level, cornerMask = true, new MarchingSquares.Scratch)
+        assert(nodes(paths) == crossings(g, level), s"$what level $level")
+        // every level of the grid from one sweep
+        MarchingSquares.traceLevels(gv, xs, ys, allLevels, cornerMask = true, sweepScratch) { (i, ps) =>
+          assert(nodes(ps) == crossings(g, allLevels(i)), s"$what, sweep level ${allLevels(i)}")
+        }
+      }
     }
   }
 }

@@ -62,6 +62,19 @@ class GraphSpec extends AnyFunSuite {
       Graph.connectedComponentsStar(nodes, edges, maxRounds = 1))
   }
 
+  test("pageRank refuses to run with AQE off, naming the conf") {
+    import spark.implicits._
+    val key = "spark.sql.adaptive.enabled"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val e = intercept[IllegalArgumentException](
+        Graph.pageRank(Seq(1L, 2L).toDF("id"), Seq((1L, 2L)).toDF("src", "dst"), 3))
+      assert(e.getMessage.contains(key))
+    } finally spark.conf.set(key, before)
+    assert(spark.conf.get(key) == before)
+  }
+
   test("connected components equals union-find, incl. isolated nodes and chains") {
     import spark.implicits._
     val nodes = (0L to 20L).toDF("id")
