@@ -12,19 +12,35 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * in local mode is file://. */
 object Fs {
 
+  /** The configuration [[conf]] last built, with the `spark.hadoop.*`
+    * entries (prefix stripped) it was built from. Keyed on the entries, not
+    * on the SparkEnv, so a stopped env is never kept reachable. */
+  @volatile private var cached: (Map[String, String], Configuration) = (null, null)
+
   /** Hadoop configuration honoring Spark's `spark.hadoop.*` overrides:
     * executors have no active SparkSession, but SparkEnv carries the
     * SparkConf, so credentials/endpoints configured via spark-submit reach
-    * the sink/commit/grid I/O on every node. */
-  private def conf: Configuration = {
-    val c = new Configuration()
+    * the sink/commit/grid I/O on every node.
+    *
+    * One configuration per set of `spark.hadoop.*` entries: a fresh
+    * `Configuration` re-parses Hadoop's XML defaults on first use (~10 ms),
+    * far more than the sink open, commit write or commit read it serves.
+    * It is rebuilt only when the current SparkEnv's entries differ from
+    * those it was built from (a session restarted with other values); with
+    * no SparkEnv the entries are empty. */
+  private[graft] def conf: Configuration = {
     val env = org.apache.spark.SparkEnv.get
-    if (env != null) {
-      env.conf.getAll.foreach { case (k, v) =>
-        if (k.startsWith("spark.hadoop.")) c.set(k.stripPrefix("spark.hadoop."), v)
-      }
+    val entries =
+      if (env == null) Map.empty[String, String]
+      else env.conf.getAllWithPrefix("spark.hadoop.").toMap
+    val (builtFrom, c) = cached
+    if (entries == builtFrom) c
+    else {
+      val fresh = new Configuration()
+      entries.foreach { case (k, v) => fresh.set(k, v) }
+      cached = (entries, fresh)
+      fresh
     }
-    c
   }
 
   def fs(path: String): FileSystem = {

@@ -207,6 +207,16 @@ object RasterPipeline {
       }
   }
 
+  /** The decoded-grid cache's bound in MB from `SPARK_GRAFT_GRID_CACHE_MB`;
+    * unset means 2048. Takes the environment as a map so it can be tested
+    * without touching the process environment. */
+  private[graft] def gridCacheMb(env: Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_GRID_CACHE_MB") match {
+      case None => 2048
+      case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_GRID_CACHE_MB must be a positive integer, got '$v'"))
+    }
+
   /** Executor-global decoded-grid cache: every task in the executor JVM
     * shares it, so each source file is read+decoded once per executor even
     * when salted partitioning interleaves files across tasks (the re-read
@@ -215,8 +225,11 @@ object RasterPipeline {
   private object GridCache {
     // bounded by estimated BYTES, not entry count: a smoothRatio-zoomed
     // SRTM1 grid is rows*cols*(2B values + 1B mask + overhead) ~ 5B/cell,
-    // so counting entries could exceed executor heap at high ratios
-    private val MaxBytes = sys.env.getOrElse("SPARK_GRAFT_GRID_CACHE_MB", "2048").toLong << 20
+    // so counting entries could exceed executor heap at high ratios.
+    // Lazy, and read first thing in grid(): a malformed value then fails
+    // every task with its name, not the object initializer once and
+    // NoClassDefFoundError on the tasks after it.
+    private lazy val MaxBytes = gridCacheMb().toLong << 20
     private def est(g: Grid): Long = g.rows.toLong * g.cols * 5L
     private var bytes = 0L
     private val cache = new java.util.LinkedHashMap[String, Grid](64, 0.75f, true) {
@@ -227,6 +240,7 @@ object RasterPipeline {
       }
     }
     def grid(path: String, voidMax: Int, smoothRatio: Double, feetSteps: Boolean): Grid = {
+      MaxBytes
       val key = s"$path|$voidMax|$smoothRatio|$feetSteps"
       cache.synchronized {
         val hit = cache.get(key)

@@ -1,13 +1,14 @@
 package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.SparkSession
 import java.nio.file.Files
 
 /** Fs.publishOnce / renameNoClobber contract: build-once table publishing
   * that survives crashed runs (stale marker-less dirs), concurrent
   * publishers (no-clobber, loser discards), and the RawLocalFileSystem
   * rename-falls-back-to-copy trap (copy onto an existing directory nests
-  * src INSIDE dst). */
+  * src INSIDE dst), and the configuration the calls share. */
 class FsSpec extends AnyFunSuite {
 
   private def tmpDir(): String =
@@ -100,5 +101,36 @@ class FsSpec extends AnyFunSuite {
     intercept[java.io.IOException] { Fs.delete(s"$root/d") }
     assert(Fs.deleteRecursive(s"$root/d"))
     assert(!Fs.exists(s"$root/d"))
+  }
+
+  test("the shared configuration follows spark.hadoop.* across a session restart") {
+    // a running context would swallow the builder's confs: stop whatever
+    // session earlier suites left, and leave none behind for later ones
+    def restart(value: String): SparkSession = {
+      if (org.apache.spark.SparkEnv.get != null) SparkSession.builder().getOrCreate().stop()
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      SparkSession.builder().master("local[1]").appName("fs-spec")
+        .config("spark.ui.enabled", "false")
+        .config("spark.hadoop.graft.test.key", value).getOrCreate()
+    }
+    val root = tmpDir()
+    try {
+      restart("a")
+      assert(Fs.conf.get("graft.test.key") == "a")
+      Fs.writeString(s"$root/f", "x")
+      assert(Fs.conf eq Fs.conf, "one configuration per set of entries")
+      restart("b")
+      assert(Fs.conf.get("graft.test.key") == "b")
+      assert(Fs.readString(s"$root/f") == "x")
+    } finally {
+      SparkSession.getActiveSession.foreach(_.stop())
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+    }
+    assert(org.apache.spark.SparkEnv.get == null)
+    assert(Fs.conf.get("graft.test.key") == null)
+    Fs.writeString(s"$root/g", "y")
+    assert(Fs.readString(s"$root/g") == "y" && Fs.exists(s"$root/f"))
   }
 }

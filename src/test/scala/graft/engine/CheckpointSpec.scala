@@ -34,6 +34,26 @@ class CheckpointSpec extends AnyFunSuite {
     assert(Checkpoint.readCommits(out).isEmpty)
   }
 
+  test("concurrent commits of distinct tiles all land, each with its counts") {
+    // executor tasks commit at once through one shared Hadoop configuration
+    val out = Files.createTempDirectory("ckpt_par").toString
+    val commits = (0 until 8).map(i =>
+      Checkpoint.Commit("N43E006", i, 1000L + i, 10L + i, s"$out/t$i.osm", i.toLong))
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = commits.map { c =>
+      val t = new Thread(() =>
+        try { start.await(); Checkpoint.writeCommit(out, c) }
+        catch { case e: Throwable => errors.add(e) })
+      t.start()
+      t
+    }
+    start.countDown()
+    threads.foreach(_.join())
+    assert(errors.isEmpty, errors.toString)
+    assert(Checkpoint.readCommits(out).sortBy(_.tileIdx) == commits)
+  }
+
   test("resume skips committed tiles; crash-resume output is byte-identical") {
     assume(available)
     val freshDir = Files.createTempDirectory("fresh").toString

@@ -18,6 +18,17 @@ class RasterPipelineSpec extends AnyFunSuite {
   private val fixture = "/root/reference/tests/data/N43E006.hgt"
   private lazy val available = Files.exists(Paths.get(fixture))
 
+  test("SPARK_GRAFT_GRID_CACHE_MB: unset means 2048; anything but a positive integer is refused by name") {
+    assert(RasterPipeline.gridCacheMb(Map.empty) == 2048)
+    assert(RasterPipeline.gridCacheMb(Map("SPARK_GRAFT_GRID_CACHE_MB" -> "512")) == 512)
+    for (bad <- Seq("0", "-1", "abc")) {
+      val e = intercept[IllegalArgumentException](
+        RasterPipeline.gridCacheMb(Map("SPARK_GRAFT_GRID_CACHE_MB" -> bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_GRID_CACHE_MB") && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
+    }
+  }
+
   test("tiles(): decode + chop reproduces the golden 4-tile layout") {
     assume(available)
     val cfg = JobConfig(maxNodesPerTile = 500000L)
