@@ -188,11 +188,6 @@ object ScalingBench {
     threads / wall // work units per second
   }
 
-  def cpuCalibration(lo: Int, hi: Int): Double = {
-    burn(2) // warm JIT
-    burn(hi) / burn(lo)
-  }
-
   /** Memory-bandwidth burn: each thread streams over a private 64 MB
     * buffer. A single VM shares one memory controller across all "executors"
     * — scan/decode/shuffle-heavy phases hit this ceiling long before the

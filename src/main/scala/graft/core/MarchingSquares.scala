@@ -17,8 +17,8 @@ import scala.collection.mutable.ArrayBuffer
   * Two entry points share one quad walk (`Walker`):
   *   - `traceLevels` traces every level of a grid from one sweep. Each point
   *     gets k = the number of levels it is above (the walk's own `z > level`
-  *     test, so NaN is above none and a value exactly on a level is not
-  *     above it). An edge then crosses exactly the levels
+  *     test, so a value exactly on a level is not above it). An edge then
+  *     crosses exactly the levels
   *     [min(k0, k1), max(k0, k1)), a contiguous run; this holds for a
   *     masked quad's diagonal too. One counting sort places every start
   *     edge into per-level seed lists, and each level walks its own list.
@@ -28,17 +28,29 @@ import scala.collection.mutable.ArrayBuffer
   *     spans it. It stays as the reference the sweep is tested against, and
   *     as the per-level kernel timer of the benchmark harness.
   *
+  * Precondition of `traceLevels`: no unmasked point is NaN (a decoder masks
+  * its NaN voids, as contourpy treats NaN as masked); it throws an
+  * `IllegalArgumentException` naming the first such point.
+  *
   * Seed-order contract: for every level, `traceLevels` tries start edges in
-  * exactly the order `trace` does, enters the same quad from each, and skips
-  * a seed in a quad row that `trace`'s row skipping would pass over (that
-  * matters only for unmasked NaN points, which row statistics ignore), so
-  * both emit the same paths, in the same order, from the same start points.
+  * the order `trace` does, minus seeds that never start a walk there, and
+  * enters the same quad from each, so both emit the same paths, in the same
+  * order, from the same start points.
   *   - No mask: top row N edges, bottom row S edges, then row by row the W
   *     edge of column 0 and the E edge of the last column, then the interior
-  *     row-major with each quad's N edge before its W edge.
+  *     W edges row-major.
   *   - Masked: per valid quad row-major, its boundary edges in N, W, S, E, D
   *     order (S and E enter the quad they bound, above or left of the edge),
-  *     then per valid quad its interior N and W edges.
+  *     then per valid quad its interior W edge.
+  * `trace` also seeds each interior N edge H(r, c), just before the W edge of
+  * quad (r, c), and never starts a walk from it: H(r, c) is visited when its
+  * turn comes. An open path starts at a boundary edge, and those all come
+  * first. A closed loop through H(r, c) also crosses another edge of quad
+  * (r - 1, c) above it: that quad's N or W edge, or the W edge of quad
+  * (r - 1, c + 1); each is a boundary seed or an interior seed of row r - 1,
+  * tried before H(r, c). Dropping those no-op seeds changes no walk. Row
+  * skipping in `trace` passes over no crossing edge when no valid point is
+  * NaN, so the sweep needs no row clipping either.
   */
 object MarchingSquares {
 
@@ -69,11 +81,9 @@ object MarchingSquares {
     var stamp: Int = 0
     var aboveA: Array[Boolean] = new Array[Boolean](0)
     var aboveB: Array[Boolean] = new Array[Boolean](0)
-    // traceLevels: levels each point is above, per-point-row range of those
-    // counts, per-level seed offsets and fill cursors, the seeds themselves
+    // traceLevels: levels each point is above, per-level seed offsets and
+    // fill cursors, the seeds themselves
     var kAbove: Array[Int] = new Array[Int](0)
-    var rowKMin: Array[Int] = new Array[Int](0)
-    var rowKMax: Array[Int] = new Array[Int](0)
     var levelOff: Array[Int] = new Array[Int](0)
     var levelPos: Array[Int] = new Array[Int](0)
     var seeds: Array[Int] = new Array[Int](0)
@@ -81,9 +91,8 @@ object MarchingSquares {
       if (visited.length < n) { visited = new Array[Int](n); stamp = 0 }
     def ensureRows(cols: Int): Unit =
       if (aboveA.length < cols) { aboveA = new Array[Boolean](cols); aboveB = new Array[Boolean](cols) }
-    def ensureSweep(points: Int, rows: Int, levels: Int): Unit = {
+    def ensureSweep(points: Int, levels: Int): Unit = {
       if (kAbove.length < points) kAbove = new Array[Int](points)
-      if (rowKMin.length < rows) { rowKMin = new Array[Int](rows); rowKMax = new Array[Int](rows) }
       if (levelPos.length < levels) { levelPos = new Array[Int](levels); levelOff = new Array[Int](levels + 1) }
     }
     def ensureSeeds(n: Int): Unit =
@@ -356,17 +365,12 @@ object MarchingSquares {
     private val rows = gv.rows
     private val cols = gv.cols
     private val n = levels.length
-    scratch.ensureSweep(rows * cols, rows, n)
+    scratch.ensureSweep(rows * cols, n)
     private val k = scratch.kAbove
-    private val rowKMin = scratch.rowKMin
-    private val rowKMax = scratch.rowKMax
     private val off = scratch.levelOff
     private val pos = scratch.levelPos
     private var seeds: Array[Int] = null
     private var placing = false
-    // the levels quad row r is not skipped at: [rlo, rhi)
-    private var rlo = 0
-    private var rhi = 0
 
     def bucket(): Array[Int] = {
       classify()
@@ -393,7 +397,7 @@ object MarchingSquares {
       off
     }
 
-    /** Levels strictly below z, by the walk's `z > level` test (NaN: 0). */
+    /** Levels strictly below z, by the walk's `z > level` test. */
     private def levelsBelow(z: Double): Int = {
       var lo = 0
       var hi = n
@@ -404,46 +408,30 @@ object MarchingSquares {
       lo
     }
 
-    /** k per point (masked points are above nothing) and, per point row,
-      * the k range of its valid non-NaN points: the k image of `rowStats`. */
+    /** k per point (masked points are above nothing); refuses an unmasked
+      * NaN, the precondition of `traceLevels`. */
     private def classify(): Unit = {
       var r = 0
       while (r < rows) {
-        var mn = n
-        var mx = 0
         var c = 0
         while (c < cols) {
           val p = r * cols + c
           if (gv.masked(r, c)) k(p) = 0
           else {
             val z = gv.z(r, c)
-            val kp = levelsBelow(z)
-            k(p) = kp
-            if (z == z) {
-              if (kp < mn) mn = kp
-              if (kp > mx) mx = kp
-            }
+            require(z == z, s"unmasked NaN at point ($r, $c): mask NaN voids before tracing")
+            k(p) = levelsBelow(z)
           }
           c += 1
         }
-        rowKMin(r) = mn
-        rowKMax(r) = mx
         r += 1
       }
     }
 
-    /** `trace` skips quad row r at level i unless rowMin <= level < rowMax
-      * over point rows r and r+1, i.e. unless rlo <= i < rhi. */
-    private def rowRange(r: Int): Unit = {
-      rlo = math.min(rowKMin(r), rowKMin(r + 1))
-      rhi = math.max(rowKMax(r), rowKMax(r + 1))
-    }
-
-    /** Seed `s` at every level its edge (endpoint counts ka, kb) crosses
-      * and the current quad row is not skipped at. */
+    /** Seed `s` at every level its edge (endpoint counts ka, kb) crosses. */
     @inline private def add(s: Int, ka: Int, kb: Int): Unit = {
-      val lo = math.max(math.min(ka, kb), rlo)
-      val hi = math.min(math.max(ka, kb), rhi)
+      val lo = math.min(ka, kb)
+      val hi = math.max(ka, kb)
       if (lo < hi) {
         if (placing) {
           var i = lo
@@ -459,33 +447,23 @@ object MarchingSquares {
 
     private def enumerateFast(): Unit = {
       val last = (rows - 1) * cols
-      rowRange(0)
       var c = 0
       while (c < cols - 1) { add(w.hId(0, c), k(c), k(c + 1)); c += 1 }
-      rowRange(rows - 2)
       c = 0
       while (c < cols - 1) { add(~w.hId(rows - 1, c), k(last + c), k(last + c + 1)); c += 1 }
       var r = 0
       while (r < rows - 1) {
-        rowRange(r)
         val p = r * cols
         add(w.vId(r, 0), k(p), k(p + cols))
         add(~w.vId(r, cols - 1), k(p + cols - 1), k(p + 2 * cols - 1))
         r += 1
       }
-      // interior: row 0's N edges and column 0's W edges were seeded above
-      // with the same skip test, so at their levels they are already visited
+      // interior W edges (column 0's were seeded above as boundary edges)
       r = 0
       while (r < rows - 1) {
-        rowRange(r)
         val p = r * cols
-        c = 0
-        while (c < cols - 1) {
-          val kTL = k(p + c)
-          if (r > 0) add(w.hId(r, c), kTL, k(p + c + 1))
-          if (c > 0) add(w.vId(r, c), kTL, k(p + c + cols))
-          c += 1
-        }
+        c = 1
+        while (c < cols - 1) { add(w.vId(r, c), k(p + c), k(p + c + cols)); c += 1 }
         r += 1
       }
     }
@@ -493,7 +471,6 @@ object MarchingSquares {
     private def enumerateMasked(): Unit = {
       var r = 0
       while (r < rows - 1) {
-        rowRange(r)
         val p = r * cols
         var c = 0
         while (c < cols - 1) {
@@ -512,19 +489,16 @@ object MarchingSquares {
         }
         r += 1
       }
-      // interior: an N or W edge with no valid quad beyond it was seeded
-      // above as a boundary edge, so at its levels it is already visited
+      // interior W edges: one with no valid quad beyond it was seeded above
+      // as a boundary edge
       r = 0
       while (r < rows - 1) {
-        rowRange(r)
         val p = r * cols
         var c = 0
         while (c < cols - 1) {
           if (w.quadValid(r, c)) {
             val mc = w.maskedCorner(r, c)
-            val kTL = k(p + c)
-            if (mc != 0 && mc != 1 && w.quadValid(r - 1, c)) add(w.hId(r, c), kTL, k(p + c + 1))
-            if (mc != 0 && mc != 2 && w.quadValid(r, c - 1)) add(w.vId(r, c), kTL, k(p + cols + c))
+            if (mc != 0 && mc != 2 && w.quadValid(r, c - 1)) add(w.vId(r, c), k(p + c), k(p + cols + c))
           }
           c += 1
         }

@@ -21,7 +21,6 @@ final case class Grid(
     mask: Array[Boolean]) {
   def apply(r: Int, c: Int): Float = values(r * cols + c)
   def masked(r: Int, c: Int): Boolean = mask != null && mask(r * cols + c)
-  def hasMask: Boolean = mask != null
 }
 
 /** One unit of contour work: a rectangular slice of a source grid plus its

@@ -52,10 +52,11 @@ object Resample {
         val v = catmullRom(rows4(0), rows4(1), rows4(2), rows4(3), ty)
         values(or * outCols + oc) = math.round(v).toFloat // reference rounds to 0 dp
         if (mask != null) {
-          // order-0: nearest input cell decides voidness
+          // order-0: nearest input cell decides voidness; a kernel that read
+          // a void's NaN value voids the output too (round(NaN) would be 0)
           val nr = math.min(grid.rows - 1, math.round(sy).toInt)
           val nc = math.min(grid.cols - 1, math.round(sx).toInt)
-          mask(or * outCols + oc) = grid.mask(nr * grid.cols + nc)
+          mask(or * outCols + oc) = grid.mask(nr * grid.cols + nc) || v.isNaN
         }
         oc += 1
       }

@@ -40,6 +40,18 @@ class ResampleSpec extends AnyFunSuite {
     assert(z.mask.count(identity) > 0 && z.mask.count(identity) < z.mask.length)
   }
 
+  test("a masked NaN void does not leak into its neighbours' values") {
+    // a float GeoTIFF keeps NaN under the mask, and the kernel reads it
+    val values = Array.fill(36)(100f)
+    values(14) = Float.NaN
+    val mask = new Array[Boolean](36)
+    mask(14) = true
+    val z = Resample.zoom(Grid(6, 6, values, mask), 2.0)
+    val bad = z.values.indices.filter(i => !z.mask(i) && z.values(i) != 100f)
+    assert(bad.isEmpty, s"unmasked outputs not 100: ${bad.map(i => (i / z.cols, i % z.cols, z.values(i)))}")
+    assert(z.mask.count(identity) < z.mask.length)
+  }
+
   test("smoothed contour pipeline: 3x ratio triples grid resolution") {
     val fixture = "/root/reference/tests/data/N43E006.hgt"
     assume(java.nio.file.Files.exists(java.nio.file.Paths.get(fixture)))

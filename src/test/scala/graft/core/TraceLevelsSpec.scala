@@ -123,27 +123,42 @@ class TraceLevelsSpec extends AnyFunSuite {
     assert(sameAsTrace(grid(5, 2, 0, 5, 10, 15, 20, 15, 10, 5, 0, 5), Array(7.0, 12.0), "2 columns") > 0)
   }
 
-  test("an unmasked NaN point classifies as below every level, as in trace") {
+  test("an unmasked NaN point is refused, naming the point, on both paths") {
     val nan = Float.NaN
-    // rows 0-1 hold only values above 5 besides the NaN, so trace's row
-    // statistics (which skip NaN) pass over quad row 0 at level 5
-    val g = grid(4, 4,
+    val values = Array[Float](
       10, 10, 10, 10,
       10, nan, 10, 10,
       10, 10, 10, 0,
       10, 10, 0, 0)
-    assert(sameAsTrace(g, Array(5.0, 7.5), "NaN fast path") > 0)
+    val (xs, ys) = axes(4, 4)
     val m = new Array[Boolean](16)
     m(15) = true
-    assert(sameAsTrace(GridView.full(Grid(4, 4, g.values, m)), Array(5.0, 7.5), "NaN masked path") > 0)
+    Seq(null, m).foreach { mask =>
+      val e = intercept[IllegalArgumentException](
+        MarchingSquares.traceLevels(GridView.full(Grid(4, 4, values, mask)), xs, ys, Array(5.0, 7.5),
+          cornerMask = true, new Scratch)((_, _) => ()))
+      assert(e.getMessage.contains("(1, 1)"), e.getMessage)
+    }
+  }
+
+  test("masked NaN values (NaN voids as Tiff.decode masks them) trace as trace does") {
     val rnd = new scala.util.Random(5)
+    var compared = 0
     (0 until 200).foreach { t =>
       val rows = 2 + rnd.nextInt(12)
       val cols = 2 + rnd.nextInt(12)
-      val values = Array.fill(rows * cols)(if (rnd.nextInt(8) == 0) nan else rnd.nextInt(21).toFloat)
-      val mask = if (t % 2 == 0) null else Array.fill(rows * cols)(rnd.nextInt(10) == 0)
-      sameAsTrace(GridView.full(Grid(rows, cols, values, mask)), (0 to 20).map(_ + 0.5).toArray, s"NaN grid $t")
+      val values = Array.fill(rows * cols)(rnd.nextInt(21).toFloat)
+      val mask = new Array[Boolean](rows * cols)
+      // one void blob and a few isolated voids, every one holding NaN
+      val (br, bc, rad) = (rnd.nextInt(rows), rnd.nextInt(cols), rnd.nextInt(3))
+      for (r <- 0 until rows; c <- 0 until cols)
+        if ((r - br) * (r - br) + (c - bc) * (c - bc) <= rad * rad) mask(r * cols + c) = true
+      (0 until rnd.nextInt(4)).foreach(_ => mask(rnd.nextInt(rows * cols)) = true)
+      mask.indices.foreach(p => if (mask(p)) values(p) = Float.NaN)
+      compared += sameAsTrace(GridView.full(Grid(rows, cols, values, mask)), (0 to 20).map(_ + 0.5).toArray,
+        s"NaN void grid $t ${rows}x$cols")
     }
+    assert(compared > 1000)
   }
 
   test("levels must be strictly ascending") {
