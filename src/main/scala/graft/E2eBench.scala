@@ -50,8 +50,8 @@ object E2eBench {
     // dot-decimal everywhere: diagnostics/tables are parsed downstream
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val cores = Session.cpus()
-    val copies = sys.env.getOrElse("SPARK_GRAFT_E2E_COPIES", "15").toInt
-    val reps = sys.env.getOrElse("SPARK_GRAFT_E2E_REPS", "2").toInt
+    val copies = graft.core.Env.positiveInt("SPARK_GRAFT_E2E_COPIES").getOrElse(15)
+    val reps = graft.core.Env.positiveInt("SPARK_GRAFT_E2E_REPS").getOrElse(2)
     val files = replicate("/tmp/graft_e2e_dem", copies)
     val spark = Session.local("graft-e2e-bench", cores)
     spark.sparkContext.setLogLevel("ERROR")

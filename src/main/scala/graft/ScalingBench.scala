@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.core.JobConfig
+import graft.core.{Env, JobConfig}
 import graft.engine.{RasterPipeline, SpatialJoin}
 import graft.synth.Pages
 
@@ -40,7 +40,7 @@ object ScalingBench {
       // (8x cores) keep spatially-skewed tile costs balanced — the last
       // task of the stage bounds the wall, and tile cost varies ~10x
       // between sea and mountain tiles.
-      val parts = cores * sys.env.getOrElse("SPARK_GRAFT_BENCH_PARTS", "8").toInt
+      val parts = cores * Env.positiveInt("SPARK_GRAFT_BENCH_PARTS").getOrElse(8)
       val tiles = RasterPipeline.tiles(spark, hgtFiles, cfg)
       val contours = RasterPipeline.contours(tiles, cfg, parts)
       val nodes = contours.agg(sum("nbNodes")).collect()(0).getLong(0)
@@ -140,7 +140,7 @@ object ScalingBench {
     // both levels but the allocation RATE scales with cores, so a fixed
     // small pool throttles the high level's young collections (a real
     // cluster sizes GC per executor the same way)
-    val gcThreads = sys.env.getOrElse("SPARK_GRAFT_BENCH_GC", math.max(4, cores / 2).toString)
+    val gcThreads = Env.positiveInt("SPARK_GRAFT_BENCH_GC").getOrElse(math.max(4, cores / 2))
     // fixed, pre-touched heap: this microVM backs guest memory lazily, so
     // on-demand heap growth causes fault storms mid-measurement; paying the
     // page faults at JVM startup removes the dominant noise source
@@ -219,10 +219,10 @@ object ScalingBench {
   def main(args: Array[String]): Unit = {
     // dot-decimal everywhere: diagnostics/tables are parsed downstream
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val nPages = sys.env.getOrElse("SPARK_GRAFT_BENCH_PAGES", "64000000").toLong
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "4").toInt
-    sys.env.get("SPARK_GRAFT_BENCH_SINGLE") match {
-      case Some(c) => runSingleLevel(c.toInt, nPages, reps); return
+    val nPages = Env.positiveLong("SPARK_GRAFT_BENCH_PAGES").getOrElse(64000000L)
+    val reps = Env.positiveInt("SPARK_GRAFT_BENCH_REPS").getOrElse(4)
+    Env.positiveInt("SPARK_GRAFT_BENCH_SINGLE") match {
+      case Some(c) => runSingleLevel(c, nPages, reps); return
       case None =>
     }
     // default N=2 vs 4N=8 — the protocol BENCH.md argues and every
@@ -233,8 +233,8 @@ object ScalingBench {
     // N -> 4N executor scale-out adds a memory controller per node.
     // Override with SPARK_GRAFT_BENCH_LO/HI (e.g. 4/16 reproduces the
     // counter-evidence run).
-    val lo = sys.env.getOrElse("SPARK_GRAFT_BENCH_LO", "2").toInt
-    val hi = sys.env.getOrElse("SPARK_GRAFT_BENCH_HI", "8").toInt
+    val lo = Env.positiveInt("SPARK_GRAFT_BENCH_LO").getOrElse(2)
+    val hi = Env.positiveInt("SPARK_GRAFT_BENCH_HI").getOrElse(8)
     if (sys.env.contains("SPARK_GRAFT_BENCH_CAL_ONLY")) {
       burn(2); memBurn(2)
       println(f"cpu: ${burn(lo)}%.3f u/s @$lo -> ${burn(hi)}%.3f u/s @$hi")
@@ -246,7 +246,7 @@ object ScalingBench {
     // measure in back-to-back (lo, hi) PAIRS: the hypervisor's CPU quota
     // drifts over minutes, so efficiency is only meaningful when both
     // levels ran in the same window; report the best pair
-    val measured = sys.env.getOrElse("SPARK_GRAFT_BENCH_MEASURED", "2").toInt
+    val measured = Env.positiveInt("SPARK_GRAFT_BENCH_MEASURED").getOrElse(2)
     burn(2); memBurn(2) // warm calibration JIT once
     val pairs = (1 to reps).map { _ =>
       // calibration burns run ADJACENT to the level they normalize: the

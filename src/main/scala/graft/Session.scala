@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.core.Env
 
 /** The one way a graft main builds its Spark session, so benched, verified
   * and dumped plans all run under the same confs. Callers that need a
@@ -10,11 +11,8 @@ object Session {
   /** Local cores from `SPARK_GRAFT_CPUS`; unset means every available
     * processor. Takes the environment as a map so it can be tested without
     * touching the process environment. */
-  def cpus(env: Map[String, String] = sys.env): Int = env.get("SPARK_GRAFT_CPUS") match {
-    case None => Runtime.getRuntime.availableProcessors
-    case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
-  }
+  def cpus(env: Map[String, String] = sys.env): Int =
+    Env.positiveInt("SPARK_GRAFT_CPUS", env).getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** The confs `local` builds with. */
   private[graft] def confs(app: String, cores: Int): Map[String, String] = Map(

@@ -5,6 +5,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Env
 import graft.engine.SpatialJoin
 import graft.engine.SpatialJoin.Poly
 
@@ -82,9 +83,8 @@ object SkewBench {
     * 50% uniform over the 1°x1° tile. Deterministic (splitmix64 chain). */
   def ensurePages(spark: SparkSession, n: Long): Unit = {
     if (graft.core.Fs.exists(s"${pagesPath(n)}/_SUCCESS")) return
-    graft.functions.SplitMix64.register(spark)
     val cellW = 1.0 / 128.0
-    val h = call_function("splitmix64", col("id") * lit(131L) + lit(3L))
+    val h = graft.functions.SplitMix64.col(col("id") * lit(131L) + lit(3L))
     val hot = pmod(h, lit(2L)) === 0L
     val u1 = pmod(shiftrightunsigned(h, 8), lit(1000000L)).cast("double") / lit(1000000.0)
     val u2 = pmod(shiftrightunsigned(h, 24), lit(1000000L)).cast("double") / lit(1000000.0)
@@ -145,8 +145,8 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val cores = Session.cpus()
-    val nPages = sys.env.getOrElse("SPARK_GRAFT_SKEW_PAGES", "16000000").toLong
-    val reps = sys.env.getOrElse("SPARK_GRAFT_SKEW_REPS", "2").toInt
+    val nPages = Env.positiveLong("SPARK_GRAFT_SKEW_PAGES").getOrElse(16000000L)
+    val reps = Env.positiveInt("SPARK_GRAFT_SKEW_REPS").getOrElse(2)
     val spark = Session.local("graft-skew-bench", cores)
     spark.conf.set("spark.sql.shuffle.partitions", (cores * 2).toString)
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,8 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.{Catalyst, CosineSim, DotVec, SqDistVec, VecNorm}
 
 /** Approximate nearest neighbour over an embedding column.
   *
@@ -22,10 +23,9 @@ object Ann {
   /** Codegen'd cosine similarity between two array<double> columns: a
     * native expression (functions/VecOps.scala), NOT zip_with/aggregate —
     * Spark's higher-order functions are CodegenFallback and allocate per
-    * evaluation, which is ruinous inside an all-pairs similarity stage.
-    * Callers must have run `register(spark)` (all entry points here do). */
-  def cosine(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    call_function("cosine_sim", a, b)
+    * evaluation, which is ruinous inside an all-pairs similarity stage. */
+  def cosine(a: Column, b: Column): Column =
+    Catalyst.column(CosineSim(Catalyst.expr(a), Catalyst.expr(b)))
 
   /** Cosine from PRECOMPUTED L2 norms: dot(a,b) / (na * nb) is
     * bit-identical to `cosine(a, b)` when na/nb come from `norm` (same
@@ -33,14 +33,11 @@ object Ann {
     * scaladoc). Pair stages use this so each PAIR costs one dot product
     * instead of one dot + two norm folds; norms are computed once per
     * VECTOR before the pair fan-out (r7, guide §1.2 step 2). */
-  def cosineFromNorms(
-      a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
-      na: org.apache.spark.sql.Column, nb: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    call_function("dot_vec", a, b) / (na * nb)
+  def cosineFromNorms(a: Column, b: Column, na: Column, nb: Column): Column =
+    Catalyst.column(DotVec(Catalyst.expr(a), Catalyst.expr(b))) / (na * nb)
 
   /** Codegen'd L2 norm of an array<double> column. */
-  def norm(a: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    call_function("vec_norm", a)
+  def norm(a: Column): Column = Catalyst.column(VecNorm(Catalyst.expr(a)))
 
   /** Spread a SMALL scan before a compute-heavy stage (r7, guide §2.5,
     * input-layout skew — "repartition immediately after the read"): a tiny
@@ -57,8 +54,8 @@ object Ann {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
-  private def sqDist(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    call_function("sq_dist_vec", a, b)
+  private def sqDist(a: Column, b: Column): Column =
+    Catalyst.column(SqDistVec(Catalyst.expr(a), Catalyst.expr(b)))
 
   /** Deliberate join strategy for a SMALL-side fetch/build table whose
     * partner stream is far larger (guide §3): `broadcast()` when the
@@ -81,10 +78,6 @@ object Ann {
     if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(bound)) broadcast(df)
     else df.hint("shuffle_hash")
   }
-
-  /** Register the vector kernels in this session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    graft.functions.VecFns.register(spark)
 
   /** Centroids as a literal array<struct<cluster:int, centroid:array<double>>>
     * column — the "broadcast" is a plan literal, so the nearest-centroid
@@ -112,7 +105,6 @@ object Ann {
 
   /** Exact brute-force cosine top-k: (q_id, rank, vec_id, cos). */
   def bruteTopK(vectors: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    register(vectors.sparkSession)
     val v = vectors.select(col("vec_id"), col("vec"))
     val q = queries.select(col("q_id"), col("qvec"))
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id").asc)
@@ -127,7 +119,6 @@ object Ann {
     * lowest vec_ids; returns (clusterId, centroid). */
   def trainCentroids(vectors: DataFrame, k: Int, iters: Int): Seq[(Int, Array[Double])] = {
     val spark = vectors.sparkSession
-    register(spark)
     import spark.implicits._
     var centroids: Seq[(Int, Array[Double])] = vectors
       .orderBy("vec_id").limit(k)
@@ -159,7 +150,6 @@ object Ann {
   /** Assign vectors to their nearest centroid: (cluster, vec_id, vec).
     * Pure narrow projection — no join, no window, no exchange. */
   def assign(vectors: DataFrame, centroids: Seq[(Int, Array[Double])]): DataFrame = {
-    register(vectors.sparkSession)
     vectors
       .withColumn("cluster", nearestCluster(col("vec"), centroidLit(centroids)).getField("cluster"))
       .select("cluster", "vec_id", "vec")
@@ -178,7 +168,6 @@ object Ann {
       vectors: DataFrame, // (vec_id, vec)
       centroids: Seq[(Int, Array[Double])],
       nprobe: Int): DataFrame = {
-    register(vectors.sparkSession)
     // r7: each side carries its L2 norm, computed once per VECTOR before
     // the pair fan-out, so callers can run the per-pair cosine as a single
     // dot product (cosineFromNorms — bit-identical)
@@ -211,7 +200,7 @@ object Ann {
   }
 
   private def sqNorm(v: org.apache.spark.sql.Column) =
-    call_function("sq_dist_vec", v, array_repeat(lit(0.0), size(v)))
+    sqDist(v, array_repeat(lit(0.0), size(v)))
 
   /** Deterministic orthonormal pivot directions for angle banding: walk the
     * lowest-id non-zero vectors, Gram–Schmidt each against the pivots
@@ -304,8 +293,6 @@ object Ann {
       // orthogonality), orthogonal ones just prune best
       pivots: Option[Seq[Array[Double]]] = None): DataFrame = {
     require(tau > -1.0 && tau < 1.0 && bandWidthDeg > 0 && numPivots >= 1)
-    val spark = vectors.sparkSession
-    register(spark)
     val maxDeltaDeg = math.toDegrees(math.acos(tau))
     val m = math.ceil(maxDeltaDeg / bandWidthDeg).toLong
     // Explode budget: each pivot multiplies the probe side by (2m+1), so
@@ -435,7 +422,6 @@ object Ann {
       queries: DataFrame, // (q_id, qvec)
       k: Int,
       nprobe: Int): DataFrame = {
-    register(index.sparkSession)
     // probe selection runs as a narrow array expression per query row:
     // distance to every centroid, array_sort on (d, cluster) — the same
     // tie-break as the old window — then slice the first nprobe.

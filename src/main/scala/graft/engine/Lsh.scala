@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.{MinHashSig, ShingleHashes}
 
 /** Banded MinHash-LSH near-duplicate detection, the production
   * generalization of gate q22 (which pins a single 4-row band against the
@@ -44,12 +45,8 @@ object Lsh {
       textCol: String,
       n: Int,
       numHashes: Int): DataFrame = {
-    val spark = docs.sparkSession
-    val fn = s"shingle_hashes_$n"
-    graft.functions.ShingleHashes.register(spark, fn, n)
-    val mh = s"lsh_minhash_sig_$numHashes"
-    graft.functions.TextSketch.registerMinHash(
-      spark, mh, (0 until numHashes).map(params), P, preMod = true)
+    val sig = MinHashSig.col(
+      ShingleHashes.col(col(textCol), n), (0 until numHashes).map(params), P, preMod = true)
     // coalesce: non-nullable key columns (sentinel can never fire — the
     // sig array always holds numHashes minima for rows past the length
     // filter), so downstream joins infer NO isnotnull key filters; those
@@ -57,7 +54,7 @@ object Lsh {
     // (see Queries.minhashSig, guide §4.4 duplication class)
     docs
       .filter(length(col(textCol)) >= n)
-      .select(col(idCol), call_function(mh, call_function(fn, col(textCol))).as("__sig"))
+      .select(col(idCol), sig.as("__sig"))
       .select(col(idCol) +: (0 until numHashes).map(j =>
         coalesce(element_at(col("__sig"), j + 1), lit(-1L)).as(s"mh$j")): _*)
   }

@@ -3,7 +3,8 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.{GeoCols, PipContains}
+import graft.core.PreparedPolygon
+import graft.functions.{GeoCols, MinHashSig, PipContains, S2CellIdExpr, ShingleHashes, SimHashPack, WrapExtract}
 
 /** The driver-gate query registry: every entry pairs a Spark implementation
   * with (where SQL-expressible) a DuckDB oracle over the same parquet
@@ -94,9 +95,8 @@ object Queries {
   private val qGeoPip = Q(
     "q11_geo_pip",
     (s, dir) => {
-      PipContains.register(s, "pip_n43e006", PipPoly)
       withDocCoords(t(s, dir, "documents"))
-        .filter(call_function("pip_n43e006", col("lon"), col("lat")))
+        .filter(PipContains.col(col("lon"), col("lat"), PreparedPolygon(PipPoly)))
         .select(col("doc_id"), round(col("lon"), 6).as("lon"), round(col("lat"), 6).as("lat"))
         .orderBy("doc_id")
     },
@@ -356,9 +356,8 @@ object Queries {
       // expression: one narrow projection + a hash agg on a long key —
       // identical plan shape to q10's flat-grid cells, but the key is
       // hierarchical (parent = bit mask) and locality-preserving
-      graft.functions.S2CellIdExpr.register(s, "s2_cell_11", 11)
       withDocCoords(t(s, dir, "documents"))
-        .withColumn("cell", call_function("s2_cell_11", col("lon"), col("lat")))
+        .withColumn("cell", S2CellIdExpr.col(col("lon"), col("lat"), 11))
         .groupBy("cell")
         .agg(count(lit(1)).as("n_docs"), round(avg(col("n_chars")), 4).as("avg_chars"))
         .orderBy("cell")
@@ -401,10 +400,9 @@ object Queries {
   private val P = 1000003L
 
   private def shingles(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.ShingleHashes.register(s, "shingle_hashes_4", 4)
     t(s, dir, "documents")
       .filter(length(col("text")) >= 4)
-      .select(col("doc_id"), explode(call_function("shingle_hashes_4", col("text"))).as("h"))
+      .select(col("doc_id"), explode(ShingleHashes.col(col("text"), 4)).as("h"))
   }
 
   /** Per-doc shingle-hash ARRAY — no explode: (doc_id, hs). The r7 sketch
@@ -412,10 +410,8 @@ object Queries {
     * so the signature/fingerprint queries never ship one-row-per-shingle
     * through a Generate + aggregation (guide §2.3/§2.4). */
   private def shingleArr(s: SparkSession, dir: String, n: Int): DataFrame = {
-    val fn = s"shingle_hashes_$n"
-    graft.functions.ShingleHashes.register(s, fn, n)
     Ann.spreadSmall(t(s, dir, "documents").filter(length(col("text")) >= n))
-      .select(col("doc_id"), call_function(fn, col("text")).as("hs"))
+      .select(col("doc_id"), ShingleHashes.col(col("text"), n).as("hs"))
   }
 
   /** MinHash signature columns (doc_id, mh0..mh3) from n-char shingles via
@@ -423,8 +419,7 @@ object Queries {
     * explode + groupBy(min...) form (TextSketchSpec pins the equality),
     * with zero exchanges: the signature becomes a narrow projection. */
   private def minhashSig(s: SparkSession, dir: String, n: Int): DataFrame = {
-    val fn = s"minhash_sig_q$n"
-    graft.functions.TextSketch.registerMinHash(s, fn, MinhashParams, P, preMod = false)
+    val sig = MinHashSig.col(col("hs"), MinhashParams, P, preMod = false)
     // coalesce makes each key column NON-NULLABLE (the sentinel can never
     // fire: hs is non-null past the length filter and always holds
     // |params| minima). Without it the join planner infers isnotnull
@@ -435,7 +430,7 @@ object Queries {
     // §4.4's UDF example).
     shingleArr(s, dir, n)
       .select(col("doc_id") +: MinhashParams.indices.map(j =>
-        coalesce(element_at(call_function(fn, col("hs")), j + 1), lit(-1L)).as(s"mh$j")): _*)
+        coalesce(element_at(sig, j + 1), lit(-1L)).as(s"mh$j")): _*)
   }
 
   private val shinglesSql =
@@ -543,7 +538,7 @@ object Queries {
         .join(broadcast(candDocs), Seq("doc_id"), "leftsemi")
         .filter(length(col("text")) >= 8)
         .select(col("doc_id"),
-          array_distinct(call_function("shingle_hashes_8", col("text"))).as("set"))
+          array_distinct(ShingleHashes.col(col("text"), 8)).as("set"))
         .select(col("doc_id"), col("set"), size(col("set")).cast("long").as("sz"))
       cand
         .join(Ann.fetchSide(sets.toDF("doc_a", "set_a", "sz_a")), Seq("doc_a"))
@@ -647,9 +642,8 @@ object Queries {
       // the identical vote sums row-locally with zero exchanges
       // (TextSketchSpec pins kernel == exploded arithmetic, incl. the
       // div/% semantics on negative hashes).
-      graft.functions.TextSketch.registerSimHash(s, "simhash_pack_8", 8)
       shingleArr(s, dir, 4)
-        .select(col("doc_id"), call_function("simhash_pack_8", col("hs")).as("simhash"))
+        .select(col("doc_id"), SimHashPack.col(col("hs"), 8).as("simhash"))
         .orderBy("doc_id")
     },
     Some(s"""SELECT doc_id, CAST(sum(bitval) AS BIGINT) AS simhash FROM (
@@ -677,13 +671,12 @@ object Queries {
       // shuffled 32 vote columns per doc; this shuffles nothing
       // (TextSketchSpec pins kernel == vote-sum arithmetic). Oracle keeps
       // the exploded SQL.
-      graft.functions.TextSketch.registerSimHash(s, "simhash_pack_32", 32)
       // coalesce: non-nullable sh32, so the band self-join infers no
       // isnotnull(bucket) filter that would inline (and re-run) the pack
       // kernel per predicate (see minhashSig; the sentinel cannot fire)
       val sig = shingleArr(s, dir, 8)
         .select(col("doc_id"),
-          coalesce(call_function("simhash_pack_32", col("hs")), lit(-1L)).as("sh32"))
+          coalesce(SimHashPack.col(col("hs"), 32), lit(-1L)).as("sh32"))
       val banded = sig.select(col("doc_id"), col("sh32"),
         explode(sequence(lit(0), lit(3))).as("band"))
         .withColumn("bucket", expr("(sh32 div shiftleft(CAST(1 AS BIGINT), band * 8)) % 256"))
@@ -746,7 +739,7 @@ object Queries {
         .join(broadcast(candDocs), Seq("doc_id"), "leftsemi")
         .filter(length(col("text")) >= 8)
         .select(col("doc_id"),
-          array_distinct(call_function("shingle_hashes_8", col("text"))).as("set"))
+          array_distinct(ShingleHashes.col(col("text"), 8)).as("set"))
         .select(col("doc_id"), col("set"), size(col("set")).cast("long").as("sz"))
       // exact INTEGER pair (|A∩B|, |A∪B|) rather than a rounded quotient:
       // n_inter/n_union lands on exact half-way decimals (e.g. 41/640 =
@@ -918,13 +911,12 @@ object Queries {
   private val qRoundtrip = Q(
     "q26_text_roundtrip",
     (s, dir) => {
-      graft.functions.WrapExtract.register(s)
       // the per-row invariant: text -> html wrap -> extract is byte-identical,
       // so hashing the round-tripped text must equal hashing the original
       t(s, dir, "documents")
         .select(
           col("doc_id"),
-          sha2(call_function("wrap_extract", col("text"),
+          sha2(WrapExtract.col(col("text"),
             concat(lit("https://docs.example/"), col("doc_id"))), 256).as("text_sha256"),
           length(col("text")).as("n_bytes"))
         .orderBy("doc_id")
@@ -1271,7 +1263,6 @@ object Queries {
       // match because the expression's left-to-right fold is the same sum
       // DuckDB computes, and ranking happens on the ROUNDED cosine so
       // cross-engine ulp drift cannot flip ranks (the q34 argument).
-      Ann.register(s)
       val vecs = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
       val queries = vecs.filter(col("vec_id") < 3).toDF("q_id", "qvec")
@@ -1324,7 +1315,6 @@ object Queries {
   private val qEmbNearDup = Q(
     "q34_emb_neardup",
     (s, dir) => {
-      Ann.register(s)
       val vecs = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
       val centroids = Ann.trainCentroids(vecs, k = 8, iters = 2)
@@ -1867,7 +1857,6 @@ object Queries {
   private val qBandedCosine = Q(
     "q57_emb_neardup_banded",
     (s, dir) => {
-      Ann.register(s)
       val base = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
       val twins = base.select((col("vec_id") + lit(10000000L)).as("vec_id"),

@@ -211,11 +211,7 @@ object RasterPipeline {
     * unset means 2048. Takes the environment as a map so it can be tested
     * without touching the process environment. */
   private[graft] def gridCacheMb(env: Map[String, String] = sys.env): Int =
-    env.get("SPARK_GRAFT_GRID_CACHE_MB") match {
-      case None => 2048
-      case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_GRID_CACHE_MB must be a positive integer, got '$v'"))
-    }
+    Env.positiveInt("SPARK_GRAFT_GRID_CACHE_MB", env).getOrElse(2048)
 
   /** Executor-global decoded-grid cache: every task in the executor JVM
     * shares it, so each source file is read+decoded once per executor even
@@ -484,17 +480,6 @@ object RasterPipeline {
           "the contours Dataset must hold each tile's rows in one partition")
     }
     written.map(_._1).toSeq.sorted
-  }
-
-  /** Convenience end-to-end run. */
-  def run(spark: SparkSession, paths: Seq[String], outDir: String, cfg: JobConfig): Seq[String] = {
-    graft.core.Fs.mkdirs(outDir)
-    val ts = tiles(spark, paths, cfg)
-    val cs = contours(ts, cfg).persist()
-    try {
-      val offs = idOffsets(cs, cfg)
-      writeOsmXml(cs, offs, outDir, cfg)
-    } finally cs.unpersist()
   }
 
   /** Single-output mode (reference --max-nodes-per-tile 0,

@@ -1,10 +1,10 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import scala.collection.immutable.LongMap
 import graft.core.{BBox, Cells, PreparedPolygon}
+import graft.functions.{PipLookup, S2CellIdExpr}
 
 /** Pages x polygons spatial join and kNN, built the way they must run at
   * 10^12-row scale (SURVEY.md §2.3 J3/J5, north rule):
@@ -53,21 +53,12 @@ object SpatialJoin {
   /** The PIP residual every join variant ends with: each polygon is
     * prepared once here on the driver (PreparedPolygon, whose band-indexed
     * ray cast equals Geometry.contains bit for bit) and the poly_id ->
-    * prepared polygon dictionary travels in one torrent broadcast. The
-    * lookup is a temp function only while `candidates` is filtered: a
-    * classic Dataset is analyzed eagerly, so the returned plan keeps the
-    * resolved PipLookup, and the broadcast lives as long as that plan
-    * rather than as long as the session. */
+    * prepared polygon dictionary travels in one torrent broadcast, held by
+    * the PipLookup in the returned plan and by nothing else. */
   private def pipResidual(candidates: DataFrame, polys: Seq[Poly]): DataFrame = {
-    val spark = candidates.sparkSession
-    val bc = spark.sparkContext.broadcast(
+    val bc = candidates.sparkSession.sparkContext.broadcast(
       LongMap(polys.map(p => p.polyId -> PreparedPolygon(p.coords)): _*))
-    val name = s"pip_lookup_${java.util.UUID.randomUUID().toString.take(8)}"
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(
-      name, exprs => graft.functions.PipLookup(exprs(0), exprs(1), exprs(2), bc), "built-in")
-    try candidates.filter(call_function(name, col("lon"), col("lat"), col("poly_id")))
-    finally registry.dropFunction(FunctionIdentifier(name))
+    candidates.filter(PipLookup.col(col("lon"), col("lat"), col("poly_id"), bc))
   }
 
   /** pages(cell, lon, lat, ...) x polygons -> rows inside each polygon.
@@ -128,8 +119,7 @@ object SpatialJoin {
       lonCol: String,
       latCol: String,
       partitions: Int): Unit = {
-    graft.functions.S2CellIdExpr.register(df.sparkSession, "s2_leaf", 30)
-    df.withColumn("s2", call_function("s2_leaf", col(lonCol), col(latCol)))
+    df.withColumn("s2", S2CellIdExpr.col(col(lonCol), col(latCol), 30))
       .repartitionByRange(partitions, col("s2"))
       .sortWithinPartitions("s2")
       .write.mode("overwrite").parquet(path)

@@ -22,13 +22,20 @@ object Streaming {
       .withColumn("hour_epoch", (unix_timestamp(col("ts")) / 3600L).cast("long") * 3600L)
       .groupBy("event_type", "hour_epoch")
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
-    val qn = s"stream_hourly_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(qn).outputMode("complete").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    s.table(qn).orderBy("event_type", "hour_epoch")
+    runToCompletion(agg, "stream_hourly", "complete").orderBy("event_type", "hour_epoch")
   }
 
+  /** Drive a file-backed streaming query synchronously: a memory sink
+    * under a unique query name, every available input processed, the
+    * query stopped, and the sink table read back on the query's own
+    * session (the capped session whose catalog holds it). */
+  private def runToCompletion(stream: DataFrame, name: String, outputMode: String): DataFrame = {
+    val qn = s"${name}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val q = stream.writeStream.format("memory").queryName(qn).outputMode(outputMode).start()
+    try q.processAllAvailable()
+    finally q.stop()
+    stream.sparkSession.table(qn)
+  }
 
   /** Isolated session with shuffle partitions capped for a stateful
     * streaming query. Stateful streaming cost has a per-(store instance
@@ -193,11 +200,7 @@ object Streaming {
       .dropDuplicates("lang", "tkey")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_unique"))
-    val qn = s"stream_dedup_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(qn).outputMode("complete").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    s.table(qn).orderBy("lang")
+    runToCompletion(agg, "stream_dedup", "complete").orderBy("lang")
   }
 
   /** Production form of the streaming dedup: event-time watermark +
@@ -275,12 +278,8 @@ object Streaming {
     // stateful stage (isolated session — never leaks to the caller's)
     val s = cappedSession(spark, 4)
     val schema = s.read.parquet(eventsPath).schema
-    val joined = attributionJoin(streamOf(s, eventsPath, schema))
-    val qn = s"stream_attr_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = joined.writeStream.format("memory").queryName(qn).outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    s.table(qn).orderBy("p_id", "view_us")
+    runToCompletion(attributionJoin(streamOf(s, eventsPath, schema)), "stream_attr", "append")
+      .orderBy("p_id", "view_us")
   }
 
   /** Drive sessionize as a real streaming query over the events table. */
@@ -291,12 +290,6 @@ object Streaming {
     val stream = streamOf(s, eventsPath, schema)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event]
-    val out = sessionize(stream)
-    val qn = s"stream_sessions_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = out.toDF().writeStream.format("memory").queryName(qn)
-      .outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    s.table(qn).orderBy("user_id")
+    runToCompletion(sessionize(stream).toDF(), "stream_sessions", "append").orderBy("user_id")
   }
 }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BooleanType, DataType}
@@ -11,10 +12,9 @@ import graft.core.PreparedPolygon
   * /root/reference/pyhgtmap/hgt/file.py:310-365).
   *
   * Even-odd ray cast through a PreparedPolygon (band-indexed edges, same
-  * answer as graft.core.Geometry.contains), prepared once when the
-  * function is registered. Registered as a temp function so
-  * `call_function` can build the Column on Spark 4 (the
-  * Column-from-Expression constructor is no longer public).
+  * answer as graft.core.Geometry.contains), prepared once by the caller
+  * and baked into the plan; `PipContains.col` builds the Column directly
+  * (through Catalyst, the one Column/Expression crossing).
   */
 case class PipContains(left: Expression, right: Expression, poly: PreparedPolygon)
     extends BinaryExpression {
@@ -34,12 +34,6 @@ case class PipContains(left: Expression, right: Expression, poly: PreparedPolygo
 }
 
 object PipContains {
-  /** Register a polygon-specific pip function under `name` in this session. */
-  def register(spark: org.apache.spark.sql.SparkSession, name: String, poly: Array[Double]): Unit = {
-    val prepared = PreparedPolygon(poly)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => PipContains(exprs(0), exprs(1), prepared),
-      "built-in")
-  }
+  def col(lon: Column, lat: Column, poly: PreparedPolygon): Column =
+    Catalyst.column(PipContains(Catalyst.expr(lon), Catalyst.expr(lat), poly))
 }

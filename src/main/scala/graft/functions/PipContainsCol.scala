@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -26,12 +28,6 @@ case class PipContainsCol(first: Expression, second: Expression, third: Expressi
   override def prettyName: String = "pip_contains_col"
 }
 
-object PipContainsCol {
-  def register(spark: org.apache.spark.sql.SparkSession, name: String = "pip_contains_col"): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PipContainsCol(exprs(0), exprs(1), exprs(2)), "built-in")
-}
-
 /** PIP against a broadcast polygon dictionary: the candidate rows carry
   * only (lon, lat, poly_id); each polygon lives once per executor in the
   * torrent broadcast, prepared (PreparedPolygon: the ring's edges indexed
@@ -43,7 +39,7 @@ object PipContainsCol {
   * the index. */
 case class PipLookup(
     first: Expression, second: Expression, third: Expression,
-    polys: org.apache.spark.broadcast.Broadcast[LongMap[PreparedPolygon]])
+    polys: Broadcast[LongMap[PreparedPolygon]])
     extends TernaryExpression {
   override def dataType: DataType = BooleanType
 
@@ -70,4 +66,12 @@ case class PipLookup(
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): PipLookup = copy(f, s, t)
   override def prettyName: String = "pip_lookup"
+}
+
+object PipLookup {
+  def col(
+      lon: Column, lat: Column, polyId: Column,
+      polys: Broadcast[LongMap[PreparedPolygon]]): Column =
+    Catalyst.column(
+      PipLookup(Catalyst.expr(lon), Catalyst.expr(lat), Catalyst.expr(polyId), polys))
 }

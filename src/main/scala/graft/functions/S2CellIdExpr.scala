@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
@@ -37,7 +38,6 @@ case class S2CellIdExpr(left: Expression, right: Expression, level: Int)
 }
 
 object S2CellIdExpr {
-  def register(spark: org.apache.spark.sql.SparkSession, name: String, level: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => S2CellIdExpr(exprs(0), exprs(1), level), "built-in")
+  def col(lon: Column, lat: Column, level: Int): Column =
+    Catalyst.column(S2CellIdExpr(Catalyst.expr(lon), Catalyst.expr(lat), level))
 }

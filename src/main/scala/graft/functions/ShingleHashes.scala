@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -56,7 +57,5 @@ case class ShingleHashes(child: Expression, n: Int)
 }
 
 object ShingleHashes {
-  def register(spark: org.apache.spark.sql.SparkSession, name: String, n: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => ShingleHashes(exprs.head, n), "built-in")
+  def col(text: Column, n: Int): Column = Catalyst.column(ShingleHashes(Catalyst.expr(text), n))
 }

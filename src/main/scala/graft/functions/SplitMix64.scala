@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -25,7 +26,5 @@ object SplitMix64 {
     z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
     z ^ (z >>> 31)
   }
-  def register(spark: org.apache.spark.sql.SparkSession, name: String = "splitmix64"): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => SplitMix64(exprs.head), "built-in")
+  def col(x: Column): Column = Catalyst.column(SplitMix64(Catalyst.expr(x)))
 }

@@ -1,11 +1,12 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Sketch kernels over a shingle-hash array (the ShingleHashes output),
+/* Sketch kernels over a shingle-hash array (the ShingleHashes output),
   * replacing the explode -> hash-aggregate signature shape: the old form
   * ships one row PER SHINGLE into an aggregation (an O(corpus chars)
   * exchange feeding partial/final min/sum buffers); these compute the
@@ -15,27 +16,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * bit-for-bit the aggregation's: Java Long ops match Spark's
   * `*`/`+`/`%`/`div` on BIGINT (truncating division, dividend-sign
   * remainder), pinned by TextSketchSpec against the exploded SQL form. */
-object TextSketch {
-
-  /** Register a MinHashSig under `name`: minima of (h*a+b) % mod (or the
-    * pmod-reduced Lsh form when preMod) per document. */
-  def registerMinHash(
-      spark: org.apache.spark.sql.SparkSession,
-      name: String,
-      params: Seq[(Long, Long)],
-      mod: Long,
-      preMod: Boolean): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => MinHashSig(exprs.head, params, mod, preMod), "built-in")
-
-  /** Register a SimHashPack under `name`: the `bits`-bit simhash long. */
-  def registerSimHash(
-      spark: org.apache.spark.sql.SparkSession,
-      name: String,
-      bits: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => SimHashPack(exprs.head, bits), "built-in")
-}
 
 /** All `params.length` minhash minima of a hash array in one pass.
   *
@@ -89,6 +69,11 @@ case class MinHashSig(child: Expression, params: Seq[(Long, Long)], mod: Long, p
   override def prettyName: String = s"minhash_sig_${params.length}"
 }
 
+object MinHashSig {
+  def col(hs: Column, params: Seq[(Long, Long)], mod: Long, preMod: Boolean): Column =
+    Catalyst.column(MinHashSig(Catalyst.expr(hs), params, mod, preMod))
+}
+
 /** Packed `bits`-bit simhash of a hash array in one pass: bit b is set
   * iff the vote sum over all elements of (+1 when (h div 2^b) % 2 = 1
   * else -1) is strictly positive — exactly the exploded
@@ -131,4 +116,8 @@ case class SimHashPack(child: Expression, bits: Int) extends UnaryExpression {
 
   override protected def withNewChildInternal(c: Expression): SimHashPack = copy(child = c)
   override def prettyName: String = s"simhash_pack_$bits"
+}
+
+object SimHashPack {
+  def col(hs: Column, bits: Int): Column = Catalyst.column(SimHashPack(Catalyst.expr(hs), bits))
 }

@@ -59,20 +59,6 @@ object VecOps {
   }
 }
 
-object VecFns {
-  /** Session-local registration (sessions built without GraftExtensions). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sq_dist_vec", exprs => SqDistVec(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_vec", exprs => DotVec(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_norm", exprs => VecNorm(exprs(0)), "built-in")
-  }
-}
-
 case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = DoubleType
   override def nullSafeEval(a: Any, b: Any): Any =

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -31,7 +32,6 @@ case class WrapExtract(left: Expression, right: Expression)
 }
 
 object WrapExtract {
-  def register(spark: org.apache.spark.sql.SparkSession, name: String = "wrap_extract"): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => WrapExtract(exprs(0), exprs(1)), "built-in")
+  def col(text: Column, url: Column): Column =
+    Catalyst.column(WrapExtract(Catalyst.expr(text), Catalyst.expr(url)))
 }

@@ -2,6 +2,7 @@ package graft.synth
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.SplitMix64
 
 /** Deterministic Common-Crawl-style pages table (BASELINE.json input_hint:
   * url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING),
@@ -112,7 +113,6 @@ object Pages {
   /** Pages with derived geocode + cell columns (the engine's geocoding
     * stage; pure column arithmetic stays in whole-stage codegen). */
   def geocoded(pages: DataFrame, res: Int): DataFrame = {
-    graft.functions.SplitMix64.register(pages.sparkSession)
     // id recovered from the url tail: deterministic, survives re-reads
     // (substring_index beats a regex by ~an order of magnitude per row)
     val id = substring_index(col("url"), "/", -1).cast("long")
@@ -125,16 +125,14 @@ object Pages {
 
   // column-only twins of lonOf/latOf (same splitmix64 chain, wrapping
   // arithmetic via the SplitMix64 expression — ANSI-safe)
-  private def mixCol(x: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    call_function("splitmix64", x)
   private def lonCol(id: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val h = mixCol(id * lit(131L) + lit(3L))
+    val h = SplitMix64.col(id * lit(131L) + lit(3L))
     when(pmod(h, lit(5L)) === 0L,
       lit(6.25) + pmod(shiftrightunsigned(h, 8), lit(10000L)).cast("double") / lit(1000000.0))
       .otherwise(lit(6.0) + pmod(shiftrightunsigned(h, 8), lit(1000000L)).cast("double") / lit(1000000.0))
   }
   private def latCol(id: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val h = mixCol(id * lit(131L) + lit(3L))
+    val h = SplitMix64.col(id * lit(131L) + lit(3L))
     when(pmod(h, lit(5L)) === 0L,
       lit(43.25) + pmod(shiftrightunsigned(h, 24), lit(10000L)).cast("double") / lit(1000000.0))
       .otherwise(lit(43.0) + pmod(shiftrightunsigned(h, 24), lit(1000000L)).cast("double") / lit(1000000.0))

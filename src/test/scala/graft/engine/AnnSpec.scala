@@ -22,7 +22,6 @@ class AnnSpec extends AnyFunSuite {
     .select(col("vec_id").as("q_id"), col("vec").as("qvec"))
 
   test("cosineFromNorms is BIT-identical to cosine (r7 precomputed-norm path)") {
-    Ann.register(spark)
     val pairs = vectors.toDF("a", "va").crossJoin(
       vectors.filter(col("vec_id") < 20).toDF("b", "vb"))
     val both = pairs.select(
@@ -69,7 +68,6 @@ class AnnSpec extends AnyFunSuite {
 
   test("ivfPairs at nprobe = 2 prunes the pair space but keeps near-dups") {
     val centroids = Ann.trainCentroids(vectors, k = 8, iters = 2)
-    Ann.register(spark)
     def dups(nprobe: Int): Set[(Long, Long)] =
       Ann.ivfPairs(vectors, centroids, nprobe)
         .select(col("a"), col("b"), Ann.cosine(col("va"), col("vb")).as("cos"))
@@ -89,7 +87,6 @@ class AnnSpec extends AnyFunSuite {
 
   test("angle-banded pairs equal the brute-force cosine filter exactly") {
     import spark.implicits._
-    Ann.register(spark)
     // corpus + perturbed twins + a zero vector + band-boundary cases
     val twins = vectors.select((col("vec_id") + 100000L).as("vec_id"),
       expr("transform(vec, x -> x * 0.999 + 0.0005)").as("vec"))
@@ -114,7 +111,6 @@ class AnnSpec extends AnyFunSuite {
 
   test("angle-banded pairs stay exact on the MULTI-pivot path (m=1 production width)") {
     import spark.implicits._
-    Ann.register(spark)
     // The 2.0-deg width above makes m large, so the explode budget clamps
     // to ONE pivot and the test never runs the band-TUPLE equi-join. At
     // width = acos(tau) (m = 1, q57's production setting) all 3 pivots
@@ -154,7 +150,6 @@ class AnnSpec extends AnyFunSuite {
 
   test("shuffled-hash fetch path (vector side over the broadcast bound) stays exact") {
     import spark.implicits._
-    Ann.register(spark)
     // pairsAngleBanded picks the fetch-join strategy from plan-time size
     // vs spark.graft.fetchBroadcastBytes (r7, guide §3): broadcast when
     // the vector side fits, SHUFFLE_HASH otherwise so the candidate
@@ -186,7 +181,6 @@ class AnnSpec extends AnyFunSuite {
 
   test("precomputed pivots reproduce the per-call pivot selection exactly") {
     import spark.implicits._
-    Ann.register(spark)
     // loop callers precompute once (ADVICE: skip the per-call driver
     // collect); the operator must yield the identical pair set, and a
     // NON-orthogonal pivot set must stay exact too (orthogonality is a
@@ -212,7 +206,6 @@ class AnnSpec extends AnyFunSuite {
 
   test("angle banding: strong pruning on spread data, graceful degradation on isotropic") {
     import spark.implicits._
-    Ann.register(spark)
     // angleBandCandidates IS the candidate set (its only filters are
     // band tuple + |dTheta_i|), so counting it measures the pruning.
     //

@@ -1,7 +1,7 @@
 package graft.engine
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Physical-plan shape checks: filters reach the parquet scan, projections
@@ -172,9 +172,9 @@ class PlanSpec extends AnyFunSuite {
 
   test("s2_cell codegen matches interpreted eval") {
     import spark.implicits._
-    graft.functions.S2CellIdExpr.register(spark, "s2_cell_t", 13)
+    def s2(lon: Column, lat: Column) = graft.functions.S2CellIdExpr.col(lon, lat, 13).as("c")
     def run(): Seq[Long] = spark.range(0, 500)
-      .selectExpr("s2_cell_t(CAST(id AS DOUBLE) * 0.7 - 175.0, CAST(id AS DOUBLE) * 0.33 - 82.0) AS c")
+      .select(s2(col("id").cast("double") * 0.7 - 175.0, col("id").cast("double") * 0.33 - 82.0))
       .as[Long].collect().toSeq
     val c1 = run()
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
@@ -185,7 +185,7 @@ class PlanSpec extends AnyFunSuite {
     assert(c1 == expect)
     // non-double inputs take the analyzer's implicit cast in BOTH paths
     def runInt(): Seq[Long] = spark.range(0, 50)
-      .selectExpr("s2_cell_t(CAST(id AS INT), CAST(id % 60 AS FLOAT)) AS c")
+      .select(s2(col("id").cast("int"), (col("id") % 60).cast("float")))
       .as[Long].collect().toSeq
     val i1 = runInt()
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")

@@ -77,7 +77,7 @@ class RasterPipelineSpec extends AnyFunSuite {
     val outDir = Files.createTempDirectory("graftxml").toString
     val cfg = JobConfig(area = Some("6.2:43.1:6.4:43.3"), maxNodesPerTile = 500000L,
       maxNodesPerWay = 2000, rdpEpsilon = None)
-    val files = RasterPipeline.run(spark, Seq(fixture), outDir, cfg)
+    val files = RasterPipeline.runResumable(spark, Seq(fixture), outDir, cfg).files
     assert(files.nonEmpty)
     files.foreach { f =>
       val content = new String(Files.readAllBytes(Paths.get(f)), "UTF-8")

@@ -102,7 +102,7 @@ class SpatialJoinSpec extends AnyFunSuite {
   test("join variants leave no pip_lookup function registered and still equal the oracle") {
     // each call's lookup closes over a broadcast of every prepared polygon;
     // a registry entry left behind would pin that broadcast for the life of
-    // the session, so the variants drop it once their plan is analyzed
+    // the session, so the variants build the lookup column directly
     val frames = Seq(
       "pipJoin" -> SpatialJoin.pipJoin(pages, polys, Res),
       "pipJoinShuffled" -> SpatialJoin.pipJoinShuffled(pages, polys, Res),

@@ -3,6 +3,7 @@ package graft.engine
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.functions.{MinHashSig, ShingleHashes, SimHashPack}
 
 /** The r7 one-pass sketch kernels (functions/TextSketch.scala) must equal
   * the explode + aggregation forms they replaced BIT-FOR-BIT — on ASCII
@@ -33,15 +34,13 @@ class TextSketchSpec extends AnyFunSuite {
   }
 
   private def shingleRows(n: Int) = {
-    graft.functions.ShingleHashes.register(spark, s"shingle_hashes_$n", n)
     docs.filter(length(col("text")) >= n)
-      .select(col("doc_id"), explode(call_function(s"shingle_hashes_$n", col("text"))).as("h"))
+      .select(col("doc_id"), explode(ShingleHashes.col(col("text"), n)).as("h"))
   }
 
   private def shingleArrs(n: Int) = {
-    graft.functions.ShingleHashes.register(spark, s"shingle_hashes_$n", n)
     docs.filter(length(col("text")) >= n)
-      .select(col("doc_id"), call_function(s"shingle_hashes_$n", col("text")).as("hs"))
+      .select(col("doc_id"), ShingleHashes.col(col("text"), n).as("hs"))
   }
 
   test("kernels match Spark div/% semantics on NEGATIVE hash values") {
@@ -55,17 +54,15 @@ class TextSketchSpec extends AnyFunSuite {
     val crafted = Seq((0L, Seq(-7L, -1000003L - 5L, -50000000000000000L, 42L)))
       .toDF("doc_id", "hs")
     val rows = crafted.select(col("doc_id"), explode(col("hs")).as("h"))
-    graft.functions.TextSketch.registerMinHash(spark, "mh_neg", Params, P, preMod = false)
     val aggs = Params.zipWithIndex.map { case ((a, b), j) =>
       min((col("h") * lit(a) + lit(b)) % lit(P)).as(s"mh$j")
     }
     val oldMh = rows.groupBy("doc_id").agg(aggs.head, aggs.tail: _*).collect().toSeq
     val neuMh = crafted
       .select(col("doc_id") +: Params.indices.map(j =>
-        element_at(call_function("mh_neg", col("hs")), j + 1).as(s"mh$j")): _*)
+        element_at(MinHashSig.col(col("hs"), Params, P, preMod = false), j + 1).as(s"mh$j")): _*)
       .collect().toSeq
     assert(neuMh == oldMh)
-    graft.functions.TextSketch.registerSimHash(spark, "sh_neg", 32)
     val oldSh = rows
       .select(col("doc_id"), col("h"), explode(sequence(lit(0), lit(31))).as("b"))
       .withColumn("w",
@@ -75,32 +72,30 @@ class TextSketchSpec extends AnyFunSuite {
         when(col("sw") > 0, expr("shiftleft(CAST(1 AS BIGINT), b)")).otherwise(lit(0L)))
       .groupBy("doc_id").agg(sum("bitval").as("simhash")).collect().toSeq
     val neuSh = crafted
-      .select(col("doc_id"), call_function("sh_neg", col("hs")).as("simhash")).collect().toSeq
+      .select(col("doc_id"), SimHashPack.col(col("hs"), 32).as("simhash")).collect().toSeq
     assert(neuSh == oldSh)
   }
 
   test("MinHashSig (gate form, preMod = false) == explode + min((h*a+b) % P)") {
-    graft.functions.TextSketch.registerMinHash(spark, "mh_test_q", Params, P, preMod = false)
     val aggs = Params.zipWithIndex.map { case ((a, b), j) =>
       min((col("h") * lit(a) + lit(b)) % lit(P)).as(s"mh$j")
     }
     val old = shingleRows(8).groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
     val neu = shingleArrs(8)
       .select(col("doc_id") +: Params.indices.map(j =>
-        element_at(call_function("mh_test_q", col("hs")), j + 1).as(s"mh$j")): _*)
+        element_at(MinHashSig.col(col("hs"), Params, P, preMod = false), j + 1).as(s"mh$j")): _*)
     assert(neu.orderBy("doc_id").collect().toSeq == old.orderBy("doc_id").collect().toSeq)
   }
 
   test("MinHashSig (Lsh form, preMod = true) == explode + min(pmod(pmod(h,P)*a+b, P))") {
     val lshParams = (0 until 8).map(Lsh.params)
-    graft.functions.TextSketch.registerMinHash(spark, "mh_test_lsh", lshParams, P, preMod = true)
     val aggs = lshParams.zipWithIndex.map { case ((a, b), j) =>
       min(pmod(pmod(col("h"), lit(P)) * lit(a) + lit(b), lit(P))).as(s"mh$j")
     }
     val old = shingleRows(8).groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
     val neu = shingleArrs(8)
       .select(col("doc_id") +: lshParams.indices.map(j =>
-        element_at(call_function("mh_test_lsh", col("hs")), j + 1).as(s"mh$j")): _*)
+        element_at(MinHashSig.col(col("hs"), lshParams, P, preMod = true), j + 1).as(s"mh$j")): _*)
     assert(neu.orderBy("doc_id").collect().toSeq == old.orderBy("doc_id").collect().toSeq)
   }
 
@@ -116,7 +111,6 @@ class TextSketchSpec extends AnyFunSuite {
 
   test("SimHashPack == explode-bits + vote-sum + bit pack (8 and 32 bits)") {
     for (bits <- Seq(8, 32)) {
-      graft.functions.TextSketch.registerSimHash(spark, s"sh_test_$bits", bits)
       val old = shingleRows(8)
         .select(col("doc_id"), col("h"), explode(sequence(lit(0), lit(bits - 1))).as("b"))
         .withColumn("w",
@@ -126,7 +120,7 @@ class TextSketchSpec extends AnyFunSuite {
           when(col("sw") > 0, expr("shiftleft(CAST(1 AS BIGINT), b)")).otherwise(lit(0L)))
         .groupBy("doc_id").agg(sum("bitval").as("simhash"))
       val neu = shingleArrs(8)
-        .select(col("doc_id"), call_function(s"sh_test_$bits", col("hs")).as("simhash"))
+        .select(col("doc_id"), SimHashPack.col(col("hs"), bits).as("simhash"))
       assert(neu.orderBy("doc_id").collect().toSeq == old.orderBy("doc_id").collect().toSeq,
         s"bits=$bits")
     }
