@@ -134,18 +134,21 @@ object PlanDump {
         "and the offsets join back as a broadcast. No global one-task sort.",
       Queries.all.find(_.name == "q19_seq_pack").get.impl(spark, dir))
 
-    dump("S2 cover-range scan of a clustered table",
+    // a fixed directory, so its path in the plan is the same on every run
+    val s2Dir = s"${sys.props("java.io.tmpdir").stripSuffix("/")}/graft-plandump-s2"
+    graft.core.Fs.deleteRecursive(s2Dir)
+    try dump("S2 cover-range scan of a clustered table",
       "A bbox over an S2-leaf-clustered table: the adaptive covering's cell\n" +
         "ranges arrive at the parquet scan as PushedFilters on the sorted s2\n" +
         "column — row groups outside the ranges never decode.",
       {
-        val tmp = graft.core.Fs.createTempDir("plans2")
         SpatialJoin.writeClusteredS2(pages.select("page_id", "lon", "lat"),
-          tmp, "lon", "lat", partitions = 4)
-        spark.read.parquet(tmp)
+          s2Dir, "lon", "lat", partitions = 4)
+        spark.read.parquet(s2Dir)
           .filter(SpatialJoin.s2RangePredicate(6.4, 43.4, 6.6, 43.6, level = 10))
           .filter(col("lon").between(6.4, 6.6) && col("lat").between(43.4, 43.6))
       })
+    finally graft.core.Fs.deleteRecursive(s2Dir)
 
     graft.core.Fs.writeString("PLANS.md", sb.toString)
     println(s"wrote PLANS.md (${sb.length} chars)")

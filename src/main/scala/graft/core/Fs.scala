@@ -1,8 +1,8 @@
 package graft.core
 
-import java.io.{InputStream, OutputStream}
+import java.io.{BufferedOutputStream, InputStream, OutputStream}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{CommonConfigurationKeysPublic, FileSystem, Path, RawLocalFileSystem}
 
 /** All executor/driver file I/O goes through the Hadoop FileSystem API so
   * the pipeline behaves identically on local-FS (tests, local[N]) and on a
@@ -54,7 +54,21 @@ object Fs {
     }
   }
 
-  def create(path: String): OutputStream = fs(path).create(new Path(path), true)
+  /** Opens `path` for writing: missing parent directories are created and
+    * an existing file is truncated. On the local FS the file opens through
+    * java.nio, buffered as Hadoop buffers it: without Hadoop's native IO,
+    * `RawLocalFileSystem.create` applies the default permission by forking
+    * `chmod` once per file, while nio creates it under the process umask
+    * with no fork. Every other scheme goes through the Hadoop API. */
+  def create(path: String): OutputStream = fs(path) match {
+    case l: RawLocalFileSystem =>
+      val f = l.pathToFile(new Path(path)).toPath
+      if (f.getParent != null) java.nio.file.Files.createDirectories(f.getParent)
+      new BufferedOutputStream(java.nio.file.Files.newOutputStream(f), l.getConf.getInt(
+        CommonConfigurationKeysPublic.IO_FILE_BUFFER_SIZE_KEY,
+        CommonConfigurationKeysPublic.IO_FILE_BUFFER_SIZE_DEFAULT))
+    case other => other.create(new Path(path), true)
+  }
 
   def open(path: String): InputStream = fs(path).open(new Path(path))
 

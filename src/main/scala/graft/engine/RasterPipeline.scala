@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.core.MarchingSquares.{GridView, Scratch}
@@ -335,20 +335,22 @@ object RasterPipeline {
       }
   }
 
-  /** Per-tile (nodes, ways) counts collected to the driver — tiny: one
-    * row per tile, never raster data. This is the engine's one remaining
-    * O(tiles) driver surface, kept deliberately: the deterministic
-    * prefix sum it feeds (see prefixSum) is the id contract that makes
-    * resume byte-identical, and the map it produces is broadcast to the
-    * writers. Envelope: ~48 B/tile, so 10^7 tiles (a full-planet 100 TB
-    * DEM corpus at 1-degree tiling) is ~0.5 GB driver heap — within a
-    * normal driver. A distributed alternative (window prefix sum over
-    * (key, tileIdx) + join-back) exists if that envelope is ever
-    * exceeded; the union-bbox and lineage paths already run distributed. */
-  private def tileCounts(contoursDs: Dataset[ContourRow]): Seq[((String, Int), (Long, Long))] =
-    contoursDs
+  /** One (key, tileIdx, nodes, ways) row per contour path. */
+  private def pathCounts(contoursDs: Dataset[ContourRow]): DataFrame =
+    contoursDs.select(col("key"), col("tileIdx"), col("nbNodes").cast("long").as("nodes"),
+      lit(1L).as("ways"))
+
+  /** Per-tile (nodes, ways) sums of `counts` collected to the driver:
+    * one row per tile, never raster data. The deterministic prefix sum it
+    * feeds (see prefixSum) is the id contract that makes resume
+    * byte-identical, and the map it produces is broadcast to the writers.
+    * Envelope: ~48 B/tile, so 10^7 tiles (a full-planet 100 TB DEM corpus
+    * at 1-degree tiling) is ~0.5 GB of rows; runResumable holds more
+    * per-tile state beside it (see there). */
+  private def tileCounts(counts: DataFrame): Seq[((String, Int), (Long, Long))] =
+    counts
       .groupBy("key", "tileIdx")
-      .agg(sum("nbNodes").as("nodes"), count(lit(1)).as("ways"))
+      .agg(sum("nodes"), sum("ways"))
       .collect()
       .map(r => ((r.getString(0), r.getInt(1)), (r.getLong(2), r.getLong(3))))
       .toSeq
@@ -373,7 +375,7 @@ object RasterPipeline {
     * in (key, tileIdx) order. The reference only guarantees non-overlap
     * (tests/hgt/test_processor.py:105-130); this is strictly stronger. */
   def idOffsets(contoursDs: Dataset[ContourRow], cfg: JobConfig): Map[(String, Int), TileOffsets] =
-    prefixSum(tileCounts(contoursDs), cfg)
+    prefixSum(tileCounts(pathCounts(contoursDs)), cfg)
 
   /** The writer's input order. Single-output mode (reference
     * processor.py:273-336): one file over the global bbox, ALL nodes
@@ -525,40 +527,41 @@ object RasterPipeline {
 
   /** Resumable run: tiles with a commit record are skipped; id offsets are
     * rebuilt from committed counts + freshly traced counts, so a resumed
-    * run emits byte-identical files to a fresh one. Also appends a metrics
-    * table (per-tile rows) and a lineage table (input -> tile -> file)
-    * under outDir/_meta. */
+    * run emits byte-identical files to a fresh one. Also replaces the
+    * metrics table (one row per commit record) and the lineage table
+    * (input tile -> file) under outDir/_meta.
+    *
+    * Driver envelope: O(tiles). The driver holds every tile's counts (the
+    * one collect, which also gives tilesTotal), the offsets map broadcast
+    * to the writers, the commit records read before and after the write
+    * (each carrying its output path), and the `_meta` rows written from
+    * them. With JVM object overheads that is an estimated ~1 KB per tile,
+    * ~10 GB at 10^7 tiles: past a few million tiles a run needs a large
+    * driver, or a distributed prefix sum (window over (key, tileIdx) plus
+    * a join back) and distributed `_meta` writes. */
   def runResumable(spark: SparkSession, paths: Seq[String], outDir: String, cfg: JobConfig,
       format: String = graft.sinks.TileSink.OsmXmlFormat): RunReport = {
-    import spark.implicits._
     graft.core.Fs.mkdirs(outDir)
     val committed = Checkpoint.readCommits(outDir)
     val committedKeys = committed.map(c => (c.key, c.tileIdx)).toSet
     val bcCommitted = spark.sparkContext.broadcast(committedKeys)
     val tilesAll = tiles(spark, paths, cfg).persist()
-    // count only — the per-tile key list never reaches the driver; the
-    // lineage join below consumes the persisted Dataset directly, so the
-    // driver's footprint is O(commit records), not O(tiles)
-    val tilesTotal = tilesAll.count()
     val todo = tilesAll.filter(t => !bcCommitted.value.contains((t.key, t.tileIdx)))
     val cs = contours(todo, cfg).persist()
     try {
-      val freshCounts = tileCounts(cs).toMap
+      // one zero row per tile joins the traced counts, so the collect lists
+      // every tile: committed ones and ones without contours add 0 to the
+      // prefix sum and move no id
+      val counts = tileCounts(pathCounts(cs)
+        .union(tilesAll.select(col("key"), col("tileIdx"), lit(0L), lit(0L))))
       val committedCounts = committed.map(c => ((c.key, c.tileIdx), (c.nodes, c.ways))).toMap
       // merged deterministic prefix sum over ALL tiles (committed counts
       // win for tiles present in both) — same walk as idOffsets
-      val offsets = prefixSum((freshCounts ++ committedCounts).toSeq, cfg)
+      val offsets = prefixSum((counts.toMap ++ committedCounts).toSeq, cfg)
       val files = writeOsmXml(cs, offsets, outDir, cfg, commit = true, format = format)
-      // metrics + lineage tables
       val after = Checkpoint.readCommits(outDir)
-      if (after.nonEmpty) {
-        after.toDF().write.mode("overwrite").parquet(s"$outDir/_meta/metrics.parquet")
-        val lineage = tilesAll.select("key", "tileIdx")
-          .join(broadcast(after.toDF().select("key", "tileIdx", "file")),
-            Seq("key", "tileIdx"), "left")
-        lineage.write.mode("overwrite").parquet(s"$outDir/_meta/lineage.parquet")
-      }
-      RunReport(tilesTotal.toInt, committedKeys.size, files.size, files)
+      if (after.nonEmpty) Checkpoint.writeMeta(outDir, counts.map(_._1), after)
+      RunReport(counts.size, committedKeys.size, files.size, files)
     } finally {
       cs.unpersist(); tilesAll.unpersist()
     }

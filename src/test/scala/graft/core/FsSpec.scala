@@ -133,4 +133,19 @@ class FsSpec extends AnyFunSuite {
     Fs.writeString(s"$root/g", "y")
     assert(Fs.readString(s"$root/g") == "y" && Fs.exists(s"$root/f"))
   }
+
+  test("create makes missing parent directories, truncates an existing file, keeps the bytes") {
+    val root = tmpDir()
+    val p = s"$root/a/b/c/f.bin"
+    // longer than the local stream's buffer
+    val bytes = Array.tabulate[Byte](70000)(i => (i * 31 + i / 7).toByte)
+    Fs.writeBytes(p, bytes)
+    assert(Fs.readAllBytes(p).sameElements(bytes))
+    Fs.writeString(p, "short")
+    assert(Fs.readString(p) == "short" && Fs.fileLength(p) == 5)
+    // a file: URI names the same file as the plain path
+    Fs.writeString(s"file:$root/a/b/g", "uri")
+    assert(new String(Files.readAllBytes(java.nio.file.Paths.get(s"$root/a/b/g")), "UTF-8") == "uri")
+    intercept[java.io.IOException] { Fs.writeString(s"$root/a", "a directory") }
+  }
 }

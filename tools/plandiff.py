@@ -7,8 +7,6 @@ Usage: python3 tools/plandiff.py A B
 Before diffing, each line is normalised:
   - expression ids:   l_quantity#123, id#7L -> l_quantity#_, id#_L
   - plan ids:         [plan_id=45]        -> [plan_id=_]
-  - temp directories: /tmp/plans2-9c505565-e1d -> /tmp/plans2-_
-    (graft.core.Fs.createTempDir names: prefix, '-', 12 uuid chars)
 
 Prints a unified diff of the normalised dumps and exits 1 when they
 differ, 0 when they match, 2 on a usage error.
@@ -20,7 +18,6 @@ import sys
 NORMALISE = [
     (re.compile(r"#\d+"), "#_"),
     (re.compile(r"plan_id=\d+"), "plan_id=_"),
-    (re.compile(r"-[0-9a-f]{8}-[0-9a-f]{3}\b"), "-_"),
 ]
 
 
