@@ -43,15 +43,16 @@ object PlanDump {
       spark.read.parquet(s"$dir/documents.parquet")
         .selectExpr("concat('https://x.example/page/', doc_id) AS url", "doc_id"), 6)
     val polys = Seq(SpatialJoin.Poly(1L, Array(6.2, 43.2, 6.8, 43.2, 6.5, 43.8)))
-    dump("spatial PIP join (broadcast cover)",
-      "Pages stay un-shuffled: BroadcastHashJoin on the cell cover, then the\n" +
-        "codegen'd PipLookup residual against the broadcast polygon dictionary.",
+    dump("spatial PIP join (broadcast polygon index)",
+      "No exchange and no join: each page probes the broadcast polygon index\n" +
+        "(cell cover + prepared polygons) in the codegen'd pip_probe, whose\n" +
+        "polygon ids explode into rows.",
       SpatialJoin.pipJoin(pages, polys, 6))
 
     dump("spatial PIP join (salted shuffle variant)",
-      "Broadcast LEFT SEMI on the cover's distinct cells prunes pages BEFORE\n" +
-        "the wide exchange; then the salted (cell, salt) shuffled hash join\n" +
-        "spreads dense cells over reducers.",
+      "Broadcast LEFT SEMI on the covered cells prunes pages BEFORE the wide\n" +
+        "exchange; a shuffled hash LEFT SEMI join on (cell, salt) against the\n" +
+        "cells x salts spreads dense cells over reducers, then pip_probe.",
       SpatialJoin.pipJoinSalted(pages, polys, 6, salts = 4))
 
     import spark.implicits._

@@ -1,24 +1,20 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.collection.immutable.LongMap
 import graft.core.{BBox, Cells, PreparedPolygon}
-import graft.functions.{PipLookup, S2CellIdExpr}
+import graft.functions.{PipProbe, S2CellIdExpr}
 
 /** Pages x polygons spatial join and kNN, built the way they must run at
   * 10^12-row scale (SURVEY.md §2.3 J3/J5, north rule):
   *
-  *  - polygons are covered by grid cells at a chosen resolution; the
-  *    cell-cover equi-join prunes the candidate set BEFORE the exact
-  *    point-in-polygon residual (the reference's clip-before-PIP pattern,
-  *    /root/reference/pyhgtmap/hgt/file.py:329-331, as a join plan);
-  *  - the residual probes a PreparedPolygon, which ray-casts over one
-  *    y-band's edges instead of the whole ring and gives exactly
-  *    Geometry.contains' answer; all three join variants share it;
-  *  - the cover side is broadcast when small, else salted: pages get a
-  *    deterministic hash(url)-based salt, the cover side is replicated
-  *    per salt — dense cells (urban clusters) spread over `salt` reducers;
+  *  - a join broadcasts one PolygonIndex (each polygon's bbox cell cover
+  *    keyed to the prepared polygon, whose ray cast equals
+  *    Geometry.contains) and ends in its probe: a page's cell picks the
+  *    candidates, the exact point-in-polygon test keeps those holding it
+  *    (pyhgtmap clips before PIP too, hgt/file.py:329-331). The
+  *    variants differ only in how pages reach the probe: in place, or
+  *    through an exchange on `cell`, plain or salted;
   *  - kNN joins each query's cell neighbourhood on `cell`: per-cell
   *    counts fix a ring radius that provably holds the k nearest pages,
   *    and a windowed top-k over that ring equals brute force.
@@ -40,9 +36,8 @@ object SpatialJoin {
     }
   }
 
-  /** Cell cover of each polygon's bbox at `res` (coarse prefilter; exact
-    * residual is the PIP predicate). Carries only ids — the prepared
-    * polygons travel once via a torrent broadcast (see PipLookup). */
+  /** Cell cover of each polygon's bbox at `res`: the (cell, poly_id) pairs
+    * a PolygonIndex holds, as a table (perfbench times and joins it). */
   def coverDf(spark: SparkSession, polys: Seq[Poly], res: Int): DataFrame = {
     import spark.implicits._
     polys.flatMap { p =>
@@ -50,59 +45,75 @@ object SpatialJoin {
     }.toDF("cell", "poly_id")
   }
 
-  /** The PIP residual every join variant ends with: each polygon is
-    * prepared once here on the driver (PreparedPolygon, whose band-indexed
-    * ray cast equals Geometry.contains bit for bit) and the poly_id ->
-    * prepared polygon dictionary travels in one torrent broadcast, held by
-    * the PipLookup in the returned plan and by nothing else. */
-  private def pipResidual(candidates: DataFrame, polys: Seq[Poly]): DataFrame = {
-    val bc = candidates.sparkSession.sparkContext.broadcast(
-      LongMap(polys.map(p => p.polyId -> PreparedPolygon(p.coords)): _*))
-    candidates.filter(PipLookup.col(col("lon"), col("lat"), col("poly_id"), bc))
+  /** coverDf's cells, sorted and distinct; `slots(from(i) until from(i + 1))`
+    * are the polygons covering `cells(i)` in input order, `ids`/`prepared`
+    * the polygon behind each slot. */
+  private[engine] final class PolygonIndex private (val cells: Array[Long], from: Array[Int],
+      slots: Array[Int], ids: Array[Long], prepared: Array[PreparedPolygon]) extends PipProbe.Index {
+    def probe(cell: Long, lon: Double, lat: Double): Array[Long] = {
+      val i = java.util.Arrays.binarySearch(cells, cell)
+      if (i < 0) return Array.emptyLongArray
+      val out = new Array[Long](from(i + 1) - from(i))
+      var n = 0
+      var k = from(i)
+      while (k < from(i + 1)) {
+        if (prepared(slots(k)).contains(lon, lat)) { out(n) = ids(slots(k)); n += 1 }
+        k += 1
+      }
+      if (n == out.length) out else java.util.Arrays.copyOf(out, n)
+    }
+    def cellsDf(spark: SparkSession): DataFrame = spark.createDataset(cells.toSeq)(Encoders.scalaLong).toDF("cell")
+  }
+
+  private[engine] object PolygonIndex {
+    def apply(polys: Seq[Poly], res: Int): PolygonIndex = {
+      val ids = polys.map(_.polyId).toArray
+      val dup = ids.diff(ids.distinct)
+      require(dup.isEmpty, s"duplicate polyId ${dup.head}: every polygon needs its own id")
+      val pairs = ids.indices.flatMap(s => Cells.cover(polys(s).bbox, res).map(c => (c, s))).sorted
+      val from = (pairs.indices.filter(k => k == 0 || pairs(k)._1 != pairs(k - 1)._1) :+ pairs.size).toArray
+      new PolygonIndex(from.init.map(pairs(_)._1), from, pairs.map(_._2).toArray, ids,
+        polys.map(p => PreparedPolygon(p.coords)).toArray)
+    }
+  }
+
+  /** Every variant's last step: a row per page and polygon holding it, in
+    * the column order a join of pages and coverDf on `cell` gives. */
+  private def probe(pages: DataFrame, index: PolygonIndex): DataFrame = {
+    val bc = pages.sparkSession.sparkContext.broadcast(index)
+    val ids = explode(PipProbe.col(col("cell"), col("lon"), col("lat"), bc))
+    pages.select(col("cell") +: pages.columns.toSeq.filter(_ != "cell").map(col) :+ ids.as("poly_id"): _*)
   }
 
   /** pages(cell, lon, lat, ...) x polygons -> rows inside each polygon.
-    * Broadcast cover variant (cover side small). */
-  def pipJoin(pages: DataFrame, polys: Seq[Poly], res: Int): DataFrame = {
-    val cover = coverDf(pages.sparkSession, polys, res)
-    pipResidual(pages.join(broadcast(cover), Seq("cell")), polys)
-  }
+    * Pages probe the broadcast index where they are: no exchange, no join. */
+  def pipJoin(pages: DataFrame, polys: Seq[Poly], res: Int): DataFrame =
+    probe(pages, PolygonIndex(polys, res))
 
-  /** Unsalted shuffle variant — what a cover too large to broadcast forces
-    * WITHOUT skew handling: both sides exchange on `cell`, so a hot cell
-    * (urban cluster) lands every one of its rows on a single reducer. Kept
-    * as the honest baseline for the skew A/B (SkewBench; BENCH.md skew
-    * section) and for AQE's skew-join mitigation (`joinHint` = "merge"
-    * lets AdaptiveSparkPlan split the skewed partition; "shuffle_hash"
-    * pins the non-adaptive worst case). Same broadcast semi prefilter as
-    * the salted variant so the two differ ONLY in skew handling. */
+  /** Unsalted shuffle variant: pages exchange on `cell` on their way to the
+    * probe, so a hot cell lands all its rows on one reducer: the baseline
+    * of the skew A/B (SkewBench, BENCH.md) and of AQE's skew split
+    * (`joinHint` "merge" lets it split the hot partition, "shuffle_hash"
+    * pins the worst case). Same semi prefilter as the salted variant. */
   def pipJoinShuffled(
       pages: DataFrame, polys: Seq[Poly], res: Int, joinHint: String = "shuffle_hash"): DataFrame = {
-    val cover = coverDf(pages.sparkSession, polys, res)
-    pipResidual(pages
-      .join(broadcast(cover.select("cell").distinct()), Seq("cell"), "leftsemi")
-      .join(cover.hint(joinHint), Seq("cell")), polys)
+    val index = PolygonIndex(polys, res)
+    val cells = index.cellsDf(pages.sparkSession)
+    probe(pages.join(broadcast(cells), Seq("cell"), "leftsemi")
+      .join(cells.hint(joinHint), Seq("cell"), "leftsemi"), index)
   }
 
-  /** Salted shuffle variant for covers too large to broadcast / dense
-    * cells: deterministic salt = pmod(xxhash64(url), salts).
-    *
-    * A broadcast semi-join on the cover's cell set prunes pages BEFORE the
-    * wide exchange: only rows whose cell is covered by some polygon enter
-    * the shuffle. At 10^12 pages where polygons cover a fraction of the
-    * globe this is the difference between shuffling everything and
-    * shuffling the candidate set. */
+  /** Salted shuffle variant: pages exchange on (cell, salt =
+    * pmod(xxhash64(url), salts)) against the covered cells x salts, so one
+    * dense cell spreads over `salts` reducers. A broadcast semi-join on the
+    * covered cells first keeps uncovered pages out of the wide exchange. */
   def pipJoinSalted(pages: DataFrame, polys: Seq[Poly], res: Int, salts: Int): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val cover0 = coverDf(spark, polys, res)
-    val saltsDf = spark.range(0, salts).toDF("salt")
-    val cover = cover0.crossJoin(saltsDf)
-    pipResidual(pages
-      .join(broadcast(cover0.select("cell").distinct()), Seq("cell"), "leftsemi")
+    val index = PolygonIndex(polys, res)
+    val cells = index.cellsDf(pages.sparkSession)
+    probe(pages.join(broadcast(cells), Seq("cell"), "leftsemi")
       .withColumn("salt", pmod(xxhash64(col("url")), lit(salts.toLong)))
-      .join(cover.hint("shuffle_hash"), Seq("cell", "salt")), polys)
-      .drop("salt")
+      .join(cells.withColumn("salt", explode(sequence(lit(0L), lit(salts - 1L)))).hint("shuffle_hash"),
+        Seq("cell", "salt"), "leftsemi").drop("salt"), index)
   }
 
   /** Spatially clustered parquet write: rows are range-partitioned and

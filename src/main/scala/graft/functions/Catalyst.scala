@@ -10,7 +10,7 @@ import org.apache.spark.sql.classic.{ClassicConversions, ColumnConversions}
   * Expression (`ExpressionColumnNode`, `ExpressionUtils.column`) is
   * `private[sql]`. The classic session's two `@DeveloperApi` conversions
   * below are the public route: every kernel's Column builder (for example
-  * `SplitMix64.col`, `S2CellIdExpr.col`, `PipLookup.col`) goes through
+  * `SplitMix64.col`, `S2CellIdExpr.col`, `PipProbe.col`) goes through
   * them, so engine code gets a kernel column without registering a
   * function in the session. The SQL surface (`spark.sql`, `selectExpr`)
   * is GraftExtensions'. */

@@ -2,16 +2,14 @@ package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{BooleanType, DataType}
-import scala.collection.immutable.LongMap
-import graft.core.{Geometry, PreparedPolygon}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType}
+import graft.core.Geometry
 
-/** Point-in-polygon where the polygon comes from a column
-  * (array<double>, interleaved lon,lat) — the exact-residual predicate of
-  * the cell-prejoin + PIP spatial join (SURVEY.md §2.3 J3). */
+/** Point-in-polygon where the polygon comes from a column (array<double>,
+  * interleaved lon,lat): SQL's `pip_contains_col`. */
 case class PipContainsCol(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression {
   override def dataType: DataType = BooleanType
@@ -28,50 +26,40 @@ case class PipContainsCol(first: Expression, second: Expression, third: Expressi
   override def prettyName: String = "pip_contains_col"
 }
 
-/** PIP against a broadcast polygon dictionary: the candidate rows carry
-  * only (lon, lat, poly_id); each polygon lives once per executor in the
-  * torrent broadcast, prepared (PreparedPolygon: the ring's edges indexed
-  * by y-band, built once on the driver) instead of being replicated into
-  * every cover-cell row (which would make the cover broadcast
-  * O(cells x vertices)). The prepared ray cast visits only the edges of
-  * the probe's band and returns exactly Geometry.contains' answer (the
-  * argument is on PreparedPolygon), so the join's rows do not depend on
-  * the index. */
-case class PipLookup(
+/** The exact step of the cell-prefiltered spatial join (SURVEY.md §2.3 J3):
+  * the ids of the polygons whose cell cover holds `cell` and that contain
+  * (lon, lat), in the index's fixed order, for `explode` to make rows of.
+  * The index's one broadcast is held by this expression alone. */
+case class PipProbe(
     first: Expression, second: Expression, third: Expression,
-    polys: Broadcast[LongMap[PreparedPolygon]])
+    index: Broadcast[_ <: PipProbe.Index])
     extends TernaryExpression {
-  override def dataType: DataType = BooleanType
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   // Broadcast.value takes a lock on every call; read it once per task
-  @transient private lazy val table = polys.value
+  @transient private lazy val table = index.value
 
   /** Codegen + interpreted entry point (public so generated Java can call it). */
-  def test(lon: Double, lat: Double, polyId: Long): Boolean = {
-    val p = table.getOrElse(polyId, null)
-    p != null && p.contains(lon, lat)
-  }
+  def probe(cell: Long, lon: Double, lat: Double): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(table.probe(cell, lon, lat))
 
-  override def nullSafeEval(lon: Any, lat: Any, polyId: Any): Any =
-    test(lon.asInstanceOf[Number].doubleValue(), lat.asInstanceOf[Number].doubleValue(),
-      polyId.asInstanceOf[Number].longValue())
+  override def nullSafeEval(cell: Any, lon: Any, lat: Any): Any = probe(cell.asInstanceOf[Number].longValue(),
+    lon.asInstanceOf[Number].doubleValue(), lat.asInstanceOf[Number].doubleValue())
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the broadcast handle rides along as a reference object; the lookup
-    // stays a virtual call but the surrounding stage remains codegen'd
-    val ref = ctx.addReferenceObj("pipLookup", this, classOf[PipLookup].getName)
-    nullSafeCodeGen(ctx, ev, (lon, lat, id) =>
-      s"${ev.value} = $ref.test($lon, $lat, $id);")
+    val ref = ctx.addReferenceObj("pipProbe", this, classOf[PipProbe].getName)
+    nullSafeCodeGen(ctx, ev, (cell, lon, lat) => s"${ev.value} = $ref.probe($cell, $lon, $lat);")
   }
   override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): PipLookup = copy(f, s, t)
-  override def prettyName: String = "pip_lookup"
+      f: Expression, s: Expression, t: Expression): PipProbe = copy(f, s, t)
+  override def prettyName: String = "pip_probe"
 }
 
-object PipLookup {
-  def col(
-      lon: Column, lat: Column, polyId: Column,
-      polys: Broadcast[LongMap[PreparedPolygon]]): Column =
-    Catalyst.column(
-      PipLookup(Catalyst.expr(lon), Catalyst.expr(lat), Catalyst.expr(polyId), polys))
+object PipProbe {
+  trait Index extends Serializable {
+    def probe(cell: Long, lon: Double, lat: Double): Array[Long]
+  }
+
+  def col(cell: Column, lon: Column, lat: Column, index: Broadcast[_ <: Index]): Column =
+    Catalyst.column(PipProbe(Catalyst.expr(cell), Catalyst.expr(lon), Catalyst.expr(lat), index))
 }

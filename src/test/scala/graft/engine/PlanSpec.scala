@@ -35,15 +35,41 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("ReadSchema: struct<l_orderkey:bigint,l_quantity:double>"), p)
   }
 
+  private lazy val pipPages = graft.synth.Pages.geocoded(
+    spark.read.parquet(s"$dir/documents.parquet")
+      .selectExpr("concat('https://x.example/page/', doc_id) AS url", "doc_id"), 6)
+  private val pipPolys = Seq(SpatialJoin.Poly(1L, Array(6.2, 43.2, 6.8, 43.2, 6.5, 43.8)))
+
   test("pip join broadcasts the cell cover, keeps pages un-shuffled") {
-    val pages = graft.synth.Pages.geocoded(
-      spark.read.parquet(s"$dir/documents.parquet")
-        .selectExpr("concat('https://x.example/page/', doc_id) AS url", "doc_id"), 6)
-    val polys = Seq(SpatialJoin.Poly(1L, Array(6.2, 43.2, 6.8, 43.2, 6.5, 43.8)))
-    val joined = SpatialJoin.pipJoin(pages, polys, 6)
-    val p = plan(joined)
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("SortMergeJoin"), p)
+    // the cover travels inside the broadcast polygon index that the probe
+    // reads: the plan has no exchange, no join and no cover relation
+    val p = plan(SpatialJoin.pipJoin(pipPages, pipPolys, 6))
+    for (node <- Seq("Exchange", "Join", "LocalTableScan")) assert(!p.contains(node), p)
+    assert(p.contains("Generate explode(pip_probe("), p)
+  }
+
+  test("a pip join aggregate runs 2 jobs") {
+    val sc = spark.sparkContext
+    val group = "plan-spec-pip-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    val q = SpatialJoin.pipJoin(pipPages, pipPolys, 6).agg(count(lit(1)), sum(col("poly_id")))
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val r = try q.collect()(0) finally {
+        sc.clearJobGroup()
+        org.apache.spark.TestBus.drain(sc)
+      }
+      assert(r.getLong(0) > 0)
+      // one job scans and probes, one merges the aggregate: the index
+      // is broadcast by the driver, not by a job of its own
+      assert(jobs.get == 2, s"${jobs.get} jobs")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("gate queries keep whole-stage codegen on the hot path") {

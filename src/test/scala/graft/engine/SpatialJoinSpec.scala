@@ -1,8 +1,10 @@
 package graft.engine
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.core.{Cells, Geometry}
 import graft.synth.Pages
 import graft.engine.SpatialJoin.Poly
 
@@ -28,10 +30,17 @@ class SpatialJoinSpec extends AnyFunSuite {
   private val polys = Seq(
     Poly(1L, poly((6.2, 43.2), (6.4, 43.2), (6.4, 43.4), (6.2, 43.4))), // hot cluster box
     Poly(2L, poly((6.5, 43.5), (6.9, 43.6), (6.7, 43.9))), // triangle
-    Poly(3L, poly((6.05, 43.8), (6.15, 43.8), (6.15, 43.9), (6.05, 43.9))))
+    Poly(3L, poly((6.05, 43.8), (6.15, 43.8), (6.15, 43.9), (6.05, 43.9))),
+    Poly(-4L, poly((6.3, 43.3), (6.45, 43.28), (6.38, 43.45)))) // shares cells with 1
 
   private def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     df.select("page_id", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  private def variants(pages: DataFrame, ps: Seq[Poly]): Seq[(String, () => DataFrame)] = Seq(
+    "pipJoin" -> (() => SpatialJoin.pipJoin(pages, ps, Res)),
+    "pipJoinSalted" -> (() => SpatialJoin.pipJoinSalted(pages, ps, Res, salts = 8)),
+    "pipJoinShuffled shuffle_hash" -> (() => SpatialJoin.pipJoinShuffled(pages, ps, Res)),
+    "pipJoinShuffled merge" -> (() => SpatialJoin.pipJoinShuffled(pages, ps, Res, joinHint = "merge")))
 
   /** Naive oracle: Geometry.contains on every page x polygon. */
   private def naive(ps: Seq[Poly]): Set[(Long, Long)] =
@@ -100,20 +109,84 @@ class SpatialJoinSpec extends AnyFunSuite {
   }
 
   test("join variants leave no pip_lookup function registered and still equal the oracle") {
-    // each call's lookup closes over a broadcast of every prepared polygon;
-    // a registry entry left behind would pin that broadcast for the life of
-    // the session, so the variants build the lookup column directly
+    // each call's probe closes over a broadcast of its polygon index; a
+    // registry entry left behind would pin that broadcast for the life of
+    // the session, so the variants build the probe column directly
     val frames = Seq(
       "pipJoin" -> SpatialJoin.pipJoin(pages, polys, Res),
       "pipJoinShuffled" -> SpatialJoin.pipJoinShuffled(pages, polys, Res),
       "pipJoinSalted" -> SpatialJoin.pipJoinSalted(pages, polys, Res, salts = 8))
     val left = spark.sessionState.functionRegistry.listFunction()
-      .map(_.funcName).filter(_.startsWith("pip_lookup_"))
+      .map(_.funcName).filter(n => n.startsWith("pip_lookup") || n.startsWith("pip_probe"))
     assert(left.isEmpty, s"registered lookups left behind: $left")
     val expected = naive(polys)
     for ((name, df) <- frames) {
       assert(df.count() == expected.size, name)
       assert(rows(df) == expected, name)
+    }
+  }
+
+  test("duplicate polyIds are refused by every join variant") {
+    // with two polygons under one id, the second's test would stand in for
+    // the first's, and a cell in both covers would give duplicate rows
+    val dup = polys :+ Poly(2L, poly((6.1, 43.1), (6.2, 43.1), (6.2, 43.2)))
+    for ((name, df) <- variants(pages, dup)) {
+      val e = intercept[IllegalArgumentException](df())
+      assert(e.getMessage.contains("duplicate polyId 2"), s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("no polygons give no rows and the joined schema from every variant") {
+    val schema = StructType(pages.schema("cell") +: pages.schema.filter(_.name != "cell") :+
+      StructField("poly_id", LongType, nullable = false))
+    for ((name, df) <- variants(pages, Nil)) {
+      assert(df().schema == schema, name)
+      assert(df().count() == 0, name)
+    }
+  }
+
+  test("the polygon index's probe equals brute force on cell edges and shared cells") {
+    // non-contiguous and negative ids; one polygon is exactly one cell, and
+    // every polygon shares cells with another
+    val cell = 1.0 / 128
+    val shared = Seq(
+      Poly(-3L, poly((6.25, 43.25), (6.25 + cell, 43.25), (6.25 + cell, 43.25 + cell), (6.25, 43.25 + cell))),
+      Poly(1L << 40, poly((6.24, 43.24), (6.27, 43.245), (6.26, 43.27))),
+      Poly(7L, poly((6.2, 43.2), (6.3, 43.2), (6.3, 43.3), (6.2, 43.3))),
+      Poly(-1000000007L, poly((6.253, 43.22), (6.29, 43.26), (6.22, 43.29), (6.23, 43.24))),
+      Poly(Long.MinValue, poly((6.21, 43.29), (6.31, 43.21), (6.31, 43.29))))
+    val rnd = new scala.util.Random(12)
+    val onEdges = for (a <- 24 to 41; b <- 24 to 41; f <- Seq(0.0, 0.5)) yield
+      (6.0 + (a + f) * cell, 43.0 + a % 3 * f * cell + b * cell)
+    val pts = onEdges ++ shared.flatMap(_.coords.grouped(2).map(c => (c(0), c(1)))) ++
+      Seq.fill(3000)((6.18 + 0.14 * rnd.nextDouble(), 43.18 + 0.14 * rnd.nextDouble()))
+    val expected = pts.map { case (x, y) =>
+      shared.filter(p => Cells.cover(p.bbox, Res).contains(Cells.cellId(x, y, Res)) &&
+        Geometry.contains(p.coords, x, y)).map(_.polyId)
+    }
+    val index = SpatialJoin.PolygonIndex(shared, Res)
+    assert(pts.map { case (x, y) => index.probe(Cells.cellId(x, y, Res), x, y).toSeq } == expected)
+    assert(expected.count(_.size >= 2) > 100 && expected.count(_.isEmpty) > 100)
+    assert(onEdges.indices.count(expected(_).nonEmpty) > 20)
+
+    // the same rows, duplicates included, from every variant, codegen'd
+    // and interpreted
+    import spark.implicits._
+    val df = pts.zipWithIndex.map { case ((x, y), i) => (i.toLong, s"u$i", x, y, Cells.cellId(x, y, Res)) }
+      .toDF("page_id", "url", "lon", "lat", "cell")
+    val want = expected.zipWithIndex.flatMap { case (ids, i) => ids.map(i.toLong -> _) }.sorted
+    for (interpreted <- Seq(false, true)) {
+      if (interpreted) {
+        spark.conf.set("spark.sql.codegen.wholeStage", "false")
+        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      }
+      try for ((name, join) <- variants(df, shared)) {
+        val got = join().select("page_id", "poly_id").as[(Long, Long)].collect().toSeq.sorted
+        assert(got == want, s"$name, interpreted = $interpreted")
+      } finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
     }
   }
 
