@@ -1,10 +1,14 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import graft.core.Env
+
 /** Driver-run benchmark: times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR at local[Session.cpus()]; prints ONE JSON line. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val runs = repeat()
     // The streaming gates run on Spark's default HDFS-backed state store:
     // RocksDB + changelog checkpointing measured 7.21 vs 6.30 s over
     // q40/q41/q42/q44/q55 at sf0.1 (best-of-5 warm, BENCH.md), because
@@ -15,36 +19,27 @@ object Bench {
     spark.sparkContext.setLogLevel("ERROR")
     // warm the JVM/codegen once with the cheapest query so per-query times
     // measure the plan, not first-call JIT
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    try materialize(SparkEntry.entry(spark)) catch { case _: Throwable => }
     // optional query-name filter args for local iteration; the driver
     // invokes with no args (full suite) so the output contract is unchanged
     val wanted = args.toSet
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => wanted.isEmpty || wanted.contains(n) }
-    // SPARK_GRAFT_BENCH_REPEAT>1: best-of-N warm timings per query (the
-    // BENCH.md noise protocol for local iteration); driver default is 1
-    val repeat = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "1").toInt.max(1)
     val results = selected.map { case (name, fn) =>
-      name -> timed(name, repeat)(fn(spark, sfDir).count())
+      name -> Measure.attempt(spark, name, runs = runs)(materialize(fn(spark, sfDir))).map(_.seconds)
     }
     println(summaryLine(results, sfDir))
     spark.stop()
   }
 
-  /** Best-of-`repeat` seconds of `run`, or None when any repeat throws: a
-    * failed query must not read as a fast one. The failure is named on
-    * stderr. */
-  def timed(name: String, repeat: Int)(run: => Long): Option[Double] =
-    try Some((1 to repeat).map { _ =>
-      val t0 = System.nanoTime()
-      run
-      (System.nanoTime() - t0) / 1e9
-    }.min)
-    catch {
-      case e: Throwable =>
-        Console.err.println(s"graft.Bench: $name failed: $e")
-        None
-    }
+  /** Runs every row of `df` through the plan and drops it. A `count()` would
+    * let Catalyst prune the row-local kernels a gate exists to run. */
+  private def materialize(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  /** SPARK_GRAFT_BENCH_REPEAT > 1 keeps the best of that many warm runs per
+    * query (the BENCH.md noise protocol for local iteration); unset is one. */
+  def repeat(env: Map[String, String] = sys.env): Int =
+    Env.positiveInt("SPARK_GRAFT_BENCH_REPEAT", env).getOrElse(1)
 
   /** The one JSON line: a failed query reads -1 and is left out of total.
     * Locale.ROOT via Fmt: the driver parses this line as JSON, and a

@@ -14,8 +14,7 @@ import graft.engine.RasterPipeline
   * measured window; the measured window is exactly what PipelineCli
   * measures: scan -> decode -> chop -> trace -> ids -> PBF sinks.
   *
-  * Appends its result table to BENCH.md (run AFTER ScalingBench, which
-  * rewrites the file).
+  * Writes its result table as its own section of BENCH.md.
   */
 object E2eBench {
 
@@ -57,20 +56,17 @@ object E2eBench {
     spark.sparkContext.setLogLevel("ERROR")
     // reference PACA parameters (README:128-133)
     val cfg = JobConfig(contourStepSize = 10, rdpEpsilon = Some(0.00001))
-    val results = (1 to reps).map { rep =>
-      val outDir = graft.core.Fs.createTempDir(s"e2e$rep")
-      val t0 = System.nanoTime()
-      val report = RasterPipeline.runResumable(
-        spark, files, outDir, cfg, format = graft.sinks.TileSink.PbfFormat)
-      val wall = (System.nanoTime() - t0) / 1e9
-      val bytes = report.files.map(graft.core.Fs.fileLength).sum
-      println(f"[e2e rep$rep] ${report.tilesWritten} pbf tiles, ${bytes / 1e6}%.0f MB " +
-        f"in $wall%.1f s = ${wall / report.tilesWritten}%.3f s/tile " +
-        f"(${Fixtures.size * copies} input files, $cores cores)")
-      (report.tilesWritten, bytes, wall)
+    // a fresh output directory per run: a committed one would skip every tile
+    val run = Measure(spark, "e2e", runs = reps) {
+      RasterPipeline.runResumable(spark, files, graft.core.Fs.createTempDir("e2e"), cfg,
+        format = graft.sinks.TileSink.PbfFormat)
     }
     spark.stop()
-    val (tiles, bytes, wall) = results.minBy(_._3)
+    val (tiles, wall) = (run.result.tilesWritten, run.seconds)
+    val bytes = run.result.files.map(graft.core.Fs.fileLength).sum
+    println(f"[e2e best of $reps] $tiles pbf tiles, ${bytes / 1e6}%.0f MB " +
+      f"in $wall%.1f s = ${wall / tiles}%.3f s/tile " +
+      f"(${Fixtures.size * copies} input files, $cores cores)")
     val perTile = wall / tiles
     val sb = new StringBuilder
     sb.append("\n## End-to-end vs reference anchor (PACA parameters: step 10, RDP 1e-5, PBF, 16 cores)\n\n")
@@ -82,20 +78,6 @@ object E2eBench {
       "so per-tile terrain complexity matches the originals. Single shared JVM, warm JIT after rep 1 " +
       "(the reference's <60 s likewise amortizes startup over 104 tiles).\n")
     print(sb)
-    // replace the existing e2e section in place (appending duplicates it)
-    val p = "BENCH.md"
-    if (graft.core.Fs.exists(p)) {
-      val old = graft.core.Fs.readString(p)
-      val marker = "## End-to-end vs reference anchor"
-      val updated = old.indexOf(marker) match {
-        case -1 => old + sb.toString
-        case i =>
-          val tail = old.substring(i).linesIterator.toSeq.drop(1)
-            .dropWhile(l => !l.startsWith("## "))
-          old.substring(0, i).stripTrailing() + "\n" + sb.toString + "\n" +
-            tail.mkString("\n") + (if (tail.nonEmpty) "\n" else "")
-      }
-      graft.core.Fs.writeString(p, updated)
-    }
+    BenchDoc.write("BENCH.md", "## End-to-end vs reference anchor", sb.toString)
   }
 }

@@ -262,26 +262,24 @@ object PipelineCli {
       println(s"download-only: ${files.size} tiles cached")
       spark.stop(); return
     }
-    val t0 = System.nanoTime()
-    if (format == graft.sinks.TileSink.XyzFormat) {
-      // reference --plot: raw lon/lat/elev triples, one file per tile
-      val out = RasterPipeline.writeXyz(RasterPipeline.tiles(spark, files.toSeq, cfg), outDir, cfg)
-      val secs = (System.nanoTime() - t0) / 1e9
-      out.foreach(println)
-      println(f"xyz: ${out.size} tiles written in $secs%.1f s")
-    } else if (cfg.maxNodesPerTile == 0L) {
-      // reference semantics: --max-nodes-per-tile 0 = ONE merged output
-      val out = RasterPipeline.runSingle(spark, files.toSeq, outDir, cfg, format)
-      val secs = (System.nanoTime() - t0) / 1e9
-      out.foreach(println)
-      println(f"single output: ${files.size} inputs merged in $secs%.1f s")
-    } else {
-      val report = RasterPipeline.runResumable(spark, files.toSeq, outDir, cfg, format)
-      val secs = (System.nanoTime() - t0) / 1e9
-      report.files.foreach(println)
-      println(f"tiles: ${report.tilesTotal} total, ${report.tilesSkipped} skipped (committed), " +
-        f"${report.tilesWritten} written in $secs%.1f s")
+    val run = Measure(spark, "graft.PipelineCli") {
+      if (format == graft.sinks.TileSink.XyzFormat) {
+        // reference --plot: raw lon/lat/elev triples, one file per tile
+        val out = RasterPipeline.writeXyz(RasterPipeline.tiles(spark, files.toSeq, cfg), outDir, cfg)
+        (out, s"xyz: ${out.size} tiles written")
+      } else if (cfg.maxNodesPerTile == 0L) {
+        // reference semantics: --max-nodes-per-tile 0 = ONE merged output
+        (RasterPipeline.runSingle(spark, files.toSeq, outDir, cfg, format),
+          s"single output: ${files.size} inputs merged")
+      } else {
+        val report = RasterPipeline.runResumable(spark, files.toSeq, outDir, cfg, format)
+        (report.files, s"tiles: ${report.tilesTotal} total, ${report.tilesSkipped} skipped (committed), " +
+          s"${report.tilesWritten} written")
+      }
     }
+    val (out, summary) = run.result
+    out.foreach(println)
+    println(f"$summary in ${run.seconds}%.1f s")
     spark.stop()
   }
 }

@@ -11,14 +11,15 @@ import graft.synth.Pages
   * Workload = the flagship graft job: SRTM fixtures -> chop -> marching
   * squares contours, plus pages geocode -> cell prejoin -> PIP join against
   * contour-derived polygons. Reports pages/sec, contour nodes/sec, and
-  * efficiency = speedup / (cores ratio). Writes/updates BENCH.md.
+  * efficiency = speedup / (cores ratio). Writes its section of BENCH.md.
   */
 object ScalingBench {
 
-  final case class Result(
-      cores: Int, wallSec: Double, pages: Long, pagesPerSec: Double,
-      nodes: Long, nodesPerSec: Double, joinRows: Long,
-      traceSec: Double = 0, polysSec: Double = 0, joinSec: Double = 0)
+  final case class Result(cores: Int, wallSec: Double, pages: Long, nodes: Long, joinRows: Long,
+      traceSec: Double, polysSec: Double, joinSec: Double) {
+    def pagesPerSec: Double = pages / wallSec
+    def nodesPerSec: Double = nodes / wallSec
+  }
 
   def runOnce(cores: Int, nPages: Long, hgtFiles: Seq[String]): Result = {
     val spark = Session.local(s"graft-scaling-$cores", cores)
@@ -28,30 +29,30 @@ object ScalingBench {
     spark.sparkContext.setLogLevel("ERROR")
     try {
       val cfg = JobConfig(maxNodesPerTile = 100000L, maxNodesPerWay = 2000, rdpEpsilon = None)
-      val t0 = System.nanoTime()
-      def lap(tag: String, since: Long): Long = {
-        val now = System.nanoTime()
-        println(f"[scaling:$cores] $tag: ${(now - since) / 1e9}%.1f s")
-        now
+      // each phase is timed alone; wall is their sum
+      def phase[T](tag: String)(body: => T): (T, Double) = {
+        val run = Measure(spark, tag)(body)
+        println(f"[scaling:$cores] $tag: ${run.seconds}%.1f s")
+        (run.result, run.seconds)
       }
-      def secs(a: Long, b: Long): Double = (b - a) / 1e9
       // raster side: chop + trace (count-only agg: the serializer prunes
       // coords, so no coordinate arrays cross the agg). Fine partitions
       // (8x cores) keep spatially-skewed tile costs balanced — the last
       // task of the stage bounds the wall, and tile cost varies ~10x
       // between sea and mountain tiles.
       val parts = cores * Env.positiveInt("SPARK_GRAFT_BENCH_PARTS").getOrElse(8)
-      val tiles = RasterPipeline.tiles(spark, hgtFiles, cfg)
-      val contours = RasterPipeline.contours(tiles, cfg, parts)
-      val nodes = contours.agg(sum("nbNodes")).collect()(0).getLong(0)
-      val t1 = lap("trace", t0)
+      val ((tiles, contours, nodes), traceSec) = phase("trace") {
+        val tiles = RasterPipeline.tiles(spark, hgtFiles, cfg)
+        val contours = RasterPipeline.contours(tiles, cfg, parts)
+        (tiles, contours, contours.agg(sum("nbNodes")).collect()(0).getLong(0))
+      }
       // polygon side: a cheap coarse-step trace yields the join polygons.
       // Restrict the pick to the tiles the pages are geocoded into
       // (lon 6..7, lat 43..44 — synth/Pages.scala) so the PIP join is
       // actually exercised: with polygons from other tiles the cell-cover
       // prejoin prunes everything and the "join" phase measures nothing.
       val cfgCoarse = cfg.copy(contourStepSize = 200)
-      val polys = RasterPipeline.contours(
+      val (polys, polysSec) = phase("polys")(RasterPipeline.contours(
           tiles.filter(col("key").isin("N43E006", "N43E007")), cfgCoarse, parts)
         .filter(col("closed") && size(col("coords")) <= 400)
         .orderBy("key", "tileIdx", "elevation", "pathIdx") // deterministic pick
@@ -59,25 +60,24 @@ object ScalingBench {
         .collect()
         .zipWithIndex
         .map { case (r, i) => SpatialJoin.Poly(i.toLong, r.coords) }
-        .toSeq
-      val t2 = lap("polys", t1)
+        .toSeq)
       // pages side: scan the (pre-generated) pages table, geocode, join —
       // the north-rule shape: the table exists; the job reads it
       val res = 7
-      val pagesRaw = spark.read.parquet(pagesPath(nPages))
-      val pages = Pages.geocoded(pagesRaw, res)
-      val joined = SpatialJoin.pipJoin(pages, polys, res)
-      val joinRows = joined.count()
-      require(joinRows > 0, s"vacuous bench: PIP join produced 0 rows (${polys.size} polys)")
-      // exercise the salted skew variant against the deliberate hot cluster
-      // too (synth/Pages.scala concentrates mass at (6.25, 43.25))
-      val saltedRows = SpatialJoin.pipJoinSalted(pages, polys, res, salts = cores).count()
-      require(saltedRows == joinRows, s"salted join mismatch: $saltedRows vs $joinRows")
-      val t3 = lap("pages+join", t2)
-      val wall = (System.nanoTime() - t0) / 1e9
+      val (joinRows, joinSec) = phase("pages+join") {
+        val pagesRaw = spark.read.parquet(pagesPath(nPages))
+        val pages = Pages.geocoded(pagesRaw, res)
+        val joined = SpatialJoin.pipJoin(pages, polys, res)
+        val joinRows = joined.count()
+        require(joinRows > 0, s"vacuous bench: PIP join produced 0 rows (${polys.size} polys)")
+        // exercise the salted skew variant against the deliberate hot cluster
+        // too (synth/Pages.scala concentrates mass at (6.25, 43.25))
+        val saltedRows = SpatialJoin.pipJoinSalted(pages, polys, res, salts = cores).count()
+        require(saltedRows == joinRows, s"salted join mismatch: $saltedRows vs $joinRows")
+        joinRows
+      }
       contours.unpersist()
-      Result(cores, wall, nPages, nPages / wall, nodes, nodes / wall, joinRows,
-        secs(t0, t1), secs(t1, t2), secs(t2, t3))
+      Result(cores, traceSec + polysSec + joinSec, nPages, nodes, joinRows, traceSec, polysSec, joinSec)
     } finally spark.stop()
   }
 
@@ -123,8 +123,7 @@ object ScalingBench {
     * best kept. Prints a parseable RESULT line. */
   private def runSingleLevel(cores: Int, nPages: Long, reps: Int): Unit = {
     val files = demFiles()
-    runOnce(cores, nPages, files) // discard: JIT/codegen warm-up
-    val best = (1 to reps).map(_ => runOnce(cores, nPages, files)).minBy(_.wallSec)
+    val best = Measure.time(warmup = 1, runs = reps)(runOnce(cores, nPages, files)).result
     println(f"RESULT ${best.cores} ${best.wallSec}%.3f ${best.pages} ${best.nodes} ${best.joinRows} " +
       f"${best.traceSec}%.3f ${best.polysSec}%.3f ${best.joinSec}%.3f")
   }
@@ -161,9 +160,8 @@ object ScalingBench {
     val r = lines.find(_.startsWith("RESULT"))
       .getOrElse(throw new RuntimeException(s"child $cores produced no RESULT"))
     val Array(_, c, wall, pages, nodes, joinRows, tr, po, jn) = r.split(" ")
-    val w = wall.toDouble
-    Result(c.toInt, w, pages.toLong, pages.toLong / w, nodes.toLong, nodes.toLong / w,
-      joinRows.toLong, tr.toDouble, po.toDouble, jn.toDouble)
+    Result(c.toInt, wall.toDouble, pages.toLong, nodes.toLong, joinRows.toLong,
+      tr.toDouble, po.toDouble, jn.toDouble)
   }
 
   /** Pure-CPU burn at `threads`: work units per second THIS host delivers
@@ -171,21 +169,11 @@ object ScalingBench {
     * engine efficiency is only interpretable against it, and the quota
     * drifts over minutes — so each burn must run ADJACENT to the engine
     * measurement it normalizes, not minutes earlier.) */
-  def burn(threads: Int): Double = {
-    val work = 600000000L // iterations per thread
-    val t0 = System.nanoTime()
-    val ts = (1 to threads).map { _ =>
-      val t = new Thread(() => {
-        var i = 0L
-        var acc = 1L
-        while (i < work) { acc = acc * 6364136223846793005L + 1442695040888963407L; i += 1 }
-        if (acc == 42L) println("") // keep acc live
-      })
-      t.start(); t
-    }
-    ts.foreach(_.join())
-    val wall = (System.nanoTime() - t0) / 1e9
-    threads / wall // work units per second
+  def burn(threads: Int): Double = threads / onThreads(threads) {
+    var i = 0L
+    var acc = 1L
+    while (i < 600000000L) { acc = acc * 6364136223846793005L + 1442695040888963407L; i += 1 }
+    if (acc == 42L) println("") // keep acc live
   }
 
   /** Memory-bandwidth burn: each thread streams over a private 64 MB
@@ -194,27 +182,28 @@ object ScalingBench {
     * ALU quota, and a real cluster adds a controller per node. Returns
     * aggregate copied GB/s. */
   def memBurn(threads: Int): Double = {
-    val MB = 64
+    val bytes = 64L << 20
     val rounds = 24
-    val total = new java.util.concurrent.atomic.AtomicLong(0L)
-    val ts = (1 to threads).map { _ =>
-      val t = new Thread(() => {
-        val src = new Array[Long](MB * 1024 * 1024 / 8)
-        val dst = new Array[Long](src.length)
-        var r = 0
-        while (r < rounds) {
-          System.arraycopy(src, 0, dst, 0, src.length)
-          total.addAndGet(MB.toLong * 1024 * 1024)
-          r += 1
-        }
-        if (dst(dst.length - 1) == 42L) println("")
-      })
-      t.start(); t
-    }
-    val t0 = System.nanoTime()
-    ts.foreach(_.join())
-    total.get / ((System.nanoTime() - t0) / 1e9) / 1e9
+    threads * rounds * bytes / onThreads(threads) {
+      val src = new Array[Long]((bytes / 8).toInt)
+      val dst = new Array[Long](src.length)
+      var r = 0
+      while (r < rounds) {
+        System.arraycopy(src, 0, dst, 0, src.length)
+        r += 1
+      }
+      if (dst(dst.length - 1) == 42L) println("")
+    } / 1e9
   }
+
+  /** Seconds `threads` threads take to each run `work` once. */
+  private def onThreads(threads: Int)(work: => Unit): Double =
+    Measure.time() {
+      (1 to threads).map { _ =>
+        val t = new Thread(() => work)
+        t.start(); t
+      }.foreach(_.join())
+    }.seconds
 
   def main(args: Array[String]): Unit = {
     // dot-decimal everywhere: diagnostics/tables are parsed downstream
@@ -259,12 +248,6 @@ object ScalingBench {
       val memHi = memBurn(hi)
       val h = spawnLevel(hi, nPages, measured)
       (l, h, calHi / calLo, memHi / memLo)
-    }
-    pairs.foreach { case (l, h, cal, mem) =>
-      val e = (l.wallSec / h.wallSec) / (hi.toDouble / lo)
-      System.err.println(
-        f"pair: lo=${l.wallSec}%.1f s hi=${h.wallSec}%.1f s eff=$e%.2f " +
-          f"(host ceilings: cpu ${cal}%.2fx, memory-bandwidth ${mem}%.2fx of ${hi / lo}x)")
     }
     val ideal = hi.toDouble / lo
     def pairEff(p: (Result, Result, Double, Double)): Double =
@@ -321,29 +304,6 @@ object ScalingBench {
     sb.append("memory ceiling scales with the cluster instead of being fixed — the\n")
     sb.append("single-VM stand-in understates the engine's cluster efficiency.\n")
     println(sb.toString)
-    val out = "BENCH.md"
-    val header = "# BENCH — graft engine measurements\n\n" +
-      "Flagship workload: 2 SRTM tiles -> chop -> marching-squares contours; " +
-      "synthetic pages -> geocode -> cell prejoin + PIP join vs contour polygons.\n" +
-      "Same job, same input, two parallelism levels (sandbox stand-in for N vs 4N executors).\n\n"
-    // replace only the scaling section; keep every OTHER section of the
-    // existing BENCH.md (repeatability notes, e2e anchor, ceiling studies)
-    val preserved =
-      if (graft.core.Fs.exists(out)) {
-        // drop everything up to and including the old scaling section (its
-        // "###" subsections too); keep every other "## " section, and
-        // defensively drop any FURTHER "## Scaling run" section so a
-        // reordered file can never end up with two
-        val kept = graft.core.Fs.readString(out).linesIterator.toSeq
-          .dropWhile(l => !l.startsWith("## ") || l.startsWith("## Scaling run"))
-        val noStray = scala.collection.mutable.ArrayBuffer.empty[String]
-        var skipping = false
-        kept.foreach { l =>
-          if (l.startsWith("## ")) skipping = l.startsWith("## Scaling run")
-          if (!skipping) noStray += l
-        }
-        noStray.mkString("\n") + "\n"
-      } else ""
-    graft.core.Fs.writeString(out, header + sb.toString + "\n" + preserved)
+    BenchDoc.write("BENCH.md", "## Scaling run", sb.toString)
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Env
@@ -30,48 +29,10 @@ import graft.engine.SpatialJoin.Poly
   * requires every variant to return the identical row count.
   *
   * Env knobs: SPARK_GRAFT_SKEW_PAGES (default 16e6), SPARK_GRAFT_CPUS
-  * (see Session.cpus), SPARK_GRAFT_SKEW_REPS (default 2, best kept).
+  * (see Session.cpus), SPARK_GRAFT_SKEW_REPS (default 2, best kept, after
+  * one discarded warm-up).
   */
 object SkewBench {
-
-  /** Per-task metrics collector (driver-side listener; tasks at local[N]
-    * scale are few hundred — bounded). */
-  final class TaskStats extends SparkListener {
-    val rows = ArrayBuffer.empty[(Int, Long, Long)] // stage, runMs, shufRecords
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-      val m = e.taskMetrics
-      if (m != null)
-        rows += ((e.stageId, m.executorRunTime, m.shuffleReadMetrics.recordsRead))
-    }
-    def clear(): Unit = synchronized { rows.clear() }
-    private def size(): Int = synchronized { rows.size }
-    /** The listener bus is ASYNC: count() returns when the job completes,
-      * while TaskEnd events may still be draining. Reading immediately can
-      * miss the join stage's largest straggler (the exact number this
-      * bench reports), and events landing after clear() would leak into
-      * the NEXT variant's stats. Poll until the event stream goes quiet. */
-    def quiesce(): Unit = {
-      var prev = -1
-      var cur = size()
-      var waited = 0
-      while (cur != prev && waited < 5000) {
-        Thread.sleep(100); waited += 100
-        prev = cur; cur = size()
-      }
-    }
-    /** Task distribution of the JOIN stage — the stage reading the most
-      * shuffle records in total; its balance is what the salt exists to
-      * fix. The broadcast variant has no meaningful shuffle stage (which
-      * is the point) — its row reports the residual count exchange. */
-    def joinStage(): (Long, Long, Long, Long, Int) = synchronized {
-      val byStage = rows.groupBy(_._1)
-      if (byStage.isEmpty) return (0, 0, 0, 0, 0)
-      val (_, ts) = byStage.maxBy(_._2.map(_._3).sum)
-      val recs = ts.map(_._3).sorted
-      val durs = ts.map(_._2).sorted
-      (recs.last, recs((recs.size - 1) / 2), durs.last, durs((durs.size - 1) / 2), ts.size)
-    }
-  }
 
   private val Res = 7
   private val HotLon = 6.25 // 6.25 * 128 = 800 exactly: [6.25, 6.2578125) is one cell
@@ -118,28 +79,17 @@ object SkewBench {
     }
   }
 
-  final case class Run(name: String, wallSec: Double, rows: Long,
-      maxRec: Long, medRec: Long, maxMs: Long, medMs: Long, tasks: Int)
-
-  def measure(spark: SparkSession, stats: TaskStats, name: String,
-      reps: Int, mk: () => DataFrame): Run = {
-    require(reps >= 1, s"SPARK_GRAFT_SKEW_REPS must be >= 1 (got $reps): " +
-      "the first rep is a discarded warm-up, so 0 measured reps returns nothing")
-    var best: Run = null
-    var i = 0
-    while (i < reps + 1) { // first rep = JIT/codegen warm-up, discarded
-      stats.quiesce() // drain stragglers from the PREVIOUS variant first
-      stats.clear()
-      val t0 = System.nanoTime()
-      val n = mk().count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      stats.quiesce() // the async bus may still be delivering this job's TaskEnds
-      val (maxR, medR, maxD, medD, tasks) = stats.joinStage()
-      val r = Run(name, wall, n, maxR, medR, maxD, medD, tasks)
-      if (i > 0 && (best == null || r.wallSec < best.wallSec)) best = r
-      i += 1
-    }
-    best
+  /** Max and median shuffle records read, max and median task ms, and task
+    * count of the JOIN stage: the stage reading the most shuffle records in
+    * total, whose balance is what the salt exists to fix. The broadcast
+    * variant has no meaningful shuffle stage (which is the point); its row
+    * reports the residual count exchange. */
+  def joinStage(tasks: Seq[Measure.Task]): (Long, Long, Long, Long, Int) = {
+    if (tasks.isEmpty) return (0, 0, 0, 0, 0)
+    val (_, ts) = tasks.groupBy(_.stage).maxBy(_._2.map(_.shuffleRecords).sum)
+    val recs = ts.map(_.shuffleRecords).sorted
+    val durs = ts.map(_.runMs).sorted
+    (recs.last, recs((recs.size - 1) / 2), durs.last, durs((durs.size - 1) / 2), ts.size)
   }
 
   def main(args: Array[String]): Unit = {
@@ -150,12 +100,13 @@ object SkewBench {
     val spark = Session.local("graft-skew-bench", cores)
     spark.conf.set("spark.sql.shuffle.partitions", (cores * 2).toString)
     spark.sparkContext.setLogLevel("ERROR")
-    val stats = new TaskStats
-    spark.sparkContext.addSparkListener(stats)
     try {
       ensurePages(spark, nPages)
       val ps = polys()
       val pages = spark.read.parquet(pagesPath(nPages))
+      // first run = JIT/codegen warm-up, discarded
+      def measure(name: String)(mk: => DataFrame): (String, Measure.Run[Long]) =
+        name -> Measure(spark, name, warmup = 1, runs = reps)(mk.count())
       def conf(kv: (String, String)*): Unit = kv.foreach { case (k, v) => spark.conf.set(k, v) }
 
       // AQE skew-join thresholds low enough to trigger at this scale (the
@@ -168,26 +119,24 @@ object SkewBench {
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16m",
         "spark.sql.adaptive.coalescePartitions.enabled" -> (!on).toString)
 
-      val runs = ArrayBuffer.empty[Run]
+      val runs = ArrayBuffer.empty[(String, Measure.Run[Long])]
       aqeSkew(false)
-      runs += measure(spark, stats, "broadcast", reps, () => SpatialJoin.pipJoin(pages, ps, Res))
-      runs += measure(spark, stats, "shuffle_hot", reps,
-        () => SpatialJoin.pipJoinShuffled(pages, ps, Res, joinHint = "shuffle_hash"))
+      runs += measure("broadcast")(SpatialJoin.pipJoin(pages, ps, Res))
+      runs += measure("shuffle_hot")(SpatialJoin.pipJoinShuffled(pages, ps, Res, joinHint = "shuffle_hash"))
       aqeSkew(true)
-      runs += measure(spark, stats, "shuffle_aqe", reps,
-        () => SpatialJoin.pipJoinShuffled(pages, ps, Res, joinHint = "merge"))
+      runs += measure("shuffle_aqe")(SpatialJoin.pipJoinShuffled(pages, ps, Res, joinHint = "merge"))
       aqeSkew(false)
       for (s <- Seq(2, 8, 32))
-        runs += measure(spark, stats, s"salted_$s", reps,
-          () => SpatialJoin.pipJoinSalted(pages, ps, Res, salts = s))
+        runs += measure(s"salted_$s")(SpatialJoin.pipJoinSalted(pages, ps, Res, salts = s))
 
-      val counts = runs.map(_.rows).distinct
-      require(counts.size == 1, s"variants disagree on row count: $runs")
+      val counts = runs.map(_._2.result).distinct
+      require(counts.size == 1, s"variants disagree on row count: ${runs.map { case (n, r) => n -> r.result }}")
       println(f"SKEW pages=$nPages cores=$cores joinRows=${counts.head} hotShare=0.5 res=$Res polys=${ps.size}")
       println(f"${"variant"}%-12s ${"wall_s"}%8s ${"maxTaskRec"}%12s ${"medTaskRec"}%12s ${"rec_skew"}%9s ${"maxTaskMs"}%10s ${"medTaskMs"}%10s ${"tasks"}%6s")
-      runs.foreach { r =>
-        val skew = if (r.medRec > 0) r.maxRec.toDouble / r.medRec else Double.NaN
-        println(f"${r.name}%-12s ${r.wallSec}%8.2f ${r.maxRec}%12d ${r.medRec}%12d ${skew}%9.1f ${r.maxMs}%10d ${r.medMs}%10d ${r.tasks}%6d")
+      runs.foreach { case (name, r) =>
+        val (maxRec, medRec, maxMs, medMs, tasks) = joinStage(r.tasks)
+        val skew = if (medRec > 0) maxRec.toDouble / medRec else Double.NaN
+        println(f"$name%-12s ${r.seconds}%8.2f $maxRec%12d $medRec%12d $skew%9.1f $maxMs%10d $medMs%10d $tasks%6d")
       }
     } finally spark.stop()
   }

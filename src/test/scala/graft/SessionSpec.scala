@@ -45,17 +45,9 @@ class SessionSpec extends AnyFunSuite {
   }
 
   test("src/main builds a SparkSession in exactly one place") {
-    val root = new java.io.File("src/main/scala")
-    require(root.isDirectory, s"run from the repository root: no ${root.getAbsolutePath}")
-    def sources(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
-      else if (f.getName.endsWith(".scala")) Seq(f)
-      else Nil
-    val sites = for {
-      f <- sources(root)
-      (line, i) <- java.nio.file.Files.readString(f.toPath).linesIterator.toSeq.zipWithIndex
-      if line.contains("SparkSession.builder")
-    } yield s"${f.getPath}:${i + 1}"
+    val sites = MainSources.lines().collect {
+      case (f, i, line) if line.contains("SparkSession.builder") => s"$f:$i"
+    }
     assert(sites.size == 1 && sites.head.contains("graft/Session.scala"), sites.mkString("\n"))
   }
 }

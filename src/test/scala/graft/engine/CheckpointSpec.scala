@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types._
 import graft.core.JobConfig
 import graft.synth.SynthDem
@@ -109,31 +108,14 @@ class CheckpointSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("ckpt_jobs").toString
     val paths = Seq(SynthDem.writeHgt(s"$dir/dem", 43, 6), SynthDem.writeHgt(s"$dir/dem", 43, 7))
     val jobCfg = JobConfig(contourStepSize = 10, rdpEpsilon = Some(1e-5))
-    val sc = spark.sparkContext
-    val group = "checkpoint-spec-jobs"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    def run(): RasterPipeline.RunReport = {
-      sc.setJobGroup(group, group)
-      try RasterPipeline.runResumable(spark, paths, s"$dir/out", jobCfg,
-        graft.sinks.TileSink.PbfFormat)
-      finally {
-        sc.clearJobGroup()
-        org.apache.spark.TestBus.drain(sc)
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val r1 = run()
-      assert(r1.tilesTotal > 2 && r1.tilesWritten == r1.tilesTotal && r1.tilesSkipped == 0)
-      assert(jobs.get > 0 && jobs.get <= 9, s"${jobs.get} jobs")
-      val r2 = run()
-      assert(r2.tilesWritten == 0 && r2.files.isEmpty)
-      assert(r2.tilesTotal == r1.tilesTotal && r2.tilesSkipped == r1.tilesTotal)
-    } finally sc.removeSparkListener(listener)
+    def run() = graft.Measure(spark, "checkpoint-spec-jobs")(
+      RasterPipeline.runResumable(spark, paths, s"$dir/out", jobCfg, graft.sinks.TileSink.PbfFormat))
+    val first = run()
+    val r1 = first.result
+    assert(r1.tilesTotal > 2 && r1.tilesWritten == r1.tilesTotal && r1.tilesSkipped == 0)
+    assert(first.jobs > 0 && first.jobs <= 9, s"${first.jobs} jobs")
+    val r2 = run().result
+    assert(r2.tilesWritten == 0 && r2.files.isEmpty)
+    assert(r2.tilesTotal == r1.tilesTotal && r2.tilesSkipped == r1.tilesTotal)
   }
 }

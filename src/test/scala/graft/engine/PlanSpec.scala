@@ -49,27 +49,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("a pip join aggregate runs 2 jobs") {
-    val sc = spark.sparkContext
-    val group = "plan-spec-pip-jobs"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
     val q = SpatialJoin.pipJoin(pipPages, pipPolys, 6).agg(count(lit(1)), sum(col("poly_id")))
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val r = try q.collect()(0) finally {
-        sc.clearJobGroup()
-        org.apache.spark.TestBus.drain(sc)
-      }
-      assert(r.getLong(0) > 0)
-      // one job scans and probes, one merges the aggregate: the index
-      // is broadcast by the driver, not by a job of its own
-      assert(jobs.get == 2, s"${jobs.get} jobs")
-    } finally sc.removeSparkListener(listener)
+    val run = graft.Measure(spark, "plan-spec-pip-jobs")(q.collect()(0))
+    assert(run.result.getLong(0) > 0)
+    // one job scans and probes, one merges the aggregate: the index
+    // is broadcast by the driver, not by a job of its own
+    assert(run.jobs == 2, s"${run.jobs} jobs")
   }
 
   test("gate queries keep whole-stage codegen on the hot path") {
