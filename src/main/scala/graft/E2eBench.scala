@@ -69,7 +69,8 @@ object E2eBench {
       f"(${Fixtures.size * copies} input files, $cores cores)")
     val perTile = wall / tiles
     val sb = new StringBuilder
-    sb.append("\n## End-to-end vs reference anchor (PACA parameters: step 10, RDP 1e-5, PBF, 16 cores)\n\n")
+    sb.append("\n## End-to-end vs reference anchor (PACA parameters: step 10, RDP 1e-5, PBF)\n\n")
+    sb.append(s"graft ran on $cores cores (`Session.cpus()`).\n\n")
     sb.append("| engine | tiles | output MB | wall (s) | s/tile | vs reference 0.58 s/tile |\n")
     sb.append("|---|---|---|---|---|---|\n")
     sb.append(f"| reference (published, i5-13600K) | 104 | 81 | <60 | 0.58 | 1.0x |\n")

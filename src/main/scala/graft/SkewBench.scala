@@ -117,7 +117,9 @@ object SkewBench {
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16m",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16m",
-        "spark.sql.adaptive.coalescePartitions.enabled" -> (!on).toString)
+        // coalescing would merge the salted partitions back onto a few
+        // reducers before the spread is measured
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 
       val runs = ArrayBuffer.empty[(String, Measure.Run[Long])]
       aqeSkew(false)

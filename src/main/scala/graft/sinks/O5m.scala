@@ -251,6 +251,7 @@ object O5mReader {
       pos
     }
 
+    var ended = false
     while (p < buf.length) {
       (buf(p) & 0xff) match {
         case O5m.Reset =>
@@ -258,9 +259,12 @@ object O5mReader {
           lastTs = 0
           table.clear()
           p += 1
-        case O5m.EndOfFile => p = buf.length
+        case O5m.EndOfFile => p = buf.length; ended = true
         case typ =>
           val (len, p1) = Varint.readUnsigned(buf, p + 1)
+          // copyOfRange would zero-pad a dataset cut off by a truncated file
+          require(len >= 0 && len <= buf.length - p1,
+            s"corrupt o5m: dataset 0x${typ.toHexString} [$p1, ${p1 + len}) runs past the ${buf.length}-byte file")
           val payload = java.util.Arrays.copyOfRange(buf, p1, p1 + len.toInt)
           p = p1 + len.toInt
           typ match {
@@ -307,6 +311,7 @@ object O5mReader {
           }
       }
     }
+    require(ended, s"corrupt o5m: no end-of-file marker in ${buf.length} bytes (truncated?)")
     Decoded(bbox, nodes.toSeq, ways.toSeq)
   }
 }

@@ -54,14 +54,28 @@ object Pbf {
     }
   }
 
+  /** Inflate one blob to exactly `rawSize` bytes. A stream that stalls
+    * (truncated), fails to parse or ends short refuses by name instead of
+    * spinning or zero-padding; deflate expands at most 1032:1, so a
+    * larger declared size is refused before it is allocated. */
   def unzlib(data: Array[Byte], rawSize: Int): Array[Byte] = {
+    require(rawSize >= 0 && rawSize <= data.length.toLong * 1032,
+      s"corrupt PBF: raw_size $rawSize cannot inflate from ${data.length} zlib bytes")
     val inf = new Inflater()
-    inf.setInput(data)
-    val out = new Array[Byte](rawSize)
-    var off = 0
-    while (!inf.finished() && off < rawSize) off += inf.inflate(out, off, rawSize - off)
-    inf.end()
-    out
+    try {
+      inf.setInput(data)
+      val out = new Array[Byte](rawSize)
+      var off = 0
+      while (off < rawSize) {
+        val n =
+          try inf.inflate(out, off, rawSize - off)
+          catch { case e: java.util.zip.DataFormatException =>
+            throw new IllegalArgumentException(s"corrupt PBF zlib_data: ${e.getMessage}") }
+        require(n > 0, s"corrupt PBF zlib_data: stream stops at $off of $rawSize bytes")
+        off += n
+      }
+      out
+    } finally inf.end()
   }
 }
 
@@ -235,14 +249,17 @@ object PbfReader {
     def hasMore: Boolean = pos < buf.length
     def varint(): Long = {
       var shift = 0; var v = 0L; var b = 0L
-      do { b = buf(pos) & 0xffL; v |= (b & 0x7f) << shift; shift += 7; pos += 1 } while ((b & 0x80) != 0)
+      do {
+        require(pos < buf.length && shift < 64, s"corrupt PBF: varint at byte $pos runs past its message")
+        b = buf(pos) & 0xffL; v |= (b & 0x7f) << shift; shift += 7; pos += 1
+      } while ((b & 0x80) != 0)
       v
     }
     def zigzag(): Long = { val u = varint(); (u >>> 1) ^ -(u & 1) }
     def lenBytes(): Array[Byte] = {
-      val n = varint().toInt
-      val r = java.util.Arrays.copyOfRange(buf, pos, pos + n)
-      pos += n
+      val n = varint()
+      val r = slice(buf, pos, n, "length-delimited field")
+      pos += n.toInt
       r
     }
     def skip(wire: Int): Unit = wire match {
@@ -250,8 +267,16 @@ object PbfReader {
       case 2 => lenBytes()
       case 5 => pos += 4
       case 1 => pos += 8
-      case w => throw new IllegalStateException(s"wire $w")
+      case w => throw new IllegalArgumentException(s"corrupt PBF: wire type $w")
     }
+  }
+
+  /** `n` bytes of `buf` from `off`, refused by name when they run past its
+    * end (a plain copyOfRange would zero-pad a truncated file). */
+  private def slice(buf: Array[Byte], off: Int, n: Long, field: String): Array[Byte] = {
+    require(n >= 0 && n <= buf.length - off,
+      s"corrupt PBF: $field [$off, ${off + n}) is outside its ${buf.length}-byte message")
+    java.util.Arrays.copyOfRange(buf, off, off + n.toInt)
   }
 
   def decode(file: Array[Byte]): Decoded = {
@@ -260,24 +285,23 @@ object PbfReader {
     val features = scala.collection.mutable.ArrayBuffer.empty[String]
     val nodes = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     val ways = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long], Seq[(String, String)])]
-    while (pos + 4 <= file.length) {
-      val hlen = ((file(pos) & 0xff) << 24) | ((file(pos + 1) & 0xff) << 16) |
-        ((file(pos + 2) & 0xff) << 8) | (file(pos + 3) & 0xff)
+    while (pos < file.length) {
+      val hlen = java.nio.ByteBuffer.wrap(slice(file, pos, 4, "BlobHeader length")).getInt & 0xffffffffL
       pos += 4
-      val header = new ProtoIn(java.util.Arrays.copyOfRange(file, pos, pos + hlen))
-      pos += hlen
+      val header = new ProtoIn(slice(file, pos, hlen, "BlobHeader"))
+      pos += hlen.toInt
       var blobType = ""
-      var datasize = 0
+      var datasize = 0L
       while (header.hasMore) {
         val k = header.varint()
         (k >> 3).toInt match {
           case 1 => blobType = new String(header.lenBytes(), "UTF-8")
-          case 3 => datasize = header.varint().toInt
+          case 3 => datasize = header.varint()
           case _ => header.skip((k & 7).toInt)
         }
       }
-      val blob = new ProtoIn(java.util.Arrays.copyOfRange(file, pos, pos + datasize))
-      pos += datasize
+      val blob = new ProtoIn(slice(file, pos, datasize, s"$blobType blob"))
+      pos += datasize.toInt
       var payload: Array[Byte] = null
       var rawSize = -1
       var zdata: Array[Byte] = null
@@ -290,7 +314,10 @@ object PbfReader {
           case _ => blob.skip((k & 7).toInt)
         }
       }
-      if (payload == null) payload = unzlib(zdata, rawSize)
+      if (payload == null) {
+        require(zdata != null, s"corrupt PBF: $blobType blob has neither raw nor zlib_data")
+        payload = unzlib(zdata, rawSize)
+      }
       if (blobType == "OSMHeader") {
         val hb = new ProtoIn(payload)
         while (hb.hasMore) {

@@ -37,6 +37,7 @@ object Varint {
     var b = 0L
     var more = true
     while (more) {
+      require(p < buf.length && shift < 64, s"corrupt varint at byte $pos of a ${buf.length}-byte buffer")
       b = buf(p) & 0xffL
       v |= (b & 0x7f) << shift
       shift += 7

@@ -69,9 +69,14 @@ object WarcLite {
             case "warc-target-uri" => url = v
             case "warc-date" =>
               // full microsecond precision (toEpochMilli would truncate)
-              val inst = java.time.Instant.parse(v)
+              val inst =
+                try java.time.Instant.parse(v)
+                catch { case _: java.time.format.DateTimeParseException =>
+                  throw new IllegalArgumentException(s"bad WARC-Date '$v'") }
               tsMicros = inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-            case "content-length" => len = v.toLong
+            case "content-length" =>
+              len = v.toLongOption.filter(_ >= 0).getOrElse(
+                throw new IllegalArgumentException(s"bad Content-Length '$v'"))
             case _ => () // unknown headers pass through
           }
           h = readLine()
@@ -82,13 +87,10 @@ object WarcLite {
         require(len <= Int.MaxValue - 8, s"Content-Length $len exceeds a byte array")
         require(url != null, "record missing WARC-Target-URI")
         require(tsMicros >= 0, "record missing WARC-Date")
-        val body = new Array[Byte](len.toInt)
-        var off = 0
-        while (off < len) {
-          val n = buf.read(body, off, (len - off).toInt)
-          require(n >= 0, s"truncated record body at $off/$len")
-          off += n
-        }
+        // readNBytes grows the body as bytes arrive, so a hostile
+        // Content-Length cannot allocate more than the file holds
+        val body = buf.readNBytes(len.toInt)
+        require(body.length == len, s"truncated record body at ${body.length}/$len")
         (url, tsMicros, body)
       }
       override def hasNext: Boolean = nextRec != null

@@ -93,6 +93,12 @@ class MultimodalSpec extends AnyFunSuite {
           }
       }
     }
+    // a frame whose declared length runs past the payload refuses instead
+    // of zero-padding
+    val video = rows.find(_.kind == "video").get.payload
+    val cut = video.take(video.length - 5)
+    val eCut = intercept[IllegalArgumentException](Multimodal.videoFrames(cut).toList)
+    assert(eCut.getMessage.contains("corrupt video"), eCut.getMessage)
     // determinism
     val row2 = Multimodal.generate(spark, 300).filter(_.media_id == 42L).collect().head
     assert(java.util.Arrays.equals(rows.find(_.media_id == 42L).get.payload, row2.payload))

@@ -95,6 +95,27 @@ class PbfSpec extends AnyFunSuite {
     assert(decO.nodes.sortBy(_._1).map(n => (n._2, n._3)) == expected)
   }
 
+  test("a truncated file or zlib stream refuses instead of decoding wrong coordinates") {
+    val bos = new ByteArrayOutputStream()
+    val w = new PbfWriter(bos, BBox(1, 1, 4, 2))
+    val n = 20000
+    w.writeDenseNodes(1L, Array.tabulate(n)(i => 10000000L + i * 7L), Array.tabulate(n)(i => 20000000L - i * 3L), n)
+    w.done()
+    val whole = bos.toByteArray
+    assert(PbfReader.decode(whole).nodes.size == n)
+    Seq(10, whole.length / 4).foreach { cut =>
+      val e = intercept[IllegalArgumentException](PbfReader.decode(whole.take(whole.length - cut)))
+      assert(e.getMessage.contains("corrupt PBF"), e.getMessage)
+    }
+    // the inflate loop used to spin on a stream with its tail cut off
+    val raw = Array.tabulate[Byte](50000)(i => (i * 31 % 251).toByte)
+    val d = new java.util.zip.Deflater(); d.setInput(raw); d.finish()
+    val z = new Array[Byte](60000); val zn = d.deflate(z); d.end()
+    val e = intercept[IllegalArgumentException](Pbf.unzlib(z.take(zn / 2), raw.length))
+    assert(e.getMessage.contains("stops at"), e.getMessage)
+    assert(Pbf.unzlib(z.take(zn), raw.length).sameElements(raw))
+  }
+
   test("pipeline writes decodable pbf tiles") {
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[4]").appName("pbf-pipe")

@@ -41,6 +41,19 @@ class WarcLiteSpec extends AnyFunSuite {
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/bad.warc"), noUri.getBytes("UTF-8"))
     assertThrows[IllegalArgumentException](
       WarcLite.parse(new java.io.FileInputStream(s"$dir/bad.warc")).toSeq)
+    def parse(s: String) = WarcLite.parse(new java.io.ByteArrayInputStream(s.getBytes("UTF-8"))).toSeq
+    val head = "WARC/1.0\r\nWARC-Target-URI: https://w.example/x\r\n"
+    val badDate = intercept[IllegalArgumentException](
+      parse(head + "WARC-Date: 2024-13-01T00:00:00Z\r\nContent-Length: 2\r\n\r\nhi\r\n\r\n"))
+    assert(badDate.getMessage.contains("WARC-Date '2024-13-01T00:00:00Z'"), badDate.getMessage)
+    val badLen = intercept[IllegalArgumentException](
+      parse(head + "WARC-Date: 2024-01-01T00:00:00Z\r\nContent-Length: 2x\r\n\r\nhi\r\n\r\n"))
+    assert(badLen.getMessage.contains("Content-Length '2x'"), badLen.getMessage)
+    // a declared length far beyond the file refuses as truncated instead
+    // of allocating the declared size up front
+    val huge = intercept[IllegalArgumentException](
+      parse(head + "WARC-Date: 2024-01-01T00:00:00Z\r\nContent-Length: 2000000000\r\n\r\nhi"))
+    assert(huge.getMessage.contains("truncated record body at 2/2000000000"), huge.getMessage)
   }
 
   test("DataSource V2 read: multi-file, schema, values, extracted-text invariant") {
