@@ -2,12 +2,12 @@ package graft.core
 
 /** Minimal PNG codec — no imageio: 8-bit greyscale (color type 0) and
   * RGB (color type 2), non-interlaced, all five scanline filters
-  * (None/Sub/Up/Average/Paeth), zlib IDAT via `java.util.zip` (the same
-  * inflater the TIFF DEFLATE path uses). This is the real image decode
-  * behind `engine/Multimodal` — the container has no media libraries, so
-  * the codec pair is self-contained: the encoder builds valid PNGs for
-  * the deterministic media generator and fixtures, the decoder recovers
-  * the exact pixel bytes. Public-spec implementation (PNG is RFC 2083 /
+  * (None/Sub/Up/Average/Paeth), zlib IDAT through `Bytes.inflate` (the
+  * inflater the TIFF DEFLATE path and the PBF reader use). This is the
+  * real image decode behind `engine/Multimodal` — the container has no
+  * media libraries, so the codec pair is self-contained: the encoder
+  * builds valid PNGs for the deterministic media generator and fixtures,
+  * the decoder recovers the exact pixel bytes. Public-spec implementation (PNG is RFC 2083 /
   * ISO 15948); CRC32 from `java.util.zip.CRC32`.
   */
 object Png {
@@ -96,47 +96,42 @@ object Png {
     * chunks, reverses all five filters. */
   def decode(bytes: Array[Byte]): Image = {
     require(isPng(bytes), "not a PNG: bad signature")
-    def be32At(off: Int): Int =
-      ((bytes(off) & 0xff) << 24) | ((bytes(off + 1) & 0xff) << 16) |
-        ((bytes(off + 2) & 0xff) << 8) | (bytes(off + 3) & 0xff)
-    var off = 8
+    val in = Bytes.Reader(bytes, "PNG")
+    in.pos = 8
     var w = 0; var h = 0; var ch = 0
     val idat = new java.io.ByteArrayOutputStream()
     var done = false
-    while (!done && off + 8 <= bytes.length) {
-      val len = be32At(off)
-      val typ = new String(bytes, off + 4, 4, "US-ASCII")
-      val dataOff = off + 8
+    while (!done && in.remaining >= 8) {
+      val len = in.u32(in.pos, "chunk length")
+      val typ = new String(bytes, in.pos + 4, 4, "US-ASCII")
+      in.pos += 8
+      val data = in.sub(len, s"$typ chunk")
       typ match {
         case "IHDR" =>
-          w = be32At(dataOff); h = be32At(dataOff + 4)
-          val depth = bytes(dataOff + 8) & 0xff
-          val color = bytes(dataOff + 9) & 0xff
-          val interlace = bytes(dataOff + 12) & 0xff
+          def dim(at: Int, name: String): Int = {
+            val v = data.u32(data.off + at, name)
+            require(v >= 1 && v <= Int.MaxValue, s"corrupt PNG: IHDR $name $v")
+            v.toInt
+          }
+          w = dim(0, "width"); h = dim(4, "height")
+          val depth = data.u8(data.off + 8, "bit depth")
+          val color = data.u8(data.off + 9, "color type")
+          val interlace = data.u8(data.off + 12, "interlace method")
           require(depth == 8, s"unsupported PNG bit depth $depth")
           require(color == 0 || color == 2, s"unsupported PNG color type $color")
           require(interlace == 0, "interlaced PNG unsupported")
           ch = if (color == 0) 1 else 3
-        case "IDAT" => idat.write(bytes, dataOff, len)
+        case "IDAT" => idat.write(bytes, data.off, data.length)
         case "IEND" => done = true
         case _ => () // ancillary chunks skipped
       }
-      off = dataOff + len + 4 // skip CRC
+      in.pos += 4 // skip CRC
     }
     require(w > 0 && h > 0 && ch > 0, "PNG lacks IHDR")
+    // h x (w x ch + 1) is checked against deflate's limit over the IDAT
+    // bytes before it is allocated
+    val raw = Bytes.inflate(idat.toByteArray, 0, idat.size, Bytes.times(h, w.toLong * ch + 1), "PNG IDAT")
     val stride = w * ch
-    val raw = new Array[Byte](h * (stride + 1))
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(idat.toByteArray)
-    var got = 0
-    while (!inf.finished() && got < raw.length) {
-      val n = inf.inflate(raw, got, raw.length - got)
-      if (n == 0 && inf.needsInput())
-        throw new java.io.IOException("truncated PNG IDAT stream")
-      got += n
-    }
-    inf.end()
-    require(got == raw.length, s"PNG scanline data short: $got of ${raw.length}")
     val px = new Array[Byte](h * stride)
     var r = 0
     while (r < h) {
@@ -195,38 +190,32 @@ object Wav {
 
   def decode(bytes: Array[Byte]): Audio = {
     require(isWav(bytes), "not a WAV: bad RIFF/WAVE header")
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    // walk chunks from offset 12: fmt before data, per spec
-    var pos = 12
-    var sampleRate = 0; var channels = 0; var bits = 0
+    val in = Bytes.Reader(bytes, "WAV", le = true)
+    // walk chunks from offset 12: fmt before data, per spec. `sub` refuses
+    // a chunk length past the payload, so the walk always advances and
+    // never reads out of bounds; this decode runs inside executor tasks,
+    // where an infinite loop is a hung job, not an exception.
+    in.pos = 12
+    var sampleRate = 0; var channels = 0
     var samples: Array[Short] = null
-    while (pos + 8 <= bytes.length && samples == null) {
-      val id = new String(bytes, pos, 4, "US-ASCII")
-      val len = bb.getInt(pos + 4)
-      // a negative (unsigned >2^31) or over-long chunk length would stall
-      // the walk (pos += 8 + len advancing by <= 0) or read out of
-      // bounds — refuse loudly; this decode runs inside executor tasks,
-      // where an infinite loop is a hung job, not an exception. The bound
-      // is written overflow-free (len near Int.MaxValue makes pos+8+len
-      // wrap negative and sneak past a naive <=): the loop guarantees
-      // pos + 8 <= bytes.length, so the subtraction cannot underflow.
-      require(len >= 0 && len <= bytes.length - pos - 8,
-        s"corrupt WAV: chunk '$id' length $len at offset $pos exceeds ${bytes.length}-byte payload")
+    while (in.remaining >= 8 && samples == null) {
+      val id = new String(bytes, in.pos, 4, "US-ASCII")
+      val len = in.u32(in.pos + 4, s"'$id' chunk length")
+      in.pos += 8
+      val c = in.sub(len, s"'$id' chunk")
       id match {
         case "fmt " =>
-          require(bb.getShort(pos + 8) == 1, "non-PCM WAV unsupported")
-          channels = bb.getShort(pos + 10)
-          sampleRate = bb.getInt(pos + 12)
-          bits = bb.getShort(pos + 22)
+          require(c.u16(c.off, "fmt format tag") == 1, "non-PCM WAV unsupported")
+          channels = c.u16(c.off + 2, "fmt channels")
+          sampleRate = c.u32(c.off + 4, "fmt sample rate").toInt
+          val bits = c.u16(c.off + 14, "fmt bits per sample")
           require(bits == 16, s"unsupported WAV bit depth $bits")
         case "data" =>
           require(sampleRate > 0, "WAV data chunk before fmt")
-          samples = new Array[Short](len / 2)
-          var i = 0
-          while (i < samples.length) { samples(i) = bb.getShort(pos + 8 + 2 * i); i += 1 }
+          samples = c.shorts(c.off, len / 2, "data samples")
         case _ => ()
       }
-      pos += 8 + len + (len & 1) // chunks are word-aligned
+      in.pos += (len & 1).toInt // chunks are word-aligned
     }
     require(samples != null, "WAV lacks a data chunk")
     Audio(sampleRate, channels, samples)

@@ -48,56 +48,33 @@ object Tiff {
   }
 
   def decode(bytes: Array[Byte], voidMax: Int = -0x8000): GeoTiff = {
-    val le = bytes(0) == 'I' && bytes(1) == 'I'
-    require(le || (bytes(0) == 'M' && bytes(1) == 'M'), "not a TIFF: bad byte-order mark")
-    def u16(off: Int): Int =
-      if (le) (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
-      else ((bytes(off) & 0xff) << 8) | (bytes(off + 1) & 0xff)
-    def u32(off: Int): Long = {
-      val a = bytes(off) & 0xffL; val b = bytes(off + 1) & 0xffL
-      val c = bytes(off + 2) & 0xffL; val d = bytes(off + 3) & 0xffL
-      if (le) a | (b << 8) | (c << 16) | (d << 24) else (a << 24) | (b << 16) | (c << 8) | d
-    }
-    def u64(off: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < 8) {
-        val b = bytes(off + (if (le) 7 - i else i)) & 0xffL
-        v = (v << 8) | b
-        i += 1
-      }
-      v
-    }
-    def f64(off: Int): Double = java.lang.Double.longBitsToDouble(u64(off))
+    val mark = Bytes.Reader(bytes, "TIFF").u16(0, "byte-order mark")
+    require(mark == 0x4949 || mark == 0x4d4d, "not a TIFF: bad byte-order mark")
+    // every read below is bounds-checked against the file; this decoder
+    // holds the WHOLE file in one array, so an offset past it (in
+    // particular a BigTIFF 8-byte offset past 2 GiB) refuses by name
+    val in = Bytes.Reader(bytes, "TIFF", le = mark == 0x4949)
     // classic TIFF (magic 42: 4-byte offsets/counts, 12-byte IFD entries)
     // or BigTIFF (magic 43: 8-byte offsets/counts, 20-byte entries, LONG8
     // types — how ArcticDEM/REMA mosaic tiles over 4 GiB actually ship)
-    val magic = u16(2)
+    val magic = in.u16(2, "magic")
     require(magic == 42 || magic == 43, s"not a TIFF: bad magic $magic")
     val big = magic == 43
-    if (big) require(u16(4) == 8 && u16(6) == 0,
-      s"BigTIFF: unsupported offset size ${u16(4)}")
+    if (big) require(in.u16(4, "offset size") == 8 && in.u16(6, "header pad") == 0,
+      s"BigTIFF: unsupported offset size ${in.u16(4, "offset size")}")
     val inlineCap = if (big) 8 else 4 // value bytes stored inside the entry
-    def uOff(off: Int): Long = if (big) u64(off) else u32(off)
-    // this decoder reads the WHOLE file into one Array[Byte], so any
-    // offset beyond the array (in particular a BigTIFF 8-byte offset
-    // past 2 GiB) must refuse loudly, not alias through .toInt
-    def offInt(v: Long, what: String): Int = {
-      require(v >= 0 && v <= bytes.length,
-        s"TIFF $what $v outside the file (${bytes.length} bytes); " +
-          "offsets past 2 GiB need a streaming reader, not the byte-array path")
-      v.toInt
-    }
+    def uOff(at: Long, field: String): Long = if (big) in.u64(at, field) else in.u32(at, field)
 
-    final case class Entry(typ: Int, count: Long, valOff: Int)
-    val ifdOff = offInt(if (big) u64(8) else u32(4), "IFD offset")
-    val nEntries = (if (big) u64(ifdOff) else u16(ifdOff).toLong).toInt
+    final case class Entry(typ: Int, count: Long, valOff: Long)
+    val ifdOff = uOff(if (big) 8 else 4, "IFD offset")
+    val nEntries = if (big) in.u64(ifdOff, "IFD entry count") else in.u16(ifdOff, "IFD entry count").toLong
+    val entry0 = in.check(ifdOff + (if (big) 8 else 2), nEntries, if (big) 20 else 12, "IFD entries")
     val tags = scala.collection.mutable.Map.empty[Int, Entry]
     var i = 0
     while (i < nEntries) {
-      val e = ifdOff + (if (big) 8 + 20 * i else 2 + 12 * i)
-      val cnt = if (big) u64(e + 4) else u32(e + 4)
-      tags(u16(e)) = Entry(u16(e + 2), cnt, e + (if (big) 12 else 8))
+      val e = entry0 + (if (big) 20L else 12L) * i
+      val cnt = uOff(e + 4, "tag count")
+      tags(in.u16(e, "tag id")) = Entry(in.u16(e + 2, "tag type"), cnt, e + (if (big) 12 else 8))
       i += 1
     }
     def typeSize(t: Int): Int = t match {
@@ -105,37 +82,54 @@ object Tiff {
       case 5 | 10 | 12 | 16 | 17 | 18 => 8 // RATIONAL/DOUBLE/LONG8/SLONG8/IFD8
       case other => throw new IllegalArgumentException(s"TIFF type $other")
     }
+    /** Where a tag's values start, inline or at its value offset; the
+      * count is checked against the bytes present before anything sized
+      * by it is allocated. */
+    def valuesAt(tag: Int, e: Entry, sz: Int): Int = {
+      val inline = e.count >= 0 && e.count <= inlineCap / sz
+      in.check(if (inline) e.valOff else uOff(e.valOff, s"tag-$tag value offset"), e.count, sz, s"tag-$tag values")
+    }
     /** Values of a tag as Longs (SHORT/LONG/LONG8) following the
       * inline-vs-offset rule of the container variant. */
     def longs(tag: Int): Array[Long] = tags.get(tag) match {
       case None => Array.empty
-      case Some(Entry(t, c, vo)) =>
-        val sz = typeSize(t)
-        val base = if (sz * c <= inlineCap) vo else offInt(uOff(vo), s"tag-$tag value offset")
-        Array.tabulate(c.toInt) { k =>
-          val off = base + k * sz
-          if (sz == 2) u16(off).toLong else if (sz == 8) u64(off) else u32(off)
+      case Some(e) =>
+        val sz = typeSize(e.typ)
+        val base = valuesAt(tag, e, sz)
+        Array.tabulate(e.count.toInt) { k =>
+          val at = base + k.toLong * sz
+          sz match {
+            case 1 => in.u8(at, "tag value").toLong
+            case 2 => in.u16(at, "tag value").toLong
+            case 8 => in.u64(at, "tag value")
+            case _ => in.u32(at, "tag value")
+          }
         }
     }
     def doubles(tag: Int): Array[Double] = tags.get(tag) match {
       case None => Array.empty
-      case Some(Entry(t, c, vo)) =>
-        require(t == 12, s"tag $tag: expected DOUBLE, got type $t")
-        val base = if (8 * c <= inlineCap) vo else offInt(uOff(vo), s"tag-$tag value offset")
-        Array.tabulate(c.toInt)(k => f64(base + k * 8))
+      case Some(e) =>
+        require(e.typ == 12, s"TIFF tag $tag: expected DOUBLE, got type ${e.typ}")
+        val base = valuesAt(tag, e, 8)
+        Array.tabulate(e.count.toInt)(k => in.f64(base + 8L * k, "tag value"))
     }
     def ascii(tag: Int): String = tags.get(tag) match {
       case None => ""
-      case Some(Entry(_, c, vo)) =>
-        val base = if (c <= inlineCap) vo else offInt(uOff(vo), s"tag-$tag value offset")
-        new String(bytes, base, c.toInt, "US-ASCII").takeWhile(_ != 0)
+      case Some(e) => new String(bytes, valuesAt(tag, e, 1), e.count.toInt, "US-ASCII").takeWhile(_ != 0)
     }
     def scalar(tag: Int, default: Long = -1L): Long = {
       val v = longs(tag); if (v.isEmpty) default else v(0)
     }
+    // a dimension past Int.MaxValue is capped there: the size checks
+    // below refuse it by name
+    def dim(tag: Int, name: String, default: Long = -1L): Int = {
+      val v = scalar(tag, default)
+      require(v >= 1, s"corrupt TIFF: $name $v (tag $tag)")
+      math.min(v, Int.MaxValue).toInt
+    }
 
-    val cols = scalar(256).toInt
-    val rows = scalar(257).toInt
+    val cols = dim(256, "image width")
+    val rows = dim(257, "image length")
     val bits = scalar(258, 1L).toInt
     val compression = scalar(259, 1L).toInt
     val sampleFormat = scalar(339, 1L).toInt
@@ -157,7 +151,8 @@ object Tiff {
       (bits == 16 && (sampleFormat == 1 || sampleFormat == 2)) ||
         (bits == 32 && (sampleFormat == 1 || sampleFormat == 2 || sampleFormat == 3)),
       s"unsupported TIFF sample layout: $bits-bit format $sampleFormat (int16, int32, or float32)")
-    require(samplesPerPixel == 1, s"unsupported samples/pixel $samplesPerPixel")
+    require(samplesPerPixel == 1, s"unsupported TIFF samples/pixel $samplesPerPixel")
+    val bps = bits / 8
 
     // GDAL_NODATA (parsed below, needed during the strip decode): cells at
     // the declared nodata value mask like voids even when nodata > voidMax
@@ -165,43 +160,50 @@ object Tiff {
     // fixtures declare nodata == voidMax == -32768
     val nodata = {
       val nd = ascii(42113).trim
-      if (nd.isEmpty) None else Some(nd.toDouble)
+      if (nd.isEmpty) None
+      else Some(nd.toDoubleOption.getOrElse(
+        throw new IllegalArgumentException(s"corrupt TIFF: GDAL_NODATA '$nd' is not a number")))
     }
     val nodataF = nodata.map(_.toFloat)
 
     // segment geometry: strips (full-width bands) or tiles (tag 322-325;
     // tiles are PADDED to tileWidth x tileLength and laid out across, then
-    // down — real-world DEM GeoTIFFs are usually tiled + compressed)
+    // down — real-world DEM GeoTIFFs are usually tiled + compressed).
+    // RowsPerStrip defaults to 2^32-1, i.e. one strip.
     val tiledLayout = tags.contains(322)
-    val (segW, segH, segOffsets, segCounts, segsAcross) =
-      if (tiledLayout) {
-        val tw = scalar(322).toInt
-        val th = scalar(323).toInt
-        (tw, th, longs(324), longs(325), (cols + tw - 1) / tw)
-      } else {
-        val rps = scalar(278, rows.toLong).toInt
-        (cols, rps, longs(273), longs(279), 1)
-      }
+    val (segW, segH, segOffsets, segCounts) =
+      if (tiledLayout) (dim(322, "tile width"), dim(323, "tile length"), longs(324), longs(325))
+      else (cols, math.min(dim(278, "rows per strip", rows.toLong), rows), longs(273), longs(279))
+    val segsAcross = ((cols.toLong + segW - 1) / segW).toInt
+    val nSegs = segsAcross * ((rows.toLong + segH - 1) / segH)
+    require(segOffsets.length == nSegs && segCounts.length == nSegs,
+      s"corrupt TIFF: a $rows x $cols raster in $segH x $segW segments has $nSegs segments, " +
+        s"but the file lists ${segOffsets.length} offsets and ${segCounts.length} byte counts")
+    // strips shrink at the image edge; tiles stay padded to segH x segW
+    def segRows(s: Int): Int = if (tiledLayout) segH else math.min(segH, rows - (s / segsAcross) * segH)
 
-    def inflate(off: Int, len: Int, expected: Int): Array[Byte] = {
-      val inf = new java.util.zip.Inflater()
-      inf.setInput(bytes, off, len)
-      val out = new Array[Byte](expected)
-      var done = 0
-      while (!inf.finished() && done < expected) {
-        val n = inf.inflate(out, done, expected - done)
-        if (n == 0 && inf.needsInput())
-          throw new java.io.IOException("truncated DEFLATE segment")
-        done += n
-      }
-      inf.end()
-      out
+    // each segment's decoded size, checked before anything is allocated:
+    // uncompressed samples must be in the file, and a compressed segment
+    // holds at most its byte count times the codec's expansion limit
+    // (PackBits repeats one byte 128 times for 2; an LZW code of >= 9
+    // bits emits at most 4096 bytes; deflate expands at most 1032:1).
+    // The segments tile the raster, so this also bounds rows x cols.
+    def bytesOf(a: Int, b: Int): Long = Bytes.times(Bytes.times(a, b), bps)
+    val ratio = compression match {
+      case 1 => 1L; case 32773 => 64L; case 5 => 4096L * 8 / 9; case _ => Bytes.DeflateRatio.toLong
     }
+    val segBytes = Array.tabulate(nSegs.toInt) { s =>
+      val need = bytesOf(segRows(s), segW)
+      val have = if (compression == 1) need else segCounts(s)
+      in.check(segOffsets(s), have, 1, s"segment-$s data")
+      Bytes.size(need, have * ratio, "TIFF", s"segment-$s")
+    }
+    val n = Bytes.size(bytesOf(rows, cols), segBytes.map(_.toLong).sum, "TIFF", s"$rows x $cols raster") / bps
 
     // PackBits (compression 32773): runs of [n >= 0: n+1 literal bytes]
     // and [n in -127..-1: the next byte repeated 1-n times]; -128 is a
     // no-op. Older USGS distributions still ship this.
-    def unpackBits(off: Int, len: Int, expected: Int): Array[Byte] = {
+    def unpackBits(s: Int, off: Int, len: Int, expected: Int): Array[Byte] = {
       val out = new Array[Byte](expected)
       var i = off
       val end = off + len
@@ -211,31 +213,29 @@ object Tiff {
         i += 1
         if (n >= 0) {
           val cnt = n + 1
-          if (i + cnt > end || o + cnt > expected)
-            throw new java.io.IOException("truncated PackBits literal run")
+          require(i + cnt <= end && o + cnt <= expected, s"corrupt TIFF: segment-$s PackBits literal run at byte ${i - 1}")
           System.arraycopy(bytes, i, out, o, cnt)
           i += cnt; o += cnt
         } else if (n != -128) {
           val cnt = 1 - n
-          if (i >= end || o + cnt > expected)
-            throw new java.io.IOException("truncated PackBits repeat run")
+          require(i < end && o + cnt <= expected, s"corrupt TIFF: segment-$s PackBits repeat run at byte ${i - 1}")
           java.util.Arrays.fill(out, o, o + cnt, bytes(i))
           i += 1; o += cnt
         }
       }
-      if (o < expected) throw new java.io.IOException("short PackBits segment")
+      require(o == expected, s"corrupt TIFF: segment-$s PackBits stops at $o of $expected bytes")
       out
     }
 
     /** TIFF-variant LZW: MSB-first bit packing, 9->12-bit codes with the
       * spec's "early change" (width grows one code early), Clear=256. */
-    def lzw(off: Int, len: Int, expected: Int): Array[Byte] = {
+    def lzw(s: Int, off: Int, len: Int, expected: Int): Array[Byte] = {
       val out = new Array[Byte](expected)
       var outPos = 0
       var bitPos = 0L
       val bitEnd = len.toLong * 8
       def nextCode(width: Int): Int = {
-        if (bitPos + width > bitEnd) return 257 // truncated -> treat as EOI
+        if (bitPos + width > bitEnd) return 257 // out of codes: EOI
         var v = 0
         var i = 0
         while (i < width) {
@@ -271,7 +271,7 @@ object Tiff {
           val entry =
             if (code < tableSize && table(code) != null) table(code)
             else {
-              require(prev != null, s"bad LZW code $code")
+              require(prev != null, s"corrupt TIFF: segment-$s bad LZW code $code")
               prev :+ prev(0) // the KwKwK special case
             }
           emit(entry)
@@ -284,140 +284,79 @@ object Tiff {
         if (tableSize == (1 << width) - 1 && width < 12) width += 1 // early change
         code = nextCode(width)
       }
+      require(outPos == expected, s"corrupt TIFF: segment-$s LZW stops at $outPos of $expected bytes")
       out
     }
 
     /** One segment as float samples (decompressed, predictor applied;
       * int16 widened, float32 taken bit-exact). */
-    def segFloats(s: Int, segRows: Int): Array[Float] = {
-      val bps = bits / 8
-      val expectedBytes = segRows * segW * bps
-      val off = offInt(segOffsets(s), s"segment-$s data offset")
-      // refuse a truncated segment loudly: copyOfRange silently ZERO-PADS
-      // past the end of the array (silent zero elevations on a corrupt or
-      // hostile file), and the codec paths would read out of bounds with
-      // an untyped error; the bound is Long arithmetic so off + count
-      // cannot overflow Int
-      def bounded(count: Int): Int = {
-        require(count >= 0 && off.toLong + count <= bytes.length,
-          s"corrupt TIFF: segment $s data [$off, ${off.toLong + count}) " +
-            s"exceeds the ${bytes.length}-byte file")
-        count
-      }
+    def segFloats(s: Int): Array[Float] = {
+      val off = segOffsets(s).toInt
+      val len = segCounts(s).toInt
       val data = compression match {
-        case 1 => java.util.Arrays.copyOfRange(bytes, off, off + bounded(expectedBytes))
-        case 5 => lzw(off, bounded(offInt(segCounts(s), s"segment-$s byte count")), expectedBytes)
-        case 32773 => unpackBits(off, bounded(offInt(segCounts(s), s"segment-$s byte count")), expectedBytes)
-        case _ => inflate(off, bounded(offInt(segCounts(s), s"segment-$s byte count")), expectedBytes)
+        case 1 => in.pos = off; in.slice(segBytes(s), s"segment-$s data")
+        case 5 => lzw(s, off, len, segBytes(s))
+        case 32773 => unpackBits(s, off, len, segBytes(s))
+        case _ => Bytes.inflate(bytes, off, len, segBytes(s), s"TIFF segment-$s")
       }
-      val out = new Array[Float](segRows * segW)
-      if (bits == 16) {
-        val shorts = new Array[Short](out.length)
-        var k = 0
-        while (k < shorts.length) {
-          val o = 2 * k
-          shorts(k) =
-            (if (le) (data(o) & 0xff) | (data(o + 1) << 8)
-             else (data(o) << 8) | (data(o + 1) & 0xff)).toShort
-          k += 1
-        }
-        if (predictor == 2) { // horizontal differencing, per segment row
-          var r = 0
-          while (r < segRows) {
-            var c = 1
-            val base = r * segW
-            while (c < segW) {
-              shorts(base + c) = (shorts(base + c) + shorts(base + c - 1)).toShort
-              c += 1
-            }
-            r += 1
+      val seg = Bytes.Reader(data, "TIFF", in.le)
+      val samples = segBytes(s) / bps
+      if (sampleFormat == 3 && predictor == 3) {
+        // TechNote3 floating-point predictor, per segment row: the
+        // encoder shuffles each row's floats into big-endian byte planes
+        // (all MSBs, then the next byte, ...) and then byte-differences
+        // the whole row stream. Undo: cumulative-sum the row bytes, then
+        // read pixel k from plane bytes at p*segW + k, MSB first (plane
+        // order is endianness-independent by spec).
+        val rowBytes = segW * 4
+        val out = new Array[Float](samples)
+        var r = 0
+        while (r * rowBytes < data.length) {
+          val base = r * rowBytes
+          var i = 1
+          while (i < rowBytes) {
+            data(base + i) = (data(base + i) + data(base + i - 1)).toByte
+            i += 1
           }
+          var c = 0
+          while (c < segW) {
+            val v = ((data(base + c) & 0xff) << 24) |
+              ((data(base + segW + c) & 0xff) << 16) |
+              ((data(base + 2 * segW + c) & 0xff) << 8) |
+              (data(base + 3 * segW + c) & 0xff)
+            out(r * segW + c) = java.lang.Float.intBitsToFloat(v)
+            c += 1
+          }
+          r += 1
         }
-        var k2 = 0
-        while (k2 < out.length) { out(k2) = shorts(k2).toFloat; k2 += 1 }
+        out
       } else if (sampleFormat == 3) { // float32 (Copernicus-style DEMs)
-        if (predictor == 3) {
-          // TechNote3 floating-point predictor, per segment row: the
-          // encoder shuffles each row's floats into big-endian byte
-          // planes (all MSBs, then the next byte, ...) and then
-          // byte-differences the whole row stream. Undo: cumulative-sum
-          // the row bytes, then reassemble pixel k from plane bytes at
-          // p*segW + k, MSB first (plane order is endianness-independent
-          // by spec).
-          val rowBytes = segW * 4
-          var r = 0
-          while (r < segRows) {
-            val base = r * rowBytes
-            var i = 1
-            while (i < rowBytes) {
-              data(base + i) = (data(base + i) + data(base + i - 1)).toByte
-              i += 1
-            }
-            var c = 0
-            while (c < segW) {
-              val v = ((data(base + c) & 0xff) << 24) |
-                ((data(base + segW + c) & 0xff) << 16) |
-                ((data(base + 2 * segW + c) & 0xff) << 8) |
-                (data(base + 3 * segW + c) & 0xff)
-              out(r * segW + c) = java.lang.Float.intBitsToFloat(v)
-              c += 1
-            }
-            r += 1
-          }
-        } else {
+        seg.floats(0, samples, s"segment-$s samples")
+      } else { // int16, or int32 (some lidar-derived national DTMs ship Int32)
+        val v =
+          if (bits == 16) { val sh = seg.shorts(0, samples, s"segment-$s samples"); Array.tabulate[Int](samples)(sh(_)) }
+          else seg.ints(0, samples, s"segment-$s samples")
+        // horizontal differencing, per segment row; 16-bit sums wrap
+        // like the shorts they were, so they are narrowed back after
+        if (predictor == 2) {
           var k = 0
-          while (k < out.length) {
-            val o = 4 * k
-            val v =
-              if (le) (data(o) & 0xff) | ((data(o + 1) & 0xff) << 8) |
-                ((data(o + 2) & 0xff) << 16) | ((data(o + 3) & 0xff) << 24)
-              else ((data(o) & 0xff) << 24) | ((data(o + 1) & 0xff) << 16) |
-                ((data(o + 2) & 0xff) << 8) | (data(o + 3) & 0xff)
-            out(k) = java.lang.Float.intBitsToFloat(v)
+          while (k < samples) {
+            if (k % segW != 0) v(k) += v(k - 1)
             k += 1
           }
         }
-      } else { // int32 (some lidar-derived national DTMs ship Int32)
-        val ints = new Array[Int](out.length)
-        var k = 0
-        while (k < ints.length) {
-          val o = 4 * k
-          ints(k) =
-            if (le) (data(o) & 0xff) | ((data(o + 1) & 0xff) << 8) |
-              ((data(o + 2) & 0xff) << 16) | ((data(o + 3) & 0xff) << 24)
-            else ((data(o) & 0xff) << 24) | ((data(o + 1) & 0xff) << 16) |
-              ((data(o + 2) & 0xff) << 8) | (data(o + 3) & 0xff)
-          k += 1
-        }
-        if (predictor == 2) { // horizontal differencing, per segment row
-          var r = 0
-          while (r < segRows) {
-            var c = 1
-            val base = r * segW
-            while (c < segW) {
-              ints(base + c) = ints(base + c) + ints(base + c - 1)
-              c += 1
-            }
-            r += 1
-          }
-        }
-        var k2 = 0
-        while (k2 < out.length) { out(k2) = ints(k2).toFloat; k2 += 1 }
+        Array.tabulate(samples)(k => if (bits == 16) v(k).toShort.toFloat else v(k).toFloat)
       }
-      out
     }
 
-    val n = rows * cols
     val values = new Array[Float](n)
     var mask: Array[Boolean] = null
     var s = 0
-    while (s < segOffsets.length) {
+    while (s < nSegs) {
       val row0 = (s / segsAcross) * segH
       val col0 = (s % segsAcross) * segW
-      // strips shrink at the image edge; tiles stay padded to segH x segW
-      val segRows = if (tiledLayout) segH else math.min(segH, rows - row0)
-      val floats = segFloats(s, segRows)
-      val copyRows = math.min(segRows, rows - row0)
+      val floats = segFloats(s)
+      val copyRows = math.min(segRows(s), rows - row0)
       val copyCols = math.min(segW, cols - col0)
       var r = 0
       while (r < copyRows) {

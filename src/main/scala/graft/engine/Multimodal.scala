@@ -74,21 +74,15 @@ object Multimodal {
     }
   }
 
-  /** Split a length-framed video payload into its PNG frames. */
+  /** Split a length-framed video payload into its PNG frames; a length
+    * or frame past the payload refuses by name. */
   def videoFrames(payload: Array[Byte]): Iterator[Array[Byte]] = new Iterator[Array[Byte]] {
-    private var off = 0
-    def hasNext: Boolean = off < payload.length
+    private val in = graft.core.Bytes.Reader(payload, "video", scope = "payload")
+    def hasNext: Boolean = in.hasMore
     def next(): Array[Byte] = {
-      require(payload.length - off >= 4,
-        s"corrupt video: frame length at byte $off runs past the ${payload.length}-byte payload")
-      val len = ((payload(off) & 0xff) << 24) | ((payload(off + 1) & 0xff) << 16) |
-        ((payload(off + 2) & 0xff) << 8) | (payload(off + 3) & 0xff)
-      // a declared length past the payload would zero-pad through copyOfRange
-      require(len >= 0 && len <= payload.length - off - 4,
-        s"corrupt video: frame [${off + 4}, ${off + 4L + len}) runs past the ${payload.length}-byte payload")
-      val frame = java.util.Arrays.copyOfRange(payload, off + 4, off + 4 + len)
-      off += 4 + len
-      frame
+      val len = in.u32(in.pos, "frame length")
+      in.pos += 4
+      in.slice(len, "frame")
     }
   }
 

@@ -169,7 +169,9 @@ final class O5mWriter(
 }
 
 /** Minimal o5m reader for round-trip verification (plays the role of the
-  * reference's osmium-based decode checks, tests/test_output.py:96-161). */
+  * reference's osmium-based decode checks, tests/test_output.py:96-161).
+  * Each dataset is read in place through `Bytes.Reader`, so a length,
+  * varint or string past its dataset refuses by name. */
 object O5mReader {
   final case class Decoded(
       bbox: Seq[Long],
@@ -177,7 +179,7 @@ object O5mReader {
       ways: Seq[(Long, Seq[Long], Seq[(String, String)])])
 
   def decode(buf: Array[Byte]): Decoded = {
-    var p = 0
+    val in = graft.core.Bytes.Reader(buf, "o5m")
     var lastNodeId = 0L
     var lastWayId = 0L
     var lastRef = 0L
@@ -185,129 +187,76 @@ object O5mReader {
     var lastLat = 0L
     var lastTs = 0L
     var bbox: Seq[Long] = Nil
-    val table = new scala.collection.mutable.ArrayBuffer[Array[Byte]]()
+    val table = new scala.collection.mutable.ArrayBuffer[(String, String)]()
     val nodes = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     val ways = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long], Seq[(String, String)])]
 
-    def readStringPair(payload: Array[Byte], pos0: Int): ((String, String), Int) = {
-      var pos = pos0
-      if (payload(pos) == 0) {
-        // inline pair: \0 key \0 value \0
-        val start = pos
-        pos += 1
-        val kStart = pos
-        while (payload(pos) != 0) pos += 1
-        val k = new String(payload, kStart, pos - kStart, "UTF-8")
-        pos += 1
-        val vStart = pos
-        while (payload(pos) != 0) pos += 1
-        val v = new String(payload, vStart, pos - vStart, "UTF-8")
-        pos += 1
-        val raw = java.util.Arrays.copyOfRange(payload, start, pos)
-        if (raw.length <= 250) table += raw
-        ((k, v), pos)
+    // a pair is inline (\0 key \0 value \0, tabled when at most 250
+    // bytes) or a back-reference into the table (1 = most recent)
+    def stringPair(d: graft.core.Bytes.Reader): (String, String) = {
+      val start = d.pos
+      if (d.u8(start, "string pair") == 0) {
+        d.pos += 1
+        val kv = (d.cstring(), d.cstring())
+        if (d.pos - start <= 250) table += kv
+        kv
       } else {
-        val (ref, np) = Varint.readUnsigned(payload, pos)
-        val raw = table(table.size - ref.toInt)
-        // parse raw \0 key \0 value \0
-        var q = 1
-        val kStart = q
-        while (raw(q) != 0) q += 1
-        val k = new String(raw, kStart, q - kStart, "UTF-8")
-        q += 1
-        val vStart = q
-        while (raw(q) != 0) q += 1
-        val v = new String(raw, vStart, q - vStart, "UTF-8")
-        ((k, v), np)
+        val ref = d.varint()
+        require(ref >= 1 && ref <= table.size,
+          s"corrupt o5m: string back-reference $ref at byte $start past the ${table.size}-entry table")
+        table(table.size - ref.toInt)
       }
     }
 
-    def readVersion(payload: Array[Byte], pos0: Int): Int = {
-      var pos = pos0
-      val (version, p1) = Varint.readUnsigned(payload, pos)
-      pos = p1
-      if (version == 0) return pos
-      // the wire carries a timestamp DELTA; author info follows whenever
-      // the delta-decoded ABSOLUTE timestamp is non-zero (o5m spec). The
-      // writer emits delta 0 on non-first entities after a non-zero first
-      // timestamp, so gating on the raw delta would desync the stream.
-      val (tsDelta, p2) = Varint.readSigned(payload, pos)
-      pos = p2
-      lastTs += tsDelta
-      if (lastTs != 0) {
-        val (_, p3) = Varint.readSigned(payload, pos) // changeset
-        pos = p3
-        // uid/user string pair (we only ever write the empty pair)
-        if (payload(pos) == 0) {
-          val start = pos
-          pos += 3
-          val raw = java.util.Arrays.copyOfRange(payload, start, pos)
-          table += raw
-        } else {
-          val (_, np) = Varint.readUnsigned(payload, pos)
-          pos = np
+    def version(d: graft.core.Bytes.Reader): Unit =
+      if (d.varint() != 0) {
+        // the wire carries a timestamp DELTA; author info follows whenever
+        // the delta-decoded ABSOLUTE timestamp is non-zero (o5m spec). The
+        // writer emits delta 0 on non-first entities after a non-zero first
+        // timestamp, so gating on the raw delta would desync the stream.
+        lastTs += d.zigzag()
+        if (lastTs != 0) {
+          d.zigzag() // changeset
+          stringPair(d) // uid/user (we only ever write the empty pair)
         }
       }
-      pos
-    }
 
     var ended = false
-    while (p < buf.length) {
-      (buf(p) & 0xff) match {
+    while (!ended && in.hasMore) {
+      in.u8(in.pos, "dataset type") match {
         case O5m.Reset =>
           lastNodeId = 0; lastWayId = 0; lastRef = 0; lastLon = 0; lastLat = 0
           lastTs = 0
           table.clear()
-          p += 1
-        case O5m.EndOfFile => p = buf.length; ended = true
+          in.pos += 1
+        case O5m.EndOfFile => ended = true
         case typ =>
-          val (len, p1) = Varint.readUnsigned(buf, p + 1)
-          // copyOfRange would zero-pad a dataset cut off by a truncated file
-          require(len >= 0 && len <= buf.length - p1,
-            s"corrupt o5m: dataset 0x${typ.toHexString} [$p1, ${p1 + len}) runs past the ${buf.length}-byte file")
-          val payload = java.util.Arrays.copyOfRange(buf, p1, p1 + len.toInt)
-          p = p1 + len.toInt
+          val at = in.pos
+          in.pos += 1
+          val d = in.sub(in.varint(), s"dataset 0x${typ.toHexString}")
           typ match {
             case O5m.HeaderType => // "o5m2"
             case O5m.TimestampType => // file timestamp
             case O5m.BBoxType =>
-              var q = 0
               val b = scala.collection.mutable.ArrayBuffer.empty[Long]
-              while (q < payload.length) {
-                val (v, nq) = Varint.readSigned(payload, q); b += v; q = nq
-              }
+              while (d.hasMore) b += d.zigzag()
               bbox = b.toSeq
             case O5m.NodeType =>
-              val (idD, q1) = Varint.readSigned(payload, 0)
-              lastNodeId += idD
-              var q = readVersion(payload, q1)
-              val (lonD, q2) = Varint.readSigned(payload, q)
-              val (latD, q3) = Varint.readSigned(payload, q2)
-              q = q3
-              lastLon += lonD; lastLat += latD
+              lastNodeId += d.zigzag()
+              version(d)
+              lastLon += d.zigzag(); lastLat += d.zigzag()
               nodes += ((lastNodeId, lastLon, lastLat))
             case O5m.WayType =>
-              val (idD, q1) = Varint.readSigned(payload, 0)
-              lastWayId += idD
-              var q = readVersion(payload, q1)
-              val (refLen, q2) = Varint.readUnsigned(payload, q)
-              q = q2
-              val refEnd = q + refLen.toInt
-              val refs = scala.collection.mutable.ArrayBuffer.empty[Long]
-              while (q < refEnd) {
-                val (d, nq) = Varint.readSigned(payload, q)
-                lastRef += d
-                refs += lastRef
-                q = nq
-              }
+              lastWayId += d.zigzag()
+              version(d)
+              val refs = d.sub(d.varint(), "way refs")
+              val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
+              while (refs.hasMore) { lastRef += refs.zigzag(); ids += lastRef }
               val tags = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-              while (q < payload.length) {
-                val (kv, nq) = readStringPair(payload, q)
-                tags += kv
-                q = nq
-              }
-              ways += ((lastWayId, refs.toSeq, tags.toSeq))
-            case other => throw new IllegalStateException(s"unknown o5m dataset type 0x${other.toHexString}")
+              while (d.hasMore) tags += stringPair(d)
+              ways += ((lastWayId, ids.toSeq, tags.toSeq))
+            case other => throw new IllegalArgumentException(
+              s"corrupt o5m: unknown dataset type 0x${other.toHexString} at byte $at")
           }
       }
     }

@@ -1,8 +1,8 @@
 package graft.sinks
 
 import java.io.OutputStream
-import java.util.zip.{Deflater, Inflater}
-import graft.core.BBox
+import java.util.zip.Deflater
+import graft.core.{BBox, Bytes}
 
 /** OSM PBF sink (the reference's pbfUtil delegates to the osmium C++
   * library; this is a from-scratch encoder of the public PBF format:
@@ -52,30 +52,6 @@ object Pbf {
       val b = s.getBytes("UTF-8")
       bytes(field, b, b.length)
     }
-  }
-
-  /** Inflate one blob to exactly `rawSize` bytes. A stream that stalls
-    * (truncated), fails to parse or ends short refuses by name instead of
-    * spinning or zero-padding; deflate expands at most 1032:1, so a
-    * larger declared size is refused before it is allocated. */
-  def unzlib(data: Array[Byte], rawSize: Int): Array[Byte] = {
-    require(rawSize >= 0 && rawSize <= data.length.toLong * 1032,
-      s"corrupt PBF: raw_size $rawSize cannot inflate from ${data.length} zlib bytes")
-    val inf = new Inflater()
-    try {
-      inf.setInput(data)
-      val out = new Array[Byte](rawSize)
-      var off = 0
-      while (off < rawSize) {
-        val n =
-          try inf.inflate(out, off, rawSize - off)
-          catch { case e: java.util.zip.DataFormatException =>
-            throw new IllegalArgumentException(s"corrupt PBF zlib_data: ${e.getMessage}") }
-        require(n > 0, s"corrupt PBF zlib_data: stream stops at $off of $rawSize bytes")
-        off += n
-      }
-      out
-    } finally inf.end()
   }
 }
 
@@ -233,10 +209,12 @@ final class PbfWriter(out: OutputStream, bbox: BBox, generator: String = "graft 
 }
 
 /** Minimal PBF decoder for round-trip verification (plays the role of the
-  * reference's osmium decode, tests/test_output.py:96-161). */
+  * reference's osmium decode, tests/test_output.py:96-161). Every message
+  * is read in place through `Bytes.Reader`, so a length past its message
+  * refuses by name; blobs inflate through `Bytes.inflate`. */
 object PbfReader {
-  import Pbf._
   import scala.collection.immutable.ArraySeq
+  import Bytes.Reader
 
   final case class Decoded(
       bboxNano: Seq[Long], // left, right, top, bottom
@@ -244,92 +222,68 @@ object PbfReader {
       nodes: Seq[(Long, Long, Long)], // id, lon1e7, lat1e7
       ways: Seq[(Long, Seq[Long], Seq[(String, String)])])
 
-  private final class ProtoIn(val buf: Array[Byte]) {
-    var pos = 0
-    def hasMore: Boolean = pos < buf.length
-    def varint(): Long = {
-      var shift = 0; var v = 0L; var b = 0L
-      do {
-        require(pos < buf.length && shift < 64, s"corrupt PBF: varint at byte $pos runs past its message")
-        b = buf(pos) & 0xffL; v |= (b & 0x7f) << shift; shift += 7; pos += 1
-      } while ((b & 0x80) != 0)
-      v
-    }
-    def zigzag(): Long = { val u = varint(); (u >>> 1) ^ -(u & 1) }
-    def lenBytes(): Array[Byte] = {
-      val n = varint()
-      val r = slice(buf, pos, n, "length-delimited field")
-      pos += n.toInt
-      r
-    }
-    def skip(wire: Int): Unit = wire match {
-      case 0 => varint()
-      case 2 => lenBytes()
-      case 5 => pos += 4
-      case 1 => pos += 8
-      case w => throw new IllegalArgumentException(s"corrupt PBF: wire type $w")
-    }
+  private def field(in: Reader): Reader = in.sub(in.varint(), "length-delimited field")
+  private def string(in: Reader): String = {
+    val f = field(in)
+    new String(f.buf, f.off, f.length, java.nio.charset.StandardCharsets.UTF_8)
   }
-
-  /** `n` bytes of `buf` from `off`, refused by name when they run past its
-    * end (a plain copyOfRange would zero-pad a truncated file). */
-  private def slice(buf: Array[Byte], off: Int, n: Long, field: String): Array[Byte] = {
-    require(n >= 0 && n <= buf.length - off,
-      s"corrupt PBF: $field [$off, ${off + n}) is outside its ${buf.length}-byte message")
-    java.util.Arrays.copyOfRange(buf, off, off + n.toInt)
+  private def skip(in: Reader, wire: Int): Unit = wire match {
+    case 0 => in.varint()
+    case 2 => field(in)
+    case 5 => in.sub(4, "fixed32 field")
+    case 1 => in.sub(8, "fixed64 field")
+    case w => throw new IllegalArgumentException(s"corrupt PBF: wire type $w at byte ${in.pos}")
   }
 
   def decode(file: Array[Byte]): Decoded = {
-    var pos = 0
+    val in = Reader(file, "PBF")
     var bbox: Seq[Long] = Nil
     val features = scala.collection.mutable.ArrayBuffer.empty[String]
     val nodes = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     val ways = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long], Seq[(String, String)])]
-    while (pos < file.length) {
-      val hlen = java.nio.ByteBuffer.wrap(slice(file, pos, 4, "BlobHeader length")).getInt & 0xffffffffL
-      pos += 4
-      val header = new ProtoIn(slice(file, pos, hlen, "BlobHeader"))
-      pos += hlen.toInt
+    while (in.hasMore) {
+      val hlen = in.u32(in.pos, "BlobHeader length")
+      in.pos += 4
+      val header = in.sub(hlen, "BlobHeader")
       var blobType = ""
       var datasize = 0L
       while (header.hasMore) {
         val k = header.varint()
         (k >> 3).toInt match {
-          case 1 => blobType = new String(header.lenBytes(), "UTF-8")
+          case 1 => blobType = string(header)
           case 3 => datasize = header.varint()
-          case _ => header.skip((k & 7).toInt)
+          case _ => skip(header, (k & 7).toInt)
         }
       }
-      val blob = new ProtoIn(slice(file, pos, datasize, s"$blobType blob"))
-      pos += datasize.toInt
-      var payload: Array[Byte] = null
-      var rawSize = -1
-      var zdata: Array[Byte] = null
+      val blob = in.sub(datasize, s"$blobType blob")
+      var payload: Reader = null
+      var rawSize = -1L
+      var zdata: Reader = null
       while (blob.hasMore) {
         val k = blob.varint()
         (k >> 3).toInt match {
-          case 1 => payload = blob.lenBytes()
-          case 2 => rawSize = blob.varint().toInt
-          case 3 => zdata = blob.lenBytes()
-          case _ => blob.skip((k & 7).toInt)
+          case 1 => payload = field(blob)
+          case 2 => rawSize = blob.varint()
+          case 3 => zdata = field(blob)
+          case _ => skip(blob, (k & 7).toInt)
         }
       }
       if (payload == null) {
         require(zdata != null, s"corrupt PBF: $blobType blob has neither raw nor zlib_data")
-        payload = unzlib(zdata, rawSize)
+        payload = Reader(Bytes.inflate(file, zdata.off, zdata.length, rawSize, "PBF zlib_data"),
+          "PBF", scope = s"$blobType block")
       }
       if (blobType == "OSMHeader") {
-        val hb = new ProtoIn(payload)
-        while (hb.hasMore) {
-          val k = hb.varint()
+        while (payload.hasMore) {
+          val k = payload.varint()
           (k >> 3).toInt match {
             case 1 =>
-              val bb = new ProtoIn(hb.lenBytes())
+              val bb = field(payload)
               val vals = scala.collection.mutable.ArrayBuffer.empty[Long]
-              while (bb.hasMore) { val kk = bb.varint(); vals += bb.zigzag() }
+              while (bb.hasMore) { bb.varint(); vals += bb.zigzag() }
               bbox = vals.toSeq
-            case 4 => features += new String(hb.lenBytes(), "UTF-8")
-            case _ => hb.skip((k & 7).toInt)
+            case 4 => features += string(payload)
+            case _ => skip(payload, (k & 7).toInt)
           }
         }
       } else {
@@ -340,44 +294,48 @@ object PbfReader {
   }
 
   private def decodeData(
-      payload: Array[Byte],
+      block: Reader,
       nodes: scala.collection.mutable.ArrayBuffer[(Long, Long, Long)],
       ways: scala.collection.mutable.ArrayBuffer[(Long, Seq[Long], Seq[(String, String)])]): Unit = {
-    val block = new ProtoIn(payload)
     var granularity = 100L
     val strings = scala.collection.mutable.ArrayBuffer.empty[String]
-    val groups = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+    val groups = scala.collection.mutable.ArrayBuffer.empty[Reader]
     while (block.hasMore) {
       val k = block.varint()
       (k >> 3).toInt match {
         case 1 =>
-          val st = new ProtoIn(block.lenBytes())
-          while (st.hasMore) { val kk = st.varint(); strings += new String(st.lenBytes(), "UTF-8") }
-        case 2 => groups += block.lenBytes()
+          val st = field(block)
+          while (st.hasMore) { st.varint(); strings += string(st) }
+        case 2 => groups += field(block)
         case 17 => granularity = block.varint()
-        case _ => block.skip((k & 7).toInt)
+        case _ => skip(block, (k & 7).toInt)
       }
     }
+    def str(i: Long): String = {
+      require(i >= 0 && i < strings.size, s"corrupt PBF: string index $i past the ${strings.size}-entry string table")
+      strings(i.toInt)
+    }
     val scale = granularity / 100L // -> 1e-7 degree units
-    groups.foreach { g =>
-      val group = new ProtoIn(g)
+    groups.foreach { group =>
       while (group.hasMore) {
         val k = group.varint()
         (k >> 3).toInt match {
           case 2 => // dense
-            val dense = new ProtoIn(group.lenBytes())
+            val dense = field(group)
             var ids = Array.emptyLongArray
             var lats = Array.emptyLongArray
             var lons = Array.emptyLongArray
             while (dense.hasMore) {
               val kk = dense.varint()
               (kk >> 3).toInt match {
-                case 1 => ids = packed(dense.lenBytes())
-                case 8 => lats = packed(dense.lenBytes())
-                case 9 => lons = packed(dense.lenBytes())
-                case _ => dense.skip((kk & 7).toInt)
+                case 1 => ids = packed(field(dense), signed = true)
+                case 8 => lats = packed(field(dense), signed = true)
+                case 9 => lons = packed(field(dense), signed = true)
+                case _ => skip(dense, (kk & 7).toInt)
               }
             }
+            require(lats.length == ids.length && lons.length == ids.length,
+              s"corrupt PBF: DenseNodes has ${ids.length} ids, ${lats.length} lats and ${lons.length} lons")
             var id = 0L; var lat = 0L; var lon = 0L
             var i = 0
             while (i < ids.length) {
@@ -386,7 +344,7 @@ object PbfReader {
               i += 1
             }
           case 3 => // way
-            val way = new ProtoIn(group.lenBytes())
+            val way = field(group)
             var id = 0L
             var keys = Array.emptyLongArray
             var vals = Array.emptyLongArray
@@ -395,18 +353,18 @@ object PbfReader {
               val kk = way.varint()
               (kk >> 3).toInt match {
                 case 1 => id = way.varint()
-                case 2 => keys = packedU(way.lenBytes())
-                case 3 => vals = packedU(way.lenBytes())
+                case 2 => keys = packed(field(way), signed = false)
+                case 3 => vals = packed(field(way), signed = false)
                 case 8 =>
-                  refs = packed(way.lenBytes())
+                  refs = packed(field(way), signed = true)
                   var i = 1
                   while (i < refs.length) { refs(i) += refs(i - 1); i += 1 }
-                case _ => way.skip((kk & 7).toInt)
+                case _ => skip(way, (kk & 7).toInt)
               }
             }
-            val tags = keys.toSeq.zip(vals).map { case (ki, vi) => (strings(ki.toInt), strings(vi.toInt)) }
+            val tags = keys.toSeq.zip(vals).map { case (ki, vi) => (str(ki), str(vi)) }
             ways += ((id, ArraySeq.unsafeWrapArray(refs), tags))
-          case _ => group.skip((k & 7).toInt)
+          case _ => skip(group, (k & 7).toInt)
         }
       }
     }
@@ -414,16 +372,9 @@ object PbfReader {
 
   // packed repeated fields as arrays: the decode loops index them, and a
   // List here made every dense block quadratic
-  private def packed(b: Array[Byte]): Array[Long] = {
-    val in = new ProtoIn(b)
+  private def packed(in: Reader, signed: Boolean): Array[Long] = {
     val out = Array.newBuilder[Long]
-    while (in.hasMore) out += in.zigzag()
-    out.result()
-  }
-  private def packedU(b: Array[Byte]): Array[Long] = {
-    val in = new ProtoIn(b)
-    val out = Array.newBuilder[Long]
-    while (in.hasMore) out += in.varint()
+    while (in.hasMore) out += (if (signed) in.zigzag() else in.varint())
     out.result()
   }
 }

@@ -2,8 +2,9 @@ package graft.sinks
 
 import java.io.{ByteArrayOutputStream, OutputStream}
 
-/** o5m varint codecs (reference semantics: pyhgtmap/varint.py:1-38 —
-  * unsigned LEB128 and the zigzag signed variant). */
+/** o5m varint writers (reference semantics: pyhgtmap/varint.py:1-38 —
+  * unsigned LEB128 and the zigzag signed variant); `Bytes.Reader` reads
+  * them back with `varint()` and `zigzag()`. */
 object Varint {
 
   def writeUnsigned(out: OutputStream, n0: Long): Unit = {
@@ -27,29 +28,5 @@ object Varint {
   }
   def signed(n: Long): Array[Byte] = {
     val o = new ByteArrayOutputStream(10); writeSigned(o, n); o.toByteArray
-  }
-
-  /** Reader over a byte array; returns (value, nextPos). */
-  def readUnsigned(buf: Array[Byte], pos: Int): (Long, Int) = {
-    var p = pos
-    var shift = 0
-    var v = 0L
-    var b = 0L
-    var more = true
-    while (more) {
-      require(p < buf.length && shift < 64, s"corrupt varint at byte $pos of a ${buf.length}-byte buffer")
-      b = buf(p) & 0xffL
-      v |= (b & 0x7f) << shift
-      shift += 7
-      p += 1
-      more = (b & 0x80) != 0
-    }
-    (v, p)
-  }
-
-  def readSigned(buf: Array[Byte], pos: Int): (Long, Int) = {
-    val (u, p) = readUnsigned(buf, pos)
-    val v = if ((u & 1) == 0) u >>> 1 else -((u >>> 1) + 1)
-    (v, p)
   }
 }

@@ -32,6 +32,14 @@ class MultimodalSpec extends AnyFunSuite {
     val g = Png.Image(37, 23, 1, Array.tabulate(37 * 23)(k => ((k * 31) % 251).toByte))
     val dg = Png.decode(Png.encode(g)) // default cycles filters 0..4 by row
     assert(dg.channels == 1 && dg.pixels.sameElements(g.pixels))
+    // an IHDR whose h x (w x ch + 1) scanline bytes overflow an Int is
+    // checked as a Long against the IDAT bytes before it is allocated
+    val wide = Png.encode(img)
+    Seq(16 -> 715827882, 20 -> 2).foreach { case (at, v) =>
+      (0 until 4).foreach(k => wide(at + k) = (v >>> (8 * (3 - k))).toByte)
+    }
+    val eWide = intercept[IllegalArgumentException](Png.decode(wide))
+    assert(eWide.getMessage.contains("corrupt PNG IDAT: inflated size declares 4294967294 bytes"), eWide.getMessage)
   }
 
   test("WAV decode recovers hand-built PCM samples and header fields") {

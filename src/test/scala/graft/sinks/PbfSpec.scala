@@ -2,7 +2,7 @@ package graft.sinks
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.io.ByteArrayOutputStream
-import graft.core.{BBox, Levels}
+import graft.core.{BBox, Bytes, Levels}
 
 /** PBF content-contract tests mirroring the reference's osmium-decoded
   * checks (tests/test_output.py:96-161, 233-270, 272-298). */
@@ -111,9 +111,9 @@ class PbfSpec extends AnyFunSuite {
     val raw = Array.tabulate[Byte](50000)(i => (i * 31 % 251).toByte)
     val d = new java.util.zip.Deflater(); d.setInput(raw); d.finish()
     val z = new Array[Byte](60000); val zn = d.deflate(z); d.end()
-    val e = intercept[IllegalArgumentException](Pbf.unzlib(z.take(zn / 2), raw.length))
+    val e = intercept[IllegalArgumentException](Bytes.inflate(z, 0, zn / 2, raw.length, "PBF zlib_data"))
     assert(e.getMessage.contains("stops at"), e.getMessage)
-    assert(Pbf.unzlib(z.take(zn), raw.length).sameElements(raw))
+    assert(Bytes.inflate(z, 0, zn, raw.length, "PBF zlib_data").sameElements(raw))
   }
 
   test("pipeline writes decodable pbf tiles") {
