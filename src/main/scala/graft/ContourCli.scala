@@ -41,16 +41,16 @@ object ContourCli {
     // ones — same shared helper as RasterPipeline.tiles, so the two
     // surfaces cannot drift)
     val nativeArea = cfg.area.map(a => Crs.nativeAreaString(a, epsg, spec))
-    val transform = Crs.toWgs84(epsg, spec)
+    val proj = Crs.projection(epsg, spec)
     val lonInc0 = (bbox.maxLon - bbox.minLon) / (grid.cols - 1)
     val latInc0 = (bbox.maxLat - bbox.minLat) / (grid.rows - 1)
     // projected CRS + --area: the envelope crop over-covers (the rect
     // tilts under meridian convergence), so mask cells outside the
     // densify-reprojected rect exactly — the rect rides the same path
     // --poly clip polygons do in the pipeline
-    val grid2 = (cfg.area, Crs.fromWgs84(epsg, spec)) match {
-      case (Some(a), Some(fwd)) if !Crs.axisSeparable(epsg, spec) =>
-        val ring = Crs.densifyReproject(Crs.areaRectPolygon(a), fwd)
+    val grid2 = (cfg.area, proj) match {
+      case (Some(a), Some(p)) if !p.axisSeparable =>
+        val ring = Crs.densifyReproject(Crs.areaRectPolygon(a), p.forward)
         val xs = Array.tabulate(grid.cols)(c => bbox.minLon + c * lonInc0)
         val ys = Array.tabulate(grid.rows)(r => bbox.maxLat - r * latInc0)
         Geometry.polygonMask(xs, ys, Seq(ring), bboxExpand = 0.1 * 111320.0) match {
@@ -77,7 +77,7 @@ object ContourCli {
     var totWays = 0L
     slices.zipWithIndex.foreach { case (s, idx) =>
       val gv = new GridView(grid2.values, grid2.mask, s.rowOff * grid.cols + s.colOff, grid.cols, s.rows, s.cols)
-      val tc = ContourGen.tileContours(gv, s.bbox, lonInc, latInc, cfg, transform = transform)
+      val tc = ContourGen.tileContours(gv, s.bbox, lonInc, latInc, cfg, transform = proj)
       totNodes += tc.nbNodes
       totWays += tc.nbWays
       println(f"tile $idx: ${s.rows} x ${s.cols} points, bbox: (${s.bbox.minLon}%.2f, ${s.bbox.minLat}%.2f, ${s.bbox.maxLon}%.2f, ${s.bbox.maxLat}%.2f), levels ${tc.levels.headOption.getOrElse(0)}..${tc.levels.lastOption.getOrElse(0)}, nodes ${tc.nbNodes}, ways ${tc.nbWays}")

@@ -19,9 +19,9 @@ object ContourGen {
       contours: Seq[LevelContours])
 
   /** Generate contours for one tile grid view with bbox-derived axes.
-    * `transform` reprojects traced paths to WGS84 BEFORE simplification,
-    * matching the reference order trace -> transform -> RDP -> split
-    * (hgt/contour.py:133-137). */
+    * `transform` is the source CRS: its inverse reprojects traced paths to
+    * WGS84 BEFORE simplification, matching the reference order trace ->
+    * transform -> RDP -> split (hgt/contour.py:133-137). */
   def tileContours(
       gv: GridView,
       bbox: BBox,
@@ -29,7 +29,7 @@ object ContourGen {
       latInc: Double,
       cfg: JobConfig,
       scratch: Scratch = new Scratch,
-      transform: Option[(Double, Double) => (Double, Double)] = None): TileContours = {
+      transform: Option[Crs.Projection] = None): TileContours = {
     val (minEle, maxEle) = Chop.elevRange(gv)
     val levels =
       Levels.levels(minEle, maxEle, cfg.contourStepSize, cfg.noZero, cfg.minCont, cfg.maxCont)
@@ -45,7 +45,7 @@ object ContourGen {
       val outPaths = new ArrayBuffer[Array[Double]]()
       raw.foreach { path00 =>
         val path0 = transform match {
-          case Some(f) => Crs.transformPath(path00, f)
+          case Some(p) => Crs.transformPath(path00, p.inverse)
           case None    => path00
         }
         val path = cfg.rdpEpsilon match {

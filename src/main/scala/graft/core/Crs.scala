@@ -1,30 +1,29 @@
 package graft.core
 
-/** CRS transforms to/from WGS84 (reference F10: hgt/file.py:132-166
-  * get_transform, applied per traced path in hgt/contour.py:133-134).
+/** CRS transforms between WGS84 and a DEM's source CRS (reference F10:
+  * hgt/file.py:132-166 get_transform, applied per traced path in
+  * hgt/contour.py:133-134). The reference delegates to osgeo/proj and gets
+  * back one transformer that it uses in both directions; here that is one
+  * trait and one table.
   *
-  * The reference delegates to osgeo/proj; here the supported sources are
-  * EPSG:4326 (identity), EPSG:3857 (spherical web-Mercator, exact closed
-  * form), and two PARAMETERIZED projected families backed by an EPSG
-  * constant table: transverse Mercator (ellipsoidal, 6th-order Krüger
-  * series — the formulation GeographicLib/proj use, accurate to
-  * nanometers inside a zone) covering the UTM zones EPSG:326xx/327xx,
-  * ETRS89/NAD83 UTM EPSG:258xx/269xx (GRS80 instances, null datum shift
-  * — see grs80UtmFrame), and British National Grid EPSG:27700 (Airy 1830
-  * + the published OSGB Helmert datum shift), Lambert conformal
-  * conic 2SP (Snyder closed forms) covering Lambert-93 EPSG:2154,
-  * Lambert azimuthal equal-area covering ETRS89-LAEA EPSG:3035,
-  * Albers equal-area conic covering NAD83/Conus Albers EPSG:5070 (USGS
-  * 3DEP/NED) and GDA94/Australian Albers EPSG:3577, and
-  * polar stereographic covering the ArcticDEM/REMA grids
-  * EPSG:3413/3031. These matter because
-  * lidar-derived national DEMs ship in national projected grids.
-  * Other codes fail loudly rather than silently mis-projecting.
-  * All formulas public; independent implementation.
+  *  - [[Projection]]: `forward` (WGS84 lon/lat degrees to native
+  *    coordinates), `inverse` (back) and `axisSeparable`. The families are
+  *    ellipsoidal transverse Mercator (6th-order Krüger series — the
+  *    formulation GeographicLib/proj use, accurate to nanometers inside a
+  *    zone), Lambert conformal conic 2SP, Lambert azimuthal equal-area,
+  *    Albers equal-area conic and polar stereographic (EPSG variants A and
+  *    B), the last four on Snyder's series, which [[Ellipsoid]] holds once;
+  *    plus spherical web Mercator and British National Grid (the published
+  *    OSGB Helmert datum shift, then an Airy 1830 TM).
+  *  - [[projection]]`(epsg, spec)`: a non-empty user-defined spec (GeoKey
+  *    parameters, see [[projSpecString]]) wins; otherwise the one EPSG table
+  *    resolves the code, `None` for EPSG:4326. Other codes fail loudly
+  *    rather than silently mis-projecting.
+  *
+  * These matter because lidar-derived national DEMs ship in national
+  * projected grids. All formulas public; independent implementation.
   */
 object Crs {
-
-  val EarthRadius = 6378137.0
 
   private def atanh(x: Double): Double = 0.5 * math.log((1.0 + x) / (1.0 - x))
   private def asinh(x: Double): Double = math.log(x + math.hypot(1.0, x))
@@ -32,7 +31,7 @@ object Crs {
   /** Normalize a longitude into (-180, 180]. Azimuthal inverses
     * (polar stereographic, LAEA) produce lon0 + atan2-angle, which walks
     * outside the principal range for points more than 180 - |lon0|
-    * degrees from the central meridian — e.g. a 3413 grid cell at 150E
+    * degrees from the central meridian — e.g. an ArcticDEM grid cell at 150E
     * would otherwise come back as -210.
     *
     * Convention note: (-180, 180] (the seam itself maps to +180) is pinned
@@ -51,11 +50,88 @@ object Crs {
     l
   }
 
-  /** Reference ellipsoids (public geodesy constants). */
+  /** A source CRS. `forward` maps WGS84 (lon, lat) degrees to native
+    * coordinates and `inverse` maps them back. `axisSeparable` is true
+    * when inverse lon depends only on x and inverse lat only on y — the
+    * property that lets a grid reproject its AXES to WGS84
+    * (RasterPipeline.sliceMask's separable branch) and crop an --area rect
+    * by index. It holds for web Mercator (cylindrical, equator-aligned),
+    * not for TM/LCC/LAEA/Albers/polar, where meridian convergence or the
+    * azimuthal geometry mixes the axes; those sources clip through the
+    * densify-reprojected polygon (sliceMask's projected branch). */
+  trait Projection extends Serializable {
+    def forward(lon: Double, lat: Double): (Double, Double)
+    def inverse(x: Double, y: Double): (Double, Double)
+    def axisSeparable: Boolean = false
+  }
+
+  /** Reference ellipsoids (public geodesy constants) and the Snyder 1987
+    * series that the conic, azimuthal and polar projections share. */
   final case class Ellipsoid(a: Double, invF: Double) {
     val f: Double = 1.0 / invF
     val e2: Double = f * (2.0 - f)
     val e: Double = math.sqrt(e2)
+
+    /** Snyder eq. 14-15: m(phi), the parallel radius over a. */
+    def m(phi: Double): Double = {
+      val s = math.sin(phi)
+      math.cos(phi) / math.sqrt(1.0 - e2 * s * s)
+    }
+
+    /** Snyder eq. 15-9: t(phi), the conformal-latitude term. */
+    def t(phi: Double): Double = {
+      val s = math.sin(phi)
+      math.tan(math.Pi / 4.0 - phi / 2.0) /
+        math.pow((1.0 - e * s) / (1.0 + e * s), e / 2.0)
+    }
+
+    /** Snyder eq. 3-12: q(phi), proportional to the area between the
+      * equator and phi. */
+    def q(phi: Double): Double = {
+      val s = math.sin(phi)
+      (1.0 - e2) * (s / (1.0 - e2 * s * s) -
+        (1.0 / (2.0 * e)) * math.log((1.0 - e * s) / (1.0 + e * s)))
+    }
+
+    /** q at the pole. */
+    val qp: Double = q(math.Pi / 2.0)
+
+    /** The phi with t(phi) = tP: Snyder's conformal fixed-point iteration
+      * (eq. 7-9; converges in ~4 steps). */
+    def phiFromT(tP: Double): Double = {
+      var phi = math.Pi / 2.0 - 2.0 * math.atan(tP)
+      var i = 0
+      var prev = Double.NaN
+      while (i < 10 && phi != prev) {
+        prev = phi
+        val s = math.sin(phi)
+        phi = math.Pi / 2.0 - 2.0 * math.atan(
+          tP * math.pow((1.0 - e * s) / (1.0 + e * s), e / 2.0))
+        i += 1
+      }
+      phi
+    }
+
+    /** The phi with q(phi) = target: Newton on the exact q from `seed`
+      * (an authalic latitude) instead of Snyder's sin-series, which
+      * truncates at e^6 (~1 cm), so round trips close to machine precision.
+      * dq/dphi = 2(1-e^2) cos(phi) / (1 - e^2 sin^2 phi)^2. */
+    def phiFromQ(target: Double, seed: Double): Double = {
+      var phi = seed
+      var i = 0
+      var delta = 1.0
+      while (i < 10 && math.abs(delta) > 1e-16) {
+        val s = math.sin(phi); val d = 1.0 - e2 * s * s
+        val dq = 2.0 * (1.0 - e2) * math.cos(phi) / (d * d)
+        if (dq < 1e-18) { i = 10 } // at the pole cos -> 0; phi is already there
+        else {
+          delta = (q(phi) - target) / dq
+          phi -= delta
+          i += 1
+        }
+      }
+      phi
+    }
   }
   val Wgs84: Ellipsoid = Ellipsoid(6378137.0, 298.257223563)
   val Grs80: Ellipsoid = Ellipsoid(6378137.0, 298.257222101)
@@ -75,7 +151,7 @@ object Crs {
       val lon0Deg: Double,
       val lat0Deg: Double,
       val falseE: Double,
-      val falseN: Double) extends Serializable {
+      val falseN: Double) extends Projection {
     private val E2 = ell.e2
     private val Ecc = ell.e
     private val N3 = ell.f / (2.0 - ell.f) // third flattening n
@@ -176,61 +252,12 @@ object Crs {
     }
   }
 
-  /** Central meridian of UTM zone 1..60, degrees. */
-  def utmCentralMeridian(zone: Int): Double = -183.0 + 6.0 * zone
-
-  private val tmCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Boolean), TransverseMercator]()
-  /** The UTM TM instance for `zone`/`north` (cached — per-point callers
-    * must not re-derive the series coefficients). */
-  def utmFrame(zone: Int, north: Boolean): TransverseMercator = {
-    require(zone >= 1 && zone <= 60, s"UTM zone $zone out of range 1..60")
-    tmCache.computeIfAbsent((zone, north), { case (z, n) =>
-      new TransverseMercator(Wgs84, 0.9996, utmCentralMeridian(z), 0.0,
-        500000.0, if (n) 0.0 else 10000000.0)
-    })
-  }
-
-  private val grs80TmCache =
-    new java.util.concurrent.ConcurrentHashMap[Int, TransverseMercator]()
-  /** The GRS80-ellipsoid UTM TM instance for `zone` (northern hemisphere)
-    * — the projection frame of ETRS89 / UTM (EPSG:258xx, e.g. the 25832
-    * German national lidar and Copernicus DGM products ship in) and
-    * NAD83 / UTM (EPSG:269xx, USGS products). Datum: ETRS89 and NAD83
-    * are treated as coincident with WGS84 — the realizations drift
-    * sub-meter (ETRS89 ~0.8 m by plate motion, NAD83 ~1.5 m), below a
-    * DEM cell at any product resolution >= 2 m and the same null
-    * transform PROJ applies absent an explicit epoch; the OSGB 27700
-    * path shows what a real (multi-meter) datum shift looks like here. */
-  def grs80UtmFrame(zone: Int): TransverseMercator = {
-    require(zone >= 1 && zone <= 60, s"UTM zone $zone out of range 1..60")
-    grs80TmCache.computeIfAbsent(zone, z =>
-      new TransverseMercator(Grs80, 0.9996, utmCentralMeridian(z), 0.0, 500000.0, 0.0))
-  }
-
-  /** EPSG:2193 — NZGD2000 / New Zealand Transverse Mercator (LINZ
-    * national DEM grid): GRS80, k0 = 0.9996, origin 0N 173E,
-    * FE 1600000, FN 10000000; NZGD2000 ~ WGS84 with the same null
-    * datum treatment as the 258xx zones. */
-  val Nztm2000: TransverseMercator =
-    new TransverseMercator(Grs80, 0.9996, 173.0, 0.0, 1600000.0, 10000000.0)
-
-  /** British National Grid EPSG:27700 projection frame (OSGB36 datum):
-    * Airy 1830, k0 = 0.9996012717, origin 49N 2W, FE 400000, FN -100000
-    * (EPSG registry constants). `forward`/`inverse` speak OSGB36
-    * geodetic coordinates — the WGS84 entry points below compose the
-    * published Helmert datum shift. */
+  /** British National Grid's projection frame (OSGB36 datum): Airy 1830,
+    * k0 = 0.9996012717, origin 49N 2W, FE 400000, FN -100000 (EPSG
+    * registry constants). `forward`/`inverse` speak OSGB36 geodetic
+    * coordinates; [[BritishNationalGrid]] composes the datum shift. */
   val Osgb36Grid: TransverseMercator =
     new TransverseMercator(Airy1830, 0.9996012717, -2.0, 49.0, 400000.0, -100000.0)
-
-  /** (lon, lat) degrees -> (easting, northing) meters in UTM `zone`
-    * (1..60), `north` hemisphere flag. */
-  def wgs84ToUtm(lon: Double, lat: Double, zone: Int, north: Boolean): (Double, Double) =
-    utmFrame(zone, north).forward(lon, lat)
-
-  /** (easting, northing) meters in UTM `zone`/`north` -> (lon, lat) degrees. */
-  def utmToWgs84(easting: Double, northing: Double, zone: Int, north: Boolean): (Double, Double) =
-    utmFrame(zone, north).inverse(easting, northing)
 
   // ------------------------------------------- Helmert datum shifts ---
   /** 7-parameter Helmert transformation (position-vector convention) via
@@ -238,9 +265,10 @@ object Crs {
     * coincident (OSGB36). Parameters are the published OS values; the
     * transformation itself carries the OS-stated ~3.5 m real-world
     * distortion bound — the same bound pyproj's default (non-OSTN15)
-    * 27700 path has. `inv` solves the forward 3x3 system EXACTLY
-    * (adjugate inverse of M = (1+s)I + skew(r)) rather than negating the
-    * parameters, so forward∘inverse closes to double precision. */
+    * British National Grid path has. `inv` solves the forward 3x3 system
+    * EXACTLY (adjugate inverse of M = (1+s)I + skew(r)) rather than
+    * negating the parameters, so forward∘inverse closes to double
+    * precision. */
   final class Helmert7(
       txM: Double, tyM: Double, tzM: Double,
       rxSec: Double, rySec: Double, rzSec: Double,
@@ -304,21 +332,39 @@ object Crs {
     (math.toDegrees(lam), math.toDegrees(phi))
   }
 
-  /** (lon, lat) WGS84 degrees -> EPSG:27700 (easting, northing) meters:
-    * Helmert datum shift to OSGB36, then the Airy TM projection. */
-  def wgs84ToOsgb(lon: Double, lat: Double): (Double, Double) = {
-    val (x, y, z) = geodeticToEcef(Wgs84, lon, lat)
-    val (x2, y2, z2) = Wgs84ToOsgb36(x, y, z)
-    val (lonO, latO) = ecefToGeodetic(Airy1830, x2, y2, z2)
-    Osgb36Grid.forward(lonO, latO)
+  /** British National Grid: WGS84 -> OSGB36 by the Helmert shift, then
+    * the Airy TM projection [[Osgb36Grid]]; the inverse runs the same
+    * steps backwards. */
+  object BritishNationalGrid extends Projection {
+    def forward(lon: Double, lat: Double): (Double, Double) = {
+      val (x, y, z) = geodeticToEcef(Wgs84, lon, lat)
+      val (x2, y2, z2) = Wgs84ToOsgb36(x, y, z)
+      val (lonO, latO) = ecefToGeodetic(Airy1830, x2, y2, z2)
+      Osgb36Grid.forward(lonO, latO)
+    }
+    def inverse(e: Double, n: Double): (Double, Double) = {
+      val (lonO, latO) = Osgb36Grid.inverse(e, n)
+      val (x, y, z) = geodeticToEcef(Airy1830, lonO, latO)
+      val (x2, y2, z2) = Wgs84ToOsgb36.inv(x, y, z)
+      ecefToGeodetic(Wgs84, x2, y2, z2)
+    }
   }
 
-  /** EPSG:27700 (easting, northing) meters -> (lon, lat) WGS84 degrees. */
-  def osgbToWgs84(e: Double, n: Double): (Double, Double) = {
-    val (lonO, latO) = Osgb36Grid.inverse(e, n)
-    val (x, y, z) = geodeticToEcef(Airy1830, lonO, latO)
-    val (x2, y2, z2) = Wgs84ToOsgb36.inv(x, y, z)
-    ecefToGeodetic(Wgs84, x2, y2, z2)
+  /** Spherical web Mercator, exact closed form, on the WGS84 semi-major
+    * axis. */
+  object WebMercator extends Projection {
+    private val R = 6378137.0
+    def forward(lon: Double, lat: Double): (Double, Double) = {
+      val x = R * math.toRadians(lon)
+      val y = R * math.log(math.tan(math.Pi / 4.0 + math.toRadians(lat) / 2.0))
+      (x, y)
+    }
+    def inverse(x: Double, y: Double): (Double, Double) = {
+      val lon = math.toDegrees(x / R)
+      val lat = math.toDegrees(2.0 * math.atan(math.exp(y / R)) - math.Pi / 2.0)
+      (lon, lat)
+    }
+    override def axisSeparable: Boolean = true
   }
 
   // -------------------------------- Lambert conformal conic (LCC-2SP) ---
@@ -329,27 +375,17 @@ object Crs {
       val ell: Ellipsoid,
       lat0Deg: Double, lon0Deg: Double,
       lat1Deg: Double, lat2Deg: Double,
-      falseE: Double, falseN: Double) extends Serializable {
-    private val E2 = ell.e2
-    private val E = ell.e
+      falseE: Double, falseN: Double) extends Projection {
     private val Lon0 = math.toRadians(lon0Deg)
-    private def m(phi: Double): Double = {
-      val s = math.sin(phi)
-      math.cos(phi) / math.sqrt(1.0 - E2 * s * s)
-    }
-    private def t(phi: Double): Double = {
-      val s = math.sin(phi)
-      math.tan(math.Pi / 4.0 - phi / 2.0) /
-        math.pow((1.0 - E * s) / (1.0 + E * s), E / 2.0)
-    }
     private val Lat1 = math.toRadians(lat1Deg)
     private val Lat2 = math.toRadians(lat2Deg)
-    private val N = (math.log(m(Lat1)) - math.log(m(Lat2))) / (math.log(t(Lat1)) - math.log(t(Lat2)))
-    private val Fc = m(Lat1) / (N * math.pow(t(Lat1), N))
-    private val Rho0 = ell.a * Fc * math.pow(t(math.toRadians(lat0Deg)), N)
+    private val N = (math.log(ell.m(Lat1)) - math.log(ell.m(Lat2))) /
+      (math.log(ell.t(Lat1)) - math.log(ell.t(Lat2)))
+    private val Fc = ell.m(Lat1) / (N * math.pow(ell.t(Lat1), N))
+    private val Rho0 = ell.a * Fc * math.pow(ell.t(math.toRadians(lat0Deg)), N)
 
     def forward(lon: Double, lat: Double): (Double, Double) = {
-      val rho = ell.a * Fc * math.pow(t(math.toRadians(lat)), N)
+      val rho = ell.a * Fc * math.pow(ell.t(math.toRadians(lat)), N)
       val gamma = N * (math.toRadians(lon) - Lon0)
       (falseE + rho * math.sin(gamma), falseN + Rho0 - rho * math.cos(gamma))
     }
@@ -361,73 +397,33 @@ object Crs {
       val tP = math.pow(rho / (ell.a * Fc), 1.0 / N)
       val theta = math.atan2(dx, dy)
       val lon = theta / N + Lon0
-      // fixed-point iteration for phi (Snyder eq. 7-9; converges in ~4 steps)
-      var phi = math.Pi / 2.0 - 2.0 * math.atan(tP)
-      var i = 0
-      var prev = Double.NaN
-      while (i < 10 && phi != prev) {
-        prev = phi
-        val s = math.sin(phi)
-        phi = math.Pi / 2.0 - 2.0 * math.atan(
-          tP * math.pow((1.0 - E * s) / (1.0 + E * s), E / 2.0))
-        i += 1
-      }
-      (math.toDegrees(lon), math.toDegrees(phi))
+      (math.toDegrees(lon), math.toDegrees(ell.phiFromT(tP)))
     }
   }
 
-  /** EPSG:2154 — the French national grid (RGF93 / Lambert-93), the CRS
-    * IGN's RGE ALTI lidar DEMs ship in. GRS80; RGF93 is WGS84-coincident
-    * at cm level, so no datum shift (the same null-datum treatment pyproj
-    * applies at this accuracy). */
-  val Lambert93: LambertConformal2SP =
-    new LambertConformal2SP(Grs80, 46.5, 3.0, 44.0, 49.0, 700000.0, 6600000.0)
-
-  /** (lon, lat) degrees -> (easting, northing) meters in EPSG:2154. */
-  def wgs84ToLambert93(lon: Double, lat: Double): (Double, Double) =
-    Lambert93.forward(lon, lat)
-
-  /** (easting, northing) meters in EPSG:2154 -> (lon, lat) degrees. */
-  def lambert93ToWgs84(x: Double, y: Double): (Double, Double) =
-    Lambert93.inverse(x, y)
-
   // ------------------------- Lambert azimuthal equal-area (LAEA) ---
-  /** Ellipsoidal Lambert azimuthal equal-area, oblique aspect — the
-    * projection of the pan-European grid EPSG:3035 (ETRS89-LAEA), which
-    * EU-DEM / Copernicus European mosaics ship in. Snyder 1987 closed
-    * forms (eqs. 3-12, 24-2..24-6 forward; 24-16..24-21 inverse) via the
-    * authalic latitude; the authalic->geodetic inverse solves
-    * q(phi) = qp sin(beta) by Newton on the exact q instead of the
-    * published sin-series, so round trips close to machine precision
-    * (the series truncates at e^6, ~1 cm). Equal-area is the anchor: the
-    * forward Jacobian must equal the ellipsoidal area element everywhere
-    * (tested numerically, an oracle independent of these formulas). */
+  /** Ellipsoidal Lambert azimuthal equal-area, oblique aspect (the
+    * pan-European grid, which EU-DEM / Copernicus European mosaics ship
+    * in). Snyder 1987 closed forms (eqs. 3-12, 24-2..24-6 forward;
+    * 24-16..24-21 inverse) via the authalic latitude, inverted by
+    * [[Ellipsoid.phiFromQ]]. Equal-area is the anchor: the forward
+    * Jacobian must equal the ellipsoidal area element everywhere (tested
+    * numerically, an oracle independent of these formulas). */
   final class LambertAzimuthalEqualArea(
       val ell: Ellipsoid,
       lat0Deg: Double, lon0Deg: Double,
-      falseE: Double, falseN: Double) extends Serializable {
-    private val E2 = ell.e2
-    private val E = ell.e
+      falseE: Double, falseN: Double) extends Projection {
     private val Lon0 = math.toRadians(lon0Deg)
-    /** Snyder eq. 3-12: q(phi), proportional to the area between the
-      * equator and phi. */
-    private def q(phi: Double): Double = {
-      val s = math.sin(phi)
-      (1.0 - E2) * (s / (1.0 - E2 * s * s) -
-        (1.0 / (2.0 * E)) * math.log((1.0 - E * s) / (1.0 + E * s)))
-    }
-    private val Qp = q(math.Pi / 2.0)
     private val Phi0 = math.toRadians(lat0Deg)
-    private val Beta0 = math.asin(q(Phi0) / Qp)
-    private val Rq = ell.a * math.sqrt(Qp / 2.0)
-    private val M0 = { val s = math.sin(Phi0); math.cos(Phi0) / math.sqrt(1.0 - E2 * s * s) }
-    private val D = ell.a * M0 / (Rq * math.cos(Beta0))
+    private val Beta0 = math.asin(ell.q(Phi0) / ell.qp)
+    private val Rq = ell.a * math.sqrt(ell.qp / 2.0)
+    private val D = ell.a * ell.m(Phi0) / (Rq * math.cos(Beta0))
     private val SinB0 = math.sin(Beta0)
     private val CosB0 = math.cos(Beta0)
 
     def forward(lon: Double, lat: Double): (Double, Double) = {
       val lam = math.toRadians(lon) - Lon0
-      val beta = math.asin(math.max(-1.0, math.min(1.0, q(math.toRadians(lat)) / Qp)))
+      val beta = math.asin(math.max(-1.0, math.min(1.0, ell.q(math.toRadians(lat)) / ell.qp)))
       val sb = math.sin(beta); val cb = math.cos(beta)
       val b = Rq * math.sqrt(2.0 / (1.0 + SinB0 * sb + CosB0 * cb * math.cos(lam)))
       (falseE + b * D * cb * math.sin(lam),
@@ -441,78 +437,43 @@ object Crs {
       if (rho < 1e-12) return (lon0Deg, lat0Deg)
       val ce = 2.0 * math.asin(math.max(-1.0, math.min(1.0, rho / (2.0 * Rq))))
       val sCe = math.sin(ce); val cCe = math.cos(ce)
-      val sinBeta = cCe * SinB0 + dy * sCe * CosB0 / rho
+      val sinBeta = math.max(-1.0, math.min(1.0, cCe * SinB0 + dy * sCe * CosB0 / rho))
       val lam = math.atan2(dx * sCe, rho * CosB0 * cCe - dy * SinB0 * sCe)
-      // Newton on the exact q: solve q(phi) = Qp sinBeta;
-      // dq/dphi = 2(1-e^2) cos(phi) / (1 - e^2 sin^2 phi)^2
-      val target = Qp * math.max(-1.0, math.min(1.0, sinBeta))
-      var phi = math.asin(math.max(-1.0, math.min(1.0, sinBeta))) // authalic seed
-      var i = 0
-      var delta = 1.0
-      while (i < 10 && math.abs(delta) > 1e-16) {
-        val s = math.sin(phi); val d = 1.0 - E2 * s * s
-        val dq = 2.0 * (1.0 - E2) * math.cos(phi) / (d * d)
-        if (dq < 1e-18) { i = 10 } // at the pole cos -> 0; phi is already there
-        else {
-          delta = (q(phi) - target) / dq
-          phi -= delta
-          i += 1
-        }
-      }
+      val phi = ell.phiFromQ(ell.qp * sinBeta, math.asin(sinBeta))
       (normalizeLon(math.toDegrees(Lon0 + lam)), math.toDegrees(phi))
     }
   }
 
-  /** EPSG:3035 — ETRS89-extended / LAEA Europe (origin 52N 10E,
-    * FE 4321000, FN 3210000). GRS80 with the same documented null
-    * ETRS89~WGS84 datum treatment as the 258xx UTM zones. */
-  val LaeaEurope: LambertAzimuthalEqualArea =
-    new LambertAzimuthalEqualArea(Grs80, 52.0, 10.0, 4321000.0, 3210000.0)
-
   // ------------------------------- Albers equal-area conic (2SP) ---
-  /** Ellipsoidal Albers equal-area conic with two standard parallels —
-    * the projection of the US national grid EPSG:5070 (NAD83 / Conus
-    * Albers, which USGS 3DEP/NED seamless DEMs ship in) and the
-    * Australian EPSG:3577 (GDA94 / Australian Albers, Geoscience
+  /** Ellipsoidal Albers equal-area conic with two standard parallels (the
+    * US national grid USGS 3DEP/NED seamless DEMs ship in, and Geoscience
     * Australia's DEM mosaics). Snyder 1987 closed forms (eqs. 14-1..14-11
     * forward, 14-8..14-11 + 3-16 inverse) on the same exact-q machinery
-    * as LAEA, with the same Newton authalic→geodetic inverse instead of
-    * the truncated sin-series, so round trips close to machine precision.
-    * Southern-parallel instances (3577) give cone constant n < 0; ρ
-    * carries n's sign and the inverse flips the atan2 operands, the same
-    * signed-ρ treatment as LCC. Equal-area is the anchor property
-    * (CrsAlbersSpec): the forward Jacobian must equal the ellipsoidal
-    * area element everywhere, and the parallel scale must be exactly 1
-    * along BOTH standard parallels — conditions from differential
-    * geometry that share no formula with these forms. */
+    * as LAEA, inverted by [[Ellipsoid.phiFromQ]]. Southern-parallel
+    * instances give cone constant n < 0; ρ carries n's sign and the
+    * inverse flips the atan2 operands, the same signed-ρ treatment as LCC.
+    * Equal-area is the anchor property (CrsAlbersSpec): the forward
+    * Jacobian must equal the ellipsoidal area element everywhere, and the
+    * parallel scale must be exactly 1 along BOTH standard parallels —
+    * conditions from differential geometry that share no formula with
+    * these forms. */
   final class AlbersEqualAreaConic(
       val ell: Ellipsoid,
       lat0Deg: Double, lon0Deg: Double,
       lat1Deg: Double, lat2Deg: Double,
-      falseE: Double, falseN: Double) extends Serializable {
-    private val E2 = ell.e2
-    private val E = ell.e
+      falseE: Double, falseN: Double) extends Projection {
     private val Lon0 = math.toRadians(lon0Deg)
-    private def q(phi: Double): Double = {
-      val s = math.sin(phi)
-      (1.0 - E2) * (s / (1.0 - E2 * s * s) -
-        (1.0 / (2.0 * E)) * math.log((1.0 - E * s) / (1.0 + E * s)))
-    }
-    private def m(phi: Double): Double = {
-      val s = math.sin(phi)
-      math.cos(phi) / math.sqrt(1.0 - E2 * s * s)
-    }
     private val Lat1 = math.toRadians(lat1Deg)
     private val Lat2 = math.toRadians(lat2Deg)
-    private val M1 = m(Lat1)
-    private val N = (M1 * M1 - m(Lat2) * m(Lat2)) / (q(Lat2) - q(Lat1))
-    private val C = M1 * M1 + N * q(Lat1)
+    private val M1 = ell.m(Lat1)
+    private val N = (M1 * M1 - ell.m(Lat2) * ell.m(Lat2)) / (ell.q(Lat2) - ell.q(Lat1))
+    private val C = M1 * M1 + N * ell.q(Lat1)
     private def rho(qv: Double): Double =
       ell.a * math.sqrt(math.max(0.0, C - N * qv)) / N // signed: sign(rho) = sign(N)
-    private val Rho0 = rho(q(math.toRadians(lat0Deg)))
+    private val Rho0 = rho(ell.q(math.toRadians(lat0Deg)))
 
     def forward(lon: Double, lat: Double): (Double, Double) = {
-      val r = rho(q(math.toRadians(lat)))
+      val r = rho(ell.q(math.toRadians(lat)))
       val theta = N * (math.toRadians(lon) - Lon0)
       (falseE + r * math.sin(theta), falseN + Rho0 - r * math.cos(theta))
     }
@@ -525,98 +486,59 @@ object Crs {
       val theta = if (N >= 0) math.atan2(dx, dy) else math.atan2(-dx, -dy)
       val lon = theta / N + Lon0
       val qv = (C - r * r * N * N / (ell.a * ell.a)) / N
-      val Qp = q(math.Pi / 2.0)
-      // Newton on the exact q: solve q(phi) = qv (same scheme as LAEA)
-      val target = math.max(-Qp, math.min(Qp, qv))
-      var phi = math.asin(math.max(-1.0, math.min(1.0, target / Qp)))
-      var i = 0
-      var delta = 1.0
-      while (i < 10 && math.abs(delta) > 1e-16) {
-        val s = math.sin(phi); val d = 1.0 - E2 * s * s
-        val dq = 2.0 * (1.0 - E2) * math.cos(phi) / (d * d)
-        if (dq < 1e-18) { i = 10 } // at the pole cos -> 0; phi is already there
-        else {
-          delta = (q(phi) - target) / dq
-          phi -= delta
-          i += 1
-        }
-      }
+      val target = math.max(-ell.qp, math.min(ell.qp, qv))
+      val phi = ell.phiFromQ(target, math.asin(math.max(-1.0, math.min(1.0, target / ell.qp))))
       (normalizeLon(math.toDegrees(lon)), math.toDegrees(phi))
     }
   }
 
-  /** EPSG:5070 — NAD83 / Conus Albers (USGS 3DEP/NED seamless grid):
-    * GRS80, parallels 29.5N/45.5N, origin 23N 96W, no false offsets.
-    * NAD83~WGS84 at the ~1 m level — the same documented null-datum
-    * treatment as the 269xx NAD83 UTM zones. */
-  val ConusAlbers5070: AlbersEqualAreaConic =
-    new AlbersEqualAreaConic(Grs80, 23.0, -96.0, 29.5, 45.5, 0.0, 0.0)
-
-  /** EPSG:3577 — GDA94 / Australian Albers (Geoscience Australia DEM
-    * mosaics): GRS80, parallels 18S/36S (cone constant n < 0), origin
-    * 0N 132E. GDA94~WGS84 null-datum at this accuracy. */
-  val AustralianAlbers3577: AlbersEqualAreaConic =
-    new AlbersEqualAreaConic(Grs80, 0.0, 132.0, -18.0, -36.0, 0.0, 0.0)
-
-  // ------------------------------- polar stereographic (variant B) ---
-  /** Ellipsoidal polar stereographic with a standard parallel (EPSG
-    * "variant B") — the projection of the polar DEM products: ArcticDEM
-    * ships in EPSG:3413 (70N true, 45W down), REMA in EPSG:3031 (71S
-    * true, 0E up). Snyder 1987 closed forms (eqs. 15-9/21-33..21-41);
-    * the inverse latitude uses the same conformal fixed-point iteration
-    * as LCC (eq. 7-9, converges in ~4 rounds). The south aspect mirrors
-    * ONLY latitude and the y axis (phi -> -phi, y -> -y; longitude is
-    * NOT mirrored — EPSG's south form keeps E = rho sin(lambda - lambda0)
-    * with the same sign as north, N flips to +rho cos), applied around
-    * the core so one formula serves both poles.
-    * Anchors in CrsPolarSpec share no formula with this:
-    * the pole maps to the false origin exactly, scale ON the standard
-    * parallel is exactly 1 (true-scale property, checked against
-    * numerically integrated ground distance), and the Jacobian is a
-    * scaled rotation everywhere (conformality). */
-  /** Snyder polar stereographic, both EPSG variants sharing one core:
-    * rho = a * Coef * t(phi). Variant B (latTsDeg below the pole) sets
-    * Coef = m(ts)/t(ts) — scale exactly 1 along the standard parallel
-    * (EPSG 9829; 3413/3031). Variant A (k0Pole defined) sets
-    * Coef = 2*k0/sqrt((1+e)^(1+e)*(1-e)^(1-e)) — scale k0 AT the pole
-    * (EPSG 9810; UPS 5041/5042 and GeoKey files carrying
-    * ProjScaleAtNatOrigin with NatOriginLat = ±90, where the variant-B
-    * form degenerates to 0/0). latTsDeg's sign carries the aspect in
-    * both variants (variant A passes ±90). */
+  // -------------------------------------------- polar stereographic ---
+  /** Ellipsoidal polar stereographic, both EPSG variants sharing one core
+    * (the polar DEM products: ArcticDEM, REMA and the UPS grids). Snyder
+    * 1987 closed forms (eqs. 15-9/21-33..21-41): rho = a * Coef * t(phi),
+    * with the inverse latitude from [[Ellipsoid.phiFromT]]. Variant B
+    * (latTsDeg below the pole) sets Coef = m(ts)/t(ts) — scale exactly 1
+    * along the standard parallel (EPSG 9829). Variant A (k0Pole defined)
+    * sets Coef = 2*k0/sqrt((1+e)^(1+e)*(1-e)^(1-e)) — scale k0 AT the pole
+    * (EPSG 9810; UPS and GeoKey files carrying ProjScaleAtNatOrigin with
+    * NatOriginLat = ±90, where the variant-B form degenerates to 0/0).
+    * latTsDeg's sign carries the aspect in both variants (variant A passes
+    * ±90). The south aspect mirrors ONLY latitude and the y axis (phi ->
+    * -phi, y -> -y; longitude is NOT mirrored — EPSG's south form keeps
+    * E = rho sin(lambda - lambda0) with the same sign as north, N flips to
+    * +rho cos), applied around the core so one formula serves both poles.
+    * Anchors in CrsPolarSpec share no formula with this: the pole maps to
+    * the false origin exactly, scale ON the standard parallel is exactly 1
+    * (true-scale property, checked against numerically integrated ground
+    * distance), and the Jacobian is a scaled rotation everywhere
+    * (conformality). */
   final class PolarStereographic(
       val ell: Ellipsoid,
       latTsDeg: Double, // standard parallel (signed; negative = south aspect)
       lon0Deg: Double,
       falseE: Double, falseN: Double,
-      k0Pole: Option[Double] = None) extends Serializable {
+      k0Pole: Option[Double] = None) extends Projection {
     private val E = ell.e
-    private val E2 = ell.e2
     private val South = latTsDeg < 0
     private val Lon0 = math.toRadians(lon0Deg)
-    private def t(phi: Double): Double = {
-      val s = math.sin(phi)
-      math.tan(math.Pi / 4.0 - phi / 2.0) /
-        math.pow((1.0 - E * s) / (1.0 + E * s), E / 2.0)
-    }
     private val Coef = k0Pole match {
       case Some(k0) =>
         require(k0 > 0, s"polar stereographic variant A: k0 $k0 must be positive")
         2.0 * k0 / math.sqrt(math.pow(1.0 + E, 1.0 + E) * math.pow(1.0 - E, 1.0 - E))
       case None =>
         val phiTs = math.toRadians(math.abs(latTsDeg))
-        val s = math.sin(phiTs)
-        val mTs = math.cos(phiTs) / math.sqrt(1.0 - E2 * s * s)
+        val mTs = ell.m(phiTs)
         require(mTs > 1e-12,
           s"polar stereographic variant B: standard parallel $latTsDeg is at the pole " +
             "(m(ts) = 0, the form degenerates to 0/0) — a scale-at-pole file is " +
             "variant A; construct with k0Pole instead")
-        mTs / t(phiTs)
+        mTs / ell.t(phiTs)
     }
 
     def forward(lon: Double, lat: Double): (Double, Double) = {
       val lam0 = math.toRadians(lon) - Lon0
       val phi0 = if (South) -math.toRadians(lat) else math.toRadians(lat)
-      val rho = ell.a * Coef * t(phi0)
+      val rho = ell.a * Coef * ell.t(phi0)
       val x = rho * math.sin(lam0)
       val y = -rho * math.cos(lam0)
       (falseE + x, falseN + (if (South) -y else y))
@@ -630,110 +552,63 @@ object Crs {
       if (rho < 1e-12) return (lon0Deg, if (South) -90.0 else 90.0) // pole: lon arbitrary
       val tP = rho / (ell.a * Coef)
       val lam = math.atan2(dx, -dy)
-      var phi = math.Pi / 2.0 - 2.0 * math.atan(tP)
-      var i = 0
-      var prev = Double.NaN
-      while (i < 10 && phi != prev) {
-        prev = phi
-        val s = math.sin(phi)
-        phi = math.Pi / 2.0 - 2.0 * math.atan(
-          tP * math.pow((1.0 - E * s) / (1.0 + E * s), E / 2.0))
-        i += 1
-      }
+      val phi = ell.phiFromT(tP)
       val lonOut = normalizeLon(math.toDegrees(Lon0 + lam))
       if (South) (lonOut, -math.toDegrees(phi)) else (lonOut, math.toDegrees(phi))
     }
   }
 
-  /** EPSG:3413 — WGS84 / NSIDC Sea Ice Polar Stereographic North
-    * (ArcticDEM's grid): 70N true scale, 45W oriented down, FE=FN=0. */
-  val PolarNorth3413: PolarStereographic =
-    new PolarStereographic(Wgs84, 70.0, -45.0, 0.0, 0.0)
+  // ------------------------------------------- the one entry point ---
+  /** The source CRS of a DEM, the reference's get_transform. A non-empty
+    * user-defined `spec` wins over `epsg`; `None` is EPSG:4326, the
+    * identity, as the reference's get_transform returns None for matching
+    * authorities. Instances are memoized per code and per spec per JVM, so
+    * per-point callers never re-derive series coefficients. */
+  def projection(epsg: Int, spec: String = ""): Option[Projection] =
+    if (spec.nonEmpty) Some(specCache.computeIfAbsent(spec, s => parseSpec(s)))
+    else epsgCache.computeIfAbsent(epsg, e => epsgTable(e))
 
-  /** EPSG:3031 — WGS84 / Antarctic Polar Stereographic (REMA's grid):
-    * 71S true scale, 0E, FE=FN=0. */
-  val PolarSouth3031: PolarStereographic =
-    new PolarStereographic(Wgs84, -71.0, 0.0, 0.0, 0.0)
+  private val epsgCache =
+    new java.util.concurrent.ConcurrentHashMap[Int, Option[Projection]]()
+  private val specCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Projection]()
 
-  /** EPSG:5041 — WGS84 / UPS North (E,N): variant A, k0 = 0.994 at the
-    * pole, 0E down-grid, FE = FN = 2,000,000 (the military/polar-science
-    * grid north of 84N). */
-  val UpsNorth5041: PolarStereographic =
-    new PolarStereographic(Wgs84, 90.0, 0.0, 2000000.0, 2000000.0, Some(0.994))
+  /** UTM zone `zone` (1..60) on `ell`. */
+  private def utm(ell: Ellipsoid, zone: Int, falseN: Double): Projection =
+    new TransverseMercator(ell, 0.9996, -183.0 + 6.0 * zone, 0.0, 500000.0, falseN)
 
-  /** EPSG:5042 — WGS84 / UPS South (E,N): variant A mirror (south of 80S). */
-  val UpsSouth5042: PolarStereographic =
-    new PolarStereographic(Wgs84, -90.0, 0.0, 2000000.0, 2000000.0, Some(0.994))
-
-  /** (x, y) in EPSG:3857 meters -> (lon, lat) degrees. */
-  def mercatorToWgs84(x: Double, y: Double): (Double, Double) = {
-    val lon = math.toDegrees(x / EarthRadius)
-    val lat = math.toDegrees(2.0 * math.atan(math.exp(y / EarthRadius)) - math.Pi / 2.0)
-    (lon, lat)
-  }
-
-  /** (lon, lat) degrees -> (x, y) EPSG:3857 meters. */
-  def wgs84ToMercator(lon: Double, lat: Double): (Double, Double) = {
-    val x = EarthRadius * math.toRadians(lon)
-    val y = EarthRadius * math.log(math.tan(math.Pi / 4.0 + math.toRadians(lat) / 2.0))
-    (x, y)
-  }
-
-  /** None = identity (already WGS84), as the reference's get_transform
-    * returns None for matching authorities. */
-  def toWgs84(epsg: Int): Option[(Double, Double) => (Double, Double)] = epsg match {
+  /** The EPSG table. Every datum but OSGB36 is treated as coincident with
+    * WGS84: ETRS89 (~0.8 m by plate motion), NAD83 (~1.5 m), RGF93 (cm),
+    * NZGD2000 and GDA94 drift below a DEM cell at any product resolution
+    * >= 2 m, the same null transform PROJ applies absent an explicit epoch.
+    * British National Grid shows what a real (multi-meter) shift looks
+    * like here. */
+  private def epsgTable(epsg: Int): Option[Projection] = epsg match {
     case 4326 => None
-    case 3857 => Some(mercatorToWgs84)
-    case z if z >= 32601 && z <= 32660 =>
-      Some((x, y) => utmToWgs84(x, y, z - 32600, north = true))
-    case z if z >= 32701 && z <= 32760 =>
-      Some((x, y) => utmToWgs84(x, y, z - 32700, north = false))
-    case z if z >= 25828 && z <= 25838 => // ETRS89 / UTM 28N..38N
-      Some((x, y) => grs80UtmFrame(z - 25800).inverse(x, y))
-    case z if z >= 26901 && z <= 26923 => // NAD83 / UTM 1N..23N
-      Some((x, y) => grs80UtmFrame(z - 26900).inverse(x, y))
-    case 3035 => Some(LaeaEurope.inverse)
-    case 2193 => Some(Nztm2000.inverse)
-    case 3413 => Some(PolarNorth3413.inverse)
-    case 3031 => Some(PolarSouth3031.inverse)
-    case 5041 => Some(UpsNorth5041.inverse)
-    case 5042 => Some(UpsSouth5042.inverse)
-    // RGF93 (Lambert-93's datum) is coincident with WGS84 at cm level —
-    // the same null-datum treatment pyproj applies at this accuracy
-    case 2154 => Some(lambert93ToWgs84)
-    case 27700 => Some(osgbToWgs84)
-    case 5070 => Some((x, y) => ConusAlbers5070.inverse(x, y))
-    case 3577 => Some((x, y) => AustralianAlbers3577.inverse(x, y))
-    case other =>
-      throw new IllegalArgumentException(
-        s"unsupported source CRS EPSG:$other (supported: 4326, 3857, 326xx/327xx UTM, " +
-        "258xx ETRS89-UTM, 269xx NAD83-UTM, 3035 LAEA-Europe, 3413/3031 polar stereographic, 5041/5042 UPS, " +
-        "2193 NZTM, 2154 Lambert-93, 27700 OSGB, 5070/3577 Albers)")
-  }
-
-  /** Reverse transform (WGS84 -> source CRS), the reference's
-    * get_transform(reverse=True). None = identity. */
-  def fromWgs84(epsg: Int): Option[(Double, Double) => (Double, Double)] = epsg match {
-    case 4326 => None
-    case 3857 => Some(wgs84ToMercator)
-    case z if z >= 32601 && z <= 32660 =>
-      Some((lon, lat) => wgs84ToUtm(lon, lat, z - 32600, north = true))
-    case z if z >= 32701 && z <= 32760 =>
-      Some((lon, lat) => wgs84ToUtm(lon, lat, z - 32700, north = false))
-    case z if z >= 25828 && z <= 25838 =>
-      Some((lon, lat) => grs80UtmFrame(z - 25800).forward(lon, lat))
-    case z if z >= 26901 && z <= 26923 =>
-      Some((lon, lat) => grs80UtmFrame(z - 26900).forward(lon, lat))
-    case 3035 => Some(LaeaEurope.forward)
-    case 2193 => Some(Nztm2000.forward)
-    case 3413 => Some(PolarNorth3413.forward)
-    case 3031 => Some(PolarSouth3031.forward)
-    case 5041 => Some(UpsNorth5041.forward)
-    case 5042 => Some(UpsSouth5042.forward)
-    case 2154 => Some(wgs84ToLambert93)
-    case 27700 => Some(wgs84ToOsgb)
-    case 5070 => Some((lon, lat) => ConusAlbers5070.forward(lon, lat))
-    case 3577 => Some((lon, lat) => AustralianAlbers3577.forward(lon, lat))
+    case 3857 => Some(WebMercator)
+    case z if z >= 32601 && z <= 32660 => Some(utm(Wgs84, z - 32600, 0.0)) // WGS84 / UTM N
+    case z if z >= 32701 && z <= 32760 => Some(utm(Wgs84, z - 32700, 10000000.0)) // and S
+    case z if z >= 25828 && z <= 25838 => Some(utm(Grs80, z - 25800, 0.0)) // ETRS89 / UTM 28-38N
+    case z if z >= 26901 && z <= 26923 => Some(utm(Grs80, z - 26900, 0.0)) // NAD83 / UTM 1-23N
+    case 2193 => // NZGD2000 / New Zealand TM (the LINZ national DEM grid)
+      Some(new TransverseMercator(Grs80, 0.9996, 173.0, 0.0, 1600000.0, 10000000.0))
+    case 27700 => Some(BritishNationalGrid)
+    case 2154 => // RGF93 / Lambert-93 (IGN RGE ALTI lidar DEMs)
+      Some(new LambertConformal2SP(Grs80, 46.5, 3.0, 44.0, 49.0, 700000.0, 6600000.0))
+    case 3035 => // ETRS89-extended / LAEA Europe (EU-DEM, Copernicus)
+      Some(new LambertAzimuthalEqualArea(Grs80, 52.0, 10.0, 4321000.0, 3210000.0))
+    case 5070 => // NAD83 / Conus Albers (USGS 3DEP/NED)
+      Some(new AlbersEqualAreaConic(Grs80, 23.0, -96.0, 29.5, 45.5, 0.0, 0.0))
+    case 3577 => // GDA94 / Australian Albers (cone constant n < 0)
+      Some(new AlbersEqualAreaConic(Grs80, 0.0, 132.0, -18.0, -36.0, 0.0, 0.0))
+    case 3413 => // WGS84 / NSIDC Sea Ice Polar Stereographic North (ArcticDEM)
+      Some(new PolarStereographic(Wgs84, 70.0, -45.0, 0.0, 0.0))
+    case 3031 => // WGS84 / Antarctic Polar Stereographic (REMA)
+      Some(new PolarStereographic(Wgs84, -71.0, 0.0, 0.0, 0.0))
+    case 5041 => // WGS84 / UPS North (E,N): variant A, k0 0.994 at the pole
+      Some(new PolarStereographic(Wgs84, 90.0, 0.0, 2000000.0, 2000000.0, Some(0.994)))
+    case 5042 => // WGS84 / UPS South (E,N)
+      Some(new PolarStereographic(Wgs84, -90.0, 0.0, 2000000.0, 2000000.0, Some(0.994)))
     case other =>
       throw new IllegalArgumentException(
         s"unsupported source CRS EPSG:$other (supported: 4326, 3857, 326xx/327xx UTM, " +
@@ -759,91 +634,50 @@ object Crs {
     *
     * Datum: treated as WGS84-coincident (GeoKeys carry no transformation
     * parameters; this is pyproj's behavior for +towgs84-less definitions
-    * too). Instances are memoized per spec string per JVM. */
+    * too). */
   def projSpecString(family: String, params: Seq[(String, Double)]): String =
     // Double.toString is locale-independent and round-trips exactly
     family + ":" + params.map { case (k, v) => s"$k=$v" }.mkString(";")
 
-  private val specCache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  private def specInstance(spec: String): AnyRef =
-    specCache.computeIfAbsent(spec, { s =>
-      val sep = s.indexOf(':')
-      require(sep > 0, s"malformed CRS spec '$s'")
-      val family = s.substring(0, sep)
-      val kv = s.substring(sep + 1).split(';').iterator.map { p =>
-        val eq = p.indexOf('=')
-        require(eq > 0, s"malformed CRS spec param '$p' in '$s'")
-        p.substring(0, eq) -> p.substring(eq + 1).toDouble
-      }.toMap
-      def need(k: String): Double =
-        kv.getOrElse(k, throw new IllegalArgumentException(s"CRS spec '$s' lacks '$k'"))
-      val ell = Ellipsoid(need("a"), need("invf"))
-      family match {
-        case "tm" => new TransverseMercator(ell, need("k0"), need("lon0"), need("lat0"),
+  private def parseSpec(s: String): Projection = {
+    val sep = s.indexOf(':')
+    require(sep > 0, s"malformed CRS spec '$s'")
+    val family = s.substring(0, sep)
+    val kv = s.substring(sep + 1).split(';').iterator.map { p =>
+      val eq = p.indexOf('=')
+      require(eq > 0, s"malformed CRS spec param '$p' in '$s'")
+      p.substring(0, eq) -> p.substring(eq + 1).toDouble
+    }.toMap
+    def need(k: String): Double =
+      kv.getOrElse(k, throw new IllegalArgumentException(s"CRS spec '$s' lacks '$k'"))
+    val ell = Ellipsoid(need("a"), need("invf"))
+    family match {
+      case "tm" => new TransverseMercator(ell, need("k0"), need("lon0"), need("lat0"),
+        need("fe"), need("fn"))
+      case "lcc" => new LambertConformal2SP(ell, need("lat0"), need("lon0"),
+        need("lat1"), need("lat2"), need("fe"), need("fn"))
+      case "laea" => new LambertAzimuthalEqualArea(ell, need("lat0"), need("lon0"),
+        need("fe"), need("fn"))
+      case "aea" => new AlbersEqualAreaConic(ell, need("lat0"), need("lon0"),
+        need("lat1"), need("lat2"), need("fe"), need("fn"))
+      case "ps" => kv.get("k0") match {
+        case Some(k0) => // variant A: scale at the pole; lat0 = +-90 carries the aspect
+          // the variant-A math (EPSG 9810) is only valid for a natural
+          // origin AT the pole — a non-polar lat0 would silently compute
+          // scale-at-pole coordinates using only lat0's sign (the same
+          // guard the GeoKey path applies via its pole test)
+          require(math.abs(math.abs(need("lat0")) - 90.0) < 1e-9,
+            s"CRS spec '$s': 'ps' with k0 is polar variant A (EPSG 9810) and needs " +
+              "lat0 = +-90; non-polar scale-at-origin files are not this projection")
+          new PolarStereographic(ell, need("lat0"), need("lon0"),
+            need("fe"), need("fn"), Some(k0))
+        case None => new PolarStereographic(ell, need("latts"), need("lon0"),
           need("fe"), need("fn"))
-        case "lcc" => new LambertConformal2SP(ell, need("lat0"), need("lon0"),
-          need("lat1"), need("lat2"), need("fe"), need("fn"))
-        case "laea" => new LambertAzimuthalEqualArea(ell, need("lat0"), need("lon0"),
-          need("fe"), need("fn"))
-        case "aea" => new AlbersEqualAreaConic(ell, need("lat0"), need("lon0"),
-          need("lat1"), need("lat2"), need("fe"), need("fn"))
-        case "ps" => kv.get("k0") match {
-          case Some(k0) => // variant A: scale at the pole; lat0 = +-90 carries the aspect
-            // the variant-A math (EPSG 9810) is only valid for a natural
-            // origin AT the pole — a non-polar lat0 would silently compute
-            // scale-at-pole coordinates using only lat0's sign (the same
-            // guard the GeoKey path applies via its pole test)
-            require(math.abs(math.abs(need("lat0")) - 90.0) < 1e-9,
-              s"CRS spec '$s': 'ps' with k0 is polar variant A (EPSG 9810) and needs " +
-                "lat0 = +-90; non-polar scale-at-origin files are not this projection")
-            new PolarStereographic(ell, need("lat0"), need("lon0"),
-              need("fe"), need("fn"), Some(k0))
-          case None => new PolarStereographic(ell, need("latts"), need("lon0"),
-            need("fe"), need("fn"))
-        }
-        case other => throw new IllegalArgumentException(
-          s"unsupported CRS spec family '$other' (tm/lcc/laea/aea/ps)")
       }
-    })
-
-  /** Spec-form transforms (WGS84-coincident datum — see projSpecString). */
-  def specToWgs84(spec: String): (Double, Double) => (Double, Double) =
-    specInstance(spec) match {
-      case t: TransverseMercator => t.inverse
-      case l: LambertConformal2SP => l.inverse
-      case a: LambertAzimuthalEqualArea => a.inverse
-      case ac: AlbersEqualAreaConic => ac.inverse
-      case p: PolarStereographic => p.inverse
+      case other => throw new IllegalArgumentException(
+        s"unsupported CRS spec family '$other' (tm/lcc/laea/aea/ps)")
     }
-  def specFromWgs84(spec: String): (Double, Double) => (Double, Double) =
-    specInstance(spec) match {
-      case t: TransverseMercator => t.forward
-      case l: LambertConformal2SP => l.forward
-      case a: LambertAzimuthalEqualArea => a.forward
-      case ac: AlbersEqualAreaConic => ac.forward
-      case p: PolarStereographic => p.forward
-    }
-
-  /** Code-or-spec dispatch: a non-empty `spec` (user-defined GeoKeys)
-    * wins over the EPSG code. These are the entry points the pipeline
-    * uses so user-defined DEMs ride every path a coded CRS does. */
-  def toWgs84(epsg: Int, spec: String): Option[(Double, Double) => (Double, Double)] =
-    if (spec.nonEmpty) Some(specToWgs84(spec)) else toWgs84(epsg)
-  def fromWgs84(epsg: Int, spec: String): Option[(Double, Double) => (Double, Double)] =
-    if (spec.nonEmpty) Some(specFromWgs84(spec)) else fromWgs84(epsg)
-  def axisSeparable(epsg: Int, spec: String): Boolean =
-    spec.isEmpty && axisSeparable(epsg) // all spec families mix axes
-
-  /** True when lon depends only on x and lat only on y under toWgs84 —
-    * the property that lets a projected grid reproject its AXES to WGS84
-    * (RasterPipeline.sliceMask's separable branch) and accept --area
-    * rects. Holds for 4326/3857 (cylindrical, equator-aligned), NOT for
-    * TM/LCC/LAEA (meridian convergence / azimuthal geometry mix axes) —
-    * those sources clip via the densify-reprojected polygon path
-    * (sliceMask's projected branch) instead. */
-  def axisSeparable(epsg: Int): Boolean = epsg == 4326 || epsg == 3857
+  }
 
   /** Parse + validate a `--area minLon:minLat:maxLon:maxLat` string.
     * A malformed field count or a non-numeric field fails here with the
@@ -888,20 +722,20 @@ object Crs {
     * then trims exactly. Shared by RasterPipeline.tiles and ContourCli so
     * the two surfaces cannot drift. */
   def nativeAreaString(area: String, epsg: Int, spec: String = ""): String =
-    fromWgs84(epsg, spec) match {
+    projection(epsg, spec) match {
       case None =>
         parseArea(area) // validate even when passed through untouched
         area
-      case Some(f) =>
+      case Some(p) =>
         val (lo0, la0, lo1, la1) = parseArea(area)
         require(lo0 <= lo1,
           "--area across the antimeridian is unsupported for projected sources")
-        if (axisSeparable(epsg, spec)) {
-          val (x0, y0) = f(lo0, la0)
-          val (x1, y1) = f(lo1, la1)
+        if (p.axisSeparable) {
+          val (x0, y0) = p.forward(lo0, la0)
+          val (x1, y1) = p.forward(lo1, la1)
           s"$x0:$y0:$x1:$y1"
         } else {
-          val ring = densifyReproject(areaRectPolygon(area), f)
+          val ring = densifyReproject(areaRectPolygon(area), p.forward)
           var minX = Double.MaxValue; var minY = Double.MaxValue
           var maxX = Double.MinValue; var maxY = Double.MinValue
           var i = 0
@@ -920,32 +754,11 @@ object Crs {
         }
     }
 
-  /** Python math.isclose default semantics (rel_tol 1e-9). */
-  def isClose(a: Double, b: Double, relTol: Double = 1e-9, absTol: Double = 0.0): Boolean =
-    math.abs(a - b) <= math.max(relTol * math.max(math.abs(a), math.abs(b)), absTol)
-
-  /** Transform a bbox corner-wise, requiring the result to stay an
-    * axis-aligned rectangle in WGS84 (reference ensure_aligned_coordinates
-    * + transform_lon_lats, hgt/__init__.py:20-68). */
-  def transformBBox(b: BBox, f: (Double, Double) => (Double, Double)): BBox = {
-    val lowLeft = f(b.minLon, b.minLat)
-    val highLeft = f(b.minLon, b.maxLat)
-    val highRight = f(b.maxLon, b.maxLat)
-    val lowRight = f(b.maxLon, b.minLat)
-    require(
-      isClose(lowLeft._2, lowRight._2) && isClose(lowLeft._1, highLeft._1) &&
-        isClose(highLeft._2, highRight._2) && isClose(highRight._1, lowRight._1),
-      "Tile doesn't map to an aligned rectangle in WGS84 coordinates")
-    val lons = Seq(lowLeft._1, highLeft._1, highRight._1, lowRight._1)
-    val lats = Seq(lowLeft._2, highLeft._2, highRight._2, lowRight._2)
-    BBox(lons.min, lats.min, lons.max, lats.max)
-  }
-
   /** Bbox transform WITHOUT the aligned-rectangle requirement: the
     * envelope over the transformed BOUNDARY, sampled at `samplesPerEdge`
     * interior points per edge in addition to the four corners. For
-    * axis-separable CRSs (4326/3857) the corner envelope is already
-    * exact; for transverse Mercator — where meridian convergence tilts
+    * axis-separable CRSs (identity, web Mercator) the corner envelope is
+    * already exact; for transverse Mercator — where meridian convergence tilts
     * the rectangle and the strict form (the reference's refusal
     * semantics) would reject the tile — a coordinate extreme can sit
     * MID-EDGE (a UTM tile spanning easting 500000 has its latitude

@@ -58,6 +58,9 @@ object Hgt {
     val n = bytes.length / 2
     val side = math.sqrt(n.toDouble).toInt
     require(side * side == n, s"hgt byte length ${bytes.length} is not a 2*k^2")
+    // a 1x1 or empty grid has no cell spacing: tiles divide by side - 1
+    require(side >= 2,
+      s"hgt byte length ${bytes.length} is a ${side}x$side grid; a side below 2 has no cell spacing")
     val values = new Array[Float](n)
     var mask: Array[Boolean] = null
     var i = 0

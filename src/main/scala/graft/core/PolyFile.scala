@@ -31,6 +31,7 @@ object PolyFile {
         }
       }
     }
+    require(polygons.nonEmpty, "corrupt poly file: no section holds a coordinate pair")
     val lons = polygons.flatMap(_.grouped(2).map(_(0)))
     val lats = polygons.flatMap(_.grouped(2).map(_(1)))
     // Locale.ROOT: this string is re-parsed with toDouble (dot-decimal)

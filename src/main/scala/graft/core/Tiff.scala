@@ -27,8 +27,8 @@ object Tiff {
       nodata: Option[Double],
       // non-empty for user-defined CRSs (ProjectedCSTypeGeoKey = 32767):
       // a Crs spec string built from the ProjCoordTrans parameter GeoKeys
-      // (see Crs.projSpecString) — takes precedence over `epsg` in the
-      // Crs.toWgs84/fromWgs84(epsg, spec) dispatch
+      // (see Crs.projSpecString) — takes precedence over `epsg` in
+      // Crs.projection(epsg, spec)
       spec: String = "") {
 
     /** Pixel-center bbox in the file's native CRS (reference
@@ -157,10 +157,12 @@ object Tiff {
     // GDAL_NODATA (parsed below, needed during the strip decode): cells at
     // the declared nodata value mask like voids even when nodata > voidMax
     // (e.g. -9999 DEMs); reference parity is unaffected because its
-    // fixtures declare nodata == voidMax == -32768
+    // fixtures declare nodata == voidMax == -32768. GDAL writes a NaN
+    // nodata as `nan`, which toDouble refuses (it takes only `NaN`).
     val nodata = {
       val nd = ascii(42113).trim
       if (nd.isEmpty) None
+      else if (nd.matches("(?i)[+-]?nan")) Some(Double.NaN)
       else Some(nd.toDoubleOption.getOrElse(
         throw new IllegalArgumentException(s"corrupt TIFF: GDAL_NODATA '$nd' is not a number")))
     }

@@ -1796,7 +1796,7 @@ object Queries {
       |) AS t(pt_id, utm_e_tmm, utm_n_tmm, l93_e_tmm, l93_n_tmm, laea_e_tmm, laea_n_tmm, etrs_e_tmm, etrs_n_tmm, ps_e_tmm, ps_n_tmm, aea_e_tmm, aea_n_tmm, ups_e_tmm, ups_n_tmm, rt_err_ndeg)
       |ORDER BY pt_id""".stripMargin
 
-  /** Projection-series golden: forward UTM-32N + Lambert-93 coordinates
+  /** Projection-series golden: forward coordinates in seven projections
     * of a deterministic probe lattice over the Toulon window, quantized
     * to tenth-millimeter INTEGERS (6+ orders of magnitude above any JVM
     * trig ulp drift, so the literals are portable), plus round-trip
@@ -1809,32 +1809,18 @@ object Queries {
       val pts = (0 until 12).map(i => (i.toLong, 6.02 + 0.07 * i, 43.05 + 0.06 * i))
       pts.toDF("pt_id", "lon", "lat").as[(Long, Double, Double)]
         .map { case (id, lon, lat) =>
-          val (ue, un) = graft.core.Crs.wgs84ToUtm(lon, lat, 32, north = true)
-          val (le, ln) = graft.core.Crs.wgs84ToLambert93(lon, lat)
-          val (ae, an) = graft.core.Crs.LaeaEurope.forward(lon, lat)
-          val (ee, en) = graft.core.Crs.grs80UtmFrame(32).forward(lon, lat)
-          val (pe, pn) = graft.core.Crs.PolarNorth3413.forward(lon, lat)
-          val (be, bn) = graft.core.Crs.ConusAlbers5070.forward(lon, lat)
-          val (se, sn) = graft.core.Crs.UpsNorth5041.forward(lon, lat) // variant A branch
-          val (ulon, ulat) = graft.core.Crs.utmToWgs84(ue, un, 32, north = true)
-          val (llon, llat) = graft.core.Crs.lambert93ToWgs84(le, ln)
-          val (alon, alat) = graft.core.Crs.LaeaEurope.inverse(ae, an)
-          val (elon, elat) = graft.core.Crs.grs80UtmFrame(32).inverse(ee, en)
-          val (plon, plat) = graft.core.Crs.PolarNorth3413.inverse(pe, pn)
-          val (blon, blat) = graft.core.Crs.ConusAlbers5070.inverse(be, bn)
-          val (slon, slat) = graft.core.Crs.UpsNorth5041.inverse(se, sn)
-          val err = Seq(ulon - lon, ulat - lat, llon - lon, llat - lat,
-            alon - lon, alat - lat, elon - lon, elat - lat,
-            plon - lon, plat - lat, blon - lon, blat - lat,
-            slon - lon, slat - lat).map(math.abs).max
-          (id, math.rint(ue * 10000).toLong, math.rint(un * 10000).toLong,
-            math.rint(le * 10000).toLong, math.rint(ln * 10000).toLong,
-            math.rint(ae * 10000).toLong, math.rint(an * 10000).toLong,
-            math.rint(ee * 10000).toLong, math.rint(en * 10000).toLong,
-            math.rint(pe * 10000).toLong, math.rint(pn * 10000).toLong,
-            math.rint(be * 10000).toLong, math.rint(bn * 10000).toLong,
-            math.rint(se * 10000).toLong, math.rint(sn * 10000).toLong,
-            math.round(err * 1e9))
+          // UTM 32N, Lambert-93, LAEA Europe, ETRS89 UTM 32N, NSIDC polar
+          // north, Conus Albers, UPS North (the variant A branch)
+          val projs = Seq(32632, 2154, 3035, 25832, 3413, 5070, 5041)
+            .map(graft.core.Crs.projection(_).get)
+          val xy = projs.map(_.forward(lon, lat))
+          val err = projs.zip(xy).flatMap { case (p, (x, y)) =>
+            val (lon2, lat2) = p.inverse(x, y)
+            Seq(lon2 - lon, lat2 - lat)
+          }.map(math.abs).max
+          val t = xy.flatMap { case (x, y) => Seq(x, y) }.map(v => math.rint(v * 10000).toLong)
+          (id, t(0), t(1), t(2), t(3), t(4), t(5), t(6), t(7), t(8), t(9), t(10), t(11),
+            t(12), t(13), math.round(err * 1e9))
         }
         .toDF("pt_id", "utm_e_tmm", "utm_n_tmm", "l93_e_tmm", "l93_n_tmm",
           "laea_e_tmm", "laea_n_tmm", "etrs_e_tmm", "etrs_n_tmm",

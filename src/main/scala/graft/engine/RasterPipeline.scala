@@ -106,10 +106,11 @@ object RasterPipeline {
       epsg: Int, spec: String, polygons: Seq[Array[Double]]): Geometry.MaskResult = {
     val xs = Array.tabulate(cols)(c => bbox.minLon + c * lonInc)
     val ys = Array.tabulate(rows)(r => bbox.maxLat - r * latInc)
-    Crs.toWgs84(epsg, spec) match {
+    Crs.projection(epsg, spec) match {
       case None => Geometry.polygonMask(xs, ys, polygons)
-      case Some(f) if Crs.axisSeparable(epsg, spec) =>
-        Geometry.polygonMask(xs.map(x => f(x, 0.0)._1), ys.map(y => f(0.0, y)._2), polygons)
+      case Some(p) if p.axisSeparable =>
+        Geometry.polygonMask(xs.map(x => p.inverse(x, 0.0)._1),
+          ys.map(y => p.inverse(0.0, y)._2), polygons)
       case Some(_) =>
         // bboxExpand mirrors the reference's 0.1-degree clip margin in
         // this CRS's meters (the exact value only needs to be >= 0)
@@ -140,8 +141,8 @@ object RasterPipeline {
       h = h * 31 + poly.length
     }
     nativePolyCache.computeIfAbsent((s"$epsg|$spec", h), _ => {
-      val fwd = Crs.fromWgs84(epsg, spec).get
-      polygons.map(poly => Crs.densifyReproject(poly, fwd))
+      val p = Crs.projection(epsg, spec).get
+      polygons.map(poly => Crs.densifyReproject(poly, p.forward))
     })
   }
 
@@ -158,7 +159,7 @@ object RasterPipeline {
   private def effectiveClip(cfg: JobConfig, epsg: Int,
       spec: String): Option[Seq[Array[Double]]] =
     cfg.area match {
-      case Some(a) if !Crs.axisSeparable(epsg, spec) =>
+      case Some(a) if !Crs.projection(epsg, spec).forall(_.axisSeparable) =>
         val rect = Crs.areaRectPolygon(a)
         cfg.polygons match {
           case None => Some(Seq(rect))
@@ -316,11 +317,11 @@ object RasterPipeline {
           // F10: non-4326 sources trace in native grid space; paths are
           // reprojected to WGS84 before RDP/split (reference order), and
           // the emitted row bbox is the reprojected tile bbox
-          val xf = Crs.toWgs84(tr.epsg, tr.spec)
-          val tc = ContourGen.tileContours(gv, bbox, tr.lonInc, tr.latInc, cfg, scratch, xf)
+          val proj = Crs.projection(tr.epsg, tr.spec)
+          val tc = ContourGen.tileContours(gv, bbox, tr.lonInc, tr.latInc, cfg, scratch, proj)
           // envelope, not the strict aligned-rectangle transform: UTM tiles
           // tilt under reprojection and the row bbox is naming metadata
-          val obox = xf.map(Crs.envelopeBBox(bbox, _)).getOrElse(bbox)
+          val obox = proj.map(p => Crs.envelopeBBox(bbox, p.inverse)).getOrElse(bbox)
           val (oMinLon, oMinLat, oMaxLon, oMaxLat) =
             (obox.minLon, obox.minLat, obox.maxLon, obox.maxLat)
           tc.contours.iterator.flatMap { lc =>
@@ -505,7 +506,8 @@ object RasterPipeline {
       import spark.implicits._
       val unionRow = ts.map { t =>
         val b = BBox(t.minLon, t.minLat, t.maxLon, t.maxLat)
-        val w = Crs.toWgs84(t.epsg, t.spec).map(Crs.envelopeBBox(b, _)).getOrElse(b)
+        val w = Crs.projection(t.epsg, t.spec)
+          .map(p => Crs.envelopeBBox(b, p.inverse)).getOrElse(b)
         (w.minLon, w.minLat, w.maxLon, w.maxLat)
       }.toDF("minLon", "minLat", "maxLon", "maxLat")
         .agg(min("minLon"), min("minLat"), max("maxLon"), max("maxLat"))

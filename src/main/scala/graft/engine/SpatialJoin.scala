@@ -236,24 +236,4 @@ object SpatialJoin {
       .filter(col("rank") <= k)
       .select("q_id", "rank", "page_id", "d2")
   }
-
-  /** Brute-force reference kNN (test oracle / small inputs). */
-  def knnBrute(
-      pages: DataFrame,
-      queries: Seq[(Long, Double, Double)],
-      k: Int): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val q = queries.toDF("q_id", "q_lon", "q_lat")
-    val joined = pages.crossJoin(broadcast(q))
-      .withColumn(
-        "dist",
-        sqrt((col("lon") - col("q_lon")) * (col("lon") - col("q_lon")) +
-          (col("lat") - col("q_lat")) * (col("lat") - col("q_lat"))))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("dist").asc, col("page_id").asc)
-    joined.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select("q_id", "rank", "page_id", "dist")
-      .orderBy("q_id", "rank")
-  }
 }

@@ -41,29 +41,43 @@ object WarcLite {
   def parse(in: java.io.InputStream): Iterator[(String, Long, Array[Byte])] = {
     val buf = new java.io.BufferedInputStream(in, 1 << 16)
     val lineBytes = new java.io.ByteArrayOutputStream(128)
+    var pos = 0L // bytes consumed so far
+    var lineAt = 0L // offset of the last line read
     // header lines decode as UTF-8 (ISO 28500 headers are UTF-8 — a
     // byte-to-char loop would mangle non-ASCII URIs)
     def readLine(): String = {
+      lineAt = pos
       lineBytes.reset()
       var c = buf.read()
-      while (c != -1 && c != '\n') { if (c != '\r') lineBytes.write(c); c = buf.read() }
+      while (c != -1 && c != '\n') {
+        pos += 1
+        if (c != '\r') lineBytes.write(c)
+        c = buf.read()
+      }
+      if (c != -1) pos += 1
       if (c == -1 && lineBytes.size() == 0) null
       else new String(lineBytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
     }
     new Iterator[(String, Long, Array[Byte])] {
+      private var records = 0L
       private var nextRec: (String, Long, Array[Byte]) = advance()
       private def advance(): (String, Long, Array[Byte]) = {
         var line = readLine()
         while (line != null && line.isEmpty) line = readLine() // inter-record blank
         if (line == null) return null
-        require(line.startsWith("WARC/"), s"bad record marker: '$line'")
+        val (rec, start) = (records, lineAt)
+        records += 1
+        def fail(why: String): Nothing =
+          throw new IllegalArgumentException(s"corrupt WARC: record $rec at byte $start: $why")
+        def check(ok: Boolean, why: => String): Unit = if (!ok) fail(why)
+        check(line.startsWith("WARC/"), s"bad record marker: '$line'")
         var url: String = null
         var tsMicros = -1L
         var len = -1L
         var h = readLine()
         while (h != null && h.nonEmpty) {
           val i = h.indexOf(':')
-          require(i > 0, s"bad header line: '$h'")
+          check(i > 0, s"bad header line: '$h'")
           val (k, v) = (h.substring(0, i).trim, h.substring(i + 1).trim)
           k.toLowerCase(java.util.Locale.ROOT) match {
             case "warc-target-uri" => url = v
@@ -72,25 +86,26 @@ object WarcLite {
               val inst =
                 try java.time.Instant.parse(v)
                 catch { case _: java.time.format.DateTimeParseException =>
-                  throw new IllegalArgumentException(s"bad WARC-Date '$v'") }
+                  fail(s"bad WARC-Date '$v'") }
               tsMicros = inst.getEpochSecond * 1000000L + inst.getNano / 1000L
             case "content-length" =>
               len = v.toLongOption.filter(_ >= 0).getOrElse(
-                throw new IllegalArgumentException(s"bad Content-Length '$v'"))
+                fail(s"bad Content-Length '$v'"))
             case _ => () // unknown headers pass through
           }
           h = readLine()
         }
         // strict on ALL required headers — a half-parsed record must fail
         // at the source, not flow through as null url / epoch-0 rows
-        require(len >= 0, "record missing Content-Length")
-        require(len <= Int.MaxValue - 8, s"Content-Length $len exceeds a byte array")
-        require(url != null, "record missing WARC-Target-URI")
-        require(tsMicros >= 0, "record missing WARC-Date")
+        check(len >= 0, "record missing Content-Length")
+        check(len <= Int.MaxValue - 8, s"Content-Length $len exceeds a byte array")
+        check(url != null, "record missing WARC-Target-URI")
+        check(tsMicros >= 0, "record missing WARC-Date")
         // readNBytes grows the body as bytes arrive, so a hostile
         // Content-Length cannot allocate more than the file holds
         val body = buf.readNBytes(len.toInt)
-        require(body.length == len, s"truncated record body at ${body.length}/$len")
+        pos += body.length
+        check(body.length == len, s"truncated record body at ${body.length}/$len")
         (url, tsMicros, body)
       }
       override def hasNext: Boolean = nextRec != null

@@ -23,9 +23,9 @@ class CrsAlbersSpec extends AnyFunSuite {
   private val E2 = F * (2.0 - F)
 
   test("natural origin maps to (0, 0) exactly for both instances") {
-    val (x, y) = Crs.ConusAlbers5070.forward(-96.0, 23.0)
+    val (x, y) = Crs.projection(5070).get.forward(-96.0, 23.0)
     assert(math.abs(x) < 1e-9 && math.abs(y) < 1e-9, s"5070 origin ($x,$y)")
-    val (xa, ya) = Crs.AustralianAlbers3577.forward(132.0, 0.0)
+    val (xa, ya) = Crs.projection(3577).get.forward(132.0, 0.0)
     assert(math.abs(xa) < 1e-9 && math.abs(ya) < 1e-9, s"3577 origin ($xa,$ya)")
   }
 
@@ -47,11 +47,11 @@ class CrsAlbersSpec extends AnyFunSuite {
     // CONUS: coast-to-coast + the standard parallels + outside the domain
     for ((lon, lat) <- Seq((-124.0, 48.0), (-104.99, 39.74), (-96.0, 23.0),
         (-75.0, 40.7), (-96.0, 29.5), (-96.0, 45.5), (6.5, 43.5)))
-      check(Crs.ConusAlbers5070.forward, lon, lat)
+      check(Crs.projection(5070).get.forward, lon, lat)
     // Australia (southern cone, n < 0)
     for ((lon, lat) <- Seq((115.9, -31.9), (132.0, -18.0), (132.0, -36.0),
         (151.2, -33.9), (147.0, -42.9)))
-      check(Crs.AustralianAlbers3577.forward, lon, lat)
+      check(Crs.projection(3577).get.forward, lon, lat)
   }
 
   test("parallel scale is exactly 1 along both standard parallels") {
@@ -66,14 +66,14 @@ class CrsAlbersSpec extends AnyFunSuite {
       dPerDeg / (A * mm * math.Pi / 180.0)
     }
     for (lon <- Seq(-120.0, -96.0, -70.0)) {
-      assert(math.abs(k(Crs.ConusAlbers5070.forward, lon, 29.5) - 1.0) < 1e-7, s"k@29.5N lon=$lon")
-      assert(math.abs(k(Crs.ConusAlbers5070.forward, lon, 45.5) - 1.0) < 1e-7, s"k@45.5N lon=$lon")
+      assert(math.abs(k(Crs.projection(5070).get.forward, lon, 29.5) - 1.0) < 1e-7, s"k@29.5N lon=$lon")
+      assert(math.abs(k(Crs.projection(5070).get.forward, lon, 45.5) - 1.0) < 1e-7, s"k@45.5N lon=$lon")
       // between the parallels the scale dips BELOW 1 (secant cone)
-      assert(k(Crs.ConusAlbers5070.forward, lon, 37.5) < 1.0 - 1e-4, s"k@37.5N lon=$lon")
+      assert(k(Crs.projection(5070).get.forward, lon, 37.5) < 1.0 - 1e-4, s"k@37.5N lon=$lon")
     }
     for (lon <- Seq(115.0, 132.0, 150.0)) {
-      assert(math.abs(k(Crs.AustralianAlbers3577.forward, lon, -18.0) - 1.0) < 1e-7, s"k@18S lon=$lon")
-      assert(math.abs(k(Crs.AustralianAlbers3577.forward, lon, -36.0) - 1.0) < 1e-7, s"k@36S lon=$lon")
+      assert(math.abs(k(Crs.projection(3577).get.forward, lon, -18.0) - 1.0) < 1e-7, s"k@18S lon=$lon")
+      assert(math.abs(k(Crs.projection(3577).get.forward, lon, -36.0) - 1.0) < 1e-7, s"k@36S lon=$lon")
     }
   }
 
@@ -82,8 +82,8 @@ class CrsAlbersSpec extends AnyFunSuite {
       lat <- Seq(24.0, 29.5, 37.5, 45.5, 49.0)
       lon <- Seq(-124.0, -105.0, -96.0, -80.0, -66.0)
     } {
-      val (x, y) = Crs.ConusAlbers5070.forward(lon, lat)
-      val (lo2, la2) = Crs.ConusAlbers5070.inverse(x, y)
+      val (x, y) = Crs.projection(5070).get.forward(lon, lat)
+      val (lo2, la2) = Crs.projection(5070).get.inverse(x, y)
       assert(math.abs(lo2 - lon) < 1e-10, s"lon drift at ($lon,$lat): $lo2")
       assert(math.abs(la2 - lat) < 1e-10, s"lat drift at ($lon,$lat): $la2")
     }
@@ -91,45 +91,45 @@ class CrsAlbersSpec extends AnyFunSuite {
       lat <- Seq(-10.0, -18.0, -27.0, -36.0, -43.7)
       lon <- Seq(113.0, 122.0, 132.0, 145.0, 153.6)
     } {
-      val (x, y) = Crs.AustralianAlbers3577.forward(lon, lat)
-      val (lo2, la2) = Crs.AustralianAlbers3577.inverse(x, y)
+      val (x, y) = Crs.projection(3577).get.forward(lon, lat)
+      val (lo2, la2) = Crs.projection(3577).get.inverse(x, y)
       assert(math.abs(lo2 - lon) < 1e-10, s"lon drift at ($lon,$lat): $lo2")
       assert(math.abs(la2 - lat) < 1e-10, s"lat drift at ($lon,$lat): $la2")
     }
     // the exact origin inverts cleanly
-    val (lo0, la0) = Crs.ConusAlbers5070.inverse(0.0, 0.0)
+    val (lo0, la0) = Crs.projection(5070).get.inverse(0.0, 0.0)
     assert(math.abs(lo0 + 96.0) < 1e-10 && math.abs(la0 - 23.0) < 1e-10)
   }
 
   test("axis orientation: x grows east of lon0, y grows north (and the n<0 cone agrees)") {
-    val (xE, _) = Crs.ConusAlbers5070.forward(-90.0, 39.0)
-    val (xW, _) = Crs.ConusAlbers5070.forward(-102.0, 39.0)
+    val (xE, _) = Crs.projection(5070).get.forward(-90.0, 39.0)
+    val (xW, _) = Crs.projection(5070).get.forward(-102.0, 39.0)
     assert(xE > 0 && xW < 0)
-    val (_, yN) = Crs.ConusAlbers5070.forward(-96.0, 45.0)
-    val (_, yS) = Crs.ConusAlbers5070.forward(-96.0, 25.0)
+    val (_, yN) = Crs.projection(5070).get.forward(-96.0, 45.0)
+    val (_, yS) = Crs.projection(5070).get.forward(-96.0, 25.0)
     assert(yN > yS)
-    val (xe, _) = Crs.AustralianAlbers3577.forward(140.0, -27.0)
-    val (xw, _) = Crs.AustralianAlbers3577.forward(124.0, -27.0)
+    val (xe, _) = Crs.projection(3577).get.forward(140.0, -27.0)
+    val (xw, _) = Crs.projection(3577).get.forward(124.0, -27.0)
     assert(xe > 0 && xw < 0, s"3577 east/west ($xe,$xw)")
-    val (_, yn) = Crs.AustralianAlbers3577.forward(132.0, -18.0)
-    val (_, ys) = Crs.AustralianAlbers3577.forward(132.0, -36.0)
+    val (_, yn) = Crs.projection(3577).get.forward(132.0, -18.0)
+    val (_, ys) = Crs.projection(3577).get.forward(132.0, -36.0)
     assert(yn > ys, s"3577 north/south ($yn,$ys)")
   }
 
   test("EPSG:5070 and 3577 dispatch; not axis-separable; spec family 'aea' matches") {
     for (epsg <- Seq(5070, 3577)) {
-      val (x, y) = Crs.fromWgs84(epsg).get(-96.5, 38.5)
-      val (lo2, la2) = Crs.toWgs84(epsg).get(x, y)
+      val (x, y) = Crs.projection(epsg).get.forward(-96.5, 38.5)
+      val (lo2, la2) = Crs.projection(epsg).get.inverse(x, y)
       assert(math.abs(lo2 + 96.5) < 1e-10 && math.abs(la2 - 38.5) < 1e-10, s"epsg $epsg")
-      assert(!Crs.axisSeparable(epsg))
+      assert(!Crs.projection(epsg).get.axisSeparable)
     }
     val spec = Crs.projSpecString("aea", Seq(
       "a" -> 6378137.0, "invf" -> 298.257222101, "lat0" -> 23.0, "lon0" -> -96.0,
       "lat1" -> 29.5, "lat2" -> 45.5, "fe" -> 0.0, "fn" -> 0.0))
-    val (sx, sy) = Crs.specFromWgs84(spec)(-104.99, 39.74)
-    val (cx, cy) = Crs.ConusAlbers5070.forward(-104.99, 39.74)
+    val (sx, sy) = Crs.projection(32767, spec).get.forward(-104.99, 39.74)
+    val (cx, cy) = Crs.projection(5070).get.forward(-104.99, 39.74)
     assert(sx == cx && sy == cy)
-    val (slo, sla) = Crs.specToWgs84(spec)(sx, sy)
+    val (slo, sla) = Crs.projection(32767, spec).get.inverse(sx, sy)
     assert(math.abs(slo + 104.99) < 1e-10 && math.abs(sla - 39.74) < 1e-10)
   }
 }

@@ -17,7 +17,7 @@ class CrsLaeaSpec extends AnyFunSuite {
   private val E2 = F * (2.0 - F)
 
   test("natural origin maps to the EPSG false easting/northing exactly") {
-    val (x, y) = Crs.LaeaEurope.forward(10.0, 52.0)
+    val (x, y) = Crs.projection(3035).get.forward(10.0, 52.0)
     assert(math.abs(x - 4321000.0) < 1e-6, s"E $x")
     assert(math.abs(y - 3210000.0) < 1e-6, s"N $y")
   }
@@ -28,7 +28,7 @@ class CrsLaeaSpec extends AnyFunSuite {
     val h = 1e-5
     for ((lon, lat) <- Seq((-9.1, 38.7), (2.35, 48.85), (10.0, 52.0),
         (25.0, 71.1), (34.0, 35.1), (6.5, 43.5))) {
-      def p(lo: Double, la: Double) = Crs.LaeaEurope.forward(lo, la)
+      def p(lo: Double, la: Double) = Crs.projection(3035).get.forward(lo, la)
       val (xE, yE) = p(lon + h, lat); val (xW, yW) = p(lon - h, lat)
       val (xN, yN) = p(lon, lat + h); val (xS, yS) = p(lon, lat - h)
       val dxdl = (xE - xW) / (2 * h); val dydl = (yE - yW) / (2 * h)
@@ -48,20 +48,20 @@ class CrsLaeaSpec extends AnyFunSuite {
       lat <- Seq(35.0, 43.5, 52.0, 60.0, 70.9)
       lon <- Seq(-10.0, 0.0, 10.0, 24.0, 40.0)
     } {
-      val (x, y) = Crs.LaeaEurope.forward(lon, lat)
-      val (lo2, la2) = Crs.LaeaEurope.inverse(x, y)
+      val (x, y) = Crs.projection(3035).get.forward(lon, lat)
+      val (lo2, la2) = Crs.projection(3035).get.inverse(x, y)
       assert(math.abs(lo2 - lon) < 1e-10, s"lon drift at ($lon,$lat): $lo2")
       assert(math.abs(la2 - lat) < 1e-10, s"lat drift at ($lon,$lat): $la2")
     }
     // the exact origin inverts cleanly (rho ~ 0 guard)
-    val (lo0, la0) = Crs.LaeaEurope.inverse(4321000.0, 3210000.0)
+    val (lo0, la0) = Crs.projection(3035).get.inverse(4321000.0, 3210000.0)
     assert(math.abs(lo0 - 10.0) < 1e-10 && math.abs(la0 - 52.0) < 1e-10)
   }
 
   test("EPSG:3035 dispatches; not axis-separable") {
-    val (x, y) = Crs.fromWgs84(3035).get(6.5, 43.5)
-    val (lo2, la2) = Crs.toWgs84(3035).get(x, y)
+    val (x, y) = Crs.projection(3035).get.forward(6.5, 43.5)
+    val (lo2, la2) = Crs.projection(3035).get.inverse(x, y)
     assert(math.abs(lo2 - 6.5) < 1e-10 && math.abs(la2 - 43.5) < 1e-10)
-    assert(!Crs.axisSeparable(3035))
+    assert(!Crs.projection(3035).get.axisSeparable)
   }
 }

@@ -33,20 +33,20 @@ class CrsLccSpec extends AnyFunSuite {
   /** Projected scale along the parallel at (lon, lat), finite difference. */
   private def scaleAlongParallel(lon: Double, lat: Double): Double = {
     val d = 1e-5
-    val (x1, y1) = Crs.wgs84ToLambert93(lon - d, lat)
-    val (x2, y2) = Crs.wgs84ToLambert93(lon + d, lat)
+    val (x1, y1) = Crs.projection(2154).get.forward(lon - d, lat)
+    val (x2, y2) = Crs.projection(2154).get.forward(lon + d, lat)
     math.hypot(x2 - x1, y2 - y1) / (parallelRadius(lat) * math.toRadians(2 * d))
   }
 
   private def scaleAlongMeridian(lon: Double, lat: Double): Double = {
     val d = 1e-5
-    val (x1, y1) = Crs.wgs84ToLambert93(lon, lat - d)
-    val (x2, y2) = Crs.wgs84ToLambert93(lon, lat + d)
+    val (x1, y1) = Crs.projection(2154).get.forward(lon, lat - d)
+    val (x2, y2) = Crs.projection(2154).get.forward(lon, lat + d)
     math.hypot(x2 - x1, y2 - y1) / (meridianRadius(lat) * math.toRadians(2 * d))
   }
 
   test("grid origin: (3E, 46.5N) maps to exactly (700000, 6600000)") {
-    val (x, y) = Crs.wgs84ToLambert93(3.0, 46.5)
+    val (x, y) = Crs.projection(2154).get.forward(3.0, 46.5)
     assert(math.abs(x - 700000.0) < 1e-6 && math.abs(y - 6600000.0) < 1e-6)
   }
 
@@ -76,24 +76,24 @@ class CrsLccSpec extends AnyFunSuite {
       lat <- Seq(41.2, 43.5, 46.5, 48.85, 51.4)
       lon <- Seq(-5.0, -1.5, 2.35, 6.0, 9.5)
     } {
-      val (x, y) = Crs.wgs84ToLambert93(lon, lat)
-      val (lon2, lat2) = Crs.lambert93ToWgs84(x, y)
+      val (x, y) = Crs.projection(2154).get.forward(lon, lat)
+      val (lon2, lat2) = Crs.projection(2154).get.inverse(x, y)
       assert(math.abs(lon2 - lon) < 1e-10 && math.abs(lat2 - lat) < 1e-10,
         s"drift at ($lon,$lat): ($lon2,$lat2)")
     }
     // metropolitan France lands inside the published grid envelope
-    val (xp, yp) = Crs.wgs84ToLambert93(2.3522, 48.8566) // Paris
+    val (xp, yp) = Crs.projection(2154).get.forward(2.3522, 48.8566) // Paris
     assert(xp > 100000 && xp < 1300000 && yp > 6000000 && yp < 7200000)
-    val (xt, yt) = Crs.wgs84ToLambert93(5.93, 43.12) // Toulon
+    val (xt, yt) = Crs.projection(2154).get.forward(5.93, 43.12) // Toulon
     assert(xt > 100000 && xt < 1300000 && yt > 6000000 && yt < 7200000)
   }
 
   test("toWgs84/fromWgs84 dispatch EPSG:2154") {
-    val fwd = Crs.fromWgs84(2154).get
-    val inv = Crs.toWgs84(2154).get
+    val fwd = Crs.projection(2154).get.forward _
+    val inv = Crs.projection(2154).get.inverse _
     val (x, y) = fwd(6.5, 43.5)
     val (lon, lat) = inv(x, y)
     assert(math.abs(lon - 6.5) < 1e-10 && math.abs(lat - 43.5) < 1e-10)
-    assert(!Crs.axisSeparable(2154))
+    assert(!Crs.projection(2154).get.axisSeparable)
   }
 }

@@ -84,13 +84,13 @@ class CrsOsgbSpec extends AnyFunSuite {
   test("WGS84 entry points: Helmert shift is ~100 m, round-trip closes") {
     // Greenwich: OSGB36 and WGS84 geodetic coordinates differ by the
     // datum realization (~120 m ground distance over SE England)
-    val (e, n) = Crs.wgs84ToOsgb(0.0, 51.4769)
+    val (e, n) = Crs.projection(27700).get.forward(0.0, 51.4769)
     val (eNoShift, nNoShift) = Crs.Osgb36Grid.forward(0.0, 51.4769)
     val shift = math.hypot(e - eNoShift, n - nNoShift)
     assert(shift > 50.0 && shift < 200.0, s"datum shift $shift m")
     for (lon <- Seq(-5.0, -2.0, 0.5); lat <- Seq(50.5, 54.0, 57.5)) {
-      val (ee, nn) = Crs.wgs84ToOsgb(lon, lat)
-      val (lon2, lat2) = Crs.osgbToWgs84(ee, nn)
+      val (ee, nn) = Crs.projection(27700).get.forward(lon, lat)
+      val (lon2, lat2) = Crs.projection(27700).get.inverse(ee, nn)
       // Helmert inv solves the forward system exactly; the residual is
       // the h=0 convention — the grid carries no ellipsoidal height, so
       // the ~50 m Airy/WGS84 separation re-enters through the Helmert
@@ -102,8 +102,8 @@ class CrsOsgbSpec extends AnyFunSuite {
   }
 
   test("toWgs84/fromWgs84 dispatch EPSG:27700") {
-    val fwd = Crs.fromWgs84(27700).get
-    val inv = Crs.toWgs84(27700).get
+    val fwd = Crs.projection(27700).get.forward _
+    val inv = Crs.projection(27700).get.inverse _
     val (e, n) = fwd(-3.0, 55.0)
     val (lon, lat) = inv(e, n)
     // 5e-8 deg: the h=0 closure bound (see the round-trip test)

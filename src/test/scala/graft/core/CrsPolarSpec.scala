@@ -31,19 +31,19 @@ class CrsPolarSpec extends AnyFunSuite {
   }
 
   test("pole maps to the false origin; EPSG axis orientations hold") {
-    val (xn, yn) = Crs.PolarNorth3413.forward(123.0, 90.0)
+    val (xn, yn) = Crs.projection(3413).get.forward(123.0, 90.0)
     assert(math.abs(xn) < 1e-6 && math.abs(yn) < 1e-6)
-    val (xs, ys) = Crs.PolarSouth3031.forward(-57.0, -90.0)
+    val (xs, ys) = Crs.projection(3031).get.forward(-57.0, -90.0)
     assert(math.abs(xs) < 1e-6 && math.abs(ys) < 1e-6)
     // 3413: lon0 = 45W points down the -y axis; 90W-45W=45W of grid north
-    val (x1, y1) = Crs.PolarNorth3413.forward(-45.0, 80.0)
+    val (x1, y1) = Crs.projection(3413).get.forward(-45.0, 80.0)
     assert(math.abs(x1) < 1e-6 && y1 < 0, s"45W must project to -y: ($x1, $y1)")
     // 3031: lon0 = 0E points UP the +y axis (south aspect flips N)
-    val (x2, y2) = Crs.PolarSouth3031.forward(0.0, -80.0)
+    val (x2, y2) = Crs.projection(3031).get.forward(0.0, -80.0)
     assert(math.abs(x2) < 1e-6 && y2 > 0, s"0E must project to +y: ($x2, $y2)")
     // and east longitudes have positive easting in BOTH aspects
-    val (x3, _) = Crs.PolarNorth3413.forward(-45.0 + 90.0, 80.0)
-    val (x4, _) = Crs.PolarSouth3031.forward(90.0, -80.0)
+    val (x3, _) = Crs.projection(3413).get.forward(-45.0 + 90.0, 80.0)
+    val (x4, _) = Crs.projection(3031).get.forward(90.0, -80.0)
     assert(x3 > 0 && x4 > 0, "E = rho sin(lam - lam0) keeps its sign in the south aspect")
   }
 
@@ -53,7 +53,7 @@ class CrsPolarSpec extends AnyFunSuite {
     // ~8 clean digits while the O(h^2) truncation term sits at ~5e-13
     val h = 1e-4 // degrees
     for ((ps, latTs, lon) <- Seq(
-        (Crs.PolarNorth3413, 70.0, 31.0), (Crs.PolarSouth3031, -71.0, 157.0))) {
+        (Crs.projection(3413).get, 70.0, 31.0), (Crs.projection(3031).get, -71.0, 157.0))) {
       val (x1, y1) = ps.forward(lon, latTs - h)
       val (x2, y2) = ps.forward(lon, latTs + h)
       val projected = math.hypot(x2 - x1, y2 - y1)
@@ -66,8 +66,8 @@ class CrsPolarSpec extends AnyFunSuite {
   test("conformality: the Jacobian is a scaled rotation everywhere sampled") {
     val h = 1e-6
     for ((ps, pts) <- Seq(
-        (Crs.PolarNorth3413, Seq((0.0, 85.0), (-45.0, 70.0), (120.0, 62.0), (-170.0, 75.0))),
-        (Crs.PolarSouth3031, Seq((0.0, -85.0), (90.0, -71.0), (-135.0, -66.0))))) {
+        (Crs.projection(3413).get, Seq((0.0, 85.0), (-45.0, 70.0), (120.0, 62.0), (-170.0, 75.0))),
+        (Crs.projection(3031).get, Seq((0.0, -85.0), (90.0, -71.0), (-135.0, -66.0))))) {
       for ((lon, lat) <- pts) {
         def p(lo: Double, la: Double) = ps.forward(lo, la)
         val (xE, yE) = p(lon + h, lat); val (xW, yW) = p(lon - h, lat)
@@ -94,28 +94,28 @@ class CrsPolarSpec extends AnyFunSuite {
       lat <- Seq(60.0, 70.0, 80.0, 89.0)
       lon <- Seq(-170.0, -45.0, 0.0, 60.0, 150.0, 179.0)
     } {
-      val (x, y) = Crs.PolarNorth3413.forward(lon, lat)
-      val (lo2, la2) = Crs.PolarNorth3413.inverse(x, y)
+      val (x, y) = Crs.projection(3413).get.forward(lon, lat)
+      val (lo2, la2) = Crs.projection(3413).get.inverse(x, y)
       assert(math.abs(lo2 - lon) < 1e-10 && math.abs(la2 - lat) < 1e-10,
         s"3413 ($lon,$lat) -> ($lo2,$la2)")
-      val (xs, ys) = Crs.PolarSouth3031.forward(lon, -lat)
-      val (lo3, la3) = Crs.PolarSouth3031.inverse(xs, ys)
+      val (xs, ys) = Crs.projection(3031).get.forward(lon, -lat)
+      val (lo3, la3) = Crs.projection(3031).get.inverse(xs, ys)
       assert(math.abs(lo3 - lon) < 1e-10 && math.abs(la3 + lat) < 1e-10,
         s"3031 ($lon,${-lat}) -> ($lo3,$la3)")
     }
     // the exact poles invert cleanly (rho ~ 0 guard)
-    assert(Crs.PolarNorth3413.inverse(0.0, 0.0)._2 == 90.0)
-    assert(Crs.PolarSouth3031.inverse(0.0, 0.0)._2 == -90.0)
+    assert(Crs.projection(3413).get.inverse(0.0, 0.0)._2 == 90.0)
+    assert(Crs.projection(3031).get.inverse(0.0, 0.0)._2 == -90.0)
   }
 
   test("EPSG:3413/3031 dispatch; not axis-separable") {
-    val (x, y) = Crs.fromWgs84(3413).get(-50.0, 72.0)
-    val (lo2, la2) = Crs.toWgs84(3413).get(x, y)
+    val (x, y) = Crs.projection(3413).get.forward(-50.0, 72.0)
+    val (lo2, la2) = Crs.projection(3413).get.inverse(x, y)
     assert(math.abs(lo2 + 50.0) < 1e-10 && math.abs(la2 - 72.0) < 1e-10)
-    val (xs, ys) = Crs.fromWgs84(3031).get(45.0, -77.0)
-    val (lo3, la3) = Crs.toWgs84(3031).get(xs, ys)
+    val (xs, ys) = Crs.projection(3031).get.forward(45.0, -77.0)
+    val (lo3, la3) = Crs.projection(3031).get.inverse(xs, ys)
     assert(math.abs(lo3 - 45.0) < 1e-10 && math.abs(la3 + 77.0) < 1e-10)
-    assert(!Crs.axisSeparable(3413) && !Crs.axisSeparable(3031))
+    assert(!Crs.projection(3413).get.axisSeparable && !Crs.projection(3031).get.axisSeparable)
   }
 
   // ----------------------------------- variant A (scale at the pole) ---
@@ -181,15 +181,15 @@ class CrsPolarSpec extends AnyFunSuite {
   }
 
   test("EPSG:5041/5042 (UPS) dispatch; not axis-separable") {
-    val (x, y) = Crs.fromWgs84(5041).get(45.0, 87.0)
-    val (dx, dy) = Crs.UpsNorth5041.forward(45.0, 87.0)
+    val (x, y) = Crs.projection(5041).get.forward(45.0, 87.0)
+    val (dx, dy) = Crs.projection(5041).get.forward(45.0, 87.0)
     assert(x == dx && y == dy)
-    val (lo, la) = Crs.toWgs84(5041).get(x, y)
+    val (lo, la) = Crs.projection(5041).get.inverse(x, y)
     assert(math.abs(lo - 45.0) < 1e-10 && math.abs(la - 87.0) < 1e-10)
-    val (xs, ys) = Crs.fromWgs84(5042).get(-120.0, -85.0)
-    val (lo2, la2) = Crs.toWgs84(5042).get(xs, ys)
+    val (xs, ys) = Crs.projection(5042).get.forward(-120.0, -85.0)
+    val (lo2, la2) = Crs.projection(5042).get.inverse(xs, ys)
     assert(math.abs(lo2 + 120.0) < 1e-10 && math.abs(la2 + 85.0) < 1e-10)
-    assert(!Crs.axisSeparable(5041) && !Crs.axisSeparable(5042))
+    assert(!Crs.projection(5041).get.axisSeparable && !Crs.projection(5042).get.axisSeparable)
   }
 
   test("variant B at the pole refuses loudly (the 0/0 degeneracy) and the spec-string k0 form parses") {
@@ -201,10 +201,10 @@ class CrsPolarSpec extends AnyFunSuite {
       "a" -> 6378137.0, "invf" -> 298.257223563, "k0" -> 0.994,
       "lat0" -> 90.0, "lon0" -> 0.0, "fe" -> 2000000.0, "fn" -> 2000000.0))
     val ups = new Crs.PolarStereographic(Crs.Wgs84, 90.0, 0.0, 2000000.0, 2000000.0, Some(0.994))
-    val (sx, sy) = Crs.specFromWgs84(spec)(45.0, 85.0)
+    val (sx, sy) = Crs.projection(32767, spec).get.forward(45.0, 85.0)
     val (dx, dy) = ups.forward(45.0, 85.0)
     assert(sx == dx && sy == dy, s"spec path ($sx,$sy) vs direct ($dx,$dy)")
-    val (lo, la) = Crs.specToWgs84(spec)(sx, sy)
+    val (lo, la) = Crs.projection(32767, spec).get.inverse(sx, sy)
     assert(math.abs(lo - 45.0) < 1e-10 && math.abs(la - 85.0) < 1e-10)
     // a NON-POLAR lat0 with k0 must refuse: variant A's math is only
     // valid at the pole; accepting lat0=70 would silently compute
@@ -213,7 +213,7 @@ class CrsPolarSpec extends AnyFunSuite {
     val nonPolar = Crs.projSpecString("ps", Seq(
       "a" -> 6378137.0, "invf" -> 298.257223563, "k0" -> 0.994,
       "lat0" -> 70.0, "lon0" -> 0.0, "fe" -> 0.0, "fn" -> 0.0))
-    val eNp = intercept[IllegalArgumentException](Crs.specFromWgs84(nonPolar))
+    val eNp = intercept[IllegalArgumentException](Crs.projection(32767, nonPolar))
     assert(eNp.getMessage.contains("variant A"), eNp.getMessage)
   }
 }

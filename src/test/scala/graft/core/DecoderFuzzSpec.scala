@@ -131,8 +131,26 @@ class DecoderFuzzSpec extends AnyFunSuite {
       ("https://w.example/2", 1704067201500000L, "<html>two\r\n</html>".getBytes("UTF-8"))))
     val seed = java.nio.file.Files.readAllBytes(path)
     java.nio.file.Files.delete(path); java.nio.file.Files.delete(dir)
-    fuzz("WARC|record|header|Content-Length".r, "2 records" -> seed)(
+    fuzz("WARC".r, "2 records" -> seed)(
       m => WarcLite.parse(new java.io.ByteArrayInputStream(m)).foreach(_ => ()))
+  }
+
+  test("HGT: mutants of a 31x31 grid decode or refuse by name; a side below 2 refuses") {
+    val side = 31
+    val seed = Array.tabulate(2 * side * side)(k => (if (k % 2 == 0) k / 256 else k * 7).toByte)
+    fuzz("hgt".r, "31x31" -> seed)(Hgt.decode(_))
+    for (n <- Seq(0, 2)) {
+      val e = intercept[IllegalArgumentException](Hgt.decode(new Array[Byte](n)))
+      assert(e.getMessage.contains(s"hgt byte length $n"), e.getMessage)
+    }
+  }
+
+  test("poly: mutants of a two-section file parse or refuse by name") {
+    val seed = ("area\n1\n\t6.0 43.0\n\t7.0 43.0\n\t6.5 44.0\nEND\n" +
+      "2\n\t8.25 45.5\n\t8.75 45.5\n\t8.5 46.125\n\t8.25 45.5\nEND\nEND\n").getBytes("UTF-8")
+    fuzz("poly".r, "2 sections" -> seed)(m => PolyFile.parse(new String(m, "UTF-8")))
+    val e = intercept[IllegalArgumentException](PolyFile.parse("area\n1\nEND\nEND\n"))
+    assert(e.getMessage.contains("poly file"), e.getMessage)
   }
 
   // 2,000 nodes and 40 ways of 50 nodes each, every fifth closed

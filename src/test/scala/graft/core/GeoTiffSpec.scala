@@ -51,8 +51,8 @@ class GeoTiffSpec extends AnyFunSuite {
     val t = Tiff.decode(Files.readAllBytes(Paths.get(mercPath)))
     assert(t.epsg == 3857)
     val b = t.bbox
-    val (minLon, minLat) = Crs.mercatorToWgs84(b.minLon, b.minLat)
-    val (maxLon, maxLat) = Crs.mercatorToWgs84(b.maxLon, b.maxLat)
+    val (minLon, minLat) = Crs.projection(3857).get.inverse(b.minLon, b.minLat)
+    val (maxLon, maxLat) = Crs.projection(3857).get.inverse(b.maxLon, b.maxLat)
     // reprojected pixel-center bbox lands on the tile within half a pixel
     assert(math.abs(minLon - 6.0) < 0.001 && math.abs(maxLon - 7.0) < 0.001)
     assert(math.abs(minLat - 43.0) < 0.001 && math.abs(maxLat - 44.0) < 0.001)
@@ -191,13 +191,13 @@ class GeoTiffSpec extends AnyFunSuite {
   test("UTM 32N tiff (real Toulon terrain re-gridded) traces contours in WGS84") {
     assume(available)
     projectedToulonE2e("utm_toulon", 32632,
-      (lo, la) => Crs.wgs84ToUtm(lo, la, 32, north = true),
-      (x, y) => Crs.utmToWgs84(x, y, 32, north = true))
+      (lo, la) => Crs.projection(32632).get.forward(lo, la),
+      (x, y) => Crs.projection(32632).get.inverse(x, y))
   }
 
   test("Lambert-93 tiff (real Toulon terrain re-gridded) traces contours in WGS84") {
     assume(available)
-    projectedToulonE2e("lcc_toulon", 2154, Crs.wgs84ToLambert93, Crs.lambert93ToWgs84)
+    projectedToulonE2e("lcc_toulon", 2154, Crs.projection(2154).get.forward, Crs.projection(2154).get.inverse)
   }
 
   test("OSGB 27700 tiff traces contours in WGS84 (generalized TM + Helmert datum path)") {
@@ -206,21 +206,21 @@ class GeoTiffSpec extends AnyFunSuite {
     // OSGB tiles would carry GB terrain); what the twin proves is the
     // parameterized-TM + datum-shift dispatch end to end: lat0 != 0,
     // Airy ellipsoid, and a non-null Helmert on BOTH directions
-    projectedToulonE2e("osgb_toulon", 27700, Crs.wgs84ToOsgb, Crs.osgbToWgs84)
+    projectedToulonE2e("osgb_toulon", 27700, Crs.projection(27700).get.forward, Crs.projection(27700).get.inverse)
   }
 
   test("ETRS89 UTM 25832 tiff traces contours in WGS84 (GRS80 TM instance)") {
     assume(available)
     projectedToulonE2e("etrs_toulon", 25832,
-      (lo, la) => Crs.fromWgs84(25832).get(lo, la),
-      (x, y) => Crs.toWgs84(25832).get(x, y))
+      (lo, la) => Crs.projection(25832).get.forward(lo, la),
+      (x, y) => Crs.projection(25832).get.inverse(x, y))
   }
 
   test("LAEA 3035 tiff traces contours in WGS84 (equal-area family e2e)") {
     assume(available)
     projectedToulonE2e("laea_toulon", 3035,
-      (lo, la) => Crs.fromWgs84(3035).get(lo, la),
-      (x, y) => Crs.toWgs84(3035).get(x, y))
+      (lo, la) => Crs.projection(3035).get.forward(lo, la),
+      (x, y) => Crs.projection(3035).get.inverse(x, y))
   }
 
   test("Conus Albers 5070 tiff traces contours in WGS84 (equal-area conic e2e)") {
@@ -229,8 +229,8 @@ class GeoTiffSpec extends AnyFunSuite {
     // US terrain): proves the Albers family dispatch end to end at 102°
     // from the central meridian — the maximal-rotation regime
     projectedToulonE2e("albers_toulon", 5070,
-      (lo, la) => Crs.fromWgs84(5070).get(lo, la),
-      (x, y) => Crs.toWgs84(5070).get(x, y))
+      (lo, la) => Crs.projection(5070).get.forward(lo, la),
+      (x, y) => Crs.projection(5070).get.inverse(x, y))
   }
 
   test("polar stereographic 3413 tiff traces contours in WGS84 (ArcticDEM grid e2e)") {
@@ -240,8 +240,8 @@ class GeoTiffSpec extends AnyFunSuite {
     // exercises the steep-distortion regime the polar grids hit at their
     // coverage edge
     projectedToulonE2e("polar_toulon", 3413,
-      (lo, la) => Crs.fromWgs84(3413).get(lo, la),
-      (x, y) => Crs.toWgs84(3413).get(x, y))
+      (lo, la) => Crs.projection(3413).get.forward(lo, la),
+      (x, y) => Crs.projection(3413).get.inverse(x, y))
   }
 
   test("--area truncates a 3857 source through the per-axis transform") {
@@ -275,8 +275,8 @@ class GeoTiffSpec extends AnyFunSuite {
     // cell-exact. The pinning invariant: --area == the identical rect as
     // a clip polygon, row for row.
     val (utmPath, _) = projectedToulonTiff("utm_area", 32632,
-      (lo, la) => Crs.wgs84ToUtm(lo, la, 32, north = true),
-      (x, y) => Crs.utmToWgs84(x, y, 32, north = true))
+      (lo, la) => Crs.projection(32632).get.forward(lo, la),
+      (x, y) => Crs.projection(32632).get.inverse(x, y))
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[4]").appName("tiff-utm-area")
       .config("spark.sql.shuffle.partitions", "4")
@@ -338,9 +338,9 @@ class GeoTiffSpec extends AnyFunSuite {
     // the clip semantics must agree: identical level sets, per-level node
     // mass within regridding tolerance, all coordinates confined.
     val fwd: (Double, Double) => (Double, Double) =
-      (lo, la) => Crs.wgs84ToUtm(lo, la, 32, north = true)
+      (lo, la) => Crs.projection(32632).get.forward(lo, la)
     val inv: (Double, Double) => (Double, Double) =
-      (x, y) => Crs.utmToWgs84(x, y, 32, north = true)
+      (x, y) => Crs.projection(32632).get.inverse(x, y)
     val (utmPath, _) = projectedToulonTiff("utm_clip", 32632, fwd, inv)
     // 4326 twin over the same window at the same 301x301 resolution
     val rows = 301; val cols = 301
@@ -592,8 +592,8 @@ class GeoTiffSpec extends AnyFunSuite {
     // same grid bytes, two container layouts — and require identical
     // contour output through the full pipeline (the ContourCli/RasterPipeline
     // entry is extension-dispatched, so BigTIFF rides the same path)
-    val fwd: (Double, Double) => (Double, Double) = (lo, la) => Crs.fromWgs84(3413).get(lo, la)
-    val inv: (Double, Double) => (Double, Double) = (x, y) => Crs.toWgs84(3413).get(x, y)
+    val fwd: (Double, Double) => (Double, Double) = (lo, la) => Crs.projection(3413).get.forward(lo, la)
+    val inv: (Double, Double) => (Double, Double) = (x, y) => Crs.projection(3413).get.inverse(x, y)
     val (classicPath, _) = projectedToulonTiff("polar_classic", 3413, fwd, inv)
     val classicBytes = Files.readAllBytes(Paths.get(classicPath))
     val classic = Tiff.decode(classicBytes)
@@ -652,6 +652,22 @@ class GeoTiffSpec extends AnyFunSuite {
     }
   }
 
+  test("a float DEM whose GDAL_NODATA is GDAL's `nan` decodes with NaN nodata and masks its voids") {
+    val rows = 12; val cols = 10
+    val vals = Array.tabulate(rows * cols)(k => if (k % 7 == 3) Float.NaN else k * 0.5f)
+    for (tag <- Seq("nan", "-nan", "NAN", "+NaN")) {
+      val t = Tiff.decode(buildTiff(rows, cols, vals, 1, 1, tiled = false, bits = 32, nodataTag = tag))
+      assert(t.nodata.exists(_.isNaN), tag)
+      (0 until rows * cols).foreach { k =>
+        assert(t.grid.mask(k) == vals(k).isNaN, s"$tag mask @$k")
+        if (!vals(k).isNaN) assert(t.grid.values(k) == vals(k), s"$tag @$k")
+      }
+    }
+    val e = intercept[IllegalArgumentException](
+      Tiff.decode(buildTiff(rows, cols, vals, 1, 1, tiled = false, bits = 32, nodataTag = "abc")))
+    assert(e.getMessage.contains("GDAL_NODATA 'abc'"), e.getMessage)
+  }
+
   test("user-defined GeoKey CRS (ProjectedCSType 32767) traces identically to its EPSG twin") {
     assume(available)
     // the same UTM-32N Toulon grid encoded twice: once with the EPSG code
@@ -661,9 +677,9 @@ class GeoTiffSpec extends AnyFunSuite {
     // The spec path must build a bit-identical TransverseMercator, so the
     // traced contours must match coordinate-for-coordinate.
     val fwd: (Double, Double) => (Double, Double) =
-      (lo, la) => Crs.wgs84ToUtm(lo, la, 32, north = true)
+      (lo, la) => Crs.projection(32632).get.forward(lo, la)
     val inv: (Double, Double) => (Double, Double) =
-      (x, y) => Crs.utmToWgs84(x, y, 32, north = true)
+      (x, y) => Crs.projection(32632).get.inverse(x, y)
     val (codedPath, _) = projectedToulonTiff("utm_coded", 32632, fwd, inv)
     val codedBytes = Files.readAllBytes(Paths.get(codedPath))
     val coded = Tiff.decode(codedBytes)
@@ -691,15 +707,15 @@ class GeoTiffSpec extends AnyFunSuite {
       "tm:a=6378137.0;invf=298.257223563;k0=0.9996;lon0=9.0;lat0=0.0;fe=500000.0;fn=0.0")
     assert(user.grid.values.sameElements(coded.grid.values) && user.bbox == coded.bbox)
     // the spec-built transform agrees with the coded one bit-for-bit
-    val toW = Crs.toWgs84(user.epsg, user.spec).get
-    val fromW = Crs.fromWgs84(user.epsg, user.spec).get
+    val toW = Crs.projection(user.epsg, user.spec).get.inverse _
+    val fromW = Crs.projection(user.epsg, user.spec).get.forward _
     Seq((350000.0, 4800000.0), (500000.0, 4785000.0), (520000.0, 4810000.0)).foreach {
       case (x, y) =>
         assert(toW(x, y) == inv(x, y), s"inverse diverges at ($x,$y)")
         val (lo, la) = toW(x, y)
         assert(fromW(lo, la) == fwd(lo, la))
     }
-    assert(!Crs.axisSeparable(user.epsg, user.spec))
+    assert(!Crs.projection(user.epsg, user.spec).get.axisSeparable)
     val userTmp = Files.createTempFile("utm_user", ".tiff")
     Files.write(userTmp, userBytes)
     val spark = org.apache.spark.sql.SparkSession.builder()
@@ -744,7 +760,7 @@ class GeoTiffSpec extends AnyFunSuite {
     val upsSpec = Tiff.userDefinedSpec(Map(3072 -> 32767, 3075 -> 15),
       Map(3081 -> 90.0, 3092 -> 0.994, 3094 -> 0.0, 3082 -> 2000000.0, 3083 -> 2000000.0))
     assert(upsSpec.contains("k0=0.994") && upsSpec.contains("lat0=90"), upsSpec)
-    val (ux5, uy5) = Crs.specFromWgs84(upsSpec)(45.0, 85.0)
+    val (ux5, uy5) = Crs.projection(32767, upsSpec).get.forward(45.0, 85.0)
     assert(java.lang.Double.isFinite(ux5) && java.lang.Double.isFinite(uy5))
     val upsDirect = new Crs.PolarStereographic(Crs.Wgs84, 90.0, 0.0, 2000000.0, 2000000.0, Some(0.994))
     val (dx5, dy5) = upsDirect.forward(45.0, 85.0)
@@ -759,8 +775,8 @@ class GeoTiffSpec extends AnyFunSuite {
     val tmCenter = Tiff.userDefinedSpec(Map(3072 -> 32767, 3075 -> 1),
       Map(3088 -> 9.0, 3089 -> 0.0, 3093 -> 0.9996, 3082 -> 500000.0))
     assert(tmCenter.contains("k0=0.9996"), tmCenter)
-    val (tx, ty) = Crs.specFromWgs84(tmCenter)(9.3, 47.0)
-    val (ex, ey) = Crs.fromWgs84(32632).get(9.3, 47.0)
+    val (tx, ty) = Crs.projection(32767, tmCenter).get.forward(9.3, 47.0)
+    val (ex, ey) = Crs.projection(32632).get.forward(9.3, 47.0)
     assert(math.abs(tx - ex) < 1e-6 && math.abs(ty - ey) < 1e-6,
       s"center-key TM ($tx,$ty) vs EPSG:32632 ($ex,$ey)")
     // Albers (ct=11) missing a standard parallel refuses with the key name
@@ -772,8 +788,8 @@ class GeoTiffSpec extends AnyFunSuite {
     val aeaSpec = Tiff.userDefinedSpec(
       Map(3072 -> 32767, 3075 -> 11, 2048 -> 4269), // NAD83 datum -> GRS80
       Map(3080 -> -96.0, 3081 -> 23.0, 3078 -> 29.5, 3079 -> 45.5))
-    val (ux, uy) = Crs.specFromWgs84(aeaSpec)(-104.99, 39.74)
-    val (cx2, cy2) = Crs.ConusAlbers5070.forward(-104.99, 39.74)
+    val (ux, uy) = Crs.projection(32767, aeaSpec).get.forward(-104.99, 39.74)
+    val (cx2, cy2) = Crs.projection(5070).get.forward(-104.99, 39.74)
     assert(ux == cx2 && uy == cy2, s"user-defined aea ($ux,$uy) vs 5070 ($cx2,$cy2)")
     // ellipsoid fallbacks: GRS80 via datum code, Airy via ellipsoid code
     val grs = Tiff.userDefinedSpec(
@@ -787,10 +803,10 @@ class GeoTiffSpec extends AnyFunSuite {
   test("mercator transform round-trips") {
     val pts = Seq((6.0, 43.0), (7.0, 44.0), (-122.42, 37.77), (151.2, -33.87), (0.0, 0.0))
     pts.foreach { case (lon, lat) =>
-      val (x, y) = Crs.wgs84ToMercator(lon, lat)
-      val (lon2, lat2) = Crs.mercatorToWgs84(x, y)
+      val (x, y) = Crs.projection(3857).get.forward(lon, lat)
+      val (lon2, lat2) = Crs.projection(3857).get.inverse(x, y)
       assert(math.abs(lon2 - lon) < 1e-9 && math.abs(lat2 - lat) < 1e-9)
     }
-    assertThrows[IllegalArgumentException](Crs.toWgs84(29902)) // Irish grid: not in the table
+    assertThrows[IllegalArgumentException](Crs.projection(29902)) // Irish grid: not in the table
   }
 }

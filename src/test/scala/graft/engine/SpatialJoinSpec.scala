@@ -50,6 +50,26 @@ class SpatialJoinSpec extends AnyFunSuite {
       if graft.core.Geometry.contains(p.coords, r.getDouble(1), r.getDouble(2))
     } yield (r.getLong(0), p.polyId)).toSet
 
+  /** Brute-force reference kNN: the oracle for the ring-expansion kNN. */
+  private def knnBrute(
+      pages: DataFrame,
+      queries: Seq[(Long, Double, Double)],
+      k: Int): DataFrame = {
+    val spark = pages.sparkSession
+    import spark.implicits._
+    val q = queries.toDF("q_id", "q_lon", "q_lat")
+    val joined = pages.crossJoin(broadcast(q))
+      .withColumn(
+        "dist",
+        sqrt((col("lon") - col("q_lon")) * (col("lon") - col("q_lon")) +
+          (col("lat") - col("q_lat")) * (col("lat") - col("q_lat"))))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("q_id").orderBy(col("dist").asc, col("page_id").asc)
+    joined.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .select("q_id", "rank", "page_id", "dist")
+      .orderBy("q_id", "rank")
+  }
+
   test("synthetic pages are deterministic and text roundtrips byte-identically") {
     val a = Pages.pageOf(1234L)
     val b = Pages.pageOf(1234L)
@@ -197,7 +217,7 @@ class SpatialJoinSpec extends AnyFunSuite {
       (4L, 6.7, 43.1), (5L, 6.0001, 43.9999), (6L, 6.42, 43.66), (7L, 6.99, 43.01))
     val got = SpatialJoin.knnBatch(pages, qSeq.toDF("q_id", "q_lon", "q_lat"), k = 5, res = Res)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
-    val brute = SpatialJoin.knnBrute(pages, qSeq, k = 5)
+    val brute = knnBrute(pages, qSeq, k = 5)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
     assert(got == brute && got.length == 5 * qSeq.length, s"got $got vs brute $brute")
   }
@@ -216,7 +236,7 @@ class SpatialJoinSpec extends AnyFunSuite {
     val queries = qSeq.toDF("q_id", "q_lon", "q_lat")
     val got = SpatialJoin.knnBatch(far, queries, k = 5, res = Res, maxR = 128)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
-    val brute = SpatialJoin.knnBrute(far, qSeq, k = 5)
+    val brute = knnBrute(far, qSeq, k = 5)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
     assert(got == brute && got.length == 5, s"got $got vs brute $brute")
     // a maxR neighbourhood holding < k pages leaves the query out of the
@@ -238,7 +258,7 @@ class SpatialJoinSpec extends AnyFunSuite {
     val queries = Seq((0L, -179.98, 10.0), (1L, 179.9, 10.0)).toDF("q_id", "q_lon", "q_lat")
     val got = SpatialJoin.knnBatch(pts, queries, k = 3, res = res, maxR = 256)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
-    val brute = SpatialJoin.knnBrute(pts,
+    val brute = knnBrute(pts,
         Seq((0L, -179.98, 10.0), (1L, 179.9, 10.0)), k = 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
     assert(got == brute, s"got $got vs brute $brute")
@@ -265,7 +285,7 @@ class SpatialJoinSpec extends AnyFunSuite {
     val got = SpatialJoin.knnBatch(pts, qSeq.toDF("q_id", "q_lon", "q_lat"),
         k = 3, res = res, maxR = 256)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
-    val brute = SpatialJoin.knnBrute(pts, qSeq, k = 3)
+    val brute = knnBrute(pts, qSeq, k = 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
     assert(got == brute, s"got $got vs brute $brute")
   }
@@ -331,7 +351,7 @@ class SpatialJoinSpec extends AnyFunSuite {
     val got = SpatialJoin.knnBatch(pages, queries, k = 5, res = Res)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
     val qSeq = queries.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
-    val brute = SpatialJoin.knnBrute(pages, qSeq, k = 5)
+    val brute = knnBrute(pages, qSeq, k = 5)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
     assert(got == brute)
     // and it is a real batch operator: no driver loop means the plan is a
