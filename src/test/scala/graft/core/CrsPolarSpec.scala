@@ -182,11 +182,15 @@ class CrsPolarSpec extends AnyFunSuite {
 
   test("EPSG:5041/5042 (UPS) dispatch; not axis-separable") {
     val (x, y) = Crs.projection(5041).get.forward(45.0, 87.0)
-    val (dx, dy) = Crs.projection(5041).get.forward(45.0, 87.0)
+    val (dx, dy) = new Crs.PolarStereographic(
+      Crs.Wgs84, 90.0, 0.0, 2000000.0, 2000000.0, Some(0.994)).forward(45.0, 87.0)
     assert(x == dx && y == dy)
     val (lo, la) = Crs.projection(5041).get.inverse(x, y)
     assert(math.abs(lo - 45.0) < 1e-10 && math.abs(la - 87.0) < 1e-10)
     val (xs, ys) = Crs.projection(5042).get.forward(-120.0, -85.0)
+    val (dxs, dys) = new Crs.PolarStereographic(
+      Crs.Wgs84, -90.0, 0.0, 2000000.0, 2000000.0, Some(0.994)).forward(-120.0, -85.0)
+    assert(xs == dxs && ys == dys)
     val (lo2, la2) = Crs.projection(5042).get.inverse(xs, ys)
     assert(math.abs(lo2 + 120.0) < 1e-10 && math.abs(la2 + 85.0) < 1e-10)
     assert(!Crs.projection(5041).get.axisSeparable && !Crs.projection(5042).get.axisSeparable)
